@@ -56,6 +56,10 @@ object GraftExtensions {
       "graft_syslog_parse(raw) - RFC3164/5424 auto-detect parse to a struct") {
       es => SyslogParseExpr(es.head)
     }
+    reg("graft_syslog_pri",
+      "graft_syslog_pri(raw) - the PRI alone: 13 without '<', 199 if invalid") {
+      es => SyslogPriExpr(es.head)
+    }
     reg("graft_parse_sd",
       "graft_parse_sd(sd) - RFC5424 STRUCTURED-DATA to JSON") {
       es => ParseStructuredDataExpr(es.head)

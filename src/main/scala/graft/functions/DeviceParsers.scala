@@ -291,17 +291,16 @@ object ControlCharExpr {
     // fast path: no control characters (the overwhelmingly common case
     // on the reception hot path) → return the input untouched, no
     // String/StringBuilder allocation. Control chars are single bytes
-    // in UTF-8, so a byte scan is exact.
-    val bytes = s.getBytes
+    // in UTF-8, so a byte scan in place is exact.
+    val n = s.numBytes
     var k = 0
     var clean = true
-    while (clean && k < bytes.length) {
-      val b = bytes(k) & 0xff
+    while (clean && k < n) {
+      val b = s.getByte(k) & 0xff
       // modes 0-3 use isISOControl, which also covers DEL and the C1
       // range (U+0080-U+009F = 0xC2 0x80-0x9F in UTF-8)
       if (b < 32 || (mode != 4 && (b == 127 ||
-          (b == 0xC2 && k + 1 < bytes.length &&
-            (bytes(k + 1) & 0xff) <= 0x9f)))) clean = false
+          (b == 0xC2 && k + 1 < n && (s.getByte(k + 1) & 0xff) <= 0x9f)))) clean = false
       k += 1
     }
     if (clean) return s

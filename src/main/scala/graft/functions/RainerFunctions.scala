@@ -327,6 +327,8 @@ object rainer {
                    parseHostnameAndTag: Boolean = true): Column =
     col2(SyslogParseExpr(raw.expr, defaultYear,
       detectYearAfterTimestamp, permitSlashInProgramname, parseHostnameAndTag))
+  /** The PRI alone, by the byte scan `parse_syslog` runs. */
+  def syslog_pri(raw: Column): Column = col2(SyslogPriExpr(raw.expr))
   def parse_structured_data(sd: Column): Column =
     col2(ParseStructuredDataExpr(sd.expr))
 

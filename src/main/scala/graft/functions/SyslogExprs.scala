@@ -16,8 +16,10 @@ import java.time.OffsetDateTime
   * does — a '1' digit + space right after the PRI means RFC5424.
   *
   * Returns a struct; `parsesuccess=false` rows carry the raw message in
-  * `msg` and nulls elsewhere (rsyslog's COULD_NOT_PARSE → next parser →
-  * fallback semantics collapsed into one expression).
+  * `msg`, the PRI fields, and nulls elsewhere (rsyslog's COULD_NOT_PARSE
+  * → next parser → fallback semantics collapsed into one expression).
+  * The PRI comes from [[SyslogParseExpr.priScan]], the same byte scan
+  * [[SyslogPriExpr]] runs, so `parse_syslog(x).pri == syslog_pri(x)`.
   */
 case class SyslogParseExpr(child: Expression, defaultYear: Int = 2024,
                            detectYearAfterTimestamp: Boolean = false,
@@ -32,7 +34,7 @@ case class SyslogParseExpr(child: Expression, defaultYear: Int = 2024,
   override def prettyName: String = "parse_syslog"
 
   override protected def nullSafeEval(input: Any): Any =
-    SyslogParseExpr.parse(input.toString, defaultYear,
+    SyslogParseExpr.parse(input.asInstanceOf[UTF8String], defaultYear,
       detectYearAfterTimestamp, permitSlashInProgramname, parseHostnameAndTag)
 
   // real codegen (not CodegenFallback): children stay codegen'd and the
@@ -43,7 +45,31 @@ case class SyslogParseExpr(child: Expression, defaultYear: Int = 2024,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SyslogParseExpr$$.MODULE$$.parse($c.toString(), $defaultYear, $detectYearAfterTimestamp, $permitSlashInProgramname, $parseHostnameAndTag);")
+      s"${ev.value} = graft.functions.SyslogParseExpr$$.MODULE$$.parse($c, $defaultYear, $detectYearAfterTimestamp, $permitSlashInProgramname, $parseHostnameAndTag);")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `syslog_pri(rawmsg)`: the PRI alone, read straight from the
+  * `<NNN>` bytes by the scan `parse_syslog` itself runs. A PRI selector
+  * filter over this kernel pushes down as a byte scan, so the full parse
+  * runs only on the rows an action takes. */
+case class SyslogPriExpr(child: Expression)
+    extends UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "syslog_pri"
+
+  override protected def nullSafeEval(input: Any): Any =
+    SyslogParseExpr.pri(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.SyslogParseExpr$$.MODULE$$.pri($c);")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -86,39 +112,53 @@ object SyslogParseExpr {
     tag.substring(0, i)
   }
 
-  def parse(raw: String, defaultYear: Int,
+  /** PRI scan over the raw bytes, shared by `parse_syslog` and
+    * `syslog_pri`: no '<' at offset 0 → DEFUPRI 13 = user.notice
+    * (RFC3164 §4.3.3); a '<' that does NOT open a valid `<1-3 ASCII
+    * digits ≤191>` → LOG_PRI_INVLD 199 = facility 24 "invld" + severity
+    * debug, with the PRI text left in the message (compute_off_after_pri
+    * + parser.c:586-597, an ASCII-only digit scan; tests/fac_invld*.sh).
+    * Returns `pri | offsetAfterPri << 8`; the PRI text is ASCII, so the
+    * byte offset is also the char offset. */
+  def priScan(s: UTF8String): Int = {
+    val n = s.numBytes
+    if (n == 0 || s.getByte(0) != '<') return 13
+    var k = 1
+    var v = 0
+    while (k <= 3 && k < n && s.getByte(k) >= '0' && s.getByte(k) <= '9') {
+      v = v * 10 + (s.getByte(k) - '0')
+      k += 1
+    }
+    if (k > 1 && k < n && s.getByte(k) == '>' && v <= 191) v | (k + 1) << 8
+    else 199
+  }
+
+  /** The PRI alone: the `syslog_pri` kernel. */
+  def pri(s: UTF8String): Int = priScan(s) & 0xff
+
+  def parse(raw: UTF8String, defaultYear: Int,
             detectYearAfterTime: Boolean = false,
             permitSlashProg: Boolean = false,
             parseHostnameAndTag: Boolean = true): InternalRow = {
-    try parseImpl(raw, defaultYear, detectYearAfterTime, permitSlashProg,
-      parseHostnameAndTag)
-    catch { case _: Exception => fallback(raw) }
+    val scan = priScan(raw)
+    val s = raw.toString
+    try parseImpl(s, scan & 0xff, scan >>> 8, defaultYear, detectYearAfterTime,
+      permitSlashProg, parseHostnameAndTag)
+    catch { case _: Exception => fallback(s, scan & 0xff) }
   }
 
-  private def fallback(raw: String): InternalRow =
-    InternalRow(1, null, null, null, null, null, null, null, null, null,
+  /** The row of a body the parser could not take: the raw message in
+    * `msg`, the PRI already scanned, nulls elsewhere. */
+  private[graft] def fallback(raw: String, pri: Int): InternalRow =
+    InternalRow(1, pri, pri >> 3, pri & 7, null, null, null, null, null, null,
       null, null, utf8(raw), false)
 
-  private def parseImpl(raw: String, defaultYear: Int,
+  private def parseImpl(raw: String, pri: Int, bodyStart: Int, defaultYear: Int,
                         detectYearAfterTime: Boolean,
                         permitSlashProg: Boolean,
                         parseHostnameAndTag: Boolean): InternalRow = {
-    var i = 0
+    val i = bodyStart
     val n = raw.length
-    // ---- PRI ----
-    // no '<' at all → DEFUPRI user.notice; a '<' that does NOT start a
-    // valid `<1-3 digits ≤191>` → LOG_PRI_INVLD 199 = facility 24
-    // "invld" + severity debug, with the PRI text left in the message
-    // (compute_off_after_pri + parser.c:586-597, tests/fac_invld*.sh)
-    var pri = 13 // user.notice default when no PRI (RFC3164 §4.3.3)
-    if (i < n && raw(i) == '<') {
-      val close = raw.indexOf('>', i)
-      val p = if (close > i && close <= i + 4) raw.substring(i + 1, close) else ""
-      if (p.nonEmpty && p.forall(_.isDigit) && p.toInt <= 191) {
-        pri = p.toInt
-        i = close + 1
-      } else pri = 199
-    }
     val facility = pri >> 3
     val severity = pri & 7
 

@@ -90,13 +90,17 @@ object InputBinding {
     // a line-indexed source for exact numbering, same contract as the
     // stream gate's ordering note.
     val addMeta = p.get("addmetadata").contains("on")
-    val lines = if (addMeta)
+    val numbered = if (addMeta)
       lines1.withColumn("__file", input_file_name())
         .withColumn("__lineno",
           org.apache.spark.sql.functions.row_number().over(
             org.apache.spark.sql.expressions.Window.partitionBy(col("__file"))
               .orderBy(monotonically_increasing_id())))
     else lines1
+    // empty lines are no messages (imfile.c enqLine: "we do not process
+    // empty lines"); dropped after numbering, so line_number stays the
+    // file's line number
+    val lines = numbered.filter(col("value") =!= "")
     def meta(df: DataFrame): DataFrame =
       if (!addMeta) df
       else df.withColumn("vars_msg",
@@ -740,8 +744,8 @@ object InputBinding {
           .toDF()
       else if (readMode > 0)
         Stateful.imfileReadMode(in, readMode, flushAfterMs = flushMs).toDF()
-      else in.toDF().select(col("key"), col("seq").as("startSeq"),
-        col("line").as("record"))
+      else in.toDF().filter(col("line") =!= "")  // enqLine skips empty lines
+        .select(col("key"), col("seq").as("startSeq"), col("line").as("record"))
     out.select(col("key"), col("startSeq").as("start_seq"), col("record"))
   }
 }

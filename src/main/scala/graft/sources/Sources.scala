@@ -426,6 +426,15 @@ object Sources {
     reportRows.map(processed.unionByName(_)).getOrElse(processed)
   }
 
+  /** Reception decode: sanitize `valueCol` into `rawmsg`, parse it with
+    * `parse_syslog`, and flatten the parsed fields into LogEvent columns
+    * (plus empty `vars_msg`/`vars_local`). `pri`, `facility` (`pri >> 3`)
+    * and `severity` (`pri & 7`) come from the `syslog_pri` byte scan, not
+    * from the parsed struct: Catalyst pushes a filter on them (a PRI
+    * selector, a `stop` under one) below this projection by inlining
+    * their expressions, so a filter on them costs a byte scan and the
+    * full parse runs once, only on the rows that pass. A filter on any
+    * other parsed field still inlines a copy of the parse. */
   def decodeSyslog(lines: DataFrame, valueCol: String = "value",
                    defaultYear: Int = 2024,
                    dropTrailingCr: Boolean = false,
@@ -436,6 +445,7 @@ object Sources {
       case Some(o) => sanitize(col(valueCol), o)
       case None => sanitize(col(valueCol), dropTrailingCr, escapeControlCharacters)
     }
+    val pri = rainer.syslog_pri(col("rawmsg"))
     lines
       .withColumn("rawmsg", sanitized)
       .withColumn("p", rainer.parse_syslog(col("rawmsg"), defaultYear,
@@ -443,7 +453,12 @@ object Sources {
       .select((lines.columns.filter(_ != valueCol).map(col) :+ col("rawmsg")) ++
         Seq("protocol_version", "pri", "facility", "severity", "ts", "hostname",
           "app_name", "procid", "msgid", "structured_data", "syslogtag",
-          "programname", "msg", "parsesuccess").map(f => col(s"p.$f").as(f)): _*)
+          "programname", "msg", "parsesuccess").map {
+          case "pri" => pri.as("pri")
+          case "facility" => shiftright(pri, 3).as("facility")
+          case "severity" => pri.bitwiseAND(7).as("severity")
+          case f => col(s"p.$f").as(f)
+        }: _*)
       .withColumn("vars_msg", lit("{}"))
       .withColumn("vars_local", lit("{}"))
   }
@@ -496,9 +511,17 @@ object Sources {
     df.write.mode("append").partitionBy(partitionCols: _*)
       .format(format).save(outPath)
 
-  /** omfile static-file batch sink: render a template column to text. */
-  def omfileText(df: DataFrame, lineCol: String, outPath: String): Unit =
-    df.select(col(lineCol)).write.mode("overwrite").text(outPath)
+  /** omfile static-file batch sink: render a template column to text.
+    * Spark's text writer ends every record with LF, so one trailing LF
+    * is dropped from each record first and the file holds exactly the
+    * template's bytes. A template that does not end in LF still gets
+    * one: the writer's `lineSep` cannot be empty. */
+  def omfileText(df: DataFrame, lineCol: String, outPath: String): Unit = {
+    val line = col(lineCol)
+    df.select(when(line.endsWith("\n"), line.substr(lit(1), length(line) - 1))
+        .otherwise(line).as(lineCol))
+      .write.mode("overwrite").text(outPath)
+  }
 
   /** Shape a frame to the Spark Kafka SINK contract (topic/key/value) —
     * the pure, broker-free half of omkafka. dynatopic == the `topic`

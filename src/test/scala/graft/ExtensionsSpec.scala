@@ -32,6 +32,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val r = spark.sql(
       """SELECT
         |  graft_syslog_parse('<13>Oct 11 22:14:15 host app[42]: hi').hostname AS h,
+        |  graft_syslog_pri('<34>x') AS pri,
         |  graft_langid('the cat and the hat of the thing') AS lang,
         |  graft_tokens('A b  C') AS toks,
         |  graft_ngrams(graft_tokens('a b c'), 2) AS bi,
@@ -41,6 +42,7 @@ class ExtensionsSpec extends AnyFunSuite {
         |  graft_is_in_subnet('192.168.1.77', '192.168.0.0/16') AS in_net
         |""".stripMargin).collect()(0)
     assert(r.getAs[String]("h") == "host")
+    assert(r.getAs[Int]("pri") == 34)
     assert(r.getAs[String]("lang") == "en")
     assert(r.getAs[scala.collection.Seq[String]]("toks").toSeq == Seq("a", "b", "c"))
     assert(r.getAs[scala.collection.Seq[String]]("bi").toSeq == Seq("a b", "b c"))

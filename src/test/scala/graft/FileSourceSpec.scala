@@ -37,6 +37,40 @@ class FileSourceSpec extends SparkSpec {
     }
   }
 
+  test("omfileText writes exactly the template's bytes (one LF per record)") {
+    val spool = graft.Tmp.dir("graft_omfile_exact")
+    Files.writeString(spool.resolve("a.log"),
+      "<13>Mar  1 01:02:03 hostX su[7]: parsed body\n<78>Mar  1 01:02:04 hostY cron: job\n")
+    val cfg = graft.rainerscript.RsyslogConfig.parse(
+      s"""module(load="imfile")
+         |input(type="imfile" file="$spool/*.log" tag="t:" needparse="on")
+         |$$ActionFileDefaultTemplate RSYSLOG_TraditionalFileFormat
+         |*.*                             /var/log/syslog
+         |""".stripMargin)
+    val out = graft.Tmp.dir("graft_omfile_exact_out").resolve("syslog")
+    Sources.omfileText(cfg.activate(spark)("").actionFrame(0), "__rendered", out.toString)
+    val parts = Files.list(out).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+    val bytes = parts.map(p => new String(Files.readAllBytes(p), "UTF-8")).mkString
+    assert(bytes == "Mar  1 01:02:03 hostX su[7]: parsed body\n" +
+      "Mar  1 01:02:04 hostY cron: job\n")
+  }
+
+  test("imfile skips exactly-empty lines (imfile.c enqLine)") {
+    val spool = graft.Tmp.dir("graft_imfile_empty")
+    Files.writeString(spool.resolve("a.log"), "first\n\n third\n")
+    Seq("off", "on").foreach { needparse =>
+      val cfg = graft.rainerscript.RsyslogConfig.parse(
+        s"""module(load="imfile")
+           |input(type="imfile" file="$spool/*.log" tag="t:" needparse="$needparse")
+           |*.* /var/log/syslog
+           |""".stripMargin)
+      val rows = cfg.activate(spark)("").actionFrame(0).select("rawmsg")
+        .as[String].collect().sorted.toSeq
+      assert(rows == Seq(" third", "first"), s"needparse=$needparse")
+    }
+  }
+
   test("imjournal decode: field mapping, fallbacks, dup-key last-wins") {
     val full = "__REALTIME_TIMESTAMP=1700000000000000\nMESSAGE=hello world\n" +
       "PRIORITY=3\nSYSLOG_FACILITY=10\nSYSLOG_IDENTIFIER=sshd\n" +

@@ -51,6 +51,42 @@ class PlanAuditSpec extends SparkSpec {
       "PRI mask filter must be a codegen'd boolean expr")
   }
 
+  test("distro PRI selectors: each action parses once, never inside a pushed filter") {
+    // the six-action stock config: every selector (and the `& stop`
+    // under local7.*) reads only pri/facility/severity, which decode
+    // projects from the syslog_pri byte scan — so the filters Catalyst
+    // pushes below the decode projection carry no copy of the parse
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import graft.functions.SyslogParseExpr
+    val spool = graft.Tmp.dir("graft_distro_plan")
+    java.nio.file.Files.writeString(spool.resolve("a.log"),
+      "<13>Mar  1 01:02:03 h su[7]: x\n<34>1 2024-01-01T00:00:00Z h a - - - y\n")
+    val cfg = graft.rainerscript.RsyslogConfig.parse(
+      """$ActionFileDefaultTemplate RSYSLOG_TraditionalFileFormat
+        |local7.*                        /var/log/boot.log
+        |& stop
+        |auth,authpriv.*                 /var/log/auth.log
+        |*.*;auth,authpriv.none          -/var/log/syslog
+        |cron.*                          -/var/log/cron.log
+        |kern.*                          -/var/log/kern.log
+        |mail.err                        /var/log/mail.err
+        |""".stripMargin)
+    val res = cfg.run(graft.sources.Sources.decodeSyslog(
+      graft.sources.Sources.fileLines(spark, spool.toString)))
+    assert(res.actions.size == 6)
+    res.actions.indices.foreach { i =>
+      val opt = res.actionFrame(i).queryExecution.optimizedPlan
+      val parses = opt.collect { case n =>
+        n.expressions.flatMap(_.collect { case e: SyslogParseExpr => e }) }.flatten
+      assert(parses.size == 1, s"action $i: ${parses.size} parses\n$opt")
+      val underFilter = opt.collect { case f: Filter =>
+        f.collect { case n =>
+          n.expressions.flatMap(_.collect { case e: SyslogParseExpr => e }) }.flatten
+      }.flatten
+      assert(underFilter.isEmpty, s"action $i: parse under a Filter\n$opt")
+    }
+  }
+
   test("propfilt: pushable predicate reaches the documents parquet scan") {
     val p = plan("propfilt")
     val pushed = p.linesIterator.filter(_.contains("PushedFilters")).mkString

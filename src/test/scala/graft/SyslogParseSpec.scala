@@ -68,6 +68,20 @@ class SyslogParseSpec extends SparkSpec {
     assert(r.getAs[Int]("severity") == 5)
   }
 
+  test("a PRI of non-ASCII digits is LOG_PRI_INVLD 199 (ASCII-only scan, parser.c:586-597)") {
+    // Arabic-Indic 13: Char.isDigit + toInt would read it as 13
+    val r = parse1("<\u0661\u0663>msg")
+    assert(r.getAs[Int]("pri") == 199)
+    assert(r.getAs[Int]("facility") == 24 && r.getAs[Int]("severity") == 7)
+  }
+
+  test("the fallback row keeps the PRI scanned before the body parse") {
+    val row = graft.functions.SyslogParseExpr.fallback("<34>x", 34)
+    assert(row.getInt(1) == 34 && row.getInt(2) == 4 && row.getInt(3) == 2)
+    assert(row.getUTF8String(12).toString == "<34>x")
+    assert(!row.getBoolean(13))
+  }
+
   test("no timestamp: BSD tag-first parse continues (parsertest-parse-nodate)") {
     // the reference parses hostname/TAG even without a timestamp — the
     // classic BSD mis-parse is authentic behavior
@@ -200,7 +214,7 @@ class SyslogParseSpec extends SparkSpec {
     (0 until 10000).foreach { i =>
       val raw = headers(i % headers.length) + randStr()
       val row = graft.functions.SyslogParseExpr.parse(
-        raw, 2024, i % 2 == 0, i % 3 == 0)
+        org.apache.spark.unsafe.types.UTF8String.fromString(raw), 2024, i % 2 == 0, i % 3 == 0)
       assert(row != null && row.numFields == 14, s"input: [$raw]")
     }
   }
