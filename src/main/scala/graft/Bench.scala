@@ -1139,22 +1139,14 @@ object Bench {
   }
 
   private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // test parquet is a handful of ~10-30MB files; the 128MB default
-      // split size would serialize every scan onto one core. At cluster
-      // scale the default is right — this mirrors having many input
-      // files. 512k matches the synth corpora's row-group size, so
-      // byte-range splits land on group boundaries and a ~10MB table
-      // still spreads across ~20 cores without a rebalance shuffle.
-      .config("spark.sql.files.maxPartitionBytes", "512k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", "graft-bench")
+    // test parquet is a handful of ~10-30MB files; the 128MB default
+    // split size would serialize every scan onto one core. At cluster
+    // scale the default is right — this mirrors having many input
+    // files. 512k matches the synth corpora's row-group size, so
+    // byte-range splits land on group boundaries and a ~10MB table
+    // still spreads across ~20 cores without a rebalance shuffle.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "512k")
     spark
   }
 

@@ -118,35 +118,32 @@ object Tables {
     rebalance(spark, apply(spark, dir, "embeddings"), s"$dir/embeddings.parquet")
 }
 
-/** Session factory with the engine's standard tuning. AQE on so
-  * skew/coalesce replanning works at scale the same way it would on a
-  * real cluster. The two scale-dependent knobs are env-parameterised
-  * (r15, guide §2/§6 — never bake a local constant into a setting
-  * whose right value is cluster-dependent) with local-mode defaults:
+/** The one session factory: every graft session — mains, tools, the
+  * benchmark and the shared test session — is built here, so the
+  * configuration that is tested is the one that is benchmarked.
   *
-  *  - `SPARK_GRAFT_SHUFFLE_PARTITIONS` (default 32): matches local[32]
-  *    and this sandbox's ~10–30 MB test tables. On a cluster, size so
-  *    post-shuffle partitions land in the 100 MB–1 GB band (guide
-  *    §2.2) — AQE coalescing then trims the excess at runtime.
-  *  - `SPARK_GRAFT_MAX_PARTITION_BYTES` (default 4m): the test parquet
-  *    is a handful of small files; the 128 MB default would serialize
-  *    every scan onto one core. On a cluster keep the default or go
-  *    BIGGER (512m–1g) for large sequential scans (guide §6).
-  */
+  * Shuffle partitions are one per task thread
+  * (`sparkContext.defaultParallelism`, N under `local[N]`), because
+  * streaming runs without AQE: a stateful micro-batch runs every shuffle
+  * partition as a task whatever its size. A stateful query restores its
+  * partition count from its checkpoint's offset log on restart, so this
+  * setting binds only queries that start from an empty checkpoint.
+  * AQE stays on so batch plans coalesce and split skew at run time.
+  * Splits are 4 MiB: the engine's inputs are a handful of small files,
+  * and the 128 MiB default would serialize every scan onto one core. */
 object GraftSession {
   def apply(master: String = "local[*]", appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
+      .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.sparkContext.defaultParallelism.toLong)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

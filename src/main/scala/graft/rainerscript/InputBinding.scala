@@ -217,15 +217,12 @@ object InputBinding {
   private[rainerscript] def decodeChain(lines: DataFrame,
       chain: Seq[(String, Map[String, String])], defaultYear: Int,
       parseHostnameAndTag: Boolean = true,
-      sanitizeOpts: Option[Sources.SanitizeOpts] = None): DataFrame = {
+      sanitize: Sources.SanitizeOpts = Sources.SanitizeOpts()): DataFrame = {
     import graft.sources.Sources
     require(chain.nonEmpty, "empty parser chain")
 
     var df = lines
-      .withColumn("__raw0", sanitizeOpts match {
-        case Some(o) => Sources.sanitize(col("value"), o)
-        case None => Sources.sanitize(col("value"))
-      })
+      .withColumn("__raw0", Sources.sanitize(col("value"), sanitize))
       .withColumn("__prihdr",
         regexp_extract(col("__raw0"), "^(<\\d{1,3}>)", 1))
       // parserParsePRI: valid <N> header else DEFUPRI=13
@@ -496,7 +493,7 @@ object InputBinding {
                        chain: Option[Seq[(String, Map[String, String])]] = None,
                        p: Map[String, String] = Map.empty,
                        oversize: Option[(Int, String, Boolean)] = None,
-                       sanitizeOpts: Option[Sources.SanitizeOpts] = None): DataFrame = {
+                       sanitize: Sources.SanitizeOpts = Sources.SanitizeOpts()): DataFrame = {
     def on(k: String, dflt: Boolean = false): Boolean =
       p.get(k).map(_ == "on").getOrElse(dflt)
     if (typ == "imkafka" || df.columns.contains("topic"))
@@ -613,10 +610,9 @@ object InputBinding {
         case None => framed0
       }
       chain.map(c => decodeChain(framed, c, defaultYear, parseHostnameAndTag,
-          sanitizeOpts))
+          sanitize))
         .getOrElse(Sources.decodeSyslog(framed, defaultYear = defaultYear,
-          parseHostnameAndTag = parseHostnameAndTag,
-          sanitizeOpts = sanitizeOpts))
+          parseHostnameAndTag = parseHostnameAndTag, sanitize = sanitize))
         .withColumn("ts", coalesce(col("ts"), now))
     }
   }
@@ -631,11 +627,8 @@ object InputBinding {
     // hostname/TAG text in MSG (glbl.GetParseHOSTNAMEandTAG →
     // pmrfc3164.c:383, tests/rscript_parsehostnameandtag_off.sh)
     val phat = !cfg.globals.get("parser.parsehostnameandtag").contains("off")
-    // glbl parser.* sanitize family (SanitizeMsg options); None = stock
-    val sanOpts = {
-      val o = Sources.SanitizeOpts.fromGlobals(cfg.globals)
-      if (o == Sources.SanitizeOpts()) None else Some(o)
-    }
+    // glbl parser.* sanitize family (SanitizeMsg options)
+    val sanOpts = Sources.SanitizeOpts.fromGlobals(cfg.globals)
     // explicit global(maxMessageSize=) only — no inherent default cap
     val oversize = cfg.globals.get("maxmessagesize").map { v =>
       val n = v.trim.toLowerCase match {

@@ -327,20 +327,6 @@ object Sources {
           lit("{}").as("vars_msg"), lit("{}").as("vars_local")): _*)
   }
 
-  /** The standard decode pipeline: framed lines -> parsed LogEvent columns
-    * (parser chain ~= one expression, SURVEY S2.9). Reception sanitize
-    * mirrors runtime/parser.c SanitizeMsg in the reference's default
-    * order: trailing-LF drop is inherent to the line sources;
-    * `dropTrailingCr` mirrors the opt-in
-    * parser.dropTrailingCrOnReception (parser.c:372, default off per
-    * glbl.c:1185 — tests/parser-drop-trailing-cr.sh); then control
-    * characters < 32 escape as '#'+octal (`escapeControlCharacters`,
-    * reference default ON per glbl.c:1186 — tab included, DEL and
-    * 8-bit chars untouched). */
-  /** Reception sanitize as a column transform (parser.c SanitizeMsg):
-    * optional trailing-CR drop, then control-char '#'+octal escaping
-    * (reference default on). Reused by decodeSyslog and by input
-    * bindings whose messages skip the parser chain (imfile default). */
   /** glbl parser.* sanitize options (rsconf.c:404-411 defaults). */
   case class SanitizeOpts(dropTrailingCr: Boolean = false,
                           escapeCC: Boolean = true,
@@ -367,14 +353,16 @@ object Sources {
     }
   }
 
+  /** Reception sanitize as a column transform, in runtime/parser.c
+    * SanitizeMsg's order: the opt-in trailing-CR drop
+    * (parser.dropTrailingCrOnReception, parser.c:372, default off per
+    * glbl.c:1185 — tests/parser-drop-trailing-cr.sh), then control
+    * characters < 32 escape as '#'+octal (default on per glbl.c:1186 —
+    * tab included, DEL and 8-bit chars untouched). The trailing-LF drop
+    * is inherent to the line sources. Reused by decodeSyslog and by input
+    * bindings whose messages skip the parser chain (imfile default). */
   def sanitize(c: org.apache.spark.sql.Column,
-               dropTrailingCr: Boolean = false,
-               escapeControlCharacters: Boolean = true): org.apache.spark.sql.Column =
-    sanitize(c, SanitizeOpts(dropTrailingCr = dropTrailingCr,
-      escapeCC = escapeControlCharacters))
-
-  def sanitize(c: org.apache.spark.sql.Column,
-               opts: SanitizeOpts): org.apache.spark.sql.Column = {
+               opts: SanitizeOpts = SanitizeOpts()): org.apache.spark.sql.Column = {
     val trimmed =
       if (opts.dropTrailingCr) regexp_replace(c, "\r$", "") else c
     if (opts == SanitizeOpts(dropTrailingCr = opts.dropTrailingCr))
@@ -426,7 +414,9 @@ object Sources {
     reportRows.map(processed.unionByName(_)).getOrElse(processed)
   }
 
-  /** Reception decode: sanitize `valueCol` into `rawmsg`, parse it with
+  /** Reception decode: sanitize `valueCol` into `rawmsg` under the
+    * glbl parser.* options `sanitize` (stock: no trailing-CR drop,
+    * control characters escaped), parse it with
     * `parse_syslog`, and flatten the parsed fields into LogEvent columns
     * (plus empty `vars_msg`/`vars_local`). `pri`, `facility` (`pri >> 3`)
     * and `severity` (`pri & 7`) come from the `syslog_pri` byte scan, not
@@ -437,14 +427,9 @@ object Sources {
     * other parsed field still inlines a copy of the parse. */
   def decodeSyslog(lines: DataFrame, valueCol: String = "value",
                    defaultYear: Int = 2024,
-                   dropTrailingCr: Boolean = false,
-                   escapeControlCharacters: Boolean = true,
                    parseHostnameAndTag: Boolean = true,
-                   sanitizeOpts: Option[SanitizeOpts] = None): DataFrame = {
-    val sanitized = sanitizeOpts match {
-      case Some(o) => sanitize(col(valueCol), o)
-      case None => sanitize(col(valueCol), dropTrailingCr, escapeControlCharacters)
-    }
+                   sanitize: SanitizeOpts = SanitizeOpts()): DataFrame = {
+    val sanitized = Sources.sanitize(col(valueCol), sanitize)
     val pri = rainer.syslog_pri(col("rawmsg"))
     lines
       .withColumn("rawmsg", sanitized)

@@ -142,6 +142,10 @@ object StreamGate {
     // SQLConf; the bounded gate query plans against the clone's conf
     val gate = spark.newSession()
     gate.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the clone starts from the SparkContext conf, so a split size the
+    // caller set at run time (Bench's 512k) is carried over by hand
+    gate.conf.set("spark.sql.files.maxPartitionBytes",
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
     // State-store shard count scales with source volume (r8 judge: a
     // fixed 8 was a serialization cliff at sf1 — 6M rows shuffling
     // through 8 stateful partitions on 32 cores). ~16 MiB of source per

@@ -183,14 +183,16 @@ class FileSourceSpec extends SparkSpec {
     // default: CR kept (drop is opt-in) and escaped #015 (EscapeCCOnRcv=1)
     val kept = Sources.decodeSyslog(lines).collect()(0)
     assert(kept.getAs[String]("msg") == " m#015")
-    val dropped = Sources.decodeSyslog(lines, dropTrailingCr = true).collect()(0)
+    val dropped = Sources.decodeSyslog(lines,
+      sanitize = Sources.SanitizeOpts(dropTrailingCr = true)).collect()(0)
     assert(dropped.getAs[String]("msg") == " m")
     // tab escapes as #011 (snare's wire format under default settings);
     // 8-bit chars pass through (Escape8BitCharacters default off)
     val tab = Seq("<13>Mar  1 01:00:00 h a: x\ty ü").toDF("value")
     val t = Sources.decodeSyslog(tab).collect()(0)
     assert(t.getAs[String]("msg") == " x#011y ü")
-    val ccoff = Sources.decodeSyslog(tab, escapeControlCharacters = false).collect()(0)
+    val ccoff = Sources.decodeSyslog(tab,
+      sanitize = Sources.SanitizeOpts(escapeCC = false)).collect()(0)
     assert(ccoff.getAs[String]("msg") == " x\ty ü")
   }
 

@@ -22,6 +22,19 @@ class PlanAuditSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, dir)
       .queryExecution.explainString(FormattedMode)
 
+  test("shared session carries GraftSession's conf, the one the benchmark runs") {
+    // every plan pinned below depends on these settings
+    def conf(k: String): String = spark.conf.get(k)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(conf("spark.sql.shuffle.partitions") == "4",
+      "one shuffle partition per task thread")
+    assert(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      conf("spark.sql.files.maxPartitionBytes")) == (4L << 20))
+    assert(conf("spark.sql.adaptive.enabled") == "true")
+    assert(conf("spark.sql.session.timeZone") == "UTC")
+    assert(conf("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
   test("q1_agg: column pruning reaches the lineitem scan; agg is two-phase") {
     val p = plan("q1_agg")
     // only the 5 needed columns in ReadSchema — a scan reading all of

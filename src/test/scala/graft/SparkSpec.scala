@@ -7,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * lazy so sbt test reuses it). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession("local[4]", "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

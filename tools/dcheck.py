@@ -11,9 +11,11 @@ outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 skip = "--skip-verify" in sys.argv
 
 if not skip:
+    # Verify runs in the checkout that holds this script
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {sfdir} {outdir}'],
-        capture_output=True, text=True, cwd="/root/repo", timeout=1800)
+        capture_output=True, text=True, cwd=repo, timeout=1800)
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-3000:])
         sys.exit(f"Verify failed")
