@@ -4013,8 +4013,8 @@ object Queries {
     // through the text sink, read the files back — the whole write path
     // is under oracle (the dynafile twin is omfile_dynafile)
     "omfile_text" -> ((s, dir) => {
-      // fixed path, mode=overwrite: repeated bench trials reuse the same
-      // scratch dir instead of leaking one temp dir per run
+      // fixed path, replaced by each write: repeated bench trials reuse
+      // the same scratch dir instead of leaking one temp dir per run
       val out = new java.io.File(
         System.getProperty("java.io.tmpdir"), "graft_omfile_text").getPath
       val ev = synthSyslog(s, dir).select(col("rawmsg").as("line"))

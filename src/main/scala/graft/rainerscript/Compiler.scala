@@ -97,8 +97,13 @@ object RainerCompiler {
     /** Rows reaching action i; `__rendered` carries the action's template
       * output as materialized AT the action's sequence point (rsyslog
       * renders when the action fires — later variable mutations must not
-      * leak in). */
-    def actionFrame(i: Int): DataFrame = {
+      * leak in). Built and analyzed once per index: every call returns the
+      * same Dataset. */
+    def actionFrame(i: Int): DataFrame =
+      actionFrames.computeIfAbsent(i, _ => buildActionFrame(i))
+    private val actionFrames =
+      new java.util.concurrent.ConcurrentHashMap[Int, DataFrame]()
+    private def buildActionFrame(i: Int): DataFrame = {
       val a = actions(i)
       val base = a.frameOverride.getOrElse(frame).filter(col(a.condCol))
       val rendered = a.renderCol match {

@@ -496,17 +496,19 @@ object Sources {
     df.write.mode("append").partitionBy(partitionCols: _*)
       .format(format).save(outPath)
 
-  /** omfile static-file batch sink: render a template column to text.
-    * Spark's text writer ends every record with LF, so one trailing LF
-    * is dropped from each record first and the file holds exactly the
-    * template's bytes. A template that does not end in LF still gets
-    * one: the writer's `lineSep` cannot be empty. */
-  def omfileText(df: DataFrame, lineCol: String, outPath: String): Unit = {
-    val line = col(lineCol)
-    df.select(when(line.endsWith("\n"), line.substr(lit(1), length(line) - 1))
-        .otherwise(line).as(lineCol))
-      .write.mode("overwrite").text(outPath)
-  }
+  /** omfile static-file batch sink (tools/omfile.c:276-319 appends each
+    * rendered message to an open file): write the string column `lineCol`
+    * to the directory `outPath`, one `part-NNNNN` file per non-empty
+    * partition, named by partition index, so the sorted part files
+    * concatenate to the frame's order. A record is written as its bytes
+    * plus LF unless they already end in LF, so a template that ends in LF
+    * is written exactly; a null record is a bare LF. Tasks write into a
+    * hidden sibling `.<name>.<uuid>.tmp`; after the job succeeds the old
+    * directory is deleted and the new one renamed into place, and on
+    * failure the old output stays. Local files only, as omfile: a path
+    * with a scheme other than `file:` is an IllegalArgumentException. */
+  def omfileText(df: DataFrame, lineCol: String, outPath: String): Unit =
+    OmfileText.write(df, lineCol, outPath)
 
   /** Shape a frame to the Spark Kafka SINK contract (topic/key/value) —
     * the pure, broker-free half of omkafka. dynatopic == the `topic`

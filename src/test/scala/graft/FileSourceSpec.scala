@@ -56,6 +56,112 @@ class FileSourceSpec extends SparkSpec {
       "Mar  1 01:02:04 hostY cron: job\n")
   }
 
+  private def lines(xs: Seq[String], partitions: Int) =
+    spark.sparkContext.parallelize(xs, partitions).toDF("l")
+  private def partFiles(d: java.nio.file.Path): Seq[java.nio.file.Path] =
+    d.toFile.listFiles().toSeq.map(_.toPath)
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+  private def written(d: java.nio.file.Path): String =
+    partFiles(d).map(p => new String(Files.readAllBytes(p), "UTF-8")).mkString
+
+  test("omfileText: a later write replaces the whole directory") {
+    val out = graft.Tmp.dir("graft_omfile_replace").resolve("o")
+    Sources.omfileText(lines(Seq("a", "b", "c"), 3), "l", out.toString)
+    assert(partFiles(out).size == 3 && written(out) == "a\nb\nc\n")
+    Sources.omfileText(lines(Seq("z"), 1), "l", out.toString)
+    assert(out.toFile.list().toSeq == Seq("part-00000"))
+    assert(written(out) == "z\n")
+  }
+
+  test("omfileText: sorted part files concatenate in input order") {
+    val out = graft.Tmp.dir("graft_omfile_order").resolve("o")
+    Sources.omfileText(spark.range(0, 1000, 1, 7).select(col("id").cast("string").as("l")),
+      "l", out.toString)
+    assert(partFiles(out).map(_.getFileName.toString) == (0 until 7).map(i => f"part-$i%05d"))
+    assert(written(out) == (0 until 1000).map(i => s"$i\n").mkString)
+  }
+
+  test("omfileText: LF appended unless present; null is a bare LF") {
+    val out = graft.Tmp.dir("graft_omfile_lf").resolve("o")
+    Seq[(String, String)]((null, "\n"), ("", "\n"), ("a", "a\n"), ("a\n", "a\n"))
+      .foreach { case (in, want) =>
+        Sources.omfileText(lines(Seq(in), 1), "l", out.toString)
+        assert(written(out) == want, s"record ${Option(in).map(_.replace("\n", "\\n"))}")
+      }
+  }
+
+  test("omfileText: an empty frame leaves an empty directory") {
+    val out = graft.Tmp.dir("graft_omfile_empty").resolve("o")
+    Sources.omfileText(lines(Seq("old"), 1), "l", out.toString)
+    Sources.omfileText(lines(Nil, 3), "l", out.toString)
+    assert(out.toFile.isDirectory && out.toFile.list().isEmpty)
+    assert(spark.read.text(out.toString).count() == 0)
+  }
+
+  test("omfileText: a failed job keeps the previous output and leaves no stage") {
+    val base = graft.Tmp.dir("graft_omfile_fail")
+    val out = base.resolve("o")
+    Sources.omfileText(lines(Seq("old"), 1), "l", out.toString)
+    val failing = spark.range(0, 100, 1, 4).select(
+      when(col("id") === 50, raise_error(lit("boom"))).otherwise(col("id").cast("string")).as("l"))
+    intercept[Exception](Sources.omfileText(failing, "l", out.toString))
+    assert(written(out) == "old\n")
+    assert(base.toFile.list().toSeq == Seq("o"))
+  }
+
+  test("omfileText: the output holds only part files") {
+    val out = graft.Tmp.dir("graft_omfile_clean").resolve("o")
+    Sources.omfileText(lines(Seq("a", "b", "c", "d"), 2), "l", out.toString)
+    assert(out.toFile.list().sorted.toSeq == Seq("part-00000", "part-00001"))
+  }
+
+  test("omfileText: a non-local URI fails before any job runs") {
+    val e = intercept[IllegalArgumentException](
+      Sources.omfileText(lines(Seq("a"), 1), "l", "hdfs://namenode:8020/var/log/x"))
+    assert(e.getMessage.contains("local files only"))
+    // file: URIs are local
+    val out = graft.Tmp.dir("graft_omfile_uri").resolve("o")
+    Sources.omfileText(lines(Seq("a"), 1), "l", out.toUri.toString)
+    assert(written(out) == "a\n")
+  }
+
+  test("omfileText: one SQL execution; task output metrics count the part files' bytes and the rows") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler._
+    val group = "graft-omfile-metrics"
+    val jobs, stages = ConcurrentHashMap.newKeySet[Int]()
+    val executions = ConcurrentHashMap.newKeySet[String]()
+    val bytes, records = new AtomicLong
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.add(e.jobId); e.stageIds.foreach(stages.add)
+          Option(e.properties.getProperty("spark.sql.execution.id")).foreach(executions.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) {
+          bytes.addAndGet(e.taskMetrics.outputMetrics.bytesWritten)
+          records.addAndGet(e.taskMetrics.outputMetrics.recordsWritten)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobs.contains(e.jobId)) done.countDown()
+    }
+    val sc = spark.sparkContext
+    val out = graft.Tmp.dir("graft_omfile_metrics").resolve("o")
+    val rows = Seq("x", "yy\n", null, "ünï", "", "zz")
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "omfileText output metrics")
+    try Sources.omfileText(lines(rows, 3), "l", out.toString)
+    finally sc.clearJobGroup()
+    try assert(done.await(30, TimeUnit.SECONDS), "job end not seen")
+    finally sc.removeSparkListener(listener)
+    assert(jobs.size == 1 && executions.size == 1)
+    assert(bytes.get == partFiles(out).map(Files.size(_)).sum)
+    assert(records.get == rows.size)
+  }
+
   test("imfile skips exactly-empty lines (imfile.c enqLine)") {
     val spool = graft.Tmp.dir("graft_imfile_empty")
     Files.writeString(spool.resolve("a.log"), "first\n\n third\n")

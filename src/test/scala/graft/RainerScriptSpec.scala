@@ -74,6 +74,17 @@ class RainerScriptSpec extends SparkSpec {
     assert(res.actionFrame(0).count() == 3)
   }
 
+  test("actionFrame(i) is built once: every call returns the same Dataset") {
+    val res = RainerCompiler.run(
+      """if $severity <= 3 then action(type="omfile" template="%msg%")
+        |action(type="omfile")
+        |""".stripMargin, fixture)
+    assert(res.actionFrame(0) eq res.actionFrame(0))
+    assert(res.actionFrame(1) eq res.actionFrame(1))
+    assert(res.actionFrame(0) ne res.actionFrame(1))
+    assert(res.actionFrame(0).count() == 2)
+  }
+
   test("guard frozen at sequence point (mutation after if does not rewrite history)") {
     val res = RainerCompiler.run(
       """if $!flag == "x" then set $!hit = "yes";
