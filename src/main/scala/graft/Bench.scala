@@ -40,19 +40,6 @@ object Bench {
     sys.env.getOrElse("SPARK_GRAFT_BUDGET_S", "1500").toDouble
   private def remainingS: Double = budgetS - elapsedS
 
-  // clean-run cost estimates (NOTES medians + headroom); used only for
-  // skip decisions, never reported as measurements. The per-SECTION
-  // estimates died in r15 — the top-down wall plan (see main) replaced
-  // section-entry gating with per-query guards + tiered reserves.
-  private val estSf100Query = // cold-JVM measurements (NOTES_r12) + margin
-    Map("dedup_verified" -> 380.0, "dedup_substring" -> 300.0,
-      "dedup_lines" -> 60.0, "decontaminate_fuzzy" -> 100.0,
-      "dedup_snapshot" -> 60.0, "dedup_snapshot_fuzzy" -> 150.0,
-      // r14 rotation (VERDICT r13 #6): one cheap round-new scan-bound
-      // operator + the PQ family's at-scale point (2M vectors), plus
-      // the retrieval family's (bm25's broadcast-pruned scan)
-      "tokenize_bpe" -> 60.0, "ann_pq" -> 90.0, "bm25_topk" -> 120.0)
-
   /** Host-speed calibration anchor: the r11 (uncontended) median of the
     * 524,288-msg trial on this host class, in msgs/s. The engine code
     * behind the trial is frozen (ingest decode→filter→template→agg),
@@ -338,6 +325,30 @@ object Bench {
     out
   }
 
+  /** The sf100 spot queries in run order, each with its clean-run cost
+    * estimate in seconds: cold-JVM measurements (NOTES_r12) + margin,
+    * used only for the per-query skip decision, never reported as a
+    * measurement. The per-SECTION estimates died in r15 — the top-down
+    * wall plan (see main) replaced section-entry gating with per-query
+    * guards + tiered reserves.
+    *
+    * CHEAP-FIRST order (r13): the driver run reaches this section with
+    * a small remaining budget, so the queries carrying the SUBLINEARITY
+    * claims (snapshot bloom 3.4×, line-dedup 2.7× at 10× data — the
+    * micro-spot VERDICT r12 #4 asked to land in the artifact) run
+    * first at ~20 s each; the 250-340 s exhaustive heavies
+    * (dedup_verified's pair verify, substring's window explode) run
+    * only when the wall allows — their sf100 points are already three
+    * rounds deep in NOTES. */
+  private val sf100SpotQueries: Seq[(String, Double)] = Seq(
+    // r14 rotation (VERDICT r13 #6): one cheap round-new scan-bound
+    // operator + the PQ family's at-scale point (2M vectors), plus
+    // the retrieval family's (bm25's broadcast-pruned scan)
+    "tokenize_bpe" -> 60.0, "ann_pq" -> 90.0, "bm25_topk" -> 120.0,
+    "dedup_snapshot" -> 60.0, "dedup_lines" -> 60.0,
+    "dedup_snapshot_fuzzy" -> 150.0, "decontaminate_fuzzy" -> 100.0,
+    "dedup_verified" -> 380.0, "dedup_substring" -> 300.0)
+
   /** One more decade of measured scale curve for the two most expensive
     * sf10 queries (near-dup verify, substring dedup): single-trial spot
     * run at sf100 (5M docs). The check is near-linearity — each query
@@ -345,18 +356,7 @@ object Bench {
   private def sf100Spot(spark: SparkSession, sfDir: String,
                         forced: Boolean,
                         shared: Boolean = false): (String, String) = {
-    // CHEAP-FIRST order (r13): the driver run reaches this section with
-    // a small remaining budget, so the queries carrying the SUBLINEARITY
-    // claims (snapshot bloom 3.4×, line-dedup 2.7× at 10× data — the
-    // micro-spot VERDICT r12 #4 asked to land in the artifact) run
-    // first at ~20 s each; the 250-340 s exhaustive heavies
-    // (dedup_verified's pair verify, substring's window explode) run
-    // only when the wall allows — their sf100 points are already three
-    // rounds deep in NOTES.
-    val names = Seq("tokenize_bpe", "ann_pq", "bm25_topk",
-      "dedup_snapshot", "dedup_lines",
-      "dedup_snapshot_fuzzy", "decontaminate_fuzzy",
-      "dedup_verified", "dedup_substring")
+    val names = sf100SpotQueries.map(_._1)
     val dir = synthesizeSf100(spark, sfDir)
     // `shared` = running right after the sf10 section in the same JVM
     // (child_scale): code warmth and the heap-floor fault bill are
@@ -383,26 +383,24 @@ object Bench {
     } catch { case _: Throwable => }
     reclaim(spark, gc = false)
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
-    val timed = names.flatMap { n =>
-      SparkEntry.queries.get(n).flatMap { fn =>
-        // per-query deadline check (bypassed when `sf100` was an
-        // explicit arg — standalone runs own their wall clock)
-        if (!forced && remainingS < estSf100Query.getOrElse(n, 400.0)) {
-          System.err.println(f"[bench:sf100] $n skipped (budget: ${remainingS}%.0fs left)")
-          skipped += n
-          None
-        } else {
-          reclaim(spark, gc = false) // blocks only; no full GC in children
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench:sf100] $n failed: ${e.getMessage}"); false
-            }
-          val dt = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[bench:sf100] $n%-18s $dt%8.2fs${if (ok) "" else "  FAILED"}")
-          Some((n, dt, ok))
-        }
+    val timed = sf100SpotQueries.flatMap { case (n, estS) =>
+      // per-query deadline check (bypassed when `sf100` was an
+      // explicit arg — standalone runs own their wall clock)
+      if (!forced && remainingS < estS) {
+        System.err.println(f"[bench:sf100] $n skipped (budget: ${remainingS}%.0fs left)")
+        skipped += n
+        None
+      } else {
+        reclaim(spark, gc = false) // blocks only; no full GC in children
+        val t0 = System.nanoTime()
+        val ok =
+          try { SparkEntry.queries(n)(spark, dir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench:sf100] $n failed: ${e.getMessage}"); false
+          }
+        val dt = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench:sf100] $n%-18s $dt%8.2fs${if (ok) "" else "  FAILED"}")
+        Some((n, dt, ok))
       }
     }
     val nDocs = Tables.documents(spark, dir).count()
@@ -589,8 +587,8 @@ object Bench {
     // heap-fault bill the absorber's bounded retries did not sweep
     // also lands here — the timed pass then measures steady state.
     try {
-      SparkEntry.queries.get("text_quality").foreach(
-        _(spark, sf10Dir).write.format("noop").mode("overwrite").save())
+      SparkEntry.queries("text_quality")(spark, sf10Dir)
+        .write.format("noop").mode("overwrite").save()
       Tables.embeddings(spark, sf10Dir)
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => }
@@ -607,26 +605,24 @@ object Bench {
       if (mandateSet.contains(n)) math.min(reserveS, sf100MandateReserveS)
       else reserveS
     val timed = names.flatMap { n =>
-      SparkEntry.queries.get(n).flatMap { fn =>
-        // per-query deadline guard: section-ENTRY gating is not enough —
-        // the r11 driver-simulation run measured this section at 763 s
-        // against a 380 s clean estimate. Skip the tail loudly rather
-        // than blow the budget (or eat the sf100 micro-spot's reserve).
-        if (remainingS - reserveFor(n) < needS(n)) { skipped += n; None }
-        else Some(fn)
-      }.map { fn =>
+      // per-query deadline guard: section-ENTRY gating is not enough —
+      // the r11 driver-simulation run measured this section at 763 s
+      // against a 380 s clean estimate. Skip the tail loudly rather
+      // than blow the budget (or eat the sf100 micro-spot's reserve).
+      if (remainingS - reserveFor(n) < needS(n)) { skipped += n; None }
+      else {
         // deterministic block reclaim between queries — no full GC (see
         // `reclaim`: 38 multi-second Pause Fulls in the v5 child)
         reclaim(spark, gc = false)
         val t0 = System.nanoTime()
         val ok = try {
-          fn(spark, sf10Dir).write.format("noop").mode("overwrite").save(); true
+          SparkEntry.queries(n)(spark, sf10Dir).write.format("noop").mode("overwrite").save(); true
         } catch { case e: Throwable =>
           System.err.println(s"[bench:sf10] $n failed: ${e.getMessage}"); false
         }
         val dt = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench:sf10] $n%-18s $dt%8.2fs${if (ok) "" else "  FAILED"}")
-        (n, dt, ok)
+        Some((n, dt, ok))
       }
     }
     val nDocs = Tables.documents(spark, sf10Dir).count()
@@ -699,6 +695,19 @@ object Bench {
       "seq_pack_bpe", "bpe_fertility", "dedup_report",
       "split_leakage_safe")
 
+  /** Every name a scale section schedules. The sections look each one
+    * up directly, so a name that is not a registry name fails here, at
+    * initialization, instead of dropping out of a section unnoticed. */
+  private[graft] val scheduledNames: Seq[String] =
+    (tier1 ++ tierNewCheap ++ tierNewHeavy ++ tierMid ++ tierHeavy ++
+      sf1Names ++ sf100SpotQueries.map(_._1)).distinct
+
+  locally {
+    val unknown = scheduledNames.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"Bench schedules names that are not registry queries: ${unknown.mkString(", ")}")
+  }
+
   /** One bench pass of the curated sf1 subset at the synthesized sf1
     * scale — the families whose scale behavior is non-obvious get a
     * recorded data point one decade above verification scale, so a
@@ -726,25 +735,23 @@ object Bench {
     reclaim(spark)
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     val timed = names.flatMap { n =>
-      SparkEntry.queries.get(n).flatMap { fn =>
-        // per-query deadline guard (see sf10Section): truncate the tail
-        // loudly instead of running the whole bench past the wall. The
-        // caller's mandateReserveS holds back the sf10-mandate + sf100
-        // floor — sf1 is the FIRST optional claimant to shed (VERDICT
-        // r14 #1b: the mandate must never be the residual claimant).
-        if (remainingS - mandateReserveS < 60) { skipped += n; None }
-        else Some(fn)
-      }.map { fn =>
+      // per-query deadline guard (see sf10Section): truncate the tail
+      // loudly instead of running the whole bench past the wall. The
+      // caller's mandateReserveS holds back the sf10-mandate + sf100
+      // floor — sf1 is the FIRST optional claimant to shed (VERDICT
+      // r14 #1b: the mandate must never be the residual claimant).
+      if (remainingS - mandateReserveS < 60) { skipped += n; None }
+      else {
         reclaim(spark) // same retained-heap guard as the sf10 section
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sf1Dir).write.format("noop").mode("overwrite").save(); true }
+          try { SparkEntry.queries(n)(spark, sf1Dir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench:sf1] $n failed: ${e.getMessage}"); false
           }
         val dt = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench:sf1] $n%-18s $dt%8.2fs${if (ok) "" else "  FAILED"}")
-        (n, dt, ok)
+        Some((n, dt, ok))
       }
     }
     val nDocs = Tables.documents(spark, sf1Dir).count()
@@ -787,12 +794,10 @@ object Bench {
     var warmed = 0
     names.foreach { n =>
       if ((System.nanoTime() - t0) / 1e9 < capS)
-        SparkEntry.queries.get(n).foreach { fn =>
-          try {
-            fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-            warmed += 1
-          } catch { case _: Throwable => }
-        }
+        try {
+          SparkEntry.queries(n)(spark, warmDir).write.format("noop").mode("overwrite").save()
+          warmed += 1
+        } catch { case _: Throwable => }
     }
     System.err.println(f"[bench] warm pass: $warmed/${names.size} queries at $warmDir in ${(System.nanoTime() - t0) / 1e9}%.1fs")
   }
@@ -821,8 +826,8 @@ object Bench {
       else fallbackDir
     def run(name: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries.get(name).foreach(
-        _(spark, dir).write.format("noop").mode("overwrite").save())
+      try SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
       (System.nanoTime() - t0) / 1e9
     }
@@ -882,8 +887,8 @@ object Bench {
       else fallbackDir
     def run(name: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries.get(name).foreach(
-        _(spark, dir).write.format("noop").mode("overwrite").save())
+      try SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
       (System.nanoTime() - t0) / 1e9
     }

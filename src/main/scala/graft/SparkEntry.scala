@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.functions.{device, rainer}
-import graft.operators._
+import graft.queries._
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each with a DuckDB-equivalent `oracleSql` on the same
@@ -40,13 +38,27 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"), max(length(col("line"))).as("max_len"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
+  /** Every driver query, family by family. A new query is one `QueryDef`
+    * in the family file under `graft/queries/` it belongs to. */
+  val all: Seq[QueryDef] = Seq(
+    RelationalQueries.defs, ScriptQueries.defs, InputQueries.defs,
+    StateQueries.defs, ParserQueries.defs, OutputQueries.defs,
+    CorpusQueries.defs, StreamQueries.defs).flatten
 
-  def oracleSql: Map[String, String] = Queries.oracles
+  locally {
+    val dups = all.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty,
+      s"query names declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+  }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] = all.map(q => q.name -> q.oracleSql).toMap
 }
 
-/** The operator-coverage query suite. Each query reads the driver parquet
-  * tables (TESTDATA.md) and exercises one operator family from SURVEY §2.
+/** The synthesized syslog stream the queries share: the plan side
+  * (`synthSyslog`, `synthFrom`) and its DuckDB mirror (`synthSql`).
   */
 object Queries {
 
@@ -88,7539 +100,4 @@ object Queries {
       |    event_type || '[' || event_id || ']' AS syslogtag
       |  FROM events
       |)""".stripMargin
-
-  // ---------------------------------------------------------------- queries
-
-  type Q = (SparkSession, String) => DataFrame
-
-  val all: Map[String, Q] = Map(
-    // §2 flagship agg (baseline relational capability)
-    "q1_agg" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-          count(lit(1)).as("n"))
-    }),
-
-    // baseline relational capability, join shape (TPC-H Q3-ish):
-    // filtered customer dim BROADCAST into orders, the fact-fact join to
-    // lineitem shuffles on the key — the plan a 100 TB run needs (small
-    // side broadcast, one shuffle for the big join, AQE re-plan free)
-    "q3_join" -> ((s, dir) => {
-      val cust = Tables.customer(s, dir)
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"))
-      val ord = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_orderpriority"))
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      li.join(ord.join(broadcast(cust),
-          col("o_custkey") === col("c_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("revenue"),
-          count_distinct(col("o_orderkey")).as("n_orders"))
-    }),
-
-    // §2.1 S_PRIFILT — PRI bitmask filter compiled from a selector string
-    "prifilt" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      // local4.!=debug is STANDALONE for its facility (nothing before the
-      // ';' touches local4): the negated selector pre-fills local4 to
-      // ALLPRI before clearing debug (issue #1030,
-      // tests/rscript_prifilt_negated_exact.sh); uucp.err is the plain
-      // range form, local0.=debug the exact form, mail.none the reset
-      ev.filter(rainer.prifilt("uucp.err;mail.none;local0.=debug;local4.!=debug")(col("facility"), col("severity")))
-        .groupBy(col("facility"), col("severity"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // §2.1 S_PROPFILT — legacy property filters: contains/startswith/regex
-    "propfilt" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .filter(rainer.rs_contains(col("text"), "spark") &&
-                !rainer.rs_startswith(col("text"), "the") &&
-                rainer.re_match(col("text"), "join .* merge"))
-        .groupBy(col("lang")).agg(count(lit(1)).as("n"))
-    }),
-
-    // §2.1 S_SET/S_UNSET via json_set/json_unset custom exprs
-    "set_unset_json" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val withVar = ev.withColumn("vars",
-        rainer.json_set(col("props"), "enrich!vdouble", col("value") * 2))
-      withVar
-        .withColumn("vdouble", get_json_object(col("vars"), "$.enrich.vdouble").cast("double"))
-        .withColumn("k_gone",
-          get_json_object(rainer.json_unset(col("vars"), "k"), "$.k").isNull)
-        .select(col("event_id"), round(col("vdouble"), 2).as("vdouble"), col("k_gone"))
-    }),
-
-    // §2.2/§2.4 fjson SPACED render — the reference's default tree→string
-    // conversion (jsonToString → JSON_C_TO_STRING_SPACED, msg.c:1067):
-    // every %$!…% template render and script string coercion emits
-    // `{ "a": 1 }`-spaced JSON; strings render bare, missing paths null,
-    // $!all-json falls back to "{}" on a null tree
-    "json_spaced" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val tree = rainer.json_set(
-        rainer.json_set(col("props"), "enrich!tag", col("event_type")),
-        "enrich!arr",
-        concat(lit("["), col("user_id"), lit(","), col("user_id") + 1, lit("]")))
-      ev.withColumn("t", tree).select(
-        col("event_id"),
-        rainer.json_render(col("t"), "").as("whole"),
-        rainer.json_render(col("t"), "enrich").as("sub"),
-        rainer.json_render(col("t"), "enrich!tag").as("tag_raw"),
-        coalesce(rainer.json_render(col("t"), "nope"), lit("<null>")).as("missing"),
-        coalesce(rainer.json_render(lit(null).cast("string"), ""), lit("{}")).as("allj_null"))
-    }),
-
-    // §2.1 S_FOREACH — foreach over array → explode
-    "foreach_explode" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("n"))
-    }),
-
-    // §2.5 imrelp: RELP-framed stream → payload extraction → decode
-    // chain. Frames synthesized from the deterministic syslog stream;
-    // interleaved session-control frames (open/rsp/close) must drop
-    "relp_decode" -> ((s, dir) => {
-      val raw = synthSyslog(s, dir)
-      val frames = raw.select(col("event_id"), concat(
-        col("event_id") % 1000, lit(" syslog "),
-        length(col("rawmsg")), lit(" "), col("rawmsg")).as("value"))
-        .unionByName(s.range(1).select(lit(-1L).as("event_id"),
-          lit("0 open 31 relp_version=0\nrelp_software=x").as("value")))
-        .unionByName(s.range(1).select(lit(-2L).as("event_id"),
-          lit("1 rsp 6 200 OK").as("value")))
-      graft.sources.Sources.decodeSyslog(
-          graft.sources.Sources.deframeRelp(frames))
-        .select(col("event_id"), col("facility"), col("severity"),
-          col("hostname"), col("syslogtag"), col("msg"))
-    }),
-
-    // §2.10 omelasticsearch bulk shaping: action-metadata line + doc
-    // line per record (omelasticsearch.c META_STRT/META_ID), dynamic
-    // index from a per-record column (dynSearchIndex)
-    "es_bulk" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val docs = ev.select(col("event_id"),
-        concat(lit("logs-"), col("event_type")).as("idx"),
-        to_json(struct(col("event_id"), col("event_type"))).as("doc"))
-      graft.sources.Sources.esBulkFrame(docs, "idx", "doc",
-        idCol = Some("event_id"))
-    }),
-
-    // §2.10 omelasticsearch bulkmode maxbytes packing: byte-capped _bulk
-    // request bodies (es-maxbytes-bulk.sh; pairs sized so the 310-byte
-    // cap admits exactly 5 fixed-width pairs — the count mirror the
-    // oracle can express, same device as awslogs_hlc)
-    "es_bulk_batches" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("idx", concat(lit("idx"), col("user_id") % 3))
-        .withColumn("esid", lpad(col("event_id").cast("string"), 8, "0"))
-        .withColumn("doc", concat(lit("{\"n\":\""), col("esid"), lit("\"}")))
-      val pairs = graft.sources.Sources.esBulkFrame(ev, "idx", "doc",
-        idCol = Some("esid"), keep = Seq("idx", "event_id"))
-      graft.sources.Sources.esBulkBatches(pairs, "idx", "event_id",
-        maxBytes = 310)
-    }),
-
-    // §2.10 omfwd octet-counted send framing (runtime/tcpclt.c:196-210):
-    // "<len> <msg>" with len the BYTE length of the rendered line — the
-    // 'µ' in the prefix makes byte-vs-char length observable
-    "omfwd_frame" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val line = ev.select(col("event_id"),
-        concat(lit("<13>host µfwd "), col("event_type"),
-          lit(" msgnum:"), lpad(col("event_id"), 8, "0")).as("m"))
-      line.select(col("event_id"),
-        graft.sources.Sources.frameOctetCounted(col("m")).as("framed"))
-    }),
-
-    // §2.10 omfwd compression.mode="single" (omfwd.c:1782-1807): zlib
-    // the wire bytes when > CONF_MIN_SIZE_FOR_COMPRESS (60), 'z'
-    // marker, keep only on gain; receive side = imptcp's inflate of the
-    // 'z' extension. The deflate bytes themselves are impl-defined, so
-    // the oracle checks the DECISION + the engine-side round-trip: the
-    // fixture keeps every >60-byte wire clearly compressible (512-byte
-    // pad) and every other wire ≤ 60, so `compressed` is closed-form
-    "omfwd_compress" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val wire = when(col("event_id") % 3 === 0,
-          concat(lit("<13>h fwd msgnum:"), lpad(col("event_id"), 8, "0")))
-        .otherwise(concat(lit("<13>h fwd msgnum:"), lpad(col("event_id"), 8, "0"),
-          lit(" "), repeat(lit("pad"), 171)))
-      val z = graft.functions.HttpExprs.omfwdZip(wire.cast("binary"))
-      ev.select(col("event_id"), wire.as("w"), z.as("z"))
-        .select(col("event_id"),
-          length(col("w")).as("orig_len"),
-          (substring(col("z"), 1, 1) === lit(Array('z'.toByte))).as("compressed"),
-          (length(col("z")) < length(col("w"))).as("gain"),
-          (graft.functions.HttpExprs.omfwdUnzip(col("z")).cast("string")
-            === col("w")).as("roundtrip_ok"))
-    }),
-
-    // §2.10 omfile zip output (stream.c doZipWrite → zlibw.c: gzip
-    // wrapping via windowBits=31, SYNC_FLUSH per buffer flush) in BOTH
-    // reliability modes: veryRobustZip="on" finishes every flushed
-    // block into its own gzip member (multi-member file — a torn tail
-    // loses only the last member), off = one member with sync-flushed
-    // block boundaries. The member walk (header, raw inflate, CRC32
-    // trailer — what `gzip -d` checks) is engine-verified; the oracle
-    // pins file shape and the closed-form member counts. Blocks model
-    // the stream's FLUSH BUFFER (bounded bytes at any corpus size); the
-    // whole-file collect here is the verification fixture — production
-    // is a partitioned streaming sink appending one member per
-    // microbatch flush, never a full-file materialization
-    "omfile_zip" -> ((s, dir) => {
-      import graft.functions.FileZipExprs
-      val ev = Tables.events(s, dir)
-      val lines = ev.select(col("event_id"),
-        (col("event_id") % 8).as("file"),
-        ((col("event_id") / 8).cast("long") % 4).cast("int").as("blk"),
-        concat(lit("<13>h zf msgnum:"), lpad(col("event_id"), 8, "0"),
-          lit("\n")).as("line"))
-      val blocks = lines.groupBy(col("file"), col("blk"))
-        .agg(count(lit(1)).as("n"),
-          concat_ws("", sort_array(collect_list(
-            struct(col("event_id"), col("line")))).getField("line")).as("part"))
-      val parts = sort_array(collect_list(struct(col("blk"), col("part"))))
-        .getField("part")
-      val files = blocks.groupBy(col("file"))
-        .agg(sum(col("n")).as("n_lines"), count(lit(1)).as("n_parts"),
-          FileZipExprs.omfileZip(parts.cast("array<binary>"), 6,
-            veryRobust = true).as("robust"),
-          FileZipExprs.omfileZip(parts.cast("array<binary>"), 6,
-            veryRobust = false).as("plain"),
-          concat_ws("", parts).as("expected"))
-        .select(col("file"), col("n_lines"), col("n_parts"),
-          FileZipExprs.gzipMembers(col("robust")).as("r"),
-          FileZipExprs.gzipMembers(col("plain")).as("p"),
-          col("expected"))
-      files.select(col("file"), col("n_lines"), col("n_parts"),
-        col("r").getField("members").as("robust_members"),
-        (col("r").getField("decoded").cast("string") === col("expected"))
-          .as("robust_rt"),
-        col("p").getField("members").as("plain_members"),
-        (col("p").getField("decoded").cast("string") === col("expected"))
-          .as("plain_rt"))
-    }),
-
-    // §2.10 the zstd compression driver (runtime/zstdw.c, selected by
-    // compressionDriver="zstd"): same block/flush contract as the zlib
-    // writer — veryRobust = one complete zstd FRAME per flushed block,
-    // otherwise ZSTD_e_flush boundaries inside one frame, e_end at
-    // close. Frame walk via findFrameCompressedSize is engine-verified;
-    // the codec is Spark's own zstd-jni, no stub
-    "omfile_zstd" -> ((s, dir) => {
-      import graft.functions.FileZipExprs
-      val ev = Tables.events(s, dir)
-      val lines = ev.select(col("event_id"),
-        (col("event_id") % 8).as("file"),
-        ((col("event_id") / 8).cast("long") % 4).cast("int").as("blk"),
-        concat(lit("<13>h zs msgnum:"), lpad(col("event_id"), 8, "0"),
-          lit("\n")).as("line"))
-      val blocks = lines.groupBy(col("file"), col("blk"))
-        .agg(count(lit(1)).as("n"),
-          concat_ws("", sort_array(collect_list(
-            struct(col("event_id"), col("line")))).getField("line")).as("part"))
-      val parts = sort_array(collect_list(struct(col("blk"), col("part"))))
-        .getField("part")
-      val files = blocks.groupBy(col("file"))
-        .agg(sum(col("n")).as("n_lines"), count(lit(1)).as("n_parts"),
-          FileZipExprs.omfileZstd(parts.cast("array<binary>"), 3,
-            veryRobust = true).as("robust"),
-          FileZipExprs.omfileZstd(parts.cast("array<binary>"), 3,
-            veryRobust = false).as("plain"),
-          concat_ws("", parts).as("expected"))
-        .select(col("file"), col("n_lines"), col("n_parts"),
-          FileZipExprs.zstdFrames(col("robust")).as("r"),
-          FileZipExprs.zstdFrames(col("plain")).as("p"),
-          col("expected"))
-      files.select(col("file"), col("n_lines"), col("n_parts"),
-        col("r").getField("members").as("robust_members"),
-        (col("r").getField("decoded").cast("string") === col("expected"))
-          .as("robust_rt"),
-        col("p").getField("members").as("plain_members"),
-        (col("p").getField("decoded").cast("string") === col("expected"))
-          .as("plain_rt"))
-    }),
-
-    // §2.10 omfwd compression.mode="stream:always" + imptcp receive
-    // (omfwd.c:1204-1310, imptcp.c:1376-1460): one zlib stream per
-    // 64-msg session, SYNC_FLUSH at each 16-msg transaction end, finish
-    // at close; the receiver inflates incrementally and the AUTO-mode
-    // sniff classifies the session's first two bytes (RFC 1950 check
-    // bits). Deflate bytes are impl-defined, so the oracle pins session
-    // shape while round-trip/sniff are engine-verified booleans
-    "omfwd_zipstream" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val framed = ev.select(col("event_id"),
-        (col("event_id") / 64).cast("long").as("session"),
-        ((col("event_id") % 64) / 16).cast("int").as("tx"),
-        graft.sources.Sources.frameOctetCounted(
-          concat(lit("<13>h fwdz msgnum:"), lpad(col("event_id"), 8, "0"),
-            lit(" t="), col("event_type"))).as("frame"))
-      val txs = framed
-        .groupBy(col("session"), col("tx"))
-        .agg(count(lit(1)).as("n"),
-          concat_ws("", sort_array(collect_list(
-            struct(col("event_id"), col("frame")))).getField("frame"))
-            .as("payload"))
-      val z = txs
-        .groupBy(col("session"))
-        .agg(sum(col("n")).as("n_msgs"),
-          graft.functions.HttpExprs.omfwdZipStream(
-            sort_array(collect_list(struct(col("tx"), col("payload"))))
-              .getField("payload").cast("array<binary>")).as("z"),
-          concat_ws("", sort_array(collect_list(
-            struct(col("tx"), col("payload")))).getField("payload"))
-            .as("expected"))
-      z.select(col("session"), col("n_msgs"),
-        (graft.functions.HttpExprs.imptcpInflateStream(col("z")).cast("string")
-          === col("expected")).as("roundtrip_ok"),
-        graft.functions.HttpExprs.zlibSniff(col("z")).as("zlib_detected"),
-        graft.functions.HttpExprs.zlibSniff(col("expected").cast("binary"))
-          .as("plain_detected"))
-    }),
-
-    // §2.10 omfwd target POOL load balancing (omfwd.c:1883-1901): a
-    // static 3-target pool with the middle target down — active members
-    // round-robin in pool order per worker (closed form pinned by
-    // PackerPropertySpec against a simulation of the reference's
-    // counter loop); worker = event_id residue, seq = quotient, same
-    // arithmetic fixture as eventhubs_message
-    "omfwd_pool" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val m = concat(lit("<13>h omfwd msgnum:"), lpad(col("event_id"), 8, "0"))
-      ev.select(col("event_id"),
-        graft.sources.Sources.omfwdPoolTarget(expr("event_id div 4"),
-          Seq(("siteA", 514), ("siteB", 514), ("siteC", 10514)),
-          Seq(true, false, true)).as("target"),
-        graft.sources.Sources.frameOctetCounted(m).as("framed"))
-    }),
-
-    // §2.10/§2.7 omfwd per-target pool stats (omfwd.c:2089-2117): one
-    // statsobj per pool member named "TCP-<host>-<port>" origin=omfwd
-    // with messages.sent / bytes.sent counters — one map-side-combinable
-    // groupBy over the assignment
-    "omfwd_pool_stats" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val m = concat(lit("<13>h omfwd msgnum:"), lpad(col("event_id"), 8, "0"))
-      ev.select(
-          graft.sources.Sources.omfwdPoolTarget(expr("event_id div 4"),
-            Seq(("siteA", 514), ("siteB", 514), ("siteC", 10514)),
-            Seq(true, false, true)).as("tgt"),
-          graft.sources.Sources.frameOctetCounted(m).as("framed"))
-        .groupBy(col("tgt"))
-        .agg(count(lit(1)).as("messages_sent"),
-          sum(octet_length(col("framed"))).as("bytes_sent"))
-        .select(
-          concat(lit("TCP-"), regexp_replace(col("tgt"), ":", "-")).as("stat_name"),
-          lit("omfwd").as("origin"),
-          col("messages_sent"), col("bytes_sent"))
-    }),
-
-    // §2.10 ommysql/ompgsql: the stock " StdDBFmt" / " StdPgSQLFmt"
-    // INSERT renders (rsconf.c:223-233) through the registry with their
-    // template-level SQL / STDSQL escapes — msg carries a quote and a
-    // backslash so both escape dialects are load-bearing
-    "omdb_insert" -> ((s, dir) => {
-      val cfg = graft.rainerscript.RsyslogConfig.parse("")
-      val ev = synthSyslog(s, dir)
-        .withColumn("syslogtag",
-          concat(col("event_type"), lit("["), col("event_id"), lit("]")))
-        .withColumn("msg", concat(lit("it's a b\\s "), col("event_type")))
-      ev.select(col("event_id"),
-        cfg.renderTemplate(" StdDBFmt", n => col(n)).as("mysql_stmt"),
-        cfg.renderTemplate(" StdPgSQLFmt", n => col(n)).as("pgsql_stmt"))
-    }),
-
-    // §2.10 omhiredis — per-mode Redis command shaping
-    // (contrib/omhiredis writeHiredis); the hiredis pipeline/AUTH is
-    // the foreachBatch transport half
-    "omhiredis_cmd" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val msg = concat(lit("msgnum:"), lpad(col("event_id"), 8, "0"))
-      ev.select(col("event_id"),
-        graft.sources.Sources.hiredisCommand(msg, "queue",
-          lit("syslog_q")).as("cmd_queue"),
-        graft.sources.Sources.hiredisCommand(msg, "queue",
-          lit("syslog_q"), useRPush = true).as("cmd_rpush"),
-        graft.sources.Sources.hiredisCommand(msg, "publish",
-          col("hostname")).as("cmd_publish"),
-        graft.sources.Sources.hiredisCommand(msg, "set",
-          concat(lit("k"), col("event_id")), expiration = 300).as("cmd_setex"),
-        graft.sources.Sources.hiredisCommand(msg, "stream",
-          lit("st"), streamCapacityLimit = 100000).as("cmd_xadd"))
-    }),
-
-    // §2.10 omrabbitmq — AMQP publish shaping with populated properties
-    // (omrabbitmq.c doAction property mapping); routing key computed
-    // per message like routing_key_template
-    "amqp_publish" -> ((s, dir) => {
-      val facNames = array(Seq("kern", "user", "mail", "daemon", "auth",
-        "syslog", "lpr", "news", "uucp", "cron", "authpriv", "ftp", "ntp",
-        "audit", "alert", "clock", "local0", "local1", "local2",
-        "local3", "local4", "local5", "local6", "local7").map(lit): _*)
-      val sevNames = array(Seq("emerg", "alert", "crit", "err", "warning",
-        "notice", "info", "debug").map(lit): _*)
-      val ev = synthSyslog(s, dir)
-        .withColumn("syslogtag",
-          concat(col("event_type"), lit("["), col("event_id"), lit("]")))
-        .withColumn("msg", concat(lit("msgnum:"), lpad(col("event_id"), 8, "0")))
-      graft.sources.Sources.rabbitPublishFrame(ev,
-        exchange = "syslog",
-        routingKey = concat(element_at(facNames, col("facility") + 1),
-          lit("."), element_at(sevNames, col("severity") + 1)),
-        bodyCol = col("msg"), contentType = "text/plain",
-        populateProperties = true,
-        facilityTextCol = element_at(facNames, col("facility") + 1),
-        severityTextCol = element_at(sevNames, col("severity") + 1),
-        hostnameCol = col("hostname"), fromhostCol = col("hostname"))
-        .select(col("event_id"), col("amqp_publish"),
-          // deep probes INTO the nested properties/headers objects (the
-          // anti-stringification pattern, see omotel_export)
-          get_json_object(col("amqp_publish"), "$.properties.headers.severity")
-            .as("probe_sev"),
-          get_json_object(col("amqp_publish"), "$.properties.delivery_mode")
-            .cast("long").as("probe_dmode"),
-          get_json_object(col("amqp_publish"), "$.routing_key")
-            .as("probe_rk"))
-    }),
-
-    // §2.10 omczmq — PUB socket topic fan-out: one row per
-    // (message, topic), [topic, msg] frame pair (topicFrame=on)
-    "czmq_pub" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val msg = concat(lit("msgnum:"), lpad(col("event_id"), 8, "0"))
-      graft.sources.Sources.czmqFrames(
-        ev.select(col("event_id"), msg.as("m")), col("m"),
-        Seq(lit("syslog.all"), concat(lit("syslog.sev"), col("event_id") % 8)))
-        .select(col("event_id"),
-          element_at(col("frames"), 1).as("topic"),
-          element_at(col("frames"), 2).as("payload"),
-          // deep probes on the FRAME ARRAY itself: a layout change (e.g.
-          // topic+msg collapsed into one frame) flips n_frames and breaks
-          // the wire image, where the element-1/2 probes alone would
-          // just read nulls that an authored oracle could mirror
-          size(col("frames")).as("n_frames"),
-          concat_ws("\u0001", col("frames")).as("frames_wire"))
-    }),
-
-    // §2.1 the YAML config front-end (runtime/yamlconf.c): schema →
-    // object model translation with all three ruleset forms — a
-    // statements: block (set / if+action / then+else+stop), a prifilt
-    // guard, and script-visible variable state — run end-to-end on the
-    // synth corpus
-    // §2.1 the `rsyslogd -o` config translator (runtime/translate.c;
-    // tests/config-translate-*.sh exact-output goldens): driver-side
-    // translation of two fixtures, both directions, the full output
-    // bytes pinned by the DuckDB oracle literals (ConfigTranslateSpec
-    // carries the whole 10-scenario golden suite)
-    "config_translate" -> ((s, dir) => {
-      import s.implicits._
-      val rsConf =
-        "ruleset(name=\"main\") {\n  mail.info action(type=\"omfile\" file=\"/tmp/fa.log\")\n}\n"
-      val yamlConf =
-        "version: 2\nmainqueue:\n  queue.type: \"Direct\"\nrulesets:\n  - name: \"main\"\n    script: |\n      action(type=\"omstdout\")\n"
-      Seq(
-        (1L, "yaml", graft.rainerscript.ConfigTranslate.toYaml(rsConf)),
-        (2L, "rainerscript",
-          graft.rainerscript.ConfigTranslate.toRainerScript(yamlConf))
-      ).toDF("case_id", "fmt", "out")
-    }),
-
-    "config_yaml" -> ((s, dir) => {
-      val yaml =
-        """version: 2
-          |rulesets:
-          |  - name: main
-          |    statements:
-          |      - set:
-          |          var: "$.sevsq"
-          |          expr: "$syslogseverity * $syslogseverity"
-          |      - if: 'prifilt("mail.*")'
-          |        action:
-          |          type: omfile
-          |          file: "/logs/mail"
-          |      - if: '$msg contains "msgnum:"'
-          |        then:
-          |          - type: omfwd
-          |            target: "loghost"
-          |        else:
-          |          - stop: true
-          |""".stripMargin
-      val cfg = graft.rainerscript.RsyslogConfig.parseYaml(yaml)
-      val ev = synthSyslog(s, dir)
-        .withColumn("msg",
-          when(col("event_id") % 7 === 0, lit("heartbeat"))
-            .otherwise(concat(lit("msgnum:"),
-              lpad(col("event_id"), 8, "0"))))
-        .withColumn("syslogtag", concat(col("event_type"), lit(":")))
-        .withColumn("vars_msg", lit("{}"))
-        .withColumn("vars_local", lit("{}"))
-      val res = cfg.run(ev, "main")
-      val mail = res.actionFrame(0)
-        .agg(count(lit(1)).as("n_mail")).withColumn("k", lit(1))
-      val fwd = res.actionFrame(1)
-        .agg(count(lit(1)).as("n_fwd"),
-          sum(get_json_object(col("vars_local"), "$.sevsq").cast("long"))
-            .as("sevsq_sum")).withColumn("k", lit(1))
-      mail.join(fwd, "k").drop("k")
-    }),
-
-    // §2.8 named ratelimit() object + YAML policy file: per-source
-    // limits with an override key, the keyTemplate rendered through the
-    // template registry, and the severity exemption that spends no
-    // bucket budget (runtime/ratelimit.c; the imptcp-persource-
-    // ratelimit-policy.sh shape, policy file written at query time)
-    "ratelimit_policy" -> ((s, dir) => {
-      val f = java.io.File.createTempFile("graft_rlpolicy", ".yaml")
-      f.deleteOnExit()
-      java.nio.file.Files.write(f.toPath,
-        """severity: 6
-          |perSource:
-          |  enabled: true
-          |  keyTemplate: "RlKey"
-          |  default:
-          |    max: 3
-          |    window: 720h
-          |  overrides:
-          |    - key: "host1"
-          |      max: 10
-          |""".stripMargin.getBytes("UTF-8"))
-      val cfg = graft.rainerscript.RsyslogConfig.parse(
-        s"""template(name="RlKey" type="string" string="%hostname%")
-           |ratelimit(name="ps" policy="${f.getPath}")
-           |""".stripMargin)
-      val policy = cfg.ratelimitPolicy("ps").get
-      val ev = synthSyslog(s, dir)
-      val out = graft.operators.RateLimit.applyPolicy(ev, policy,
-        cfg.ratelimitKey(policy, n => col(n)), col("ts"), col("event_id"),
-        col("severity"))
-      out.groupBy(col("hostname"))
-        .agg(count(lit(1)).as("n_in"),
-          count(when(col("rl_limited"), 1)).as("n_limited"),
-          count(when(!col("rl_limited"), 1)).as("n_pass"))
-    }),
-
-    // §2.8 queue.discardMark/discardSeverity load shedding
-    // (qqueueChkDiscardMsg): in saturated arrival windows, messages at or
-    // above the discard severity drop before enqueue; critical ones pass
-    "queue_shed" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val shed = graft.operators.RateLimit.discardShed(ev, col("ts"),
-        col("severity"), discardMark = 50L, discardSeverity = 4,
-        windowDur = "1 day")
-      shed.groupBy(window(col("ts"), "1 day"))
-        .agg(count(lit(1)).as("n_total"),
-          count(when(col("shed"), 1)).as("n_shed"),
-          count(when(!col("shed"), 1)).as("n_kept"),
-          sum(when(!col("shed"), col("severity")).otherwise(0))
-            .as("sev_kept"))
-        .select(col("window.start").as("ws"), col("n_total"),
-          col("n_shed"), col("n_kept"), col("sev_kept"))
-    }),
-
-    // §2.8 discard shedding on the REAL streaming path: the saturation
-    // window aggregates INSIDE the streaming query (watermark-closed
-    // event-time windows ≙ the queue's enqueue-time saturation signal),
-    // the shed policy applies to the closed snapshot — memory sink holds
-    // #windows rows, never the corpus
-    "stream_queue_shed" -> ((s, dir) => {
-      val synth = synthFrom(graft.streaming.StreamGate.readTable(s, dir, "events"))
-      val agg = synth
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "1 day"))
-        .agg(count(lit(1)).as("n_total"),
-          count(when(col("severity") >= 4, 1)).as("n_hi"),
-          sum(col("severity")).as("sev_all"),
-          sum(when(col("severity") >= 4, col("severity")).otherwise(0))
-            .as("sev_hi"))
-        .select(col("window.start").as("ws"), col("n_total"),
-          col("n_hi"), col("sev_all"), col("sev_hi"))
-      val overloaded = col("n_total") >= 50
-      graft.streaming.StreamGate.run(agg, "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .select(col("ws"), col("n_total"),
-          when(overloaded, col("n_hi")).otherwise(0L).as("n_shed"),
-          when(overloaded, col("n_total") - col("n_hi"))
-            .otherwise(col("n_total")).as("n_kept"),
-          when(overloaded, col("sev_all") - col("sev_hi"))
-            .otherwise(col("sev_all")).as("sev_kept"))
-    }),
-
-    // §2.5 imdiag — the test-instrumentation input: injectmsg's
-    // numeric-suffix frames (doInjectNumericSuffixMsg) through the NORMAL
-    // submit path (generator + standard decode chain; the TCP command
-    // listener is driver transport, waitmainqueueempty ≡ awaiting the
-    // batch/stream completion the engine already exposes)
-    "imdiag_inject" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val frames = ev.select(col("event_id"),
-        graft.sources.Sources.imdiagFrame(col("event_id")).as("value"))
-      graft.sources.Sources.decodeSyslog(frames)
-        .select(col("event_id"), col("rawmsg"), col("facility"),
-          col("severity"), col("hostname"), col("syslogtag"), col("msg"),
-          col("parsesuccess"))
-    }),
-
-    // §2.7 impstats format family (format= legacy/json/json-es/cee/
-    // prometheus, statsobj.c getStatsLine/getStatsLineCEE/
-    // emitPrometheusForObject): every render of the same counter set,
-    // incl. json-c SPACED JSON, the ES dot→bang counter rename, and the
-    // U__ Prometheus metric-name encoding for dotted object names
-    "impstats_formats" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val t = ev.groupBy(concat(lit("events."), col("event_type")).as("name"))
-        .agg(count(lit(1)).as("submitted"),
-          count(when(col("event_id") % 7 === 0, 1)).as("discarded"))
-      val ctrs = Seq("submitted" -> col("submitted"),
-        "ratelimit.discarded" -> col("discarded"))
-      import graft.sources.Impstats
-      t.select(col("name"),
-        Impstats.legacyLine(col("name"), "imfile", ctrs).as("legacy"),
-        Impstats.jsonLine(col("name"), "imfile", ctrs).as("json"),
-        Impstats.jsonLine(col("name"), "imfile", ctrs,
-          esNames = true).as("json_es"),
-        Impstats.ceeLine(col("name"), "imfile", ctrs).as("cee"),
-        Impstats.prometheusBlock(col("name"), "imfile", "submitted",
-          col("submitted")).as("prom_submitted"),
-        Impstats.prometheusBlock(col("name"), "imfile",
-          "ratelimit.discarded", col("discarded")).as("prom_discarded"))
-    }),
-
-    // §2.7 impstats format="zabbix" (impstats.c generateZabbixStats +
-    // collectStats_zbx): ONE grouped JSON line per interval — stat lines
-    // grouped by sanitized origin, the dual-origin global/local split,
-    // and the core.action→stats_omkafka_local remap. The walk order is
-    // the explicit ord column (registration order in the reference); the
-    // frame is #stats-objects rows, so the single-row assembly is bounded
-    "impstats_zabbix" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val a = ev.agg(count(lit(1)).as("n"), max(col("ts")).as("mts"))
-      val perType = ev.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_t"), max(col("ts")).as("mts_t"))
-        .withColumn("name", concat(lit("events."), col("event_type")))
-        // bounded window: rows = distinct event types (stats objects)
-        .withColumn("ord", row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("name")))
-          .cast("long"))
-      import graft.sources.Impstats
-      val imfileLines = perType.join(a).select(
-        col("name"), lit("imfile").as("origin"),
-        Impstats.jsonLine(col("name"), "imfile",
-          Seq("submitted" -> col("n_t"))).as("line"),
-        col("ord"), col("mts"))
-      // all four synthetic stats objects from ONE pass over the 1-row
-      // aggregate (a union of per-branch selects would re-scan the
-      // corpus once per branch)
-      def entry(name: String, origin: String, ord: Long, line: Column) =
-        struct(lit(name).as("name"), lit(origin).as("origin"),
-          line.as("line"), lit(ord).as("ord"))
-      val synthLines = a.select(col("mts"), explode(array(
-          entry("omkafka", "omkafka", 1000L,
-            Impstats.jsonLine(lit("omkafka"), "omkafka",
-              Seq("submitted" -> col("n")))),
-          entry("topic-events", "omkafka", 1001L,
-            Impstats.jsonLine(lit("topic-events"), "omkafka",
-              Seq("submitted" -> col("n")))),
-          entry("action-omkafka", "core.action", 1002L,
-            Impstats.jsonLine(lit("action-omkafka"), "core.action",
-              Seq("processed" -> col("n")))),
-          entry("resource-usage", "impstats", 1003L,
-            Impstats.jsonLine(lit("resource-usage"), "impstats",
-              Seq("utime" -> col("n"), "openfiles" -> lit(32)))))).as("r"))
-        .select(col("r.name").as("name"), col("r.origin").as("origin"),
-          col("r.line").as("line"), col("r.ord").as("ord"), col("mts"))
-      val lines = imfileLines.unionByName(synthLines)
-      Impstats.zabbixSnapshot(lines, col("line"), col("origin"),
-        col("name"), col("ord"), col("mts"))
-        .select(col("snapshot"),
-          get_json_object(col("snapshot"), "$.stats_imfile[0].name")
-            .as("probe_first_name"),
-          get_json_object(col("snapshot"),
-            "$.stats_omkafka_global[0].submitted").cast("long")
-            .as("probe_global_sub"),
-          get_json_object(col("snapshot"),
-            "$.stats_omkafka_local[1].processed").cast("long")
-            .as("probe_remap"),
-          get_json_object(col("snapshot"), "$.timedate").as("probe_td"))
-    }),
-
-    // §2.10 omawslogshlc — CloudWatch Logs HLC event shaping + greedy
-    // request packing (appendEvent's escape table + %.6f time, the
-    // max_batch_size=100 count cap; byte caps exercised in CloudSinkSpec)
-    "awslogs_hlc" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val src = ev.select(
-        col("event_id"),
-        concat(lit("stream"), col("user_id") % 3).as("k"),
-        when(col("event_id") % 101 === 0, lit(""))
-          .otherwise(concat(lit("app \"x\"\tline1\nmsg:"), col("event_id"),
-            lit(" t="), col("event_type"))).as("m"),
-        concat(lit("host"), col("user_id") % 5).as("h"),
-        col("ts"))
-      val events = src.withColumn("ev_json",
-        graft.sources.CloudSinks.awsHlcEvent(col("m"), col("ts"), col("h")))
-      graft.sources.CloudSinks.awsHlcBatches(events, "k", "event_id",
-        "ev_json", maxBatchSize = 100)
-        // deep probe INTO the packed payload (anti-stringification): the
-        // first concatenated event must PARSE as JSON and its unescaped
-        // fields must round-trip — the oracle recomputes both from the
-        // first_ord source row, so a payload whose events were escaped a
-        // second time (or never escaped) hash-mismatches here. The
-        // events carry no '}' in their text, so the first object is the
-        // prefix up to the first '}'.
-        .withColumn("probe_msg", get_json_object(
-          concat(substring_index(col("payload"), "}", 1), lit("}")),
-          "$.event"))
-        .withColumn("probe_host", get_json_object(
-          concat(substring_index(col("payload"), "}", 1), lit("}")),
-          "$.host"))
-    }),
-
-    // §2.10 omazuredce — DCE record validation + json-c PLAIN compaction
-    // (buildRecordJson: object-or-error, trailing garbage rejected) and
-    // the ingestion-URL grammar; array batching shares the oracled
-    // greedy packer (CloudSinkSpec covers its byte-cap face)
-    "azure_dce" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val id = col("event_id")
-      val m = when(id % 97 === 0,
-          concat(lit("{\"id\":"), id, lit("} trailing")))   // trailing garbage
-        .when(id % 89 === 0, concat(lit("["), id, lit(",2]"))) // non-object
-        .when(id % 5 === 0, concat(lit("{ \"id\": "), id,      // spaced form
-          lit(", \"t\": \""), col("event_type"), lit("\" }")))
-        .otherwise(concat(lit("{\"id\":"), id, lit(",\"t\":\""),
-          col("event_type"), lit("\",\"sev\":"), id % 8, lit("}")))
-      ev.select(id,
-        graft.sources.CloudSinks.azureDceRecord(m).as("record"),
-        lit(graft.sources.CloudSinks.azureDceUrl(
-          "https://dce-abc.eastus-1.ingest.monitor.azure.com",
-          "dcr-000111", "Custom-Syslog_CL")).as("url"))
-        // deep probe INTO the compacted record (anti-stringification)
-        .withColumn("probe_t", get_json_object(col("record"), "$.t"))
-    }),
-
-    // §2.10 omazuredce array batching: records comma-joined inside ONE
-    // JSON array per request (batchBuf '['…']'), with a deep probe that
-    // element 0 of the packed payload is a live OBJECT — `$[0].id`
-    // extracts a field through the array, which returns null if the
-    // packer had embedded records as escaped strings
-    "azure_dce_pack" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val id = col("event_id")
-      val m = when(id % 97 === 0,
-          concat(lit("{\"id\":"), id, lit("} trailing")))   // dropped: garbage
-        .when(id % 89 === 0, concat(lit("["), id, lit(",2]"))) // dropped
-        .otherwise(concat(lit("{\"id\":"), id, lit(",\"t\":\""),
-          col("event_type"), lit("\"}")))
-      val recs = ev.select(id.as("event_id"),
-        (id % 50).cast("string").as("k"),
-        graft.sources.CloudSinks.azureDceRecord(m).as("rec"))
-      graft.sources.CloudSinks.azureDceBatches(recs, "k", "event_id", "rec")
-        .withColumn("probe_id0",
-          get_json_object(col("payload"), "$[0].id").cast("long"))
-        .withColumn("probe_t0", get_json_object(col("payload"), "$[0].t"))
-    }),
-
-    // §2.10 omazureeventhubs — AMQP 1.0 message shaping: binary body,
-    // per-worker decimal message id, static eventproperties map,
-    // ms-epoch creation time (proton_encode_message)
-    "eventhubs_message" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      // 32 workers, worker/seq derived ARITHMETICALLY from the event id
-      // (residue class = worker, quotient = that worker's send sequence):
-      // the omazureeventhubs contract needs a per-connection monotone
-      // decimal message_id, not any particular numbering, so the closed
-      // form replaces the former per-worker row_number window — no
-      // window, no sort, no shuffle at any scale (the window's partition
-      // count capped sort parallelism at #workers: 10M sf1 rows through
-      // 32 sort partitions was the round-9 worst-5 entry)
-      val worker = (col("event_id") % 32).cast("int")
-      val seq = expr("event_id div 32")
-      val src = ev.select(col("event_id"), col("rawmsg"), col("ts"),
-        worker.as("worker"), seq.as("seq"))
-      graft.sources.CloudSinks.eventHubsMessage(src, col("rawmsg"),
-        col("seq"), col("ts"),
-        "amqps://graft-ns.servicebus.windows.net/hub1",
-        Seq("Table" -> "syslog", "Format" -> "raw"))
-        .select(col("event_id"), col("worker"), col("amqp_message"),
-          get_json_object(col("amqp_message"), "$.message_id").as("probe_id"),
-          get_json_object(col("amqp_message"), "$.properties.Table")
-            .as("probe_table"),
-          get_json_object(col("amqp_message"), "$.creation_time")
-            .cast("long").as("probe_ctime"))
-    }),
-
-    // §2.10 omhttpfs — WebHDFS request shaping: the append/create URL
-    // pair the retry ladder walks, dynafile path per message
-    "omhttpfs_req" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val file = concat(lit("logs/"), col("hostname"), lit("/"),
-        col("event_type"), lit(".log"))
-      graft.sources.CloudSinks.httpfsRequests(
-        ev.select(col("event_id"), col("hostname"), col("event_type"),
-          col("rawmsg"), file.as("file")),
-        col("file"), col("rawmsg"), host = "hdfs1", port = 14000,
-        https = false, user = "rsyslog")
-        .select(col("event_id"), col("url_append"), col("url_create"),
-          col("hdfs_body"))
-    }),
-
-    // §2.9 mmaitag — external-AI classification fold: mock-provider
-    // labels (sequential CSV with REGULAR fallback) landing in $.aitag;
-    // the bounded frame mirrors the mock's sequential-counter scope
-    "mmaitag" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-        .filter(col("event_id") % 97 === 0)
-        .select(col("event_id"), col("rawmsg"),
-          lit("{}").as("vars_local"))
-      val labels = graft.sources.Sources.mmaitagMockLabels(
-        "NOISE,CRITICAL,IMPORTANT,NOISE,REGULAR,CRITICAL", col("event_id"))
-      graft.sources.Sources.mmaitagFold(ev, labels)
-        .select(col("event_id"),
-          get_json_object(col("vars_local"), "$.aitag").as("aitag"))
-    }),
-
-    // §2.10 omhttp kafkarest batch shaping (omhttp.c:1627-1688): one
-    // output row per batch, unparseable messages dropped by the JSON
-    // formats (fjson_tokener_parse NULL → continue; every 97th message
-    // here is malformed)
-    "omhttp_batch" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val msgs = ev.select(col("event_id"),
-        floor(col("event_id") / 1000).cast("long").as("batch_id"),
-        when(col("event_id") % 97 === 0, lit("{oops"))
-          .otherwise(concat(lit("{\"id\":"), col("event_id"),
-            lit(",\"t\":\""), col("event_type"), lit("\"}"))).as("m"))
-      graft.sources.Sources.omhttpBatch(msgs, "m", "batch_id", "event_id",
-        "kafkarest")
-    }),
-
-    // §2.10 omhttp retry.ruleset requeue (queueBatchOnRetryRuleset
-    // :1061-1106): records of a failed batch re-enter as fresh messages
-    // (rawmsg = rendered record, TAG omhttp-retry) carrying
-    // $!omhttp!response{code,body,batch_index}; a deterministic
-    // event_id%7 slice plays the 503'd batch, the probe reads the code
-    // back through the JSON tree
-    "omhttp_retry" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val rec = concat(lit("{\"id\":"), col("event_id"),
-        lit(",\"t\":\""), col("event_type"), lit("\"}"))
-      val failed = ev.filter(col("event_id") % 7 === 0)
-      graft.sources.Sources.omhttpRetryMessages(failed, rec,
-          code = lit(503), body = lit("{\"error\":\"service unavailable\"}"),
-          batchIndex = col("event_id") % 4)
-        .select(col("event_id"), col("rawmsg"), col("msg"),
-          col("syslogtag"), col("vars_msg"),
-          get_json_object(col("vars_msg"), "$.omhttp.response.code")
-            .cast("int").as("probe_code"),
-          get_json_object(col("vars_msg"), "$.omhttp.response.batch_index")
-            .cast("int").as("probe_idx"))
-    }),
-
-    // §2.10 omotel OTLP/HTTP JSON export shaping (plugins/omotel/
-    // otlp_json.c omotel_json_build_export): per-batch payloads with the
-    // syslog→OTLP severity lookup (omotel.c:498-500), proto3-JSON string
-    // timestamps, hex-validated trace/span correlation
-    // (omotel.c:1347-1380), the ordered log.syslog.* attribute block,
-    // and host.name lifted to resource level only when the whole payload
-    // is single-host (otlp_json.c:341-368)
-    "omotel_export" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val src = ev.select(
-        col("event_id"),
-        (col("user_id") % 7).cast("int").as("batch_id"),
-        concat(lit("host"), col("user_id") % 5).as("host"),
-        col("event_type").as("app"),
-        (col("event_id") % 100).cast("string").as("procid"),
-        when(col("event_id") % 4 === 0,
-          concat(lit("m"), col("event_id") % 10)).as("msgid"),
-        (col("user_id") % 24).cast("int").as("facility"),
-        (col("event_id") % 8).cast("int").as("severity"),
-        col("ts"),
-        concat(lit("msgnum:"), col("event_id")).as("body"),
-        when(col("event_id") % 5 === 0, md5(col("event_id").cast("string")))
-          .when(col("event_id") % 5 === 1, lit("zznotvalid")).as("trace_id"),
-        when(col("event_id") % 3 === 0,
-          substring(md5(concat(lit("s"), col("event_id"))), 1, 16))
-          .as("span_id"))
-      val out = graft.sources.Sources.omotelExport(src, "body", "host", "app",
-        "procid", "msgid", "facility", "severity", "ts", None,
-        "batch_id", "event_id", maxItems = 50,
-        traceIdCol = Some("trace_id"), spanIdCol = Some("span_id"))
-      // deep probes: JSON-path INTO the rendered payload, so a nested
-      // object accidentally rendered as an escaped string (the imdocker
-      // Labels failure mode) comes back null here instead of hiding
-      // behind a whole-payload hash that was authored to match
-      val rec0 = "$.resourceLogs[0].scopeLogs[0].logRecords[0]"
-      out.withColumn("probe_body",
-          get_json_object(col("payload"), s"$rec0.body.stringValue"))
-        .withColumn("probe_sev",
-          get_json_object(col("payload"), s"$rec0.severityNumber").cast("long"))
-        .withColumn("probe_attr0_key",
-          get_json_object(col("payload"), s"$rec0.attributes[0].key"))
-        .withColumn("probe_res_attr0",
-          get_json_object(col("payload"),
-            "$.resourceLogs[0].resource.attributes[0].value.stringValue"))
-    }),
-
-    // §2.5 imbeats Lumberjack v2 session decode (plugins/imbeats
-    // lj_parser.c frame grammar + seqnum.h sequential-seq rule +
-    // imbeats.c:660-731 event mapping): per-session binary streams built
-    // IN the plan (2W window + two 2J JSON frames), decoded by the
-    // LumberjackBatchExpr kernel, payload merged into $! with the
-    // $!metadata!imbeats subtree
-    "imbeats_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      def be32(c: Column): Column = unhex(lpad(hex(c), 8, "0"))
-      val p1 = concat(lit("{\"message\":\"m"), col("event_id"),
-        lit("\",\"beat\":\"filebeat\",\"n\":"), col("event_id") % 7, lit("}"))
-      val p2 = concat(lit("{\"message\":\"x"), col("event_id"), lit("\"}"))
-      val stream = concat(
-        lit(Array[Byte]('2', 'W', 0, 0, 0, 4)),
-        lit(Array[Byte]('2', 'J')), be32(lit(1)),
-        be32(length(p1)), p1.cast("binary"),
-        lit(Array[Byte]('2', 'J')), be32(lit(2)),
-        be32(length(p2)), p2.cast("binary"))
-      val sessions = ev.select(col("event_id"), stream.as("value"),
-        concat(lit("peer"), col("user_id") % 9).as("fromhost"))
-      // single-parse (r15 impcap discipline, VERDICT r15 #6): one
-      // json_tuple parse of vars_msg replaces three full-document
-      // get_json_object re-parses; the nested imbeats paths re-parse
-      // only the small $.metadata subtree. Values unchanged: json_tuple
-      // and get_json_object return identical raw-token strings for
-      // scalars and null for missing keys (JsonSingleParseParitySpec).
-      graft.sources.Sources.imbeatsDecode(sessions)
-        .select(Seq(col("event_id"), col("seq"), col("msg")) :+
-          json_tuple(col("vars_msg"), "n", "metadata"): _*)
-        .toDF("event_id", "seq", "msg", "__n", "__meta")
-        .select(col("event_id"), col("seq"), col("msg"),
-          col("__n").as("n"),
-          get_json_object(col("__meta"), "$.imbeats.sequence").as("meta_seq"),
-          get_json_object(col("__meta"), "$.imbeats.peer_hostname").as("peer"))
-    }),
-
-    // §2.5 imdocker — multiplexed attach-stream demux: one message per
-    // frame, stderr→err severity, docker: TAG, container metadata under
-    // $!metadata (contrib/imdocker enqMsg/addDockerMetaData)
-    "imdocker_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      def be32(c: Column): Column = unhex(lpad(hex(c), 8, "0"))
-      val p1 = concat(lit("log line "), col("event_id"), lit("\n"))
-      val p2 = concat(lit("err "), col("event_type"), lit("\n"))
-      val stream = concat(
-        lit(Array[Byte](1, 0, 0, 0)), be32(octet_length(p1)), p1.cast("binary"),
-        lit(Array[Byte](2, 0, 0, 0)), be32(octet_length(p2)), p2.cast("binary"))
-      val containers = ev.select(col("event_id"),
-        concat(lit("c"), col("user_id")).as("container_id"),
-        concat(lit("/app"), col("user_id")).as("name"),
-        lit("img:latest").as("image"),
-        concat(lit("sha256:"), col("user_id")).as("image_id"),
-        lit("""{"app":"x"}""").as("labels_json"),
-        stream.as("stream"))
-      // single-parse (r15 impcap discipline): the three probes all sit
-      // under $.metadata — extract that subtree once via json_tuple
-      // (one full-document parse instead of three)
-      graft.sources.Sources.imdockerDecode(containers)
-        .select(Seq(col("event_id"), col("stream_type"), col("msg"),
-          col("severity"), col("syslogtag")) :+
-          json_tuple(col("vars_msg"), "metadata"): _*)
-        .toDF("event_id", "stream_type", "msg", "severity", "syslogtag",
-          "__meta")
-        .select(col("event_id"), col("stream_type"), col("msg"),
-          col("severity"), col("syslogtag"),
-          get_json_object(col("__meta"), "$.Id").as("cid"),
-          get_json_object(col("__meta"), "$.Names").as("cname"),
-          // deep probe: Labels must be a nested OBJECT ($!metadata!Labels!app
-          // readable), not an escaped JSON string (r8 judge finding)
-          get_json_object(col("__meta"), "$.Labels.app").as("label_app"))
-    }),
-
-    // §2.5 imbatchreport — whole-file batch-report shaping
-    // (contrib/imbatchreport readAndSendFile): three report shapes per
-    // event — plain body (no SD), SD with program/timestamp keys and an
-    // embedded LF (removed per :268-273), and an over-cap body replaced
-    // by the too-large message. Exercises trailing-ws trim, the
-    // backward SD scan, dedupspace collapse, and \n → literal \\n.
-    "imbatchreport_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val sd1 = concat(lit("[report@32473 program=\"job"),
-        col("event_id") % 5,
-        lit("\"\n ts=\""), lit(1700000000L) + col("event_id") % 1000,
-        lit("\"]"))
-      val text =
-        when(col("event_id") % 3 === 0,
-          concat(lit("plain "), col("event_type"), lit("  done\n\n")))
-        .when(col("event_id") % 3 === 1,
-          concat(lit("Run "), col("event_type"), lit("  rc "),
-            col("event_id") % 7, lit("\n tail  \n"), sd1, lit("  \n")))
-        .otherwise(
-          concat(lit("x" * 100), lit("  \n[report@32473 ts=\"17\"]\n")))
-      val reports = ev.select(col("event_id"),
-        concat(lit("/spool/report_"), col("event_id"), lit(".rpt"))
-          .as("path"),
-        text.as("value"))
-      graft.sources.Sources.imbatchreportDecode(reports,
-          tag = "batch:", programKey = "program=\"", timestampKey = "ts=\"",
-          maxMsgSize = 64,
-          now = to_timestamp(lit("2024-01-01 00:00:00")))
-        .select(col("event_id"), col("msg"), col("structured_data"),
-          col("ts_epoch"), col("app_name"), col("too_large"),
-          col("syslogtag"), col("pri"))
-    }),
-
-    // §2.5 imklog kernel-log decode: PRI resolve incl. the systemd
-    // secondary-PRI window, kernel-timestamp strip, klog default
-    // kern.info, and the permitnonkernel facility gate (plugins/imklog:
-    // bsd.c submitSyslog + imklog.c Syslog) — both modes exercised
-    "imklog_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val line =
-        when(col("event_id") % 4 === 0,
-          concat(lit("<6>[  123.456789] usb 1-1: device e"), col("event_id")))
-        .when(col("event_id") % 4 === 1,
-          concat(lit("<4>[ 99.5] <30>systemd[1]: unit u"), col("event_id")))
-        .when(col("event_id") % 4 === 2,
-          concat(lit("no pri line e"), col("event_id")))
-        .otherwise(concat(lit("<35>mail subsystem e"), col("event_id")))
-      val feed = ev.select(col("event_id"), line.as("value"))
-      val t0 = to_timestamp(lit("2024-01-01 00:00:00"))
-      // ONE decode pass serves both modes: the kern-only gate is just a
-      // facility==0 filter over the permissive decode (imklog.c:272), so
-      // the second mode explodes from the same rows instead of
-      // re-scanning and re-decoding the feed
-      graft.sources.Sources.imklogDecode(feed, permitNonKernel = true,
-          now = t0)
-        .select(col("event_id"), col("pri"), col("facility"),
-          col("severity"), col("msg"), col("syslogtag"),
-          explode(array(lit("all"),
-            when(col("facility") === 0, "kern"))).as("mode"))
-        .filter(col("mode").isNotNull)
-        .select(col("event_id"), col("mode"), col("pri"), col("facility"),
-          col("severity"), col("msg"), col("syslogtag"))
-    }),
-
-    // §2.5 imkmsg /dev/kmsg structured decode: pri,seq,usec;msg + the
-    // ` KEY=value` continuation properties into $! (contrib/imkmsg/
-    // kmsg.c submitSyslog); malformed records dropped
-    "imkmsg_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val rec =
-        when(col("event_id") % 5 === 0,
-          concat(lit("bad record "), col("event_id")))
-        .otherwise(concat(
-          (col("event_id") % 24).cast("string"), lit(","),
-          col("event_id"), lit(","), col("event_id") * 1000,
-          lit(",-;ev "), col("event_type"),
-          when(col("event_id") % 2 === 0,
-            concat(lit("\n DEVICE=+pci:e"), col("event_id") % 100,
-              lit("\n SUBSYSTEM=pci"))).otherwise(lit(""))))
-      val feed = ev.select(col("event_id"), rec.as("value"))
-      graft.sources.Sources.imkmsgDecode(feed,
-          now = to_timestamp(lit("2024-01-01 00:00:00")))
-        .select(col("event_id"), col("pri"), col("facility"),
-          col("severity"), col("msg"), col("syslogtag"), col("vars_msg"),
-          get_json_object(col("vars_msg"), "$.sequnum").cast("long")
-            .as("probe_seq"),
-          get_json_object(col("vars_msg"), "$.DEVICE").as("probe_dev"))
-    }),
-
-    // §2.5 improg/imfifo line submit: empty lines dropped, APPNAME = the
-    // raw tag, PRI from instance params (contrib/improg enqLine /
-    // plugins/imfifo — byte-identical submit shape)
-    "improg_lines" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val line = when(col("event_id") % 7 === 0, lit(""))
-        .otherwise(concat(lit("out "), col("event_type"),
-          lit(" e"), col("event_id")))
-      val feed = ev.select(col("event_id"), line.as("value"))
-      graft.sources.Sources.lineInputDecode(feed, "improg",
-          tag = "prog[7]:", facility = 16, severity = 5,
-          now = to_timestamp(lit("2024-01-01 00:00:00")))
-        .select(col("event_id"), col("pri"), col("facility"),
-          col("severity"), col("app_name"), col("syslogtag"),
-          col("programname"), col("msg"))
-    }),
-
-    // §2.5 imhiredis: queue/subscribe submits the popped string with the
-    // msgConstruct default PRI (facility invld=24, severity debug);
-    // stream mode lands the entry's fields under $! and $.redis metadata
-    // with an EMPTY message text (contrib/imhiredis enqMsg/enqMsgJson)
-    "imhiredis_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val qfeed = ev.select(col("event_id"),
-        when(col("event_id") % 9 === 0, lit(""))
-          .otherwise(concat(lit("redis msg "), col("event_type"))).as("value"))
-      val sfeed = ev.select(col("event_id"),
-        to_json(struct(col("event_type").as("kind"),
-          col("event_id").as("n"))).as("value"),
-        concat(col("event_id").cast("string"), lit("-0")).as("index"))
-      def shape(d: org.apache.spark.sql.DataFrame, mode: String) =
-        d.select(col("event_id"), lit(mode).as("mode"), col("pri"),
-          col("facility"), col("severity"), col("msg"),
-          col("vars_msg"), col("vars_local"))
-      shape(graft.sources.Sources.imhiredisDecode(qfeed), "queue")
-        .unionAll(shape(graft.sources.Sources.imhiredisDecode(sfeed,
-          mode = "stream", streamKey = "logs", group = "grp",
-          consumer = "c1"), "stream"))
-    }),
-
-    // §2.9 imuxsock: standard parse plus the trusted-properties family —
-    // parsetrusted puts the SCM credentials at the CEE root, annotate
-    // alone appends the ` @[_PID=..]` text before parsing
-    // (plugins/imuxsock SubmitMsg:985-1091)
-    "imuxsock_decode" -> ((s, dir) => {
-      val base = synthSyslog(s, dir).select(col("event_id"),
-        col("rawmsg").as("value"),
-        (col("event_id") % 30000).cast("long").as("pid"),
-        lit(1000L).as("uid"), lit(1000L).as("gid"),
-        col("event_type").as("comm"),
-        concat(lit("/usr/bin/"), col("event_type")).as("exe"),
-        concat(col("event_type"), lit(" --flag")).as("cmdline"))
-      def shape(d: org.apache.spark.sql.DataFrame, mode: String) =
-        d.select(col("event_id"), lit(mode).as("mode"), col("hostname"),
-          col("syslogtag"), col("msg"), col("vars_msg"))
-      shape(graft.sources.Sources.imuxsockDecode(base), "plain")
-        .unionAll(shape(graft.sources.Sources.imuxsockDecode(base,
-          annotate = true), "annotate"))
-        .unionAll(shape(graft.sources.Sources.imuxsockDecode(base,
-          annotate = true, parseTrusted = true), "trusted"))
-    }),
-
-    // §2.5 imsolaris: STREAMS log decode — PRI and time come from the
-    // log_ctl header, the body parses only for TAG/msg, in-body dates
-    // are ignored and hostname stays the receiver
-    // (plugins/imsolaris/imsolaris.c readLog:185-215)
-    "imsolaris_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val feed = ev.select(col("event_id"),
-        concat(lit("Oct 11 22:14:15 "), col("event_type"),
-          lit("["), col("event_id") % 1000, lit("]: door msg "),
-          col("event_id")).as("value"),
-        (col("event_id") % 192).cast("int").as("pri"),
-        (lit(1700000000L) + col("event_id") % 86400).as("ctl_sec"))
-      graft.sources.Sources.imsolarisDecode(feed)
-        .select(col("event_id"), col("pri"), col("facility"),
-          col("severity"), col("syslogtag"), col("programname"),
-          col("msg"), unix_timestamp(col("ts")).as("ts_sec"))
-    }),
-
-    // §2.5 imkubernetes: pod-log decode — pods/containers path
-    // metadata, CRI / docker-json / raw record formats, stderr
-    // severity promotion (contrib/imkubernetes; CRI partial
-    // accumulation covered by ImkubernetesSpec)
-    "imkubernetes_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val m3 = col("event_id") % 3
-      val stream = when(col("event_id") % 2 === 0, "stdout").otherwise("stderr")
-      val path = when(col("user_id") % 2 === 0,
-        concat(lit("/var/log/pods/ns"), col("user_id") % 10,
-          lit("_pod"), col("user_id") % 50,
-          lit("_uid"), col("user_id"),
-          lit("/c"), col("event_id") % 5, lit("/"),
-          col("event_id") % 4, lit(".log")))
-        .otherwise(concat(lit("/var/log/containers/pod"), col("user_id") % 50,
-          lit("_ns"), col("user_id") % 10,
-          lit("_c"), col("event_id") % 5,
-          lit("-cid"), col("event_id"), lit(".log")))
-      val line =
-        when(m3 === 0, concat(lit("2024-03-01T10:00:02Z "), stream,
-          lit(" F ev "), col("event_type"), lit(" "), col("event_id")))
-        .when(m3 === 1, to_json(struct(
-          concat(lit("dock "), col("event_type"), lit("\n")).as("log"),
-          stream.as("stream"),
-          lit("2024-03-01T10:00:03Z").as("time"))))
-        .otherwise(concat(lit("plain "), col("event_type"), lit(" "),
-          col("event_id")))
-      val feed = ev.select(col("event_id"), path.as("path"),
-        col("event_id").as("seq"), line.as("value"))
-      // single-parse (r15 impcap discipline): one json_tuple parse of
-      // vars_msg; the probes then parse only the two small subtrees
-      graft.sources.Sources.imkubernetesDecode(feed,
-          now = to_timestamp(lit("2024-01-01 00:00:00")))
-        .select(Seq(col("event_id"), col("msg"), col("severity"),
-          col("syslogtag"), col("vars_msg")) :+
-          json_tuple(col("vars_msg"), "kubernetes", "docker"): _*)
-        .toDF("event_id", "msg", "severity", "syslogtag", "vars_msg",
-          "__k8s", "__dock")
-        .select(col("event_id"), col("msg"), col("severity"),
-          col("syslogtag"), col("vars_msg"),
-          get_json_object(col("__k8s"), "$.namespace_name").as("probe_ns"),
-          get_json_object(col("__dock"), "$.container_id").as("probe_cid"),
-          get_json_object(col("__k8s"), "$.restart_count")
-            .cast("long").as("probe_restart"))
-    }),
-
-    // §2.5 impcap: packet header decode (eth/ipv4 → tcp/udp/icmp) into
-    // $!impcap metadata + $!data hex remainder (contrib/impcap
-    // packet_parse + parser chain); packets assembled byte-exact from
-    // event fields via unhex
-    "impcap_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val m3 = col("event_id") % 3
-      def h2(c: org.apache.spark.sql.Column) = lpad(hex(c), 2, "0")
-      def h4(c: org.apache.spark.sql.Column) = lpad(hex(c), 4, "0")
-      def h8(c: org.apache.spark.sql.Column) = lpad(hex(c), 8, "0")
-      val eth = concat(lit("001A2B3C4D5EAABBCCDDEE"),
-        h2(col("user_id") % 256), lit("0800"))
-      val proto = when(m3 === 0, "06").when(m3 === 1, "11").otherwise("01")
-      val ip = concat(lit("4500000000000000"), lit("40"), proto, lit("0000"),
-        lit("0A00"), h2((col("event_id") / 256).cast("long") % 256),
-        h2(col("event_id") % 256), lit("C0A80101"))
-      val l4 =
-        when(m3 === 0, concat(
-          h4(lit(1024) + col("event_id") % 50000), lit("01BB"),
-          h8(col("event_id") % 100000), lit("00000000"), lit("50"),
-          when(col("event_id") % 2 === 0, "18").otherwise("02"),
-          lit("000000000000")))
-        .when(m3 === 1, concat(
-          lit("0035"), h4(lit(1024) + col("event_id") % 60000),
-          lit("0010"), lit("BEEF")))
-        .otherwise(lit("0800123400010002"))
-      val payload = concat(lit("DEAD"), h4(col("event_id") % 65536))
-      val feed = ev.select(col("event_id"),
-        col("event_id").as("id"),
-        unhex(concat(eth, ip, l4, payload)).as("packet"),
-        to_timestamp(lit("2024-06-01 10:00:00")).as("ts"))
-      // single-parse (r15 impcap discipline): the four probes re-parsed
-      // the full vars_msg (bulk = the $.data.content hex payload) per
-      // call; one json_tuple splits the two subtrees, the probes then
-      // parse only the small extracted strings
-      graft.sources.Sources.impcapDecode(feed, tag = "pcap:")
-        .select(Seq(col("event_id"), col("vars_msg"), col("syslogtag")) :+
-          json_tuple(col("vars_msg"), "impcap", "data"): _*)
-        .toDF("event_id", "vars_msg", "syslogtag", "__imp", "__data")
-        .select(col("event_id"), col("vars_msg"), col("syslogtag"),
-          get_json_object(col("__imp"), "$.net_src_ip").as("probe_src_ip"),
-          get_json_object(col("__imp"), "$.net_flags").as("probe_flags"),
-          get_json_object(col("__data"), "$.content").as("probe_data"),
-          get_json_object(col("__imp"), "$.net_bytes_total")
-            .cast("long").as("probe_total"))
-    }),
-
-    // §2.5 impcap app-layer parsers (contrib/impcap/{dns,http,ftp,smb}
-    // _parser.c): well-known-port dispatch off the TCP/UDP layer into
-    // DNS question-section, HTTP status-line+headers, FTP code/command,
-    // and SMB2 header extraction — every probed field a closed-form
-    // function of event_id
-    "impcap_applayer" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val m4 = col("event_id") % 4
-      def h2(c: org.apache.spark.sql.Column) = lpad(hex(c), 2, "0")
-      def h4(c: org.apache.spark.sql.Column) = lpad(hex(c), 4, "0")
-      def h8(c: org.apache.spark.sql.Column) = lpad(hex(c), 8, "0")
-      def le32(c: org.apache.spark.sql.Column) = concat(h2(c), lit("000000"))
-      val eth = concat(lit("001A2B3C4D5EAABBCCDDEE"),
-        h2(col("user_id") % 256), lit("0800"))
-      val proto = when(m4 === 0, "11").otherwise("06")
-      val ip = concat(lit("4500000000000000"), lit("40"), proto, lit("0000"),
-        lit("0A00"), h2((col("event_id") / 256).cast("long") % 256),
-        h2(col("event_id") % 256), lit("C0A80101"))
-      val tcpHdr = (dst: String) => concat(
-        h4(lit(40000) + col("event_id") % 10000), lit(dst),
-        h8(col("event_id") % 100000), lit("00000000"), lit("5018"),
-        lit("000000000000"))
-      val dnsPay = concat(
-        h4(col("event_id") % 65536), lit("0100"),
-        lit("0001000000000000"),
-        lit("03777777076578616D706C6503636F6D00"),
-        when(col("event_id") % 8 === 0, "0001").otherwise("001C"),
-        lit("0001"))
-      val httpPay = hex(concat(lit("GET /p"), col("event_id") % 100,
-        lit(" HTTP/1.1\r\nHost: h"), col("event_id") % 10,
-        lit(".example\r\nXKey: v"), col("event_id") % 7,
-        lit("\r\n\r\nbody")))
-      val ftpPay = hex(
-        when(col("event_id") % 8 === 2,
-          concat(lit("USER u"), col("event_id") % 5, lit("\r\n")))
-        .otherwise(lit("230 Login ok\r\n")))
-      val smbPay = concat(
-        lit("FE534D42"), lit("4000"), lit("0000"),
-        le32(col("event_id") % 256),           // ntStatus
-        h2(col("event_id") % 19), lit("00"),   // opCode (LE16)
-        lit("0000"), lit("01000000"),          // padding2, flags=R
-        lit("00000000"),                       // chainOffset
-        le32(col("event_id") % 256), lit("00000000"), // comSeqNumber
-        le32(col("event_id") % 200),           // processID
-        le32(col("event_id") % 50),            // treeID
-        le32(col("event_id") % 100), lit("00000000"), // userID
-        lit("0000000000000000000000000000000000000000000000000000000000000000"))
-      val l4 =
-        when(m4 === 0, concat(
-          h4(lit(2048) + col("event_id") % 1000), lit("0035"),
-          lit("0010"), lit("BEEF"), dnsPay))
-        .when(m4 === 1, concat(tcpHdr("0050"), httpPay))
-        .when(m4 === 2, concat(tcpHdr("0015"), ftpPay))
-        .otherwise(concat(tcpHdr("01BD"), smbPay))
-      val feed = ev.select(col("event_id"),
-        col("event_id").as("id"),
-        unhex(concat(eth, ip, l4)).as("packet"),
-        to_timestamp(lit("2024-06-01 10:00:00")).as("ts"))
-      val dec = graft.sources.Sources.impcapDecode(feed, tag = "pcap:")
-      // r15: 17 get_json_object calls each re-parsed the FULL vars_msg
-      // (incl. the hex payload — the document's bulk) per row; this
-      // query measured 3x the next-worst main-loop entry while its
-      // sibling impcap_decode (same packet kernel, 4 extracts) did
-      // not. Parse once: extract the $.impcap subtree (drops the
-      // payload), one json_tuple parse for the 13 flat fields, and 4
-      // small extracts for the nested paths. json_tuple and
-      // get_json_object return identical raw-token strings for
-      // scalars and null for missing keys, so values are unchanged.
-      def ji(p: String) = get_json_object(col("__imp"), "$." + p)
-      dec
-        .withColumn("__imp", get_json_object(col("vars_msg"), "$.impcap"))
-        .select(Seq(col("event_id"), col("__imp")) :+
-          json_tuple(col("__imp"), "DNS_transaction_id", "DNS_error",
-            "HTTP_method", "HTTP_request_URI", "FTP_request",
-            "FTP_response", "SMB_version", "SMB_NTstatus",
-            "SMB_operation", "SMB_flags", "SMB_seqNumber", "SMB_treeID",
-            "SMB_userID"): _*)
-        .toDF("event_id", "__imp", "f_txid", "f_dnserr", "f_method",
-          "f_uri", "f_ftpreq", "f_ftpresp", "f_smbver", "f_smbnt",
-          "f_smbop", "f_smbflags", "f_smbseq", "f_smbtree", "f_smbuser")
-        .select(col("event_id"),
-          col("f_txid").cast("long").as("dns_txid"),
-          col("f_dnserr").as("dns_err"),
-          ji("DNS_Names[0].qname").as("dns_qname"),
-          ji("DNS_Names[0].type").as("dns_type"),
-          col("f_method").as("http_method"),
-          col("f_uri").as("http_uri"),
-          ji("HTTP_header_fields.Host").as("http_host"),
-          ji("HTTP_header_fields.XKey").as("http_xkey"),
-          col("f_ftpreq").as("ftp_req"),
-          col("f_ftpresp").cast("long").as("ftp_resp"),
-          col("f_smbver").cast("long").as("smb_ver"),
-          col("f_smbnt").cast("long").as("smb_nt"),
-          col("f_smbop").cast("long").as("smb_op"),
-          col("f_smbflags").as("smb_flags"),
-          col("f_smbseq").cast("long").as("smb_seq"),
-          col("f_smbtree").cast("long").as("smb_tree"),
-          col("f_smbuser").cast("long").as("smb_user"))
-    }),
-
-    // §2.5 imtuxedoulog: Tuxedo ULOG line parse — time-of-day + file
-    // date, host!prog split, procid truncation, gtrid skip, ECID → SD
-    // (contrib/imtuxedoulog parseMsg, README cases 1-4); Java exception
-    // continuation lines dropped
-    "imtuxedoulog_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val hh = lpad((col("event_id") % 24).cast("string"), 2, "0")
-      val mi = lpad((col("event_id") % 60).cast("string"), 2, "0")
-      val ss = lpad((col("event_id") % 43 % 60).cast("string"), 2, "0")
-      val tod = concat(hh, mi, ss)
-      val base = concat(tod, lit("."),
-        when(col("event_id") % 2 === 0, lit("70")).otherwise(lit("705")),
-        lit(".host"), col("user_id") % 50,
-        lit("!"), col("event_type"), lit("."), col("event_id") % 100000,
-        lit(".1.0: "))
-      val line =
-        when(col("event_id") % 5 === 0,
-          lit("\tat java.base/jdk.internal.reflect.invoke(Native Method)"))
-        .when(col("event_id") % 5 === 1,
-          concat(base, lit("ECID <EC"), col("event_id"),
-            lit(">: traced "), col("event_id")))
-        .when(col("event_id") % 5 === 2,
-          concat(base, lit("gtrid x0 x1: ECID <G"), col("event_id"),
-            lit(">: gtraced "), col("event_id")))
-        .otherwise(concat(base, lit("TSAM_CAT:305: plain "), col("event_id")))
-      val feed = ev.select(col("event_id"), line.as("value"),
-        to_date(lit("2024-03-15")).as("filedate"))
-      graft.sources.Sources.imtuxedoulogDecode(feed,
-          now = to_timestamp(lit("2024-01-01 00:00:00")))
-        .select(col("event_id"), col("hostname"), col("procid"),
-          col("structured_data"), col("msg"), col("pri"),
-          unix_micros(col("ts")).as("ts_us"))
-    }),
-
-    // §2.5 imhttp: posted body rows run the standard parser chain
-    // (NEEDS_PARSING|PARSE_HOSTNAME) with the peer as fromhost;
-    // addmetadata lands httpheaders/queryparams under $!metadata
-    // (contrib/imhttp doSubmitMsg + msgAddMetadataFromHttp*)
-    "imhttp_decode" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val feed = ev.select(col("event_id"), col("rawmsg").as("value"),
-        concat(lit("10.0.0."), col("user_id") % 250).as("remoteaddr"),
-        to_json(struct(lit("curl/8").as("user-agent"))).as("headers_json"),
-        to_json(struct(col("event_type").as("src"))).as("query_json"))
-      graft.sources.Sources.imhttpDecode(feed, addMetadata = true)
-        .select(col("event_id"), col("hostname"), col("syslogtag"),
-          col("msg"), col("vars_msg"),
-          get_json_object(col("vars_msg"), "$.metadata.queryparams.src")
-            .as("probe_src"))
-    }),
-
-    // §2.5 imhttp body framing + gzip (imhttp.c processDataUncompressed
-    // :730-760 LF loop, processOctetCounting :500-560 per-frame
-    // auto-detect, processDataCompressed :820+ inflate): each event
-    // posts a 2-message body in LF and octet-counted shapes; the gzip
-    // leg round-trips compress→inflate through the codegen'd kernels,
-    // and poisoned rows exercise the malformed-gzip reject NULL
-    "imhttp_body" -> ((s, dir) => {
-      import graft.functions.HttpExprs
-      val ev = synthSyslog(s, dir)
-      val m1 = concat(lit("m"), col("event_id"), lit(" alpha"))
-      val m2 = concat(lit("x"), col("v100"))
-      val lfBody = concat(m1, lit("\n"), m2, lit("\n"))
-      val octBody = concat(octet_length(m1).cast("string"), lit(" "), m1,
-        octet_length(m2).cast("string"), lit(" "), m2)
-      val lf = ev.select(col("event_id"), lit("lf").as("mode"),
-        posexplode(HttpExprs.bodyMessages(lfBody, "lf"))).toDF(
-        "event_id", "mode", "idx", "msg")
-      val oct = ev.select(col("event_id"), lit("octet").as("mode"),
-        posexplode(HttpExprs.bodyMessages(octBody, "octet"))).toDF(
-        "event_id", "mode", "idx", "msg")
-      val gz = ev.select(col("event_id"), lit("gzip").as("mode"),
-        posexplode(HttpExprs.bodyMessages(
-          HttpExprs.gzipInflate(HttpExprs.gzipCompress(lfBody.cast("binary")))
-            .cast("string"), "lf"))).toDF("event_id", "mode", "idx", "msg")
-      val bad = ev.filter(col("event_id") % 100 === 0)
-        .select(col("event_id"), lit("bad_gzip").as("mode"),
-          lit(-1).as("idx"),
-          HttpExprs.gzipInflate(lit("not gzip".getBytes("UTF-8")))
-            .cast("string").as("msg"))
-      lf.unionByName(oct).unionByName(gz).unionByName(bad)
-    }),
-
-    // §2.10 omrelp — RELP client send framing (librelp envelope around
-    // relpCltSendSyslog); round-trips with deframeRelp
-    "omrelp_frame" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val msg = concat(lit("msgnum:"), lpad(col("event_id"), 8, "0"))
-      ev.select(col("event_id"),
-        graft.sources.Sources.frameRelp(msg, col("event_id") % 1000 + 1)
-          .as("relp_frame"))
-    }),
-
-    // §2.9 four inline mm* config actions end-to-end: mmleefparse
-    // (header/fields tree at the $! root), mmaudit (numeric-type audit
-    // grammar → $!audit + parsesuccess), mmgrok (match= → $!g), and
-    // mmrfc5424addhmac (HMAC SD element on RFC5424 frames only)
-    "mm_actions" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("msg",
-          when(col("event_id") % 3 === 0,
-            concat(lit("LEEF:1.0|Vnd|Prod|2.0|e"), col("event_id") % 50,
-              lit("|src=10.0.0."), col("user_id") % 250,
-              lit("\tact=blocked")))
-          .when(col("event_id") % 3 === 1,
-            concat(lit("type=1300 audit(1700000000.123:"), col("event_id"),
-              lit("): uid="), col("user_id") % 1000,
-              lit(" cmd=\"ls -la\"")))
-          .otherwise(concat(lit("GET /api/r"), col("event_id") % 17,
-            lit(" 200"))))
-        .withColumn("rawmsg",
-          concat(lit("<165>1 - h app - - - m"), col("event_id")))
-        .withColumn("protocol_version",
-          when(col("event_id") % 3 === 2, 1).otherwise(0))
-        .withColumn("structured_data", lit(null).cast("string"))
-        .withColumn("parsesuccess", lit(true))
-      val conf =
-        """ruleset(name="m") {
-          |  action(type="mmleefparse")
-          |  action(type="mmaudit")
-          |  action(type="mmgrok" match="%{WORD:verb} %{NOTSPACE:path} %{NUMBER:code}" target="!g")
-          |  action(type="mmrfc5424addhmac" key="graftkey" hashfunction="sha256" sd_id="hmac@32473")
-          |}
-          |""".stripMargin
-      val out = graft.rainerscript.RsyslogConfig.parse(conf)
-        .run(ev.select(col("event_id"), col("user_id"), col("msg"),
-          col("rawmsg"), col("protocol_version"), col("structured_data"),
-          col("parsesuccess")), "m").output
-      // single-parse (r15 impcap discipline): six full-document
-      // re-parses → one json_tuple parse splitting the four subtrees,
-      // then six small-subtree extracts
-      out
-        .select(Seq(col("event_id"), col("parsesuccess"),
-          col("structured_data")) :+
-          json_tuple(col("vars_msg"), "header", "fields", "audit", "g"): _*)
-        .toDF("event_id", "parsesuccess", "structured_data",
-          "__hdr", "__fld", "__aud", "__g")
-        .select(col("event_id"),
-        get_json_object(col("__hdr"), "$.vendor").as("leef_vendor"),
-        get_json_object(col("__fld"), "$.src").as("leef_src"),
-        get_json_object(col("__aud"), "$.hdr.auditid").as("auditid"),
-        get_json_object(col("__aud"), "$.uid").as("audit_uid"),
-        get_json_object(col("__g"), "$.verb").as("verb"),
-        get_json_object(col("__g"), "$.code").as("code"),
-        col("parsesuccess"),
-        col("structured_data").isNotNull.as("hmac_added"))
-    }),
-
-    // §2.9 mmdarwin call shaping (contrib/mmdarwin doAction): dynamic
-    // !-fields from the $! tree + literal fields into the raw
-    // quote-wrapped [[...]] body, partial field sets suppressed with
-    // send_partial=off, daemon certitude (External scorer seam) stored
-    // at $!certitude only for rows that sent a body
-    "mmdarwin_call" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("vars_msg",
-          when(col("event_id") % 13 === 0,
-            concat(lit("{\"srcip\":\"10.0.0."), col("event_id") % 250,
-              lit("\"}")))
-          .otherwise(concat(lit("{\"srcip\":\"10.0.0."),
-            col("event_id") % 250, lit("\",\"port\":"),
-            col("event_id") % 65536, lit("}"))))
-      graft.sources.Sources.mmdarwinCall(ev,
-        Seq("!srcip", "smtp", "!port"), scoreCol = col("event_id") % 101)
-        .select(col("event_id"), col("darwin_body"),
-          get_json_object(col("vars_msg"), "$.certitude").as("certitude"))
-    }),
-
-    // §2.10 omsnmp trap shaping (omsnmp_sendsnmp, omsnmp.c:270-380):
-    // v1 PDU with the agent_addr ntohl-index byte-reversal quirk and v2c
-    // sysUpTime/snmpTrapOID varbinds, message as the syslogMessageOID
-    // string varbind
-    "omsnmp_trap" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("msg", concat(lit("trap "), col("event_type"),
-          lit(" #"), col("event_id")))
-        .withColumn("src",
-          when(col("event_id") % 11 === 0, lit("not.an.ip.addr"))
-          .otherwise(concat(lit("10.0."), col("user_id") % 256, lit("."),
-            col("event_id") % 256)))
-      val v1 = graft.sources.Sources.omsnmpTrapFrame(ev, "msg", "src",
-        version = 1).withColumnRenamed("snmp_trap", "trap_v1")
-      graft.sources.Sources.omsnmpTrapFrame(v1, "msg", "src", version = 2,
-        uptime = col("event_id") % 100000)
-        .select(col("event_id"), col("trap_v1"),
-          col("snmp_trap").as("trap_v2c"))
-    }),
-
-    // §2.10 ommongodb default lumberjack document (getDefaultBSON,
-    // ommongodb.c:280-362) incl. the procid/pid swap quirk and the
-    // lumberjack level table; BSON datetimes = epoch millis
-    "ommongodb_doc" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("hostname", concat(lit("host"), col("user_id") % 50))
-        .withColumn("msg", concat(lit("ev "), col("event_type")))
-        .withColumn("facility", (col("user_id") % 24).cast("int"))
-        .withColumn("severity", (col("event_id") % 8).cast("int"))
-        .withColumn("syslogtag",
-          concat(col("event_type"), lit("["), col("event_id") % 1000, lit("]")))
-        .withColumn("programname", col("event_type"))
-        .withColumn("procid", (col("event_id") % 1000).cast("string"))
-      graft.sources.Sources.ommongodbDoc(ev)
-        .select(col("event_id"), col("mongo_doc"),
-          get_json_object(col("mongo_doc"), "$.sys").as("probe_sys"),
-          get_json_object(col("mongo_doc"), "$.level").as("probe_level"),
-          get_json_object(col("mongo_doc"), "$.time").cast("long")
-            .as("probe_time"))
-    }),
-
-    // §2.10 ommail RFC822 DATA shaping (writeMailMessage,
-    // ommail.c:639-664): SMTP-format Date, From/To/Subject headers with
-    // the CR/LF header-injection guard, X-Mailer, SMTP dot-stuffing in
-    // the body (start-of-line reopens only after a strict CRLF)
-    "ommail_message" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("subject",
-          concat(lit("alert "), col("event_type"), lit(" line1\nline2")))
-        .withColumn("body",
-          concat(lit(".lead "), col("event_type"), lit("\r\n.dot "),
-            col("event_id"), lit("\nmid .x\r\ntail")))
-      graft.sources.Sources.ommailMessage(ev, "body", "subject",
-        "rsyslog@example.net", Seq("ops@example.net", "oncall@example.net"),
-        now = to_timestamp(lit("2024-06-01 12:00:00")))
-        .select(col("event_id"), col("mail_message"))
-    }),
-
-    // §2.10 omjournal non-template field shaping (omjournal.c:290-302):
-    // MESSAGE / PRIORITY=(fac*8|sev) / SYSLOG_FACILITY /
-    // SYSLOG_IDENTIFIER as an export-format entry
-    "omjournal_frame" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-        .withColumn("syslogtag",
-          concat(col("event_type"), lit("["), col("event_id"), lit("]")))
-        .withColumn("msg", concat(lit("msgnum:"), lpad(col("event_id"), 8, "0")))
-      graft.sources.Sources.omjournalFrame(ev)
-        .select(col("event_id"), col("journal_entry"))
-    }),
-
-    // §2.5 imjournal: journal export-format entries → decoded pipeline
-    // rows (plugins/imjournal/imjournal.c readjournal field mapping:
-    // PRIORITY/SYSLOG_FACILITY bounds-checked with defaults, identifier/
-    // pid tag assembly, $! tree from data fields). Entries synthesized
-    // deterministically from events — PRIORITY%9 and FACILITY%25 hit the
-    // out-of-bounds→default path on real rows
-    "imjournal_decode" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val entries = ev.select(col("event_id"), concat(
-        lit("__REALTIME_TIMESTAMP="), col("event_id") * 1000000L + 123456L,
-        lit("\n__CURSOR=s=deadbeef;i="), col("event_id"),
-        lit("\nMESSAGE=msgnum:"), lpad(col("event_id"), 8, "0"),
-        lit("\nPRIORITY="), col("event_id") % 9,
-        lit("\nSYSLOG_FACILITY="), col("user_id") % 25,
-        lit("\nSYSLOG_IDENTIFIER="), col("event_type"),
-        lit("\n_PID="), col("user_id"),
-        lit("\n_HOSTNAME=host"), col("user_id"),
-        lit("\n_TRANSPORT=journal")).as("value"))
-      graft.sources.Sources.imjournalDecode(entries)
-        .select(col("event_id"), col("facility"), col("severity"),
-          col("syslogtag"), col("msg"),
-          unix_timestamp(col("ts")).as("ts_secs"),
-          get_json_object(col("vars_msg"), "$._HOSTNAME").as("jhost"),
-          get_json_object(col("vars_msg"), "$._TRANSPORT").as("jtrans"))
-    }),
-
-    // §2.9 mmjsonparse mode="find-json" through the config action path:
-    // a decoy "{bad}" makes the scan-advance load-bearing; every 10th
-    // message has no valid object and takes the FAIL branch
-    "mmjsonparse_findjson" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val msgs = ev.select(col("event_id"),
-        when(col("event_id") % 10 === 0,
-          concat(lit("pfx {broken "), col("event_type")))
-        .otherwise(concat(lit("pfx {bad} ev "), col("event_type"),
-          lit(" {\"id\":"), col("event_id"), lit("}"))).as("msg"))
-      val cfg = graft.rainerscript.RsyslogConfig.parse(
-        """action(type="mmjsonparse" mode="find-json")
-          |set $.id = $!id;
-          |""".stripMargin)
-      cfg.run(msgs).output.select(col("event_id"),
-        col("parsesuccess"),
-        get_json_object(col("vars_msg"), "$.id").cast("long").as("jid"))
-    }),
-
-    // §2.1 timezone() objects: configured offsets resolve the symbolic
-    // zone ids parse_time_localtz receives (runtime/timezones.c,
-    // grammar/rainerscript.h:52) — script text + config objects only
-    "timezone_localtz" -> ((s, dir) => {
-      val cfg = graft.rainerscript.RsyslogConfig.parse(
-        """timezone(id="CET" offset="+01:00")
-          |timezone(id="EST" offset="-05:00")
-          |set $.cet = parse_time_localtz($t3339, "CET");
-          |set $.est = parse_time_localtz($t3339, "EST");
-          |""".stripMargin)
-      val ev = Tables.events(s, dir).select(col("event_id"), col("ts"))
-        .withColumn("t3339", date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss"))
-      val res = cfg.run(ev)
-      res.output.select(col("event_id"),
-        get_json_object(col("vars_local"), "$.cet").cast("long").as("cet"),
-        get_json_object(col("vars_local"), "$.est").cast("long").as("est"))
-    }),
-
-    // §2.1 foreach body action(): the action fires once PER ELEMENT with
-    // that element's variable state (runtime/ruleset.c:310-401 executes
-    // the body's statements per iteration) — the exploded capture via
-    // CompiledAction.frameOverride is the batch face of that
-    "foreach_action" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-        .select(col("event_id"), col("hostname"), col("event_type"))
-      val script =
-        """foreach ($.w in split($event_type, "u")) do {
-          |  if $.w != "" then {
-          |    set $.line = $hostname & ":" & $.w;
-          |    action(type="omfile" file="/fragments.log")
-          |  }
-          |}
-          |""".stripMargin
-      val res = graft.rainerscript.RainerCompiler.run(script, ev)
-      res.actionFrame(0).select(col("event_id"),
-        get_json_object(col("vars_local"), "$.line").as("line"))
-    }),
-
-    // §2.6 lookup table (string type) — broadcast-map enrichment
-    "lookup_string" -> ((s, dir) => {
-      val tbl = StringLookup(
-        Map("error" -> "E", "signup" -> "S", "purchase" -> "P", "view" -> "V"),
-        nomatch = "UNK")
-      Tables.events(s, dir)
-        .withColumn("code", tbl.probe(col("event_type")))
-        .groupBy(col("code")).agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_v"))
-    }),
-
-    // §2.6 lookup table (sparseArray type) — floor-match on sorted ranges
-    "lookup_sparse" -> ((s, dir) => {
-      val tbl = SparseArrayLookup(
-        IndexedSeq(0L -> "low", 50L -> "mid", 150L -> "high", 500L -> "xhigh"),
-        nomatch = "neg")
-      Tables.events(s, dir)
-        .withColumn("band", tbl.probe(floor(col("value")).cast("long")))
-        .groupBy(col("band")).agg(count(lit(1)).as("n"))
-    }),
-
-    // §2.6 lookup table (regex type) — ordered first-match-wins
-    "lookup_regex" -> ((s, dir) => {
-      val tbl = RegexLookup(
-        IndexedSeq("^p" -> "p-ish", "^(e|s)" -> "es-ish", "w$" -> "w-end"),
-        nomatch = "other")
-      Tables.events(s, dir)
-        .withColumn("cls", tbl.probe(col("event_type")))
-        .groupBy(col("cls")).agg(count(lit(1)).as("n"))
-    }),
-
-    // §2.7 dynstats — dyn_inc counters keyed by runtime string, with
-    // maxCardinality semantics (first-seen keys kept, rest → overflow)
-    "dynstats" -> ((s, dir) => {
-      DynStats.counters(Tables.events(s, dir),
-        keyCol = col("event_type"), orderCol = col("event_id"),
-        maxCardinality = 3)
-    }),
-
-    // §2.7 percentile_stats — per-key percentiles over an observation window
-    "perctile" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(
-          round(expr("percentile(value, 0.5)"), 4).as("p50"),
-          round(expr("percentile(value, 0.95)"), 4).as("p95"),
-          round(min(col("value")), 2).as("window_min"),
-          round(max(col("value")), 2).as("window_max"),
-          count(lit(1)).as("window_count"))
-    }),
-
-    // §2.4 template/property-replacer — RFC3164 file-format projection
-    "template_render" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      ev.select(col("event_id"),
-        concat(
-          date_format(col("ts"), "MMM "),
-          lpad(date_format(col("ts"), "d"), 2, " "),
-          date_format(col("ts"), " HH:mm:ss "),
-          col("hostname"), lit(" "),
-          col("event_type"), lit("["), col("event_id"), lit("]: "),
-          lit("v100="), col("v100")).as("line"))
-    }),
-
-    // §2.4 $NOW-family system properties (getNOW, msg.c:2922-2977;
-    // property ids msg.c:473-533) — rendered through the real template
-    // compiler from reception time; UTC session makes local ≡ -utc
-    "template_nowfamily" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      ev.select(col("event_id"),
-        graft.templates.TemplateCompiler.compile(
-          "%$now%T%$hour%:%$minute% h%$hhour% q%$qhour% w%$wday% u%$now-unixtimestamp%",
-          col).as("stamp"))
-    }),
-
-    // §2.9 pmrfc3164 — synth rawmsg → custom parse expr → fields roundtrip
-    "parse_rfc3164" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val p = ev.withColumn("p", rainer.parse_syslog(col("rawmsg")))
-      p.select(
-        col("event_id"),
-        col("p.facility").as("facility"),
-        col("p.severity").as("severity"),
-        col("p.hostname").as("hostname"),
-        col("p.programname").as("programname"),
-        col("p.procid").as("procid"),
-        col("p.msg").as("msg"),
-        col("p.parsesuccess").as("parsesuccess"))
-    }),
-
-    // §2.9 pmrfc5424 + mmpstrucdata — 5424 header + SD parse
-    "parse_rfc5424" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("raw5424", concat(
-          lit("<165>1 "),
-          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"), lit(" "),
-          concat(lit("host"), col("user_id")), lit(" "),
-          col("event_type"), lit(" "), col("event_id"), lit(" ID"), col("event_id") % 10,
-          lit(" [ev@32473 v=\""), round(col("value") * 100, 0).cast("long"), lit("\"] "),
-          lit("payload "), col("event_id")))
-      val p = ev.withColumn("p", rainer.parse_syslog(col("raw5424")))
-      p.select(
-        col("event_id"),
-        col("p.hostname").as("hostname"),
-        col("p.app_name").as("app_name"),
-        col("p.procid").as("procid"),
-        col("p.msgid").as("msgid"),
-        get_json_object(rainer.parse_structured_data(col("p.structured_data")),
-          "$['ev@32473'].v").as("sd_v"),
-        col("p.msg").as("msg"))
-    }),
-
-    // §2.3 string function battery: strlen/tolower/substring/field/replace/wrap
-    "func_strings" -> ((s, dir) => {
-      Tables.documents(s, dir).select(
-        col("doc_id"),
-        rainer.strlen(col("text")).as("len"),
-        rainer.toupper(rainer.rs_substring(col("text"), 0, 10)).as("head10"),
-        rainer.field(col("text"), " ", 3).as("f3"),
-        rainer.wrap(rainer.field(col("text"), " ", 1), "'").as("wrapped"),
-        rainer.rs_replace(rainer.rs_substring(col("text"), 0, 20), " ", "_").as("und"))
-    }),
-
-    // §2.3 numeric/ip functions: num2ipv4, ipv42num, int2hex, is_in_subnet
-    "func_net" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("ipn", (col("user_id") * 7777777L + col("event_id")) % 4294967296L)
-      ev.select(
-        col("event_id"),
-        rainer.num2ipv4(col("ipn")).as("ip"),
-        (rainer.ipv42num(rainer.num2ipv4(col("ipn"))) === col("ipn")).as("roundtrip"),
-        rainer.int2hex(col("event_id")).as("hexid"),
-        rainer.is_in_subnet(rainer.num2ipv4(col("ipn")), "10.0.0.0/8").as("in10"),
-        rainer.anon_ipv4(rainer.num2ipv4(col("ipn")), 8).as("anon"))
-    }),
-
-    // §2.3 time functions: format_time / parse_time roundtrip
-    "func_time" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("epoch", expr("ts_ns div 1000000000"))
-      ev.select(
-        col("event_id"),
-        rainer.format_time(col("epoch"), "date-rfc3339").as("rfc3339"),
-        rainer.format_time(col("epoch"), "date-rfc3164").as("rfc3164"),
-        (rainer.parse_time(rainer.format_time(col("epoch"), "date-rfc3339")) === col("epoch"))
-          .as("roundtrip"))
-    }),
-
-    // §2.9 mmjsonparse — CEE/JSON body extraction
-    "mmjsonparse" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("cee", concat(lit("@cee: "), col("props")))
-      ev.select(
-        col("event_id"),
-        get_json_object(regexp_replace(col("cee"), "^@cee: ", ""), "$.k")
-          .cast("long").as("k"),
-        rainer.parse_json_ok(regexp_replace(col("cee"), "^@cee: ", "")).as("valid"))
-    }),
-
-    // §2.3 parse_json(text, container) side-effect form: rc 0/1 with the
-    // STRICT whole-input check (a valid prefix with trailing garbage is
-    // rc 1 and stores nothing — doFunc_parse_json char_offset scan,
-    // grammar/rainerscript.c:1887-1905, tests/rscript_parse_json_issue.sh)
-    "parse_json_script" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("msg",
-          when(col("event_id") % 5 === 0, concat(col("props"), lit(" trailing")))
-          .when(col("event_id") % 5 === 1, lit("22 08 23 this is a test message"))
-          .otherwise(col("props")))
-        .select("event_id", "msg")
-      val res = graft.rainerscript.RainerCompiler.run(
-        """set $.rc = parse_json($msg, "\$!parsed");""", ev)
-      res.output.select(
-        col("event_id"),
-        get_json_object(col("vars_local"), "$.rc").cast("long").as("rc"),
-        get_json_object(col("vars_msg"), "$.parsed.k").cast("long").as("k"))
-    }),
-
-    // §3.1/§7 flagship: RainerScript config text → parsed AST → compiled
-    // DataFrame pipeline → action output (the reference's whole compile+
-    // execute path, oracle-verified)
-    "rainerscript_e2e" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-        .withColumn("msg", concat(lit("msgnum:"), lpad(col("event_id"), 8, "0"),
-          lit(": v100="), col("v100")))
-        .select("event_id", "facility", "severity", "msg", "hostname")
-      val script =
-        """set $!sevsq = $severity * $severity;
-          |if prifilt("*.err") and $msg contains "v100" then {
-          |  set $!flag = "important";
-          |} else {
-          |  set $!flag = "routine";
-          |}
-          |if $severity == 7 then stop
-          |action(type="omfile" template="%hostname% %msg%")
-          |""".stripMargin
-      val res = graft.rainerscript.RainerCompiler.run(script, ev)
-      res.actionFrame(0).select(
-        col("event_id"),
-        get_json_object(col("vars_msg"), "$.flag").as("flag"),
-        get_json_object(col("vars_msg"), "$.sevsq").cast("long").as("sevsq"),
-        col("__rendered").as("line"))
-    }),
-
-    // stock-config front-end e2e, ACTIVATED: an unmodified distro-style
-    // §2.9 parser() objects + ruleset(parser=[...]) chains: pmnormalize
-    // populates properties from its rulebase (pri/hostname/syslogtag/
-    // fromhost-ip/msg), a no-match row falls through to the whole-frame
-    // msg with the auto-parsed-or-default PRI (runtime/parser.c:613-686
-    // chain dispatch; tests/pmnormalize-basic.sh semantics), and the
-    // rendered action template locks the whole property surface
-    "parser_chain" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val feed = ev.select(
-        col("event_id"),
-        concat(lit("src"), col("user_id") % 10).as("fromhost"),
-        when(col("event_id") % 3 =!= 0,
-          concat(lit("<"), col("event_id") % 192, lit("> host"),
-            col("user_id") % 50, lit(" app"), col("event_id") % 7,
-            lit(": service listening on 10.0."), col("user_id") % 256,
-            lit("."), col("event_id") % 256, lit(" port "),
-            col("event_id") % 9999))
-        .otherwise(concat(lit("freeform line "), col("event_id")))
-        .as("value"))
-      val conf =
-        """module(load="imtcp")
-          |module(load="pmnormalize")
-          |parser(name="p.norm" type="pmnormalize" rule=["rule=:<%pri:number%> %hostname:word% %syslogtag:char-to:\x3a%: service listening on %fromhost-ip:ipv4% port %msg:rest%"])
-          |template(name="line" type="string" string="%hostname%|%fromhost-ip%|%syslogtag%|%pri%|%syslogseverity%|%msg%")
-          |ruleset(name="chain" parser="p.norm") {
-          |  action(type="omfile" file="/out.log" template="line")
-          |}
-          |input(type="imtcp" port="601" ruleset="chain")
-          |""".stripMargin
-      val cfg = graft.rainerscript.RsyslogConfig.parse(conf)
-      val res = cfg.activate(s, feeds = Map("imtcp:601" -> feed),
-        now = to_timestamp(lit("2024-01-01 00:00:00")))("chain")
-      res.actionFrame(0).select(col("event_id"),
-        col("__rendered").as("line"), col("parsesuccess"))
-    }),
-
-    // §2.9 parser chain with the full behavior matrix (runtime/parser.c
-    // ParseMsg): a TRANSFORMER (pmaixforwardedfrom unmangling) ahead of
-    // three ACCEPTORS — pmciscoios (IOS seq/ts/%TAG frames), pmlastmsg
-    // (repeated-message shortcut) and the rfc3164 catch-all
-    "parser_chain_cisco" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val feed = ev.select(
-        col("event_id"),
-        concat(lit("src"), col("user_id") % 10).as("fromhost"),
-        when(col("event_id") % 4 === 0,
-          concat(lit("<189>"), col("event_id") % 1000,
-            lit(": May 28 16:09:56.185: %SYS-5-CONFIG_I: c "), col("event_id")))
-        .when(col("event_id") % 4 === 1,
-          concat(lit("<13>last message repeated "), col("event_id") % 9,
-            lit(" times")))
-        .when(col("event_id") % 4 === 2,
-          concat(lit("<13>Oct 11 22:14:15 Message forwarded from ax"),
-            col("user_id") % 10, lit(": app"), col("event_id") % 7,
-            lit(": t "), col("event_id")))
-        .otherwise(
-          concat(lit("<13>Oct 11 22:14:15 h"), col("user_id") % 10,
-            lit(" app"), col("event_id") % 7, lit(": t "), col("event_id")))
-        .as("value"))
-      val conf =
-        """module(load="imtcp")
-          |module(load="pmciscoios")
-          |module(load="pmlastmsg")
-          |module(load="pmaixforwardedfrom")
-          |parser(name="custom.ios" type="pmciscoios")
-          |template(name="line" type="string" string="%hostname%|%syslogtag%|%pri%|%msg%")
-          |ruleset(name="mix" parser=["rsyslog.aixforwardedfrom","custom.ios","rsyslog.lastline","rsyslog.rfc3164"]) {
-          |  action(type="omfile" file="/out.log" template="line")
-          |}
-          |input(type="imtcp" port="601" ruleset="mix")
-          |""".stripMargin
-      val cfg = graft.rainerscript.RsyslogConfig.parse(conf)
-      val res = cfg.activate(s, feeds = Map("imtcp:601" -> feed),
-        now = to_timestamp(lit("2024-01-01 00:00:00")))("mix")
-      res.actionFrame(0).select(col("event_id"),
-        col("__rendered").as("line"))
-    }),
-
-    // rsyslog.conf (module/input/global/main_queue objects, legacy
-    // $-directives, selector lines with file/fwd/usrmsg targets, '&'
-    // continuation) parses and BINDS — the synthesized syslog stream is
-    // first materialized as real text files, then the config's own
-    // input(type="imfile") reads it back through activate() (reference
-    // activation pass, tools/rsyslogd.c:885-929): config text → bound
-    // file input → ruleset → action counts, no hand-built frame. Output
-    // = routed count per action, ONE aggregation over the compiled
-    // frame's frozen per-action condition columns (no per-action re-scan)
-    // global(variables.casesensitive="off") — the reference's DEFAULT
-    // fjson mode (glbl.c:1405; its only test, tests/json_var_case.sh,
-    // pins the "on" path this engine always had): variable reads find
-    // the first case-insensitively matching key, writes replace the
-    // matched entry's value IN PLACE (original spelling survives —
-    // json-c's json_object_object_add contract), unset/exists fold
-    // case, and the overlay cache keys fold to agree with the tree
-    "json_var_case" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir).select("event_id", "severity")
-      val conf =
-        """global(variables.casesensitive="off")
-          |set $!MixedCase!Inner = $severity * 10;
-          |set $!mixedCASE!INNER = $!mixedcase!inner + 1;
-          |set $.LocalVar = "L" & $!MIXEDCASE!inner;
-          |set $!Tmp!Gone = 1;
-          |unset $!tmp!gone;
-          |set $!out!read_ci = $!MixedCase!INNER;
-          |set $!out!exists_gone = exists($!TMP!GONE);
-          |set $!out!tmp_obj = exists($!tMp);
-          |""".stripMargin
-      val cfg = graft.rainerscript.RsyslogConfig.parse(conf)
-      val res = cfg.run(ev)
-      // single-parse (r15 impcap discipline): four vars_msg re-parses →
-      // one json_tuple (key match is case-sensitive exact, same as
-      // get_json_object's path step — the readback contract below needs
-      // exactly that)
-      res.output
-        .select(Seq(col("event_id"), col("vars_local")) :+
-          json_tuple(col("vars_msg"), "MixedCase", "out"): _*)
-        .toDF("event_id", "vars_local", "__mc", "__out")
-        .select(
-        col("event_id"),
-        // case-SENSITIVE readback proves the final spelling: json-c's
-        // json_object_object_add under the insensitive global replaces
-        // the matched entry's VALUE in place — the ORIGINAL spelling
-        // "Inner" survives the `$!mixedCASE!INNER` write (the existing
-        // key remains valid; only the value changes)
-        get_json_object(col("__mc"), "$.Inner")
-          .cast("long").as("v_spell"),
-        get_json_object(col("__out"), "$.read_ci")
-          .cast("long").as("read_ci"),
-        get_json_object(col("vars_local"), "$.LocalVar").as("l_ci"),
-        get_json_object(col("__out"), "$.exists_gone").as("exists_gone"),
-        get_json_object(col("__out"), "$.tmp_obj").as("tmp_obj"))
-    }),
-
-    "config_e2e" -> ((s, dir) => {
-      // deterministic path (overwritten per sf) + exit-reaped
-      val spool = graft.Tmp.register(java.nio.file.Paths.get(
-        s"/tmp/graft_config_e2e_${math.abs(dir.hashCode)}")).toString
-      synthSyslog(s, dir).select(col("rawmsg"))
-        .coalesce(1).write.mode("overwrite").text(spool)
-      val conf =
-        s"""module(load="imuxsock")
-          |module(load="imklog" permitnonkernelfacility="on")
-          |module(load="imfile")
-          |$$ModLoad immark
-          |input(type="imfile" file="$spool/part-*" tag="e2e:" needparse="on")
-          |global(workDirectory="/var/spool/rsyslog")
-          |main_queue(queue.size="100000")
-          |$$ActionFileDefaultTemplate RSYSLOG_TraditionalFileFormat
-          |$$RepeatedMsgReduction on
-          |$$FileOwner root
-          |auth,authpriv.*    /var/log/auth.log
-          |*.*;auth,authpriv.none    -/var/log/syslog
-          |cron.*    /var/log/cron.log
-          |kern.*    -/var/log/kern.log
-          |mail.err    /var/log/mail.err
-          |*.emerg    :omusrmsg:*
-          |mail.*    @loghost.example.net
-          |& stop
-          |""".stripMargin
-      val cfg = graft.rainerscript.RsyslogConfig.parse(conf)
-      require(cfg.hasModule("imuxsock") && cfg.hasModule("immark") &&
-        cfg.globals("fileowner") == "root", "stock config surface missing")
-      require(cfg.inputs.exists(_.get("type").contains("imfile")),
-        "input() object missing")
-      // "" = the default/main ruleset the file input is bound to
-      val res = cfg.activate(s,
-        now = to_timestamp(lit("2024-01-01 00:00:00")))("")
-      val names = Seq("n_auth", "n_syslog", "n_cron", "n_kern", "n_mailerr",
-        "n_emerg", "n_mailfwd")
-      require(res.actions.length == names.length, "action count drifted")
-      val aggs = res.actions.zip(names).map { case (a, n) =>
-        count(when(col(a.condCol), lit(1))).as(n)
-      }
-      res.frame.agg(aggs.head, aggs.tail: _*)
-    }),
-
-    // §2.7 dyn_inc from SCRIPT TEXT → real DynStats counters: the call
-    // sites' frozen path guards aggregate over the final frame. The
-    // trailing severity==6 stop runs AFTER the dyn_inc sequence point, so
-    // those rows still count (reference fires the side effect the moment
-    // the statement runs); the leading severity==7 stop runs before, so
-    // those never count.
-    "rainerscript_dynstats" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-        .select("event_id", "facility", "severity", "event_type", "hostname")
-      val script =
-        """if $severity == 7 then stop
-          |if $severity <= 4 then {
-          |  set $.r = dyn_inc("by_type", $event_type);
-          |} else {
-          |  set $.r = dyn_inc("by_type", "quiet");
-          |}
-          |if $severity == 6 then stop
-          |""".stripMargin
-      graft.rainerscript.RainerCompiler.run(script, ev)
-        .dynStatsFrame("by_type", col("event_id"), maxCardinality = 3)
-    }),
-
-    // §2.7 percentile_observe from SCRIPT TEXT → perctile digest
-    "rainerscript_perctile" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-        .select("event_id", "facility", "severity", "event_type", "hostname")
-      val script =
-        """set $.p = percentile_observe("lat", $event_type,
-          |                             $severity * $severity + $facility);
-          |""".stripMargin
-      graft.rainerscript.RainerCompiler.run(script, ev)
-        .perctileFrame("lat")
-    }),
-
-    // §2.3 exec_template + builtin template registry: render the stock
-    // RSYSLOG_FileFormat (rfc3339 variant) through the config front-end
-    "exec_template" -> ((s, dir) => {
-      val cfg = graft.rainerscript.RsyslogConfig.parse("")
-      val ev = synthSyslog(s, dir)
-        .withColumn("msg", concat(lit(" v100="), col("v100")))
-        .withColumn("syslogtag", concat(col("event_type"), lit(":")))
-      ev.select(col("event_id"),
-        cfg.renderTemplate("RSYSLOG_FileFormat",
-          n => if (n == "timereported") col("ts") else col(n)).as("line"))
-    }),
-
-    // §2.3 misc functions: b64, wrap, unflatten, CEF, URL decomposition
-    "func_misc" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("url", concat(lit("https://h"), col("user_id"),
-          lit(".example.com/p/"), col("event_id"), lit("?q="), col("user_id")))
-      ev.select(
-        col("event_id"),
-        rainer.b64_decode(rainer.b64_encode(col("event_type"))).as("b64rt"),
-        rainer.wrap(col("event_type"), "'", "_").as("wrapped"),
-        get_json_object(
-          rainer.unflatten(
-            concat(lit("""{"a.b":"""), col("user_id"), lit("""}""")), "."),
-          "$.a.b").cast("long").as("unflat"),
-        rainer.tocef(lit("graft"), lit("engine"), lit("1.0"),
-          col("event_id").cast("string"), col("event_type"),
-          (col("user_id") % 10).cast("string"),
-          concat(lit("uid="), col("user_id"))).as("cef"),
-        rainer.faup_scheme(col("url")).as("scheme"),
-        rainer.faup_host(col("url")).as("host"),
-        rainer.faup_tld(col("url")).as("tld"),
-        rainer.faup_path(col("url")).as("path"),
-        rainer.faup_query(col("url")).as("q"))
-    }),
-
-    // §2.3 fmhttp http_request (plugins/fmhttp/fmhttp.c:89-136) through
-    // the pre-fetched-response boundary: the script renders a URL per
-    // message, probes the bound URL → body map (a plan literal — no
-    // shuffle), and a miss IS curl failure → number 0. The 0-vs-body
-    // branch exercises the reference's svar coercion ("0" == 0 numeric,
-    // JSON body vs 0 string compare), then get_property reads into the
-    // fetched JSON. Two of the five event types deliberately have no
-    // response bound.
-    "fmhttp_enrich" -> ((s, dir) => {
-      val responses = Map(
-        "http://svc.example/class?t=error" ->
-          """{"sev":"high","team":"oncall"}""",
-        "http://svc.example/class?t=purchase" ->
-          """{"sev":"low","team":"billing"}""",
-        "http://svc.example/class?t=signup" ->
-          """{"sev":"low","team":"growth"}""")
-      val ev = Tables.events(s, dir).select("event_id", "event_type")
-      val script =
-        """set $.url = "http://svc.example/class?t=" & $event_type;
-          |set $.resp = http_request($.url);
-          |if $.resp == 0 then
-          |  set $!team = "unresolved";
-          |else
-          |  set $!team = get_property($.resp, "team");
-          |""".stripMargin
-      graft.rainerscript.RainerCompiler
-        .run(script, ev, http = responses).output
-        .groupBy(get_json_object(col("vars_msg"), "$.team").as("team"))
-        .agg(count(lit(1)).as("n"),
-          count_distinct(col("event_type")).as("n_types"))
-    }),
-
-    // §2.10 omudpspoof wire accounting: spoofed source from the default
-    // source template (%fromhost-ip%), cycling source ports, and the
-    // exact IPv4 fragmentation ladder for messages above the MTU
-    // (plugins/omudpspoof/omudpspoof.c UDPSend) — severity 5/7 rows are
-    // padded past one and past two fragments to walk the whole ladder
-    "omudpspoof_frames" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-        .withColumn("pad", when(col("severity") === 7, 3000)
-          .when(col("severity") === 5, 1600).otherwise(0))
-        .withColumn("wire", concat(col("rawmsg"), expr("repeat('x', pad)")))
-        .withColumn("fromhost_ip",
-          rainer.num2ipv4(pmod(col("user_id"), lit(4294967296L))))
-      val frames = graft.sources.Sources.udpspoofPackets(ev,
-        col("wire"), col("fromhost_ip"), col("event_id"))
-      // deep probe: each fragment's ACTUAL byte slice of the original
-      // datagram (start derived from frag_offset, so a wrong offset
-      // ladder shifts the bytes and hash-mismatches against the oracle's
-      // independently-positioned substring), plus real reassembly — the
-      // slices concatenated in frag_idx order must equal the original
-      // wire message byte-for-byte (oracle asserts the same via
-      // arithmetic tiling: offsets contiguous ∧ Σ payload_len = len)
-      val msgStart = when(col("frag_idx") === 0, lit(1L))
-        .otherwise(col("frag_offset") - 8 + 1)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_id")).orderBy(col("frag_idx"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      frames
-        .withColumn("frag_payload", expr(
-          "substring(wire, CAST(CASE WHEN frag_idx = 0 THEN 1 " +
-          "ELSE frag_offset - 8 + 1 END AS INT), CAST(payload_len AS INT))"))
-        .withColumn("probe_reassembled",
-          concat_ws("", collect_list(col("frag_payload")).over(w))
-            === col("wire"))
-        .withColumn("frag_head", substring(col("frag_payload"), 1, 16))
-        .select(col("event_id"), col("frag_idx"), col("src_ip"),
-          col("src_port"), col("dst_port"), col("mf"), col("frag_offset"),
-          col("payload_len"), col("ip_len"), col("udp_len"),
-          col("frag_head"), col("probe_reassembled"))
-    }),
-
-    // BASELINE workload shape: full ingest→deframe→parse→filter→enrich→
-    // template→count pipeline in one query (the 524,288-msg trial analogue)
-    "pipeline_e2e" -> ((s, dir) => {
-      val raw = synthSyslog(s, dir).select(col("rawmsg").as("value"))
-      val decoded = graft.sources.Sources.decodeSyslog(raw)
-      val sevNames = array(Seq("emerg", "alert", "crit", "err", "warning",
-        "notice", "info", "debug").map(lit): _*)
-      decoded
-        .filter(rainer.prifilt("*.warning")(col("facility"), col("severity")))
-        .withColumn("line", concat(
-          date_format(col("ts"), "MMM "),
-          lpad(date_format(col("ts"), "d"), 2, " "),
-          date_format(col("ts"), " HH:mm:ss "),
-          col("hostname"), lit(" "),
-          col("syslogtag"), lit(" "),
-          // msg carries its leading space (reference semantics) — the
-          // template separator is just ":" so the line is unchanged
-          element_at(sevNames, col("severity") + 1), lit(":"), col("msg")))
-        .groupBy(col("hostname"))
-        .agg(count(lit(1)).as("n"), max(length(col("line"))).as("max_len"))
-    }),
-
-    // §2.7 mmcount — running count per key annotated back onto rows
-    "mmcount" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type")).orderBy(col("event_id"))
-      ev.withColumn("msgcnt", row_number().over(w))
-        .filter(col("msgcnt") % 100 === 0)
-        .select(col("event_id"), col("event_type"), col("msgcnt"))
-    }),
-
-    // §2.7 mmsequence — monotonic per-key sequence numbers
-    "mmsequence" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("event_id"))
-      ev.withColumn("seq", row_number().over(w))
-        .groupBy(col("user_id"))
-        .agg(max(col("seq")).as("max_seq"), count(lit(1)).as("n"))
-    }),
-
-    // §2.9 mmanon — IPv4 anonymization (zero low bits, CIDR-aware)
-    // §2.9 mmanon as an inline config action: zero-mode masking of IPs
-    // embedded in free message text (the reference default mode/bits)
-    "mmanon_msg" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("ipn",
-          (col("user_id") * 7777777L + col("event_id")) % 4294967296L)
-        .withColumn("msg", concat(lit("login from "),
-          rainer.num2ipv4(col("ipn")), lit(" port "), col("event_id") % 65536))
-      val cfg = graft.rainerscript.RsyslogConfig.parse(
-        """action(type="mmanon" ipv4.bits="16")""")
-      cfg.run(ev.select(col("event_id"), col("msg"))).output
-        .select(col("event_id"), col("msg"))
-    }),
-
-    // §2.9 mmanon IPv6 + random-consistent: the full family surface via
-    // the inline config action (defaults: v6 zero/96) plus the
-    // random-consistent mode's contract — deterministic per-address
-    // replacement (seeded keyed hash; the reference's per-process table
-    // can't be shared across 1000 executors) with the prefix preserved
-    "mmanon_v6" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("xg", lower(hex(col("user_id") % 65536)))
-        .withColumn("yg", lower(hex(col("event_id") % 65536)))
-        .withColumn("adr", concat(lit("2001:db8:"), col("xg"), lit("::"), col("yg")))
-        .withColumn("msg", concat(lit("conn from "), col("adr"),
-          lit(" port "), col("event_id") % 9999))
-      val cfg = graft.rainerscript.RsyslogConfig.parse(
-        """action(type="mmanon")""")
-      val zeroed = cfg.run(ev.select(col("event_id"), col("adr"), col("msg")))
-        .output.select(col("event_id"), col("adr"), col("msg"))
-      val rc = graft.functions.AnonIpCfg(v4On = false, embOn = false,
-        v6Mode = graft.functions.AnonIpMsgExpr.RAND_CONSIS, seed = 1L)
-      val t1 = element_at(split(rainer.anon_ip_msg(
-        concat(lit("from "), col("adr"), lit(" end")), rc), " "), 2)
-      val t2 = element_at(split(rainer.anon_ip_msg(
-        concat(lit("to "), col("adr")), rc), " "), 2)
-      zeroed.select(col("event_id"), col("msg"),
-        (t1 === t2).as("rc_consistent"),
-        t1.startsWith("2001:db8:").as("rc_prefix_kept"))
-    }),
-
-    "mmanon" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("ipn", (col("user_id") * 7777777L + col("event_id")) % 4294967296L)
-        .withColumn("ip", rainer.num2ipv4(col("ipn")))
-      ev.select(
-        col("event_id"),
-        rainer.anon_ipv4(col("ip"), 8).as("anon8"),
-        rainer.anon_ipv4(col("ip"), 16).as("anon16"),
-        rainer.is_in_subnet(rainer.anon_ipv4(col("ip"), 8),
-          concat(rainer.anon_ipv4(col("ip"), 8), lit("/24"))).as("still_in_24"))
-    }),
-
-    // §2.8 ratelimit — token bucket (interval+burst) per key over event time
-    "ratelimit" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      RateLimit(ev, col("user_id"), col("ts"), col("event_id"),
-        intervalSec = 3600, burst = 3)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_passed"))
-    }),
-
-    // §2.8 ratelimit drop summary ("N messages dropped" marks)
-    "ratelimit_summary" -> ((s, dir) => {
-      RateLimit.dropSummary(Tables.events(s, dir), col("user_id"), col("ts"),
-        intervalSec = 3600, burst = 3)
-    }),
-
-    // §2.1 action gates — execOnlyEveryNthTime / execOnlyOnceEveryInterval.
-    // Both windows cluster by user_id, so chaining them reuses ONE
-    // exchange (HashPartitioning(user_id) satisfies the (user_id, win)
-    // clustering) and the gate counts aggregate in the same pass — no
-    // per-gate frames, no full-outer join.
-    "exec_gates" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("gate_win", (unix_timestamp(col("ts")) / 86400).cast("long"))
-      val wNth = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("event_id"))
-      val wOnce = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"), col("gate_win")).orderBy(col("event_id"))
-      ev.withColumn("rn", row_number().over(wNth))
-        .withColumn("rn_win", row_number().over(wOnce))
-        .groupBy(col("user_id"))
-        .agg(
-          count(when(col("rn") % 5 === 0, 1)).as("n_nth"),
-          count(when(col("rn_win") === 1, 1)).as("n_once"))
-    }),
-
-    // §2.7 "last message repeated n times" — consecutive-run reduction
-    "repeat_reduce" -> ((s, dir) => {
-      RateLimit.repeatedMsgReduction(Tables.events(s, dir),
-        col("user_id"), col("event_type"), col("event_id"))
-    }),
-
-    // §2.1 stop/omdiscard — anti-filter semantics
-    "stop_discard" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      // `if $syslogseverity >= 5 then stop` → survivors continue
-      ev.filter(!(col("severity") >= 5))
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    }),
-
-    // §2.4 property-replacer: severity/facility text names (22 date formats'
-    // sibling table options), case conversion, space compression
-    "prop_replacer" -> ((s, dir) => {
-      val sevNames = array(Seq("emerg", "alert", "crit", "err", "warning",
-        "notice", "info", "debug").map(lit): _*)
-      val ev = synthSyslog(s, dir)
-      ev.select(
-        col("event_id"),
-        element_at(sevNames, col("severity") + 1).as("sev_name"),
-        upper(col("event_type")).as("tag_upper"),
-        regexp_replace(concat(lit("  x  "), col("event_type"), lit("  ")),
-          "\\s+", " ").as("compressed"),
-        rainer.rs_substring(col("hostname"), 0, 4).as("host4"))
-    }),
-
-    // §2.4 property-replacer stages through the COMPILED template path:
-    // negative/end-relative/fixed-width substrings, secure-path, jsonf
-    // fragment (template-property-transformations.sh semantics over the
-    // synth corpus — the matrix spec pins the exact reference bytes,
-    // this query keeps the stages in the DuckDB correctness ledger)
-    "template_stages" -> ((s, dir) => {
-      import graft.templates.TemplateCompiler
-      val ev = synthSyslog(s, dir)
-        .withColumn("pathx", concat(col("hostname"), lit("/"), col("event_type")))
-      ev.select(
-        col("event_id"),
-        TemplateCompiler.compile("%pathx:::secpath-replace%", col).as("secp"),
-        TemplateCompiler.compile("%hostname:2:-2%", col).as("negto"),
-        TemplateCompiler.compile("%hostname:1:12:fixed-width%|", col).as("fixedw"),
-        TemplateCompiler.compile("%hostname:4:1:pos-end-relative%", col).as("relend"),
-        TemplateCompiler.compile("%event_type:::jsonf%", col).as("jsonff"))
-    }),
-
-    // §2.9 mmrm1stspace + control-char/space cleanup pipeline
-    "msg_cleanup" -> ((s, dir) => {
-      val dirty = Tables.documents(s, dir)
-        .withColumn("dirty", concat(lit(" "), col("text"), lit("\n")))
-      dirty.select(
-        col("doc_id"),
-        regexp_replace(regexp_replace(col("dirty"), "^ ", ""), "\n$", "")
-          .as("clean"),
-        (length(col("dirty")) - length(
-          regexp_replace(regexp_replace(col("dirty"), "^ ", ""), "\n$", "")))
-          .as("removed"))
-    }),
-
-    // §2.6 lookup table (array type) — dense offset lookup
-    "lookup_array" -> ((s, dir) => {
-      val tbl = ArrayLookup(100L,
-        (0 until 20).map(i => s"svc${i}").toIndexedSeq, nomatch = "nosvc")
-      Tables.events(s, dir)
-        .withColumn("svc", tbl.probe(col("user_id") % 30 + 100))
-        .groupBy(col("svc")).agg(count(lit(1)).as("n"))
-    }),
-
-    // §1.3 comparison-coercion matrix — numeric iff both sides numeric,
-    // else strcmp (the 171-test rscript_compare_* corpus semantics)
-    "rs_coercion" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("numstr", get_json_object(col("props"), "$.k"))
-      ev.select(
-        col("event_id"),
-        rainer.rs_eq(col("numstr"), col("user_id")).as("eq_numstr_num"),
-        rainer.rs_le(col("numstr"), lit("50")).as("le_numstr_numstr"),
-        rainer.rs_lt(col("event_type"), lit("purchase")).as("lt_str_str"),
-        rainer.rs_eq(col("event_type"), col("numstr")).as("eq_str_numstr"),
-        rainer.rs_gt(col("numstr"), lit("9")).as("gt_numeric_not_lexico"))
-    }),
-
-    // §2.1 foreach over JSON *object* — key/value explode
-    "foreach_object" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.select(col("event_id"),
-          explode(from_json(col("props"),
-            MapType(StringType, StringType))))
-        .withColumnRenamed("key", "k").withColumnRenamed("value", "v")
-    }),
-
-    // §2.4 subtree/jsonf template — structured JSON projection
-    "template_json" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.select(col("event_id"),
-        to_json(struct(col("event_id"), col("event_type"))).as("j"))
-    }),
-
-    // event-time tumbling window aggregation (Spark-native extension the
-    // reference lacks — SURVEY §2.8 late/out-of-order note)
-    "window_agg" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_v"))
-        .select(unix_timestamp(col("w.start")).as("day_start"),
-          col("event_type"), col("n"), col("sum_v"))
-    }),
-
-    // §2.9 mmnormalize — rulebase field extraction, first rule wins
-    "mmnormalize" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("msg",
-          when(col("event_type") === "error",
-            concat(lit("error code="), col("event_id") % 500,
-              lit(" at host"), col("user_id"), lit(" fatal")))
-          .otherwise(concat(lit("user u"), col("user_id"),
-            lit(" did "), col("event_type"), lit(" n="), col("event_id"))))
-      val rules = Seq(
-        "error code=%code:number% at %host:word% fatal",
-        "user %u:word% did %act:word% n=%n:number%")
-      ev.select(col("event_id"),
-          // one JSON parse for all fields (5 get_json_object = 5 parses)
-          from_json(Normalize.normalize(col("msg"), rules),
-            StructType(Seq("code", "host", "u", "act", "n")
-              .map(StructField(_, StringType)))).as("v"))
-        .select(col("event_id"),
-          col("v.code").cast("long").as("code"),
-          col("v.host").as("host"),
-          col("v.u").as("u"),
-          col("v.act").as("act"),
-          col("v.n").cast("long").as("n"))
-    }),
-
-    // §2.9 mmnormalize v1 rulebase with TAGS + annotate + `-` discard
-    // fields — the reference's own WIN/ESX rules verbatim
-    // (tests/testsuites/mmnormalize_processing_tests.rulebase:1-8,
-    // driven by tests/mmnormalize_processing_test1-4.sh): tag-attached
-    // annotate constants land next to parsed fields, discard fields
-    // anchor without capturing, first-matching rule wins
-    "mmnormalize_annotate" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val iso = lit("2024-01-05T10:20:30Z")
-      val msg = when(col("event_id") % 2 === 0,
-          concat(lit("<134>1 "), iso, lit(" host"), col("user_id"),
-            lit(" WinTag - - - svc"), col("user_id") % 4,
-            lit(" ret"), col("event_id") % 3, lit(" os"), col("event_id") % 5,
-            lit(" event "), col("event_type"), lit(" happened")))
-        .otherwise(concat(lit("<7>"), iso, lit(" esx"), col("user_id"),
-          lit(" vpx.daemon: event "), col("event_type"), lit(" at "),
-          col("event_id")))
-      val rulebase = Seq(
-        "rule=WIN:<%n1:number%>1 %-:date-rfc5424% %n2:word% %v_tag:word% - - - %v_svc:word% %v_ret:word% %v_os:word% %v_msg:rest%",
-        "annotate=WIN:+v_analytics_prefix=\"EvntSLog: \"",
-        "rule=ESX:<%-:number%>%-:date-rfc5424% %-:word% %v_tag:char-to:\\x3a%: %v_msg:rest%",
-        "annotate=ESX:+v_svc=\"SER2\"",
-        "annotate=ESX:+v_ret=\"Y01\"",
-        "annotate=ESX:+v_file=\"esx\"",
-        "annotate=ESX:+v_os=\"ESX\"")
-      ev.withColumn("msg", msg).select(col("event_id"),
-          from_json(Normalize.normalizeRulebase(col("msg"), rulebase),
-            StructType(Seq("n1", "n2", "v_tag", "v_svc", "v_ret", "v_os",
-              "v_msg", "v_file", "v_analytics_prefix")
-              .map(StructField(_, StringType)))).as("v"))
-        .select(col("event_id"),
-          col("v.n1").cast("long").as("n1"),
-          col("v.n2").as("n2"),
-          col("v.v_tag").as("tag"),
-          col("v.v_svc").as("svc"),
-          col("v.v_ret").as("ret"),
-          col("v.v_os").as("os"),
-          col("v.v_file").as("file"),
-          col("v.v_msg").as("vmsg"),
-          col("v.v_analytics_prefix").as("prefix"))
-    }),
-
-    // §2.10 omsendertrack — per-sender first/last-seen + volume state
-    "sender_track" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      ev.groupBy(col("hostname").as("sender"))
-        .agg(
-          expr("min(ts_ns div 1000000000)").as("first_seen"),
-          expr("max(ts_ns div 1000000000)").as("last_seen"),
-          count(lit(1)).as("n_msgs"),
-          round(sum(col("value")), 2).as("sum_v"))
-    }),
-
-    // §2.10 omsendertrack state-file image: the exact JSON array
-    // writeSenderStats persists (entry format, ,\n separators, atomic
-    // snapshot); entries sorted by sender for determinism (the
-    // reference's hashtable order is non-semantic)
-    "sender_snapshot" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val st = ev.groupBy(col("hostname").as("sender"))
-        .agg(count(lit(1)).as("messages"),
-          expr("min(ts_ns div 1000000000)").as("firstseen"),
-          expr("max(ts_ns div 1000000000)").as("lastseen"))
-      val entries = st.select(col("sender"),
-        graft.sources.Sources.senderTrackEntry(col("sender"),
-          col("messages"), col("firstseen"), col("lastseen")).as("entry"))
-      graft.sources.Sources.senderTrackFile(entries, col("entry"),
-        col("sender"))
-        .select(col("statefile"),
-          get_json_object(col("statefile"), "$[0].sender").as("probe_sender"),
-          get_json_object(col("statefile"), "$[0].messages").cast("long")
-            .as("probe_messages"))
-    }),
-
-    // ------------------------- training-data pipeline operators -------------
-
-    // exact dedup: hash-groupBy on normalized-content fingerprint
-    "dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Tables.documents(s, dir), "doc_id", "text")
-    }),
-
-    // MinHash+LSH near-dup candidates (shingle→minhash→band→bucket-join)
-    "dedup_minhash" -> ((s, dir) => {
-      Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, bands = 16, rows = 4, minEstJaccard = 0.5)
-    }),
-
-    // sequence packing (concat-and-chunk): per-shard running token
-    // offsets → fixed 2048-token chunk assignment; window partitioned
-    // by shard, never a global order-by
-    "seq_pack" -> ((s, dir) => {
-      graft.operators.Sampling.sequencePack(
-        Tables.documents(s, dir), "doc_id", "text")
-    }),
-
-    // sequence packing denominated in SUBWORD tokens (the unit a
-    // training run actually packs to): same per-shard window, the
-    // count column is the BPE trie kernel under the fixture vocab
-    "seq_pack_bpe" -> ((s, dir) => {
-      graft.operators.Sampling.sequencePack(
-        Tables.documents(s, dir), "doc_id", "text",
-        tokenCount = c =>
-          TextAnalysis.bpeCount(c, graft.functions.BpeFixture.vocab))
-    }),
-
-    // exact duplicated-span detection: every 120-char window, thinned
-    // by content-defined md5-ends-in-'0' selection (1/16 kept; both
-    // copies of any ≥135-char duplicate keep identical windows, so
-    // alignment never matters) → map-side-combinable groupBy
-    "dedup_substring" -> ((s, dir) => {
-      Dedup.substringDupSpans(Tables.documents(s, dir), "doc_id", "text")
-    }),
-
-    // SimHash near-dup pairs (custom simhash64 expr + banded blocking)
-    "dedup_simhash" -> ((s, dir) => {
-      Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text", maxHamming = 3)
-    }),
-
-    // dedup cluster formation: near-dup pairs → connected components
-    // (min-label propagation over the exact n-gram pairs, so the whole
-    // chain is oracle-verifiable via a recursive CTE)
-    "dedup_clusters" -> ((s, dir) => {
-      // canonical composition: exact dedup → near-dup verify → cluster
-      // representatives → expand members back (a dup group whose rep is
-      // unclustered still forms its own cluster, labeled by the rep)
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCol = "lang", n = 3, minJaccard = 0.5)
-      val repLabels = Dedup.clusters(pairs)
-      val members = Dedup.textMembers(docs, "doc_id", "text", "lang")
-      members.join(repLabels, members("rep") === repLabels("doc"), "left")
-        .select(members("doc"),
-          coalesce(repLabels("cluster"),
-            when(members("grp_n") >= 2, members("rep"))).as("cluster"))
-        .filter(col("cluster").isNotNull)
-    }),
-
-    // exact n-gram Jaccard pairs (inverted-index verify path — the
-    // exhaustive recall-1 fallback; dedup_verified is the scale default)
-    "dedup_ngram" -> ((s, dir) => {
-      Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-        blockCol = "lang", n = 3, minJaccard = 0.5)
-    }),
-
-    // the default near-dup composition at scale: MinHash-LSH candidate
-    // filter → exact per-pair shingle-set Jaccard verify (no inverted
-    // index; verifier cost scales with candidates, not corpus²)
-    "dedup_verified" -> ((s, dir) => {
-      Dedup.nearDupVerified(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, bands = 16, rows = 4, minJaccard = 0.5)
-    }),
-
-    // the FLAGSHIP 100 TB dedup pipeline, end to end: exact dedup (reps)
-    // → LSH candidate filter → exact per-pair verify → connected
-    // components over verified pairs → expand members back to docs
-    "dedup_clusters_verified" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.nearDupVerified(docs, "doc_id", "text",
-        minJaccard = 0.5)
-      val repLabels = Dedup.clusters(pairs)
-      val members = Dedup.textMembersGlobal(docs, "doc_id", "text")
-      members.join(repLabels, members("rep") === repLabels("doc"), "left")
-        .select(members("doc"),
-          coalesce(repLabels("cluster"),
-            when(members("grp_n") >= 2, members("rep"))).as("cluster"))
-        .filter(col("cluster").isNotNull)
-    }),
-
-    // leakage-safe train/eval split: the split draw is keyed on the
-    // near-dup CLUSTER (verified pipeline labels; exact-dup groups and
-    // singletons fall back to rep/own id), so two near-duplicate docs
-    // can NEVER straddle the train/eval boundary — the eval-set
-    // contamination channel a doc_id-keyed split leaves open. One md5
-    // draw per doc on top of the already-pinned cluster pipeline
-    "split_leakage_safe" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.nearDupVerified(docs, "doc_id", "text",
-        minJaccard = 0.5)
-      val repLabels = Dedup.clusters(pairs)
-      val members = Dedup.textMembersGlobal(docs, "doc_id", "text")
-      members.join(repLabels, members("rep") === repLabels("doc"), "left")
-        .select(members("doc").as("doc_id"),
-          coalesce(repLabels("cluster"),
-            when(members("grp_n") >= 2, members("rep")),
-            members("doc")).as("split_key"))
-        .withColumn("is_train",
-          Sampling.hashFraction(col("split_key"), "split") < 0.9)
-    }),
-
-    // brute-force cosine top-k ANN baseline
-    "ann_cosine" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), k = 5)
-    }),
-
-    // LSH-bucketed ANN (scale path; recall<1 by design → rows-only check)
-    "ann_lsh" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 8), k = 5)
-    }),
-
-    // product-quantization ANN (PQ-ADC): 4-byte codes replace 256-byte
-    // float vectors on the scan; per-query integer lookup tables score
-    // codes only — the memory-bound billion-vector layout (compose with
-    // ivf cells for IVF-PQ). Deterministic first-ksub codebooks +
-    // integer micro-L2² make the whole pipeline oracle-exact
-    "ann_pq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 8), k = 5)
-    }),
-
-    // IVF-PQ composition (the production layout): coarse cell filter
-    // prunes the codes scan to the probed cells, ADC scores codes only,
-    // and each probed cell contributes at most maxPerCell candidates
-    // (deterministic truncation — rank by (dist, id) — so the oracle
-    // replays it exactly)
-    "ann_ivfpq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 8), k = 5,
-        nlist = 16, nprobe = 4, maxPerCell = 8)
-    }),
-
-    // scalar-quantized ANN (SQ8): per-dim byte codes over uniform
-    // min/max levels — scalar quantization IS product quantization with
-    // 1-dim subspaces, so this is pqTopK with m=dim, ksub=256 and the
-    // level-ladder codebook; both PQ kernels and the join-free plan
-    // reused unchanged
-    "ann_sq8" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.sq8TopK(emb, emb.filter(col("vec_id") < 8), k = 5)
-    }),
-
-    // binary-quantization ANN: sign-bit codes (two 32-bit words/vector),
-    // Hamming popcount distance — the cheapest quantization rung. Zero
-    // arithmetic in the code path (a float sign test), so ranks are
-    // oracle-exact by construction
-    "ann_hamming" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.hammingTopK(emb, emb.filter(col("vec_id") < 8), k = 5)
-    }),
-
-    // two-stage quantized retrieval: binary sign codes nominate nCand
-    // candidates per query (8 B/vector scan), exact cosine re-scores
-    // only the |q|·nCand candidate rows — the production rerank
-    // composition that recovers the recall binary codes trade away
-    // while keeping the corpus scan byte-bound
-    "ann_hamming_rerank" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.hammingRerankTopK(emb, emb.filter(col("vec_id") < 8),
-        k = 5, nCand = 20)
-    }),
-
-    // recall@k audit of the PQ index vs the exact ranking — the metric
-    // a platform measures before committing a corpus to an index
-    // layout; both legs are the existing oracled operators, so the
-    // metric itself is oracle-replayable
-    "ann_recall_audit" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.annRecallAudit(emb, emb.filter(col("vec_id") < 8), k = 10)
-    }),
-
-    // embedding-cosine near-dup pairs within label blocks (banded sign-bit
-    // LSH candidates → capped buckets → exact-cosine verify)
-    "emb_neardup" -> ((s, dir) => {
-      Similarity.embeddingNearDupPairs(Tables.embeddings(s, dir), "label",
-        threshold = 0.3, sampleMod = 1)
-    }),
-
-    // SemDeDup-style semantic dedup: coarse cells (deterministic
-    // quantizer, adaptive nlist) -> capped within-cell pairing -> drop
-    // the higher id of every tau-close pair
-    "dedup_semantic" -> ((s, dir) => {
-      Similarity.semDedup(Tables.embeddings(s, dir), tau = 0.3)
-    }),
-
-    // Gopher rule battery: the 7-flag quality gate per document
-    "quality_gopher" -> ((s, dir) => {
-      TextAnalysis.gopherQuality(Tables.documents(s, dir), "doc_id", "text")
-    }),
-
-    // corpus-trained bigram LM scoring (CCNet-style perplexity signal)
-    "lm_score" -> ((s, dir) => {
-      LanguageModel.bigramLogProb(Tables.documents(s, dir), "doc_id", "text")
-    }),
-
-    // per-doc top-k terms by tf-idf (keyword extraction)
-    "tfidf_topk" -> ((s, dir) => {
-      TextAnalysis.tfidfTopK(Tables.documents(s, dir), "doc_id", "text")
-    }),
-
-    // BM25 ranked retrieval: top-k docs per keyword query (queries =
-    // first-3-distinct-token keyword sets of docs 0-7). Query terms
-    // broadcast and prune the token stream scan-side; per-term integer
-    // micro-scores sum order-free per (query, doc)
-    "bm25_topk" -> ((s, dir) => {
-      // r16: single-pass form — the direct bm25TopK tokenizes the
-      // corpus twice (eager stats collect + matched scan); the narrowed
-      // (doc_id, dl, query-term occurrences) checkpoint tokenizes once.
-      // Scoring inputs value-identical (oracle unchanged).
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.bm25TopKSingleScan(docs, "doc_id", "text",
-        TextAnalysis.keywordQueries(docs, "doc_id", "text"))
-    }),
-
-    // RAG passage retrieval — the composition a retrieval pipeline
-    // actually runs: chunk_tokens' sliding windows become the retrieval
-    // units and BM25 ranks passages per query. Passage identity rides
-    // as doc_id·1e6 + chunk_idx through the generic scorer (bounded:
-    // chunk_idx < 1e6 ⇔ docs under ~48M whitespace tokens) and splits
-    // back in the result
-    // hybrid retrieval: reciprocal-rank fusion of the BM25 lexical leg
-    // and the cosine-ANN semantic leg (vec_id = doc_id contract) —
-    // exact integer 1e9 div (60 + rank) contributions, so fused ranks
-    // replay bit-for-bit given two oracle-exact legs
-    "hybrid_retrieve" -> ((s, dir) => {
-      TextAnalysis.hybridRetrieve(Tables.documents(s, dir),
-        Tables.embeddings(s, dir), k = 5, nLeg = 10)
-    }),
-
-    // the production hybrid composition: same RRF fusion, but the
-    // semantic leg is the PQ-ADC index (codes-only scan) instead of
-    // brute-force floats — RRF consumes ranks only, so the leg swap
-    // needs no score calibration; oracled via the SAME pqRankedCtes
-    // replay the standalone ann_pq gate checks
-    "hybrid_retrieve_pq" -> ((s, dir) => {
-      TextAnalysis.hybridRetrieve(Tables.documents(s, dir),
-        Tables.embeddings(s, dir), k = 5, nLeg = 10,
-        semLeg = (c, q, n) => Similarity.pqTopK(c, q, n))
-    }),
-
-    // MMR diversity re-rank: greedy maximal-marginal-relevance
-    // selection over each query's BM25 candidates — integer RRF-unit
-    // relevance minus penaltyWeight x micro-cosine to the already-
-    // selected set; the greedy loop runs once per query in a bounded
-    // kernel and the oracle replays it with a recursive CTE
-    "mmr_rerank" -> ((s, dir) => {
-      TextAnalysis.mmrRerank(Tables.documents(s, dir),
-        Tables.embeddings(s, dir), k = 5, nCand = 12)
-    }),
-
-    "rag_retrieve" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // single-scan composition (r15, the hybrid_retrieve cure applied
-      // here too): bm25TopK's corpus-stats agg and its matched-token
-      // scan each rebuilt + re-tokenized EVERY chunk window — the
-      // chunk explode is the most expensive projection in the engine,
-      // and it ran twice. Materialize the (pid, t, dl) chunk token
-      // projection once (localCheckpoint, the dsirResample lesson) and
-      // feed bm25TopKFromToks — scoring arithmetic identical, oracle
-      // unchanged.
-      // r16 narrowing (VERDICT r15 #4, guide §2.3): the checkpoint held
-      // every token of every chunk window (~corpus bytes). The scorer
-      // needs only (pid, dl, query-term occurrences); the query-term
-      // set is ≤ 8·3 terms BY CONSTRUCTION — collect it once (bounded
-      // broadcast-equivalent) and filter the token arrays scan-side.
-      // dl stays the UNfiltered size; tf/df/nd values are unchanged.
-      val qs = TextAnalysis.keywordQueries(docs, "doc_id", "text")
-      val qTerms = qs.select(explode(col("qt")).as("term")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      val keep: Column => Column =
-        if (qTerms.isEmpty) _ => lit(false) else t => t.isin(qTerms: _*)
-      // r16 second pass: the scorer never sees chunk_text — only its
-      // lowered tokens and their count — so each chunk's token array is
-      // a SLICE of the doc's token array. The old composition built
-      // ~1.33x corpus bytes of chunk text (array_join over the
-      // case-preserving token slices) only to lower + re-split it per
-      // chunk. Window arithmetic replicated from chunkByTokens
-      // verbatim; boundary/lowercasing commutation (incl. final-sigma
-      // context) pinned by ChunkTokenSliceParitySpec; oracle unchanged.
-      val stride = 48 // chunkTokens 64 − overlapTokens 16
-      val ctoks = docs
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("__toks"))
-        .withColumn("__n", size(col("__toks")).cast("long"))
-        .filter(col("__n") > 0)
-        .withColumn("chunk_idx", explode(sequence(lit(0L),
-          greatest(lit(1L),
-            expr(s"(__n - 16 + ${stride - 1}) div $stride")) - 1)))
-        .select((col("doc_id") * lit(1000000L) + col("chunk_idx")).as("doc_id"),
-          slice(col("__toks"), (col("chunk_idx") * stride + 1).cast("int"),
-            lit(64)).as("t0"))
-        .select(col("doc_id"), filter(col("t0"), keep).as("t"),
-          size(col("t0")).cast("long").as("dl"))
-        .localCheckpoint()
-      TextAnalysis.bm25TopKFromToks(ctoks, qs)
-        .select(col("query_id"), col("rk"),
-          expr("doc_id div 1000000").as("doc_id"),
-          (col("doc_id") % lit(1000000L)).as("chunk_idx"),
-          col("mscore"))
-    }),
-
-    // language-ID heuristic (marker stopword argmax)
-    "langid" -> ((s, dir) => {
-      Tables.documents(s, dir).select(
-        col("doc_id"), col("lang"),
-        TextAnalysis.langId(col("text")).as("predicted"))
-    }),
-
-    // quality scoring + token counting — staged select so the token
-    // array (a non-cheap HOF alias) is built once per row and every
-    // nToks reference in the score arithmetic is a plain attribute
-    "text_quality" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"),
-          TextAnalysis.tokens(col("text")).as("toks"))
-        .select(col("doc_id"), col("text"),
-          size(col("toks")).as("n_tokens"),
-          TextAnalysis.subwordCount(col("text")).as("n_subwords"))
-        .select(col("doc_id"), col("n_tokens"), col("n_subwords"),
-          TextAnalysis.qualityScoreFrom(length(col("text")), col("n_tokens"),
-            TextAnalysis.charClassCount(col("text"), "[A-Za-z]"),
-            TextAnalysis.charClassCount(col("text"), "[0-9]"))
-            .as("quality"))
-    }),
-
-    // document fingerprinting (md5 of normalized content)
-    "text_fingerprint" -> ((s, dir) => {
-      Tables.documents(s, dir).select(
-        col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fp"))
-    }),
-
-    // multimodal: binary payload + metadata + batch feature extraction
-    "multimodal_features" -> ((s, dir) => {
-      val media = Multimodal.synthMedia(Tables.documents(s, dir))
-      Multimodal.extractFeatures(media)
-        .select(col("media_id"), col("kind"), col("n_bytes"),
-          col("content_sha"), col("frames_sampled"))
-    }),
-
-    // multimodal: frame sampling over video payloads
-    "multimodal_frames" -> ((s, dir) => {
-      val media = Multimodal.synthMedia(Tables.documents(s, dir))
-      Multimodal.sampleFrames(media, everyNth = 3)
-    }),
-
-    // multimodal REAL image round-trip: per-doc PNG encoded with
-    // javax.imageio (two id-derived colors, even width) → decoded with
-    // javax.imageio → dimensions + exact per-channel means, which the
-    // oracle derives in closed form from doc_id
-    "multimodal_image_decode" -> ((s, dir) => {
-      Multimodal.decodeImages(
-        Multimodal.synthEncodedMedia(Tables.documents(s, dir), "image"))
-    }),
-
-    // multimodal REAL audio round-trip: per-doc RIFF-WAVE (16-bit mono
-    // PCM, 8 kHz, id-derived length and constant sample) encoded and
-    // decoded with javax.sound.sampled; format/frames/duration/first
-    // sample all closed-form for the oracle
-    "multimodal_audio_decode" -> ((s, dir) => {
-      Multimodal.decodeAudio(
-        Multimodal.synthEncodedMedia(Tables.documents(s, dir), "audio"))
-    }),
-
-    // multimodal REAL video round-trip: per-doc MJPEG-in-AVI written by
-    // the fixture (RIFF container + JDK-imageio JPEG frames, all fields
-    // id-derived) → RIFF walk + per-frame JPEG decode; header facts,
-    // frame counts, and decoded dimensions closed-form for the oracle
-    "multimodal_video_decode" -> ((s, dir) => {
-      Multimodal.decodeVideo(
-        Multimodal.synthEncodedMedia(Tables.documents(s, dir), "video"))
-    }),
-
-    // multimodal REAL keyframe sampling: decode only every 2nd AVI
-    // frame — the production "sample then decode" order (never decode
-    // what the sample drops)
-    "multimodal_video_frames" -> ((s, dir) => {
-      Multimodal.sampleVideoFrames(
-        Multimodal.synthEncodedMedia(Tables.documents(s, dir), "video"),
-        everyNth = 2)
-    }),
-
-    // §2.9 mmfields — delimiter split into f_1..f_n
-    "mmfields" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-        .withColumn("fields", concat_ws("|",
-          col("event_type"), col("user_id"), col("v100"), col("hostname")))
-      val f = split(col("fields"), "\\|")
-      ev.select(
-        col("event_id"),
-        element_at(f, 1).as("f1"),
-        element_at(f, 2).as("f2"),
-        element_at(f, 3).as("f3"),
-        element_at(f, 4).as("f4"),
-        size(f).as("nf"))
-    }),
-
-    // §2.9 device-parser chain: pmciscoios → pmaixforwardedfrom →
-    // pmcisconames, first-parser-wins (runtime/parser.c:613-686)
-    "parse_cisco" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val cts = concat(
-        date_format(col("ts"), "MMM "),
-        lpad(date_format(col("ts"), "d"), 2, " "),
-        date_format(col("ts"), " HH:mm:ss"))
-      val body = when(col("event_id") % 3 === 0,
-          concat(col("event_id"), lit(": *"), cts, lit(": %SYS-"),
-            col("severity"), lit("-CONFIG_I: configured by u"), col("user_id")))
-        .when(col("event_id") % 3 === 1,
-          concat(lit("Message forwarded from host"), col("user_id"),
-            lit(": app n="), col("event_id")))
-        .otherwise(concat(cts, lit(" host"), col("user_id"),
-          lit(" : %ASA-6-302013: built conn n="), col("event_id")))
-      val withB = ev.withColumn("body", body)
-        .withColumn("p_ios", device.parseCiscoIos(col("body")))
-        .withColumn("p_aix", device.parseAixForwardedFrom(col("body")))
-        .withColumn("p_nam", device.parseCiscoNames(col("body")))
-      withB.select(
-        col("event_id"),
-        when(col("p_ios").isNotNull, "ios")
-          .when(col("p_aix").isNotNull, "aix")
-          .when(col("p_nam").isNotNull, "names")
-          .otherwise("none").as("parser"),
-        coalesce(col("p_aix.hostname"), col("p_nam.hostname")).as("hostname"),
-        coalesce(col("p_ios.severity"), col("p_nam.severity")).as("sev"),
-        coalesce(col("p_ios.text"), col("p_aix.text"), col("p_nam.text")).as("text"))
-    }),
-
-    // §2.9 mmleefparse — LEEF header + tab-delimited extension block
-    "parse_leef" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("raw", concat(
-          lit("LEEF:1.0|Vendor"), col("user_id") % 5, lit("|IDS|2.0|"),
-          col("event_id") % 100,
-          lit("|src=10.0.0."), col("user_id") % 256,
-          lit("\tdst=192.168.1."), col("event_id") % 256,
-          lit("\tsev="), col("event_id") % 8,
-          lit("\tact="), col("event_type")))
-      val p = device.parseLeef(col("raw"))
-      ev.select(
-        col("event_id"),
-        p.getField("vendor").as("vendor"),
-        p.getField("event_id").as("leef_event"),
-        element_at(p.getField("ext"), "src").as("src"),
-        element_at(p.getField("ext"), "dst").as("dst"),
-        element_at(p.getField("ext"), "sev").cast("int").as("sev"),
-        element_at(p.getField("ext"), "act").as("act"))
-    }),
-
-    // §2.9 pmsnare/mmsnareparse — tab-delimited Snare Windows event
-    "parse_snare" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("raw", concat_ws("\t",
-          lit("MSWinEventLog"), (col("event_id") % 5).cast("string"),
-          lit("Security"), col("event_id").cast("string"),
-          date_format(col("ts"), "EEE MMM dd HH:mm:ss yyyy"),
-          (lit(4624) + col("user_id") % 4).cast("string"),
-          lit("Microsoft-Windows-Security-Auditing"),
-          concat(lit("u"), col("user_id")), lit("N/A"), lit("Success Audit"),
-          concat(lit("host"), col("user_id")), lit("Logon"), lit(""),
-          concat(lit("An account was logged on n="), col("event_id"))))
-      val p = device.parseSnare(col("raw"))
-      ev.select(
-        col("event_id"),
-        p.getField("criticality").as("criticality"),
-        p.getField("win_event_id").as("win_event_id"),
-        p.getField("user").as("usr"),
-        p.getField("host").as("host"),
-        p.getField("message").as("message"))
-    }),
-
-    // §2.9 mmaudit — Linux audit header + k=v body into a map
-    "parse_audit" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("epoch", expr("ts_ns div 1000000000"))
-        .withColumn("raw", concat(
-          lit("type="), when(col("event_id") % 2 === 0, "SYSCALL").otherwise("EXECVE"),
-          lit(" msg=audit("), col("epoch"), lit("."),
-          lpad((col("event_id") % 1000).cast("string"), 3, "0"),
-          lit(":"), col("event_id"), lit("): syscall="), col("event_id") % 300,
-          lit(" success="), when(col("user_id") % 2 === 0, "yes").otherwise("no"),
-          lit(" pid="), col("user_id")))
-      val p = device.parseAudit(col("raw"))
-      ev.select(
-        col("event_id"),
-        p.getField("audit_type").as("audit_type"),
-        p.getField("epoch").as("epoch"),
-        p.getField("serial").as("serial"),
-        element_at(p.getField("kv"), "syscall").cast("long").as("syscall"),
-        element_at(p.getField("kv"), "success").as("success"),
-        element_at(p.getField("kv"), "pid").cast("long").as("pid"))
-    }),
-
-    // §2.9 mmutf8fix — byte-level UTF-8 repair over a binary payload
-    "utf8fix" -> ((s, dir) => {
-      val doc = Tables.documents(s, dir)
-      // dirty1: valid 2-byte é then 0xFF (stray) + 0xC3 (truncated tail);
-      // dirty2: 0x80 stray continuation mid-string
-      val dirty1 = concat(encode(concat(col("text"), lit("é")), "UTF-8"),
-        lit(Array[Byte](0xFF.toByte, 0xC3.toByte)))
-      val dirty2 = concat(encode(col("text"), "UTF-8"),
-        lit(Array[Byte](0x80.toByte)), encode(lit("end"), "UTF-8"))
-      doc.select(
-        col("doc_id"),
-        device.utf8fix(dirty1).as("fixed"),
-        device.utf8fix(dirty2).as("fixed2"))
-    }),
-
-    // §2.9 mmrfc5424addhmac — keyed signature appended as an SD element
-    "hmac_sign" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("m", concat(lit("<165>1 - host"), col("user_id"),
-          lit(" app - - - payload "), col("event_id")))
-      ev.select(
-        col("event_id"),
-        device.hmacLikeHex(col("m"), "graftkey").as("sig"),
-        device.addHmacSd(col("m"), "graftkey", "hmac@32473",
-          oracleCompat = true).as("signed"))
-    }),
-
-    // §2.9 pmlastmsg — "last message repeated n times" bodies take the
-    // previous real message per sender
-    "lastmsg" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("m", when(col("event_id") % 4 === 3,
-            lit("last message repeated 2 times"))
-          .otherwise(concat(lit("real "), col("event_type"),
-            lit(" n="), col("event_id"))))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("event_id"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      ev.select(
-        col("event_id"), col("user_id"), col("m").as("msg"),
-        coalesce(
-          last(when(!device.isLastMsgRepeated(col("m")), col("m")),
-            ignoreNulls = true).over(w),
-          col("m")).as("effective"))
-    }),
-
-    // §2.9 mmdblookup — GeoIP-style enrichment: broadcast range join of
-    // the IP integer against an exported range table (mmdb → ranges)
-    "geo_enrich" -> ((s, dir) => {
-      import s.implicits._
-      val ranges = Seq(
-        (0L, 0x1FFFFFFFL, "apnic"),
-        (0x20000000L, 0x5FFFFFFFL, "ripe"),
-        (0x60000000L, 0x9FFFFFFFL, "arin"),
-        (0xA0000000L, 0xBFFFFFFFL, "lacnic"),
-        (0xD0000000L, 0xFFFFFFFFL, "afrinic")).toDF("lo", "hi", "geo")
-      // ids mask to 16 bits BEFORE the multiply: big-id corpora (the sf1
-      // shard remap pushes event_id past 10^9) would overflow the long
-      // multiply under ANSI mode; the masked mix stays < 2^48
-      val ev = Tables.events(s, dir)
-        .withColumn("ipn",
-          ((col("user_id") % 65536L) * 7777777L +
-            (col("event_id") % 65536L) * 2654435761L) % 4294967296L)
-      ev.join(broadcast(ranges),
-          col("ipn") >= col("lo") && col("ipn") <= col("hi"), "left")
-        .withColumn("geo", coalesce(col("geo"), lit("unknown")))
-        .groupBy(col("geo"))
-        .agg(count(lit(1)).as("n"), min(col("ipn")).as("min_ipn"))
-    }),
-
-    // skew tooling as a load-bearing query: a structural hot key (one
-    // host carries ~70% of the stream) enriched against a host→site dim
-    // through the salted-join kernel — the hot key spreads over 8 salt
-    // partitions instead of hammering one (at this dim size Spark may
-    // still broadcast, which is fine: the salting is the contract for
-    // when the dim outgrows broadcast at 100 TB)
-    "skew_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).withColumn("hostkey",
-        when(col("user_id") % 10 < 7, lit("host0"))
-          .otherwise(concat(lit("host"), col("user_id") % 100)))
-      val dim = s.range(100).select(
-        concat(lit("host"), col("id")).as("hostkey"),
-        concat(lit("site"), col("id") % 5).as("site"))
-      Skew.saltedJoin(ev, dim, "hostkey", col("event_id"), factor = 8)
-        .groupBy(col("site"))
-        .agg(count(lit(1)).as("n"), count_distinct(col("user_id")).as("nu"))
-    }),
-
-    // §2.9 mmgrok — grok pattern field extraction
-    "grok" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("m", concat(
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
-          lit(" INFO user u"), col("user_id"),
-          lit(" did "), col("event_type"),
-          lit(" from 10."), col("user_id") % 256, lit(".1."), col("event_id") % 256))
-      val g = Normalize.grok(col("m"),
-        "%{TIMESTAMP_ISO8601:gts} %{LOGLEVEL:lvl} user %{WORD:usr} did " +
-          "%{WORD:act} from %{IP:ip}")
-      ev.select(
-        col("event_id"),
-        g.getField("gts").as("gts"),
-        g.getField("lvl").as("lvl"),
-        g.getField("usr").as("usr"),
-        g.getField("act").as("act"),
-        g.getField("ip").as("ip"))
-    }),
-
-    // §2.9 mmtaghostname + mmsnmptrapd — tag/hostname/severity rewrite
-    "tag_rewrite" -> ((s, dir) => {
-      val sevWords = array(Seq("emerg", "alert", "critical", "error",
-        "warning", "notice", "info", "debug").map(lit): _*)
-      val ev = synthSyslog(s, dir)
-        .withColumn("tag", when(col("event_id") % 3 === 0, lit(""))
-          .when(col("event_id") % 3 === 1, lit("snmptrapd:"))
-          .otherwise(concat(col("event_type"), lit(":"))))
-        .withColumn("body", when(col("event_id") % 3 === 1,
-            concat(element_at(sevWords, (col("user_id") % 8).cast("int") + 1),
-              lit(" trap received")))
-          .otherwise(lit("normal body")))
-      val th = device.tagHostname(col("tag"), col("hostname"),
-        newTag = "graft-relay:", localHost = "graftnode", forceLocalHostname = true)
-      ev.select(
-        col("event_id"),
-        th.getField("tag").as("newtag"),
-        th.getField("hostname").as("newhost"),
-        device.snmptrapdRewrite(col("tag"), col("body"), col("severity"))
-          .as("newsev"))
-    }),
-
-    // §2.9 pmdb2diag + pmpanngfw — DB2 diagnostic and PAN-OS CSV parsers
-    "parse_db2_pan" -> ((s, dir) => {
-      val levels = array(Seq("Info", "Warning", "Error", "Severe").map(lit): _*)
-      val ev = Tables.events(s, dir)
-        .withColumn("db2", concat(
-          date_format(col("ts"), "yyyy-MM-dd-HH.mm.ss.SSSSSS"), lit("+000 I"),
-          col("event_id"), lit("A"), col("user_id"),
-          lit(" LEVEL: "), element_at(levels, (col("event_id") % 4).cast("int") + 1),
-          lit(" PID : "), col("user_id"), lit(" TID : "), col("event_id") % 100,
-          lit(" PROC : db2sysc ("), col("event_type"), lit(")")))
-        .withColumn("pan", concat(
-          lit("1,"), date_format(col("ts"), "yyyy/MM/dd HH:mm:ss"),
-          lit(",00"), col("user_id"),
-          lit(","), when(col("user_id") % 2 === 0, "TRAFFIC").otherwise("THREAT"),
-          lit(","), when(col("event_id") % 2 === 0, "start").otherwise("end"),
-          lit(",rest "), col("event_id")))
-      val d = device.parseDb2Diag(col("db2"))
-      val p = device.parsePanNgfw(col("pan"))
-      ev.select(
-        col("event_id"),
-        d.getField("level").as("db2_level"),
-        d.getField("pid").as("db2_pid"),
-        d.getField("tid").as("db2_tid"),
-        d.getField("proc").as("db2_proc"),
-        p.getField("serial").as("pan_serial"),
-        p.getField("pan_type").as("pan_type"),
-        p.getField("subtype").as("pan_subtype"))
-    }),
-
-    // IVF-Flat ANN: coarse-quantized cells + nprobe probing (the scale
-    // path next to ann_lsh; fully oracle-checked — the quantizer is
-    // deterministic)
-    "ann_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 8), k = 5,
-        nlist = 16, nprobe = 4)
-    }),
-
-    // §2.1 ruleset + call + call_indirect + §2.2 IN-array/exists, all
-    // oracle-checked: rulesets dispatch by computed name (call_indirect),
-    // a routed ruleset nests a plain `call`, unknown names fall through
-    // (runtime/ruleset.c:250-294), and the post-dispatch script uses
-    // exists($!v) and `== ["a","b"]` IN
-    "ruleset_call" -> ((s, dir) => {
-      val cfg = graft.rainerscript.RsyslogConfig.parse(
-        """ruleset(name="audit") { set $!seen = "yes"; }
-          |ruleset(name="route_error") { set $!route = "alerts"; call audit }
-          |ruleset(name="route_purchase") { set $!route = "billing"; }
-          |call_indirect "route_" & $event_type;
-          |if not exists($!route) then set $!route = "default";
-          |if $event_type == ["view", "signup"] then set $!cls = "funnel";
-          |else set $!cls = "other";
-          |""".stripMargin)
-      val ev = Tables.events(s, dir).select("event_id", "event_type")
-      cfg.run(ev).frame.select(
-        col("event_id"),
-        get_json_object(col("vars_msg"), "$.route").as("route"),
-        get_json_object(col("vars_msg"), "$.seen").as("seen"),
-        get_json_object(col("vars_msg"), "$.cls").as("cls"))
-    }),
-
-    // §2.1 bounded ruleset recursion (rscript_ruleset_call-recursion-
-    // limit.sh family): a guarded self-calling ruleset walks $.c up to
-    // a data-dependent target — every inlined level carries its own
-    // frozen guard, so the recursion is exact as long as the data's
-    // depth stays under callNestingLimit (severity ≤ 7 < 16 here)
-    "ruleset_recursion" -> ((s, dir) => {
-      val cfg = graft.rainerscript.RsyslogConfig.parse(
-        """ruleset(name="bump") {
-          |  set $.c = $.c + 1;
-          |  if $.c < $.target then call bump
-          |}
-          |set $.c = 0;
-          |set $.target = $severity;
-          |call bump
-          |""".stripMargin)
-      val ev = synthSyslog(s, dir).select("event_id", "severity")
-      cfg.run(ev).output
-        .groupBy(get_json_object(col("vars_local"), "$.c").cast("long").as("c"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // §2.5 imfile-lite batch READ path oracle-checked end-to-end: frame
-    // the synth stream octet-counted (RFC6587), write real text files,
-    // read them back through fileLines (provenance cols) → deframe →
-    // decode — the full imtcp/imfile ingest surface on actual files
-    "imfile_read" -> ((s, dir) => {
-      val tmp = graft.Tmp.dir("graft_imfile_")
-      val framed = synthSyslog(s, dir)
-        .select(concat(length(col("rawmsg")), lit(" "), col("rawmsg")).as("value"))
-      framed.write.mode("overwrite").text(tmp.toString)
-      val lines = graft.sources.Sources.fileLines(s, tmp.toString)
-      val decoded = graft.sources.Sources.decodeSyslog(
-        graft.sources.Sources.deframeOctetCounted(lines))
-      decoded.select(
-        regexp_extract(col("msg"), "msgnum:(\\d+)", 1).cast("long").as("event_id"),
-        col("inputname"),
-        col("facility"), col("severity"), col("hostname"),
-        col("syslogtag"), col("msg"), col("parsesuccess"))
-    }),
-
-    // §2.10 omfile dynafile oracle-checked round-trip: the dynafile path
-    // template IS partitionBy (tools/omfile.c:276-319 template-computed
-    // path + fd cache) — write partitioned by the computed key, read the
-    // directory back, verify content per partition
-    "omfile_dynafile" -> ((s, dir) => {
-      val tmp = graft.Tmp.dir("graft_dynafile_")
-      val ev = synthSyslog(s, dir)
-        .select(col("event_id"), col("severity"), col("hostname"), col("v100"))
-      graft.sources.Sources.omfilePartitioned(ev, tmp.toString, Seq("severity"))
-      s.read.parquet(tmp.toString)
-        .groupBy(col("severity").cast("int").as("severity"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("v100")).as("sum_v100"),
-          min(col("event_id")).as("min_id"),
-          max(col("event_id")).as("max_id"))
-    }),
-
-    // §2.8/§2.10 action retry/suspend → dead-letter, oracle-checked: a
-    // healthy action delivers its slice on attempt 1; a permanently
-    // suspended action exhausts its retries (action.c:856-1015 backoff)
-    // and the batch lands in the error-file/dead-letter path instead of
-    // being lost (omelasticsearch error-file pattern)
-    "dead_letter" -> ((s, dir) => {
-      import graft.sources.ReliableSink
-      val base = graft.Tmp.dir("graft_dlq_")
-      val (primary, dlq) = (s"$base/primary", s"$base/dlq")
-      val ev = synthSyslog(s, dir).select(col("event_id"), col("severity"))
-      val policy = ReliableSink.RetryPolicy(maxRetries = 2,
-        resumeIntervalMs = 1, resumeIntervalMaxMs = 4)
-      val okPrimary = ReliableSink.writeWithRetry(ev.filter(col("severity") < 4),
-        df => df.write.mode("overwrite").parquet(primary),
-        df => df.write.mode("overwrite").parquet(dlq), policy)
-      var attempts = 0
-      val okSuspended = ReliableSink.writeWithRetry(ev.filter(col("severity") >= 4),
-        df => { attempts += 1; throw new java.io.IOException("action suspended") },
-        df => df.write.mode("overwrite").parquet(dlq), policy)
-      require(okPrimary && !okSuspended && attempts == 3,
-        s"retry contract drifted: ok=$okPrimary susp=$okSuspended tries=$attempts")
-      s.read.parquet(primary).withColumn("handled_by", lit("primary"))
-        .unionByName(s.read.parquet(dlq).withColumn("handled_by", lit("dead_letter")))
-        .select(col("event_id"), col("handled_by"))
-    }),
-
-    // flagship LLM-data-prep composition: language-ID → quality filter →
-    // exact near-dup removal (fingerprint keep-first) → per-language
-    // token accounting. One declarative plan: scan-side scoring (no
-    // shuffle), ONE shuffle for the dedup window, one partial-agg'd
-    // groupBy — the canonical pretraining-corpus pass at 100 TB
-    "llm_prep" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val scored = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"),
-          TextAnalysis.tokens(col("text")).as("toks"))
-        .select(
-          col("doc_id"),
-          TextAnalysis.langIdFromTokens(col("toks")).as("lang_pred"),
-          TextAnalysis.qualityScoreFrom(length(col("text")), size(col("toks")),
-            TextAnalysis.charClassCount(col("text"), "[A-Za-z]"),
-            TextAnalysis.charClassCount(col("text"), "[0-9]"))
-            .as("quality"),
-          size(col("toks")).as("n_tokens"),
-          TextAnalysis.fingerprint(col("text")).as("fp"))
-      val kept = scored.filter(col("quality") >= 0.5)
-      val deduped = kept.withColumn("rn",
-          row_number().over(Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
-        .filter(col("rn") === 1)
-      deduped.groupBy(col("lang_pred"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("sum_tokens"),
-          min(col("quality")).as("min_q"),
-          max(col("quality")).as("max_q"))
-    }),
-
-    // deterministic stratified hash-bucket sampling (Sampling.scala): the
-    // reproducible-across-engines sample every pipeline debug/eval loop
-    // needs — row-level output so the oracle verifies the exact selection
-    // LLM-prep: deterministic training-order shuffle — every doc gets a
-    // pseudo-random (shard, pos); one hash shuffle + per-shard sort,
-    // window PARTITIONED BY SHARD (never a global row_number — see
-    // Sampling.trainingShuffle)
-    "sample_shuffle" -> ((s, dir) => {
-      Sampling.trainingShuffle(
-          Tables.documents(s, dir).select("doc_id", "lang"),
-          keyCol = "doc_id", nShards = 16, salt = "e0-")
-        .select(col("doc_id"), col("lang"), col("shard"), col("pos"))
-    }),
-
-    "sample_stratified" -> ((s, dir) => {
-      Sampling.stratifiedHashSample(Tables.documents(s, dir),
-          stratumCol = "lang", keyCol = "doc_id",
-          numerator = 64, digits = 2, salt = "graft")
-        .select(col("doc_id"), col("lang"),
-          TextAnalysis.tokenCount(col("text")).as("n_tokens"))
-    }),
-
-    // LLM-prep: domain-mixture downsampling — per-source keep rates
-    // (web-crawl thinned, curated kept) as one flat CaseWhen rate table
-    // + the md5 draw; a pushable scan-side filter, zero shuffle
-    "sample_domain_mix" -> ((s, dir) => {
-      Sampling.domainMixSample(Tables.documents(s, dir),
-          domainCol = "source", keyCol = "doc_id",
-          rates = Map("src0" -> 0.25, "src1" -> 0.0, "src2" -> 1.0),
-          defaultRate = 0.6, salt = "graft-mix")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // LLM-prep: sliding token-window chunking (chunk 64, overlap 16) —
-    // consecutive chunks share exactly the overlap, every token covered,
-    // narrow explode/slice plan
-    "chunk_tokens" -> ((s, dir) => {
-      Sampling.chunkByTokens(Tables.documents(s, dir), "doc_id", "text",
-        chunkTokens = 64, overlapTokens = 16)
-    }),
-
-    // the same sliding window denominated in SUBWORD tokens — the unit a
-    // RAG/pretraining context window is actually budgeted in (a 64-BPE
-    // window is NOT a 64-word window; whitespace counts understate
-    // subword length ~2x on this vocab). Tokens come casefolded from the
-    // BPE trie kernel; window arithmetic identical
-    "chunk_tokens_bpe" -> ((s, dir) => {
-      Sampling.chunkByTokens(Tables.documents(s, dir), "doc_id", "text",
-        chunkTokens = 64, overlapTokens = 16,
-        tokens = c =>
-          TextAnalysis.bpeEncode(c, graft.functions.BpeFixture.vocab))
-    }),
-
-    // LLM-prep: epoch-weighted upsampling — weight w ⇒ floor(w) copies
-    // + one more for a hash-chosen frac(w) share, expected multiplicity
-    // exactly w; deterministic copy index for downstream seeding
-    "sample_upsample" -> ((s, dir) => {
-      Sampling.upsampleByWeight(Tables.documents(s, dir),
-          domainCol = "lang", keyCol = "doc_id",
-          weights = Map("de" -> 2.5, "zh" -> 3.0, "en" -> 0.8),
-          defaultWeight = 1.0, salt = "graft-epoch")
-        .select(col("doc_id"), col("lang"), col("copy"))
-    }),
-
-    // event-time SESSION windows (Spark-native extension next to the
-    // tumbling window_agg): per-user activity sessions split on 30-min
-    // idle gaps — the log-analytics sessionization primitive
-    "session_window" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_v"))
-        .select(col("user_id"),
-          unix_timestamp(col("w.start")).as("session_start"),
-          col("n"), col("sum_v"))
-    }),
-
-    // event-time SLIDING windows on the streaming path: every event
-    // lands in 4 overlapping (1 h, 15 min-slide) windows; append mode
-    // emits windows whose end the final watermark passed
-    "stream_sliding" -> ((s, dir) => {
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val wins = ev.withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_v"))
-        .select(unix_timestamp(col("w.start")).as("win_start"),
-          col("event_type"), col("n"), col("sum_v"))
-      graft.streaming.StreamGate.run(wins, "append",
-        graft.streaming.StreamGate.tableBytes(dir, "events"))
-    }),
-
-    // event-time SESSION windows on the real streaming path (the
-    // extension face of session_window): state-store session merge with
-    // a zero-delay watermark; append mode emits exactly the sessions
-    // whose end (last event + gap) the final watermark passed — the
-    // trailing per-user session stays pending, mirrored in the oracle's
-    // end <= max(ts) filter like impstats_stream
-    "stream_session" -> ((s, dir) => {
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val sessions = ev.withWatermark("ts", "0 seconds")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_v"))
-        .select(col("user_id"),
-          unix_timestamp(col("w.start")).as("session_start"),
-          col("n"), col("sum_v"))
-      graft.streaming.StreamGate.run(sessions, "append",
-        graft.streaming.StreamGate.tableBytes(dir, "events"))
-    }),
-
-    // Gopher-style repetition signals: duplicate word-bigram/trigram
-    // fractions per doc — scan-side zip-shift n-grams, no explode, no
-    // shuffle; the boilerplate/generation-loop filter of a corpus pass
-    "text_repetition" -> ((s, dir) => {
-      // staged selects: toks/bi/tri are multiply-referenced non-cheap
-      // aliases, so CollapseProject leaves each in its own projection —
-      // one tokenization + one gram build per row instead of one per
-      // output column
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-        .select(col("doc_id"),
-          TextAnalysis.wordNgrams(col("toks"), 2).as("bi"),
-          TextAnalysis.wordNgrams(col("toks"), 3).as("tri"))
-        .select(col("doc_id"),
-          size(col("bi")).as("n_bigrams"),
-          TextAnalysis.dupFrac(col("bi")).as("dup_bigram_frac"),
-          TextAnalysis.dupFrac(col("tri")).as("dup_trigram_frac"))
-    }),
-
-    // near-dup resolution policy: canonical-doc selection — keep the
-    // HIGHEST-QUALITY member of each exact-dup group (not keep-first),
-    // the usual crawl-dedup policy when mirrors differ in truncation.
-    // One shuffle (the fp window); group_size rides the same window.
-    "dedup_canonical" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val scored = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"),
-          size(TextAnalysis.tokens(col("text"))).as("n_tokens"))
-        .select(
-          col("doc_id"),
-          TextAnalysis.fingerprint(col("text")).as("fp"),
-          TextAnalysis.qualityScoreFrom(length(col("text")), col("n_tokens"),
-            TextAnalysis.charClassCount(col("text"), "[A-Za-z]"),
-            TextAnalysis.charClassCount(col("text"), "[0-9]"))
-            .as("quality"))
-      val byFp = Window.partitionBy(col("fp"))
-      scored
-        .withColumn("rn", row_number().over(
-          byFp.orderBy(col("quality").desc, col("doc_id").asc)))
-        .withColumn("group_size", count(lit(1)).over(byFp))
-        .filter(col("rn") === 1)
-        .select(col("doc_id"), col("fp"), col("quality"), col("group_size"))
-    }),
-
-    // §2.1 reload_lookup_table — hot reload ≡ per-epoch rebuild: the table
-    // FILE is rewritten and re-loaded between epochs (the exact mechanics
-    // of the foreachBatch re-read at stream epoch boundaries; reference
-    // runtime/lookup.c lookupReload). Epoch 1 probes v1, epoch 2 the
-    // reloaded v2; routing stays declarative per epoch.
-    "lookup_reload" -> ((s, dir) => {
-      val f = java.io.File.createTempFile("graft_lookup_reload", ".json")
-      f.deleteOnExit()
-      def write(json: String): Unit = {
-        val w = new java.io.PrintWriter(f)
-        try w.write(json) finally w.close()
-      }
-      write("""{"version":1,"nomatch":"UNK","type":"string","table":[
-        {"index":"error","value":"sev-high"},{"index":"purchase","value":"rev"}]}""")
-      val v1 = LookupTable.load(f.getPath)
-      write("""{"version":1,"nomatch":"UNK","type":"string","table":[
-        {"index":"error","value":"sev-crit"},{"index":"signup","value":"acq"}]}""")
-      val v2 = LookupTable.load(f.getPath)
-      val ev = Tables.events(s, dir)
-      val epoch1 = ev.filter(col("event_id") % 2 === 0)
-        .withColumn("cls", v1.probe(col("event_type")))
-        .withColumn("epoch", lit(1L))
-      val epoch2 = ev.filter(col("event_id") % 2 === 1)
-        .withColumn("cls", v2.probe(col("event_type")))
-        .withColumn("epoch", lit(2L))
-      epoch1.unionByName(epoch2)
-        .groupBy(col("epoch"), col("cls"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // §2.5 imkafka — the Kafka-source CONTRACT decode: a kafka-shaped
-    // frame (key/value binary, topic/partition/offset) through
-    // imkafkaDecode → syslog parse, provenance carried like imfile's.
-    // The connector jar only changes who produces the contract columns;
-    // this oracles the engine-owned half (decode + provenance) end-to-end.
-    "kafka_decode" -> ((s, dir) => {
-      val ev = synthSyslog(s, dir)
-      val kafka = ev.select(
-        col("rawmsg").cast("binary").as("value"),
-        col("user_id").cast("string").cast("binary").as("key"),
-        concat(lit("syslog."), col("event_type")).as("topic"),
-        (col("user_id") % 4).cast("int").as("partition"),
-        col("event_id").as("offset"),
-        col("ts").as("timestamp"))
-      graft.sources.Sources.imkafkaDecode(kafka)
-        .select(col("offset").as("event_id"), col("topic"),
-          col("partition").as("kafka_partition"), col("inputname"),
-          col("facility"), col("severity"), col("hostname"),
-          col("programname"), col("msg"))
-    }),
-
-    // benchmark decontamination (the standard pretraining hygiene pass):
-    // flag corpus docs sharing any 5-gram with the eval set. The eval
-    // side is small by nature → its distinct gram set broadcasts; the
-    // corpus side is one scan + explode + broadcast join + partial-agg'd
-    // count — no corpus-side shuffle before the per-doc fold
-    "decontaminate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      def grams(d: org.apache.spark.sql.DataFrame) = d.select(col("doc_id"),
-        explode(TextAnalysis.wordNgrams(
-          TextAnalysis.tokens(col("text")), 5)).as("g"))
-      val evalGrams = grams(docs.filter(col("doc_id") % 97 === 0))
-        .select(col("g")).distinct()
-      grams(docs.filter(col("doc_id") % 97 =!= 0))
-        .join(broadcast(evalGrams), Seq("g"))
-        .groupBy(col("doc_id"))
-        .agg(countDistinct(col("g")).as("n_shared"))
-    }),
-
-    // fuzzy decontamination (VERDICT r10 #5a): max n-gram Jaccard per
-    // corpus doc against the eval split — catches paraphrased eval
-    // leakage the exact gram-count pass above waves through. Same
-    // broadcast shape (eval side small by nature), per-pair cost only
-    // for docs already sharing a gram — see Dedup.decontaminateFuzzy
-    "decontaminate_fuzzy" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.operators.Dedup.decontaminateFuzzy(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0),
-        "doc_id", "text")
-    }),
-
-    // URL/domain dedup (VERDICT r10 #5b): crawl frontier hygiene — the
-    // same page fetched via www./casing/default-port/tracking-param
-    // variants collapses to one canonical doc per normalized
-    // host+path key. URLs are a deterministic fixture over the doc
-    // columns (the documents table has no URL column); the
-    // normalization runs through the faup extractors (ffaup contrib,
-    // reference tests/rscript_faup_*.sh). One scan + one map-side-
-    // combinable groupBy — no join, 100 TB-safe by construction
-    "dedup_url" -> ((s, dir) => {
-      import graft.functions.rainer
-      val url = concat(lit("https://WWW."), upper(col("source")),
-        lit(".Example.COM:443/"), col("lang"), lit("/item/"),
-        col("doc_id") % 40, lit("/?utm_source=feed&ref="), col("doc_id"),
-        lit("#sec"))
-      val host = regexp_replace(lower(rainer.faup_host(url)), "^www\\.", "")
-      val path = regexp_replace(rainer.faup_path(url), "/$", "")
-      Tables.documents(s, dir)
-        .select(col("doc_id"), host.as("host"), path.as("path"),
-          lower(rainer.faup_domain(url)).as("domain"))
-        .groupBy(col("host"), col("path"), col("domain"))
-        .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("keep_id"))
-    }),
-
-    // C4-style line-level dedup: corpus-wide boilerplate lines (the
-    // cookie banner on every page, per-site footers) are removed and
-    // the documents reassembled in original line order. The fixture
-    // wraps each doc in one corpus-wide banner, one per-residue footer
-    // (repeats n/3 times) and one unique id line, so the hot-line
-    // detector, the anti-join, and order-preserving reassembly all
-    // fire. See Dedup.lineDedup for the broadcast-anti-join shape
-    "dedup_lines" -> ((s, dir) => {
-      val staged = Tables.documents(s, dir).withColumn("txt", concat(
-        lit("cookie notice please accept\n"), col("text"),
-        lit("\ncopyright footer "), col("doc_id") % 3,
-        lit("\nid line "), col("doc_id")))
-      graft.operators.Dedup.lineDedup(staged, "doc_id", "txt")
-    }),
-
-    // quality-classifier calibration (VERDICT r10 #5c): per-source
-    // Gopher rule pass-rate table — the sanity check before trusting
-    // the filter at corpus scale. Scan-bound flags + one combinable
-    // groupBy; micro-rates are BIGINT floor divisions (hash-stable)
-    "quality_calibration" -> ((s, dir) =>
-      TextAnalysis.gopherCalibration(
-        Tables.documents(s, dir), "doc_id", "text", "source")),
-
-    // the SQL-only user's path (VERDICT r10 #6): the same pipeline a
-    // Scala user writes with the operators above, expressed entirely in
-    // spark.sql over the graft_* function surface (GraftExtensions) —
-    // six registered kernels exercised end-to-end under oracle
-    "sql_surface" -> ((s, dir) => {
-      GraftExtensions.register(s)
-      Tables.documents(s, dir).createOrReplaceTempView("graft_docs")
-      s.sql("""
-        SELECT doc_id,
-          graft_langid(text) AS predicted,
-          size(graft_tokens(text)) AS n_tokens,
-          graft_subwords(text) AS n_subwords,
-          graft_fingerprint(text) AS fp,
-          graft_redact(concat('contact user', doc_id, '@example.com at 10.0.',
-            doc_id % 256, '.7 acct 123456789')) AS redacted,
-          graft_is_in_subnet(concat('10.0.', doc_id % 256, '.7'),
-            '10.0.128.0/17') AS upper_half
-        FROM graft_docs
-        WHERE size(graft_tokens(text)) > 0""")
-    }),
-
-    // the SQL-only user's STREAMING path (VERDICT r11 #7): the same
-    // graft_* kernel surface, but the FROM is a readStream view — one
-    // spark.sql statement is the whole pipeline (scan-side kernels +
-    // a complete-mode streaming aggregation), run through the stream
-    // gate like every other stream_* query
-    "stream_sql_surface" -> ((s, dir) => {
-      GraftExtensions.register(s)
-      graft.streaming.StreamGate.readTable(s, dir, "documents")
-        .createOrReplaceTempView("graft_stream_docs")
-      val agg = s.sql("""
-        SELECT graft_langid(text) AS predicted,
-               count(*) AS n_docs,
-               CAST(sum(size(graft_tokens(text))) AS BIGINT) AS sum_tokens
-        FROM graft_stream_docs
-        WHERE size(graft_tokens(text)) > 0
-        GROUP BY graft_langid(text)""")
-      graft.streaming.StreamGate.run(agg, "complete",
-        graft.streaming.StreamGate.tableBytes(dir, "documents"))
-    }),
-
-    // hashed-ngram linear quality classifier (VERDICT r11 #4a): the
-    // fastText shape with closed-form NB log-odds training — training
-    // is itself a distributed query (two combinable groupBys + one
-    // 2-scalar collect), the model a ≤4096-row broadcast bounded by
-    // feature hashing, scoring a scan + one combinable per-doc sum.
-    // Holdout agreement is read off the (predicted, teacher, is_train)
-    // columns. See QualityClassifier.distillQuality
-    "quality_classifier" -> ((s, dir) =>
-      graft.operators.QualityClassifier.distillQuality(
-        Tables.documents(s, dir), "doc_id", "text")),
-
-    // substring-span REMOVAL (VERDICT r11 #4b): the substringDupSpans
-    // detector composed back onto the corpus — the capped span list
-    // (bounded driver collect, ≤100 rows by contract) scrubbed from
-    // every document in deterministic order; pure scan-bound replace
-    // chain after the detection pass
-    "dedup_substring_removal" -> ((s, dir) =>
-      Dedup.removeDupSpans(Tables.documents(s, dir), "doc_id", "text")),
-
-    // token-accounting table (VERDICT r11 #5): per-source token totals
-    // + cumulative mixture shares — the planning input for
-    // sample_domain_mix. One combinable corpus-sized groupBy; the
-    // cumulative window runs over the DOMAIN table (#domains rows,
-    // orders of magnitude below the corpus), integer micro-shares
-    // LLM-prep: per-(source, lang) corpus statistics table — the
-    // mixture-planning companion to token_budget with EXACT token-count
-    // quantiles. One combinable groupBy; Spark's exact percentile holds
-    // one value→count map per group (bounded by distinct token counts,
-    // ~10^4 — not by row count), so the aggregate stays map-side
-    // combinable at any corpus size. Interpolated ranks are multiples
-    // of 0.1 for p50/p90 → ×10 integers are exact on both engines.
-    "corpus_stats" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("source"), col("lang"),
-          TextAnalysis.tokenCount(col("text")).as("n_tok"),
-          length(col("text")).as("n_chars"))
-        .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).cast("long").as("sum_tokens"),
-          round(avg(col("n_chars")) * 100).cast("long").as("mean_chars_x100"),
-          round(percentile(col("n_tok"), lit(0.5)) * 10).cast("long")
-            .as("p50_tokens_x10"),
-          round(percentile(col("n_tok"), lit(0.9)) * 10).cast("long")
-            .as("p90_tokens_x10"),
-          max(col("n_tok")).cast("long").as("max_tokens"))
-    }),
-
-    "token_budget" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val per = Tables.documents(s, dir)
-        .select(col("source"), TextAnalysis.tokenCount(col("text")).as("n_tok"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).cast("long").as("n_tokens"))
-      val cum = Window.orderBy(col("source"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      per
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(cum))
-        .withColumn("total_tokens",
-          sum(col("n_tokens")).over(Window.partitionBy()))
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          col("cum_tokens"),
-          expr("(n_tokens * 1000000) div total_tokens").as("micro_share"))
-    }),
-
-    // REAL subword tokenization (greedy longest-match BPE under the
-    // checked-in pretrained vocabulary, functions.BpeFixture): per-doc
-    // whitespace vs subword counts — the accounting delta that skews
-    // mixture planning up to ~3x — plus the first word's exact
-    // segmentation so the gate pins token BOUNDARIES, not just counts.
-    // One codegen'd trie kernel on the scan; vocab size is a training
-    // parameter, never a function of the corpus.
-    "tokenize_bpe" -> ((s, dir) => {
-      val v = graft.functions.BpeFixture.vocab
-      val firstWord = element_at(TextAnalysis.tokens(col("text")), 1)
-      Tables.documents(s, dir).select(
-        col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_ws"),
-        TextAnalysis.bpeCount(col("text"), v).cast("long").as("n_bpe"),
-        array_join(TextAnalysis.bpeEncode(firstWord, v), "|").as("w1_toks"))
-    }),
-
-    // tokenizer-QA fertility audit: per source, whitespace words vs BPE
-    // subwords (fertility = subwords per word — the unit-cost table a
-    // tokenizer owner reads per corpus slice) plus the share of word
-    // instances that stay a single token. Per-word counts via ONE
-    // transform over the token array (same trie kernel, word-at-a-time),
-    // so n_bpe and n_single are definitionally consistent; all ratios
-    // exact integer div
-    "bpe_fertility" -> ((s, dir) => {
-      val v = graft.functions.BpeFixture.vocab
-      val wcounts = transform(TextAnalysis.tokens(col("text")),
-        w => TextAnalysis.bpeCount(w, v).cast("long"))
-      Tables.documents(s, dir)
-        .select(col("source"), wcounts.as("wc"))
-        .select(col("source"),
-          size(col("wc")).cast("long").as("n_words"),
-          aggregate(col("wc"), lit(0L), (a, c) => a + c).as("n_bpe"),
-          size(filter(col("wc"), c => c === 1L)).cast("long").as("n_single"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("n_words"),
-          sum(col("n_bpe")).as("n_bpe"),
-          sum(col("n_single")).as("n_single"))
-        .select(col("source"), col("n_docs"), col("n_words"), col("n_bpe"),
-          col("n_single"),
-          expr("(n_bpe * CAST(1000000 AS BIGINT)) div greatest(n_words, 1)")
-            .as("fertility_micro"),
-          expr("(n_single * CAST(1000000 AS BIGINT)) div greatest(n_words, 1)")
-            .as("single_micro"))
-    }),
-
-    // per-source dedup-impact report: docs/tokens removed by exact
-    // dedup, keeper = min-id, attribution to the source that lost its
-    // copies — the audit table a pipeline owner reads after every
-    // ingest. ONE fp-window shuffle (text never rides it) + one
-    // combinable per-source groupBy
-    "dedup_report" -> ((s, dir) => {
-      Dedup.dedupReport(Tables.documents(s, dir), "doc_id", "text", "source")
-    }),
-
-    // temperature-flattened mixture weights (T=2, alpha=1/2): the
-    // standard multilingual/multi-source rebalancing — a source's raw
-    // token share p flattens to p^(1/T), renormalized, upweighting the
-    // tail sources a proportional mixture starves. sqrt is correctly
-    // rounded per IEEE-754 in BOTH engines, and flattened weights are
-    // quantized to integer micro-units BEFORE normalization so the
-    // share arithmetic is integer division — order-free, oracle-exact
-    // (a double SUM across sources would be addition-order-dependent).
-    // DSIR importance resampling (Xie et al. 2023): hashed-ngram
-    // importance log-weights toward the target distribution (here:
-    // English docs), Gumbel-top-k selection per shard — exact weighted
-    // sampling without replacement, oracle-replayable end to end
-    "sample_dsir" -> ((s, dir) => {
-      Sampling.dsirResample(Tables.documents(s, dir), "doc_id", "text",
-        targetPred = col("lang") === "en", targetFrac = 0.25)
-    }),
-
-    "sample_temperature" -> ((s, dir) => {
-      val per = Tables.documents(s, dir)
-        .select(col("source"), TextAnalysis.tokenCount(col("text")).as("n_tok"))
-        .groupBy(col("source"))
-        .agg(sum(col("n_tok")).cast("long").as("n_tokens"))
-      per
-        .withColumn("micro_share",
-          expr("(n_tokens * 1000000) div (sum(n_tokens) over ())"))
-        .withColumn("xq",
-          floor(sqrt(col("n_tokens").cast("double")) * 1e6).cast("long"))
-        .withColumn("micro_share_t",
-          expr("(xq * 1000000) div (sum(xq) over ())"))
-        .withColumn("boost_x1000",
-          expr("(micro_share_t * 1000) div greatest(micro_share, 1)"))
-        .select(col("source"), col("n_tokens"), col("micro_share"),
-          col("micro_share_t"), col("boost_x1000"))
-    }),
-
-    // token_budget re-based on SUBWORD tokens (VERDICT r12 #2): same
-    // per-source budget/share accounting, denominated in the unit a
-    // training mixture actually consumes
-    "token_budget_bpe" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val v = graft.functions.BpeFixture.vocab
-      val per = Tables.documents(s, dir)
-        .select(col("source"),
-          TextAnalysis.bpeCount(col("text"), v).as("n_tok"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).cast("long").as("n_tokens"))
-      val cum = Window.orderBy(col("source"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      per
-        .withColumn("cum_tokens", sum(col("n_tokens")).over(cum))
-        .withColumn("total_tokens",
-          sum(col("n_tokens")).over(Window.partitionBy()))
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          col("cum_tokens"),
-          expr("(n_tokens * 1000000) div total_tokens").as("micro_share"))
-    }),
-
-    // embedding-space (semantic) eval decontamination — third rung of
-    // the ladder (exact 13-gram → fuzzy micro-Jaccard → embedding
-    // cosine): sign-bit-LSH banding on both sides, train-bands joined
-    // against BROADCAST eval-bands (eval sets are benchmark-sized by
-    // nature), per-train combinable max-sim. Catches paraphrase
-    // contamination that shares no n-gram
-    "decontaminate_semantic" -> ((s, dir) =>
-      Similarity.decontaminateSemantic(Tables.embeddings(s, dir),
-        evalMod = 50, tau = 0.3)),
-
-    // CCNet-style perplexity-stratified sampling: corpus-trained bigram
-    // LM score → per-language ntile(3) (head = most LM-typical) →
-    // per-bucket deterministic keep rates (head whole, tail thinned).
-    // The window shuffles (avg_lp, id) pairs only — text never rides it
-    "sample_perplexity" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val scored = docs.select(col("doc_id"), col("lang"))
-        .join(LanguageModel.bigramLogProb(docs, "doc_id", "text"), "doc_id")
-      Sampling.perplexitySample(scored, stratumCol = "lang",
-        idCol = "doc_id", rates = Map(1 -> 1.0, 2 -> 0.5, 3 -> 0.1),
-        salt = "graft-ppl")
-    }),
-
-    // keep-BEST exact dedup: duplicate groups resolved to the richest
-    // capture (max n_chars, ties to smallest id) instead of the
-    // smallest id — the crawl-snapshot policy. Same single combinable
-    // fingerprint groupBy as dedup_exact; the argmax is max(struct),
-    // not a window, so map-side combine survives
-    "dedup_keep_best" -> ((s, dir) =>
-      Dedup.keepBest(Tables.documents(s, dir), "doc_id", "text",
-        score = col("n_chars"))),
-
-    // contamination-coverage REPORT (eval-side view of the fuzzy pass):
-    // per eval doc, how many corpus docs leak it, worst micro-Jaccard,
-    // smallest offending id; zero rows included — the audit artifact
-    // filed alongside a decontamination run
-    "contamination_report" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.contaminationReport(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0),
-        "doc_id", "text")
-    }),
-
-    // topic/diversity report: deterministic coarse cells (the semDedup
-    // quantizer) -> per-cluster mass + integer micro cosine-to-centroid
-    // distribution; the corpus-balance audit before mixture design
-    "cluster_topics" -> ((s, dir) =>
-      Similarity.clusterTopics(Tables.embeddings(s, dir))),
-
-    // corpus-wide hot n-grams, EXACT, via Misra-Gries candidates +
-    // recount — the shuffle carries capacity-bounded sketch buffers,
-    // never the gram stream (see TextAnalysis.hotNgrams)
-    "ngram_hot" -> ((s, dir) =>
-      TextAnalysis.hotNgrams(Tables.documents(s, dir), "text")),
-
-    // cross-snapshot dedup: prior crawl (doc_id % 3 = 0) folds into one
-    // fixed-size bloom; only possibly-seen input rows reach the exact
-    // anti-join (see Dedup.snapshotDedup). The input carries re-keyed
-    // copies of half the snapshot (ids + 1e6, identical text) so the
-    // gate exercises the DROP path — the raw %3 split has zero cross-
-    // boundary duplicate fingerprints at test scale, which would leave
-    // the verify branch semantically dormant.
-    "dedup_snapshot" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val recrawled = docs.filter(col("doc_id") % 6 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      Dedup.snapshotDedup(
-        docs.filter(col("doc_id") % 3 =!= 0).select(col("doc_id"), col("text"))
-          .union(recrawled),
-        docs.filter(col("doc_id") % 3 === 0),
-        "doc_id", "text")
-    }),
-
-    // fuzzy face of the cross-snapshot dedup: input docs near-matching
-    // (jaccard >= tau) ANY prior-crawl doc are dropped; candidates come
-    // from input-bands-probe-snapshot-bands LSH — never snapshot x
-    // snapshot (see Dedup.snapshotNearDup)
-    "dedup_snapshot_fuzzy" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.snapshotNearDup(
-        docs.filter(col("doc_id") % 3 =!= 0),
-        docs.filter(col("doc_id") % 3 === 0),
-        "doc_id", "text")
-    }),
-
-    // embedding QA stats (the corpus-health face of the ANN family):
-    // per-label counts + L2-norm distribution — the standard sanity pass
-    // before indexing/training. Per-row norm is a sequential fold (same
-    // IEEE order both engines); scan-bound + one partial-agg'd groupBy
-    "emb_stats" -> ((s, dir) => {
-      val norm = sqrt(aggregate(col("embedding"), lit(0.0),
-        (acc, x) => acc + x.cast("double") * x.cast("double")))
-      Tables.embeddings(s, dir)
-        .select(col("label"), norm.as("norm"))
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"),
-          round(avg(col("norm")), 4).as("avg_norm"),
-          round(min(col("norm")), 4).as("min_norm"),
-          round(max(col("norm")), 4).as("max_norm"))
-    }),
-
-    // §2.10 omfile static sink: render the RFC3164 wire line, write it
-    // through the text sink, read the files back — the whole write path
-    // is under oracle (the dynafile twin is omfile_dynafile)
-    "omfile_text" -> ((s, dir) => {
-      // fixed path, replaced by each write: repeated bench trials reuse
-      // the same scratch dir instead of leaking one temp dir per run
-      val out = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_omfile_text").getPath
-      val ev = synthSyslog(s, dir).select(col("rawmsg").as("line"))
-      graft.sources.Sources.omfileText(ev, "line", out)
-      s.read.text(out).select(col("value").as("line"))
-    }),
-
-    // PII-style scrubbing (the text-side sibling of mmanon): emails,
-    // bare IPv4s, long digit runs → stable class tokens. Deterministic
-    // markers are synthesized into the text so the redaction paths all
-    // fire; pure regexp_replace chain, scan-bound
-    "text_redact" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .withColumn("txt", concat(
-          lit("user"), col("doc_id"), lit("@example.com ip=10.0."),
-          col("doc_id") % 256, lit(".7 acct=123456789 "), col("text")))
-        .select(col("doc_id"), TextAnalysis.redact(col("txt")).as("redacted"))
-    }),
-
-    // §2.9 mmexternal — REAL child process per partition: each row's JSON
-    // envelope goes one-line-in/one-line-out through a live `sed -u`
-    // (the mmexternal stdin/stdout protocol, ProcessWorker with
-    // crash-restart + task-completion reaping). Oracled end-to-end: the
-    // transform is deterministic so DuckDB replicates it with replace().
-    "mmexternal_pipe" -> ((s, dir) => {
-      // deterministic 1/8 subset: the per-row synchronous child-process
-      // round-trip is the cost model of the protocol itself (the
-      // reference's mmexternal pays the same per-message pipe latency);
-      // an eighth of the table proves the path without dominating the
-      // bench total
-      val ev = synthSyslog(s, dir)
-        .filter(col("event_id") % 8 === 0)
-        .select(col("event_id"),
-          External.envelope(
-            concat(lit("msgnum:"), lpad(col("event_id"), 8, "0"),
-              lit(": v100="), col("v100")),
-            lit("{}")).as("env"))
-      val piped = External.pipeProgram(ev, "env",
-        Seq("/bin/sed", "-u", "s/msgnum:/SEQ:/"))
-      piped.select(col("event_id"),
-        get_json_object(col("env"), "$.msg").as("msg"))
-    }),
-
-    // §2.5 immark — "-- MARK --" heartbeat + action-side mark suppression
-    // (writeAllMarkMessages="off"): a mark row per (host, hour boundary)
-    // where the host logged nothing in the preceding hour. Row-level
-    // output so the oracle checks the exact suppression set.
-    "immark" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      graft.sources.Sources.immarkMarks(ev,
-          concat(lit("host"), col("user_id")), col("ts"))
-        .select(col("host"), unix_timestamp(col("mark_ts")).as("mark_sec"),
-          col("msg"))
-    }),
-
-    // ------------------------- streaming correctness gate -------------------
-    // Each stream_* query drives the REAL Structured Streaming path
-    // (readStream → watermark/state store → checkpointed AvailableNow run
-    // → sink) and is checked against the same DuckDB oracle discipline as
-    // its batch twin — the reference's tcpflood/chkseq exact-delivery bar.
-
-    // flagship: full decode→prifilt→template pipeline on a stream; the
-    // stateless row path is the stream, the final fold is batch over the
-    // sink (identical result to pipeline_e2e's oracle)
-    "stream_e2e" -> ((s, dir) => {
-      val raw = synthFrom(graft.streaming.StreamGate.readTable(s, dir, "events"))
-        .select(col("rawmsg").as("value"))
-      val decoded = graft.sources.Sources.decodeSyslog(raw)
-      val sevNames = array(Seq("emerg", "alert", "crit", "err", "warning",
-        "notice", "info", "debug").map(lit): _*)
-      val lines = decoded
-        .filter(rainer.prifilt("*.warning")(col("facility"), col("severity")))
-        .withColumn("line", concat(
-          date_format(col("ts"), "MMM "),
-          lpad(date_format(col("ts"), "d"), 2, " "),
-          date_format(col("ts"), " HH:mm:ss "),
-          col("hostname"), lit(" "),
-          col("syslogtag"), lit(" "),
-          // msg carries its leading space (reference semantics) — the
-          // template separator is just ":" so the line is unchanged
-          element_at(sevNames, col("severity") + 1), lit(":"), col("msg")))
-        .select(col("hostname"), col("line"))
-      // the per-host fold runs INSIDE the streaming query (complete-mode
-      // agg) so the memory sink holds #hostnames rows, never the corpus —
-      // the r8 judge's driver-OOM-by-construction fix. Counts/max are
-      // order-independent, so the result is batch-exact.
-      graft.streaming.StreamGate.run(
-        lines.groupBy(col("hostname"))
-          .agg(count(lit(1)).as("n"),
-            max(length(col("line"))).cast("long").as("max_len")),
-        "complete", graft.streaming.StreamGate.tableBytes(dir, "events"))
-    }),
-
-    // §2.8 token bucket through the state store: per-key windows survive
-    // micro-batch boundaries; pass-counts per user are order-independent
-    "stream_ratelimit" -> ((s, dir) => {
-      import s.implicits._
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val in = ev.select(
-        col("user_id").cast("string").as("key"),
-        expr("ts_ns div 1000000").as("tsMillis"),
-        col("event_id").cast("string").as("payload"))
-        .as[graft.streaming.Stateful.RlInput]
-      val passed = graft.streaming.Stateful.rateLimit(in,
-        intervalMillis = 3600L * 1000L, burst = 3)
-      graft.streaming.StreamGate.run(passed.toDF(), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .groupBy(col("key").cast("long").as("user_id"))
-        .agg(count(lit(1)).as("n_passed"))
-    }),
-
-    // §2.5/§2.7 impstats as a MESSAGE stream (plugins/impstats): per-hour
-    // counter snapshots of the events flow rendered as legacy + CEE
-    // pstats message rows through the real streaming path — the window
-    // close IS the interval fire; only windows the final watermark passed
-    // have reported (the trailing window stays pending, mirrored in the
-    // oracle's window_end <= max(ts) filter)
-    "impstats_stream" -> ((s, dir) => {
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val msgs = graft.sources.Impstats.statsMessageStream(
-        ev, "ts", concat(lit("events."), col("event_type")),
-        origin = "imfile", interval = "1 hour")
-      graft.streaming.StreamGate.run(msgs, "append",
-        graft.streaming.StreamGate.tableBytes(dir, "events"))
-    }),
-
-    // §2.7 dynstats through the state store: maxCardinality admission in
-    // arrival (event_id) order, overflow folding; final counter snapshot
-    // §2.1 reload_lookup_table on a LIVE stream: foreachBatch re-loads
-    // the table file at each micro-batch boundary — the exact streaming
-    // face of the reference's lookupReload (runtime/lookup.c: reload is
-    // requested async and swapped in between message batches). Two
-    // parquet files arrive as two AvailableNow micro-batches
-    // (maxFilesPerTrigger=1, mtime-ordered); the batch-1 callback
-    // rewrites the table file after probing, so batch 2 sees v2 — the
-    // same (epoch, cls) contract as the batch `lookup_reload` query.
-    "stream_lookup_reload" -> ((s, dir) => {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val work = graft.Tmp.dir("graft_slr_").toFile
-      work.deleteOnExit()
-      val inDir = new java.io.File(work, "in"); inDir.mkdirs()
-      val outDir = new java.io.File(work, "out").getPath
-      val ckpt = new java.io.File(work, "ckpt").getPath
-      // one single-file parquet per epoch, mtime-ordered (the file
-      // stream source orders by (modTime, path))
-      val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"))
-      def writeOne(df: org.apache.spark.sql.DataFrame, name: String,
-                   mtime: Long): Unit = {
-        val tmp = new java.io.File(work, s"tmp_$name").getPath
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(inDir, s"$name.parquet")
-        Files.move(part.toPath, dst.toPath, StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(mtime)
-      }
-      val t0 = 1700000000000L // fixed epoch base: mtime only orders files
-      writeOne(ev.filter(col("event_id") % 2 === 0), "epoch1", t0)
-      writeOne(ev.filter(col("event_id") % 2 === 1), "epoch2", t0 + 60000)
-      val lookupFile = new java.io.File(work, "table.json")
-      def writeTable(json: String): Unit = {
-        val w = new java.io.PrintWriter(lookupFile)
-        try w.write(json) finally w.close()
-      }
-      writeTable("""{"version":1,"nomatch":"UNK","type":"string","table":[
-        {"index":"error","value":"sev-high"},{"index":"purchase","value":"rev"}]}""")
-      val schema = ev.schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getPath)
-      val q = stream.writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // reload AT the batch boundary — rsyslog's swap point.
-          // foreachBatch is at-least-once: output goes to a per-batchId
-          // path (overwrite = idempotent on retry) and the table swap
-          // runs exactly once, keyed to the epoch-1 commit.
-          val tbl = LookupTable.load(lookupFile.getPath)
-          df.withColumn("cls", tbl.probe(col("event_type")))
-            .withColumn("epoch", lit(batchId + 1))
-            .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-          if (batchId == 0)
-            writeTable("""{"version":1,"nomatch":"UNK","type":"string","table":[
-              {"index":"error","value":"sev-crit"},{"index":"signup","value":"acq"}]}""")
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val agg = s.read.parquet(s"$outDir/batch_0", s"$outDir/batch_1")
-        .groupBy(col("epoch"), col("cls")).agg(count(lit(1)).as("n"))
-      val rows = agg.collect() // bounded: #epochs × #classes
-      // reap the workdir now — deleteOnExit is a no-op for non-empty dirs
-      try Files.walk(work.toPath)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      catch { case _: java.io.IOException => }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
-    }),
-
-    "stream_dynstats" -> ((s, dir) => {
-      import s.implicits._
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val in = ev.select(
-        lit("events").as("bucket"),
-        col("event_type").as("key"),
-        col("event_id").as("tsMillis"))
-        .as[graft.streaming.Stateful.DynInput]
-      val snaps = graft.streaming.Stateful.dynStats(in, maxCardinality = 3,
-        unusedMetricLifeMillis = Long.MaxValue / 4)
-      // counters are monotone (TTL disabled) → final value = max snapshot
-      graft.streaming.StreamGate.run(snaps.toDF(), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .groupBy(when(col("metric") === "ops_overflow", "_overflow")
-          .otherwise(col("metric")).as("metric"))
-        .agg(max(col("value")).as("n"))
-    }),
-
-    // §2.7 repeated-msg squash through the state store incl. the
-    // event-time timer flush of trailing runs (flushAfterMs ≤ 0 drains
-    // every pending run once the final watermark is known)
-    "stream_repeat" -> ((s, dir) => {
-      import s.implicits._
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val in = ev.select(
-        col("user_id").cast("string").as("key"),
-        col("event_id").as("seq"),
-        col("event_type").as("msg"),
-        col("ts"))
-        .as[graft.streaming.Stateful.RrInput]
-      val out = graft.streaming.Stateful.repeatedMsgSquash(in,
-        watermarkDelay = "0 seconds", flushAfterMs = -1L)
-      // sink cardinality here is the oracle set itself (the squashed
-      // run list) — irreducible; only the state shuffle scales
-      graft.streaming.StreamGate.run(out.toDF(), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .select(col("key").cast("long").as("user_id"), col("seq"),
-          col("msg"), col("synthetic"))
-    }),
-
-    // §2.5 imfile multiline through the state store, oracle-checked: a
-    // deterministic multi-line log (every 4th event STARTs a record, the
-    // rest continue it) assembled by the startmsg.regex state machine;
-    // pre-start lines flush at the first start, the trailing record
-    // drains at the final watermark (flushAfterMs ≤ 0). Event time =
-    // timestamp_millis(seq) so arrival order is total and mirrors the
-    // oracle's island reconstruction exactly.
-    // §2.5 imkubernetes streaming face: CRI P-fragments accumulate in
-    // the state store until their closing F (first fragment's
-    // stream/time win); docker-json and raw lines pass through; the
-    // trailing unclosed P run stays pending and is never emitted
-    "stream_kube_cri" -> ((s, dir) => {
-      import s.implicits._
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val m5 = col("event_id") % 5
-      val line =
-        when(m5 === 4, concat(lit("2024-03-01T10:00:00Z stdout P p"),
-          col("event_id"), lit(" ")))
-        .when(m5 === 0, concat(lit("2024-03-01T10:00:01Z stderr F f"),
-          col("event_id")))
-        .when(m5 === 3, concat(lit("2024-03-01T10:00:02.25Z stdout F g"),
-          col("event_id")))
-        .when(m5 === 1, to_json(struct(
-          concat(lit("d"), col("event_id"), lit("\n")).as("log"),
-          when(col("event_id") % 2 === 1, "stderr").otherwise("stdout")
-            .as("stream"),
-          lit("2024-03-01T10:00:03Z").as("time"))))
-        .otherwise(concat(lit("r"), col("event_id"), lit(" "),
-          col("event_type")))
-      val in = ev.select(
-        concat(lit("/var/log/pods/ns1_pod"), col("user_id") % 8,
-          lit("_u/app/0.log")).as("key"),
-        col("event_id").as("seq"), line.as("line"),
-        timestamp_millis(col("event_id") + lit(86400000L)).as("ts"))
-        .as[graft.streaming.Stateful.MlInput]
-      val out = graft.streaming.Stateful.kubeCriAssemble(in)
-      graft.streaming.StreamGate.run(out.toDF(), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .select(col("path"), col("seq"), col("msg"), col("stream"),
-          col("fmt"), col("parse_error"),
-          unix_millis(col("ts")).as("ts_ms"))
-    }),
-
-    "stream_multiline" -> ((s, dir) => {
-      import s.implicits._
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val in = ev.select(
-        concat(lit("file"), col("user_id") % 8).as("key"),
-        col("event_id").as("seq"),
-        when(col("event_id") % 4 === 0,
-          concat(lit("START "), col("event_type"), lit(" "), col("event_id")))
-          .otherwise(concat(lit(" cont "), col("event_id"))).as("line"),
-        // +1 day: epoch-0 event time would equal the INITIAL watermark (0)
-        // and be dropped as late before the state machine ever saw it
-        timestamp_millis(col("event_id") + lit(86400000L)).as("ts"))
-        .as[graft.streaming.Stateful.MlInput]
-      val out = graft.streaming.Stateful.imfileMultiline(in,
-        startRegex = Some("^START"), endRegex = None, flushAfterMs = -1L)
-      graft.streaming.StreamGate.run(out.toDF(), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .select(col("key"), col("startSeq").as("start_seq"), col("record"))
-    }),
-
-    // §2.5 imfile readMode 2 ("indented") through the state store:
-    // indented lines continue the record, blank lines terminate (and are
-    // eaten), an indented line after a flush starts its own record —
-    // all mirrored in the oracle's lag()-aware island reconstruction.
-    // Same +1-day event-time offset as stream_multiline.
-    "stream_readmode" -> ((s, dir) => {
-      import s.implicits._
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val in = ev.select(
-        concat(lit("file"), col("user_id") % 8).as("key"),
-        col("event_id").as("seq"),
-        when(col("event_id") % 5 === 4, lit(""))
-          .when(col("event_id") % 5 === 0,
-            concat(lit("REC "), col("event_type"), lit(" "), col("event_id")))
-          .otherwise(concat(lit("  cont "), col("event_id"))).as("line"),
-        timestamp_millis(col("event_id") + lit(86400000L)).as("ts"))
-        .as[graft.streaming.Stateful.MlInput]
-      val out = graft.streaming.Stateful.imfileReadMode(in, readMode = 2,
-        flushAfterMs = -1L)
-      graft.streaming.StreamGate.run(out.toDF(), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .select(col("key"), col("startSeq").as("start_seq"), col("record"))
-    }),
-
-    // streaming exact dedup (the LLM-pipeline streaming face): content
-    // fingerprints through dropDuplicatesWithinWatermark — which row of
-    // a dup group wins is arrival-dependent, so the oracle-checked
-    // output is the winner-invariant part (the fingerprint set, one row
-    // each); state is watermark-bounded exactly as at 100 TB/day
-    "stream_dedup" -> ((s, dir) => {
-      val docs = graft.streaming.StreamGate.readTable(s, dir, "documents")
-        .withColumn("ts", timestamp_millis(col("doc_id") + lit(86400000L)))
-      val dd = graft.streaming.Stateful.dedupExact(docs, "text", "ts", "1 hour")
-      // sink cardinality = the fingerprint set, which IS the oracle
-      // contract — irreducible; only the state shuffle scales
-      graft.streaming.StreamGate.run(dd.select(col("fp")), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "documents"))
-        .groupBy(col("fp")).agg(count(lit(1)).as("n"))
-    }),
-
-    // streaming face of the cross-snapshot dedup (continuous crawl
-    // ingest): prior snapshot = static side (bloom built once,
-    // driver-side, fixed bytes); fresh docs stream through a stateless
-    // bloom-miss filter, bloom hits exact-verify via a stream-static
-    // LEFT ANTI join. Zero streaming state — no watermark, no store.
-    "stream_dedup_snapshot" -> ((s, dir) => {
-      val stream = graft.streaming.StreamGate.readTable(s, dir, "documents")
-        .filter(col("doc_id") % 3 =!= 0)
-      val snapshot = Tables.documents(s, dir).filter(col("doc_id") % 3 === 0)
-      val kept = Dedup.snapshotDedupStream(stream, snapshot, "doc_id", "text")
-      graft.streaming.StreamGate.run(kept, "append",
-        graft.streaming.StreamGate.tableBytes(dir, "documents"))
-    }),
-
-    // fuzzy face of the streaming ingest: each arriving doc's LSH bands
-    // probe the static snapshot's capped band table (stream-static
-    // inner join), survivors exact-verify, and the complete-mode fold
-    // emits one (doc_id, micro_jaccard) per contaminated doc — the
-    // drop feed a continuous crawl acts on. Zero watermark state.
-    "stream_dedup_snapshot_fuzzy" -> ((s, dir) => {
-      val stream = graft.streaming.StreamGate.readTable(s, dir, "documents")
-        .filter(col("doc_id") % 3 =!= 0)
-      val snapshot = Tables.documents(s, dir).filter(col("doc_id") % 3 === 0)
-      val bad = Dedup.snapshotNearDupStream(stream, snapshot, "doc_id", "text")
-      graft.streaming.StreamGate.run(bad, "complete",
-        graft.streaming.StreamGate.tableBytes(dir, "documents"))
-    }),
-
-    // streaming face of the contamination REPORT (r13 verdict #7): the
-    // batch report needs two aggregations (gram-level intersection,
-    // then the eval-side fold) and streaming allows one — so the
-    // gram-level half moves scan-side into the eval_contam kernel (the
-    // eval gram sets are a bounded reference object, the same
-    // justification as the batch broadcast) and the single complete-mode
-    // groupBy(eval_id) holds eval-sized state. Eval docs ride the SAME
-    // stream: their rows emit one zero-marker each (mjac null), so
-    // n_contaminated = count(non-null doc) covers the whole eval set —
-    // values bit-equal to the batch report (same oracle)
-    "stream_contamination_report" -> ((s, dir) => {
-      val n = 5
-      // bounded collect: the eval split (doc_id % 97), gram sets via the
-      // SAME Spark expressions the batch path uses
-      val evalRows = Tables.documents(s, dir)
-        .filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), array_distinct(TextAnalysis.wordNgrams(
-          TextAnalysis.tokens(col("text")), n)).as("gs"))
-        .filter(size(col("gs")) > 0)
-        .collect().map(r => (r.getLong(0), r.getSeq[String](1).toArray))
-        .sortBy(_._1)
-      val stream = graft.streaming.StreamGate.readTable(s, dir, "documents")
-      val withToks = stream.select(col("doc_id"),
-        TextAnalysis.tokens(col("text")).as("t"))
-      val matches = org.apache.spark.sql.GraftBridge.column(
-        graft.functions.EvalContamExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("t")),
-          evalRows.map(_._1), evalRows.map(_._2), n, 500000L))
-      val marker = array(struct(col("doc_id").as("eval_id"),
-        lit(null).cast("long").as("mjac")))
-      val shaped = withToks
-        .select(col("doc_id"),
-          when(col("doc_id") % 97 === 0,
-            // eval row: one zero-marker iff it meets the >=n-token
-            // membership rule; slice(.., 1, 0) = typed empty array
-            when(size(col("t")) >= n, marker).otherwise(slice(marker, 1, 0)))
-          .otherwise(matches).as("ms"))
-        .select(col("doc_id"), explode(col("ms")).as("m"))
-        .select(col("m.eval_id").as("eval_id"), col("m.mjac").as("mjac"),
-          when(col("m.mjac").isNotNull, col("doc_id")).as("doc"))
-        .groupBy(col("eval_id"))
-        .agg(count(col("doc")).as("n_contaminated"),
-          max(col("mjac")).as("max_micro_jaccard"),
-          min(col("doc")).as("first_doc"))
-      graft.streaming.StreamGate.run(shaped, "complete",
-        graft.streaming.StreamGate.tableBytes(dir, "documents"))
-    }),
-
-    // streaming face of the cluster-balance audit: the codebook trains
-    // from the STATIC table before the stream starts (bounded ≤nlist
-    // collect — production loads a trained codebook the same way), then
-    // every arriving vector assigns statelessly via the broadcast
-    // centroids and the complete-mode fold keeps ≤nlist groups of four
-    // combinable aggregates. Zero watermark state.
-    "stream_cluster_topics" -> ((s, dir) => {
-      val cents = graft.operators.Similarity.defaultTopicCodebook(
-        Tables.embeddings(s, dir))
-      val stream = graft.streaming.StreamGate.readTable(s, dir, "embeddings")
-      val agg = graft.operators.Similarity.clusterTopics(stream, Some(cents))
-      graft.streaming.StreamGate.run(agg, "complete",
-        graft.streaming.StreamGate.tableBytes(dir, "embeddings"))
-    }),
-
-    // corpus statistics denominated in SUBWORD tokens: the per-language
-    // share/quantile table a mixture plan actually budgets from (the
-    // whitespace-vs-BPE delta this fixes is up to ~3x per language)
-    "corpus_stats_bpe" -> ((s, dir) => {
-      val v = graft.functions.BpeFixture.vocab
-      Tables.documents(s, dir)
-        .select(col("source"), col("lang"),
-          TextAnalysis.bpeCount(col("text"), v).as("n_tok"),
-          length(col("text")).as("n_chars"))
-        .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).cast("long").as("sum_tokens"),
-          round(avg(col("n_chars")) * 100).cast("long").as("mean_chars_x100"),
-          round(percentile(col("n_tok"), lit(0.5)) * 10).cast("long")
-            .as("p50_tokens_x10"),
-          round(percentile(col("n_tok"), lit(0.9)) * 10).cast("long")
-            .as("p90_tokens_x10"),
-          max(col("n_tok")).cast("long").as("max_tokens"))
-    }),
-
-    // streaming face of the corpus statistics table: scan-side token
-    // counting feeds a complete-mode groupBy whose exact-percentile
-    // buffers are bounded by DISTINCT token counts per (source, lang) —
-    // the same bound that makes the batch shape safe makes the
-    // streaming state safe. ≤ #groups output rows.
-    // BPE tokenization on the streaming path: encode is a stateless
-    // scan-side kernel under the frozen fixture vocab (the codebook is
-    // a reference object, not state), so the stream face is a pure
-    // append projection — the shape a tokenize-on-ingest pipeline runs
-    "stream_tokenize_bpe" -> ((s, dir) => {
-      val v = graft.functions.BpeFixture.vocab
-      val stream = graft.streaming.StreamGate.readTable(s, dir, "documents")
-      val firstWord = element_at(TextAnalysis.tokens(col("text")), 1)
-      val out = stream.select(
-        col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_ws"),
-        TextAnalysis.bpeCount(col("text"), v).cast("long").as("n_bpe"),
-        array_join(TextAnalysis.bpeEncode(firstWord, v), "|").as("w1_toks"))
-      graft.streaming.StreamGate.run(out, "append",
-        graft.streaming.StreamGate.tableBytes(dir, "documents"))
-    }),
-
-    // streaming face of the tokenizer fertility audit: the per-word
-    // trie counts are a stateless scan-side transform (frozen vocab =
-    // reference object, not state) and the fold is one complete-mode
-    // groupBy with ≤ #sources rows of state — the stream_corpus_stats
-    // bound, with the trie kernel in place of the whitespace counter
-    "stream_bpe_fertility" -> ((s, dir) => {
-      val v = graft.functions.BpeFixture.vocab
-      val stream = graft.streaming.StreamGate.readTable(s, dir, "documents")
-      val wcounts = transform(TextAnalysis.tokens(col("text")),
-        w => TextAnalysis.bpeCount(w, v).cast("long"))
-      val agg = stream
-        .select(col("source"), wcounts.as("wc"))
-        .select(col("source"),
-          size(col("wc")).cast("long").as("n_words"),
-          aggregate(col("wc"), lit(0L), (a, c) => a + c).as("n_bpe"),
-          size(filter(col("wc"), c => c === 1L)).cast("long").as("n_single"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("n_words"),
-          sum(col("n_bpe")).as("n_bpe"),
-          sum(col("n_single")).as("n_single"))
-        .select(col("source"), col("n_docs"), col("n_words"), col("n_bpe"),
-          col("n_single"),
-          expr("(n_bpe * CAST(1000000 AS BIGINT)) div greatest(n_words, 1)")
-            .as("fertility_micro"),
-          expr("(n_single * CAST(1000000 AS BIGINT)) div greatest(n_words, 1)")
-            .as("single_micro"))
-      graft.streaming.StreamGate.run(agg, "complete",
-        graft.streaming.StreamGate.tableBytes(dir, "documents"))
-    }),
-
-    "stream_corpus_stats" -> ((s, dir) => {
-      val stream = graft.streaming.StreamGate.readTable(s, dir, "documents")
-      val agg = stream
-        .select(col("source"), col("lang"),
-          TextAnalysis.tokenCount(col("text")).as("n_tok"),
-          length(col("text")).as("n_chars"))
-        .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).cast("long").as("sum_tokens"),
-          round(avg(col("n_chars")) * 100).cast("long").as("mean_chars_x100"),
-          round(percentile(col("n_tok"), lit(0.5)) * 10).cast("long")
-            .as("p50_tokens_x10"),
-          round(percentile(col("n_tok"), lit(0.9)) * 10).cast("long")
-            .as("p90_tokens_x10"),
-          max(col("n_tok")).cast("long").as("max_tokens"))
-      graft.streaming.StreamGate.run(agg, "complete",
-        graft.streaming.StreamGate.tableBytes(dir, "documents"))
-    }),
-
-    // the flagship LLM corpus-prep composition on the REAL streaming
-    // path: scan-side scoring → quality filter → exact-bytes streaming
-    // dedup (md5 of raw text as the key, so every group member is
-    // byte-identical and all per-doc stats are winner-invariant) →
-    // per-language accounting over the sink. State bounded by the
-    // watermark horizon exactly as a 100 TB/day run would be.
-    "stream_llm_prep" -> ((s, dir) => {
-      val docs = graft.streaming.StreamGate.readTable(s, dir, "documents")
-        .withColumn("ts", timestamp_millis(col("doc_id") + lit(86400000L)))
-      val scored = docs
-        .select(col("text"), col("ts"),
-          TextAnalysis.tokens(col("text")).as("toks"))
-        .select(col("text"), col("ts"),
-          TextAnalysis.langIdFromTokens(col("toks")).as("lang_pred"),
-          TextAnalysis.qualityScoreFrom(length(col("text")), size(col("toks")),
-            TextAnalysis.charClassCount(col("text"), "[A-Za-z]"),
-            TextAnalysis.charClassCount(col("text"), "[0-9]"))
-            .as("quality"),
-          size(col("toks")).as("n_tokens"))
-        .filter(col("quality") >= 0.5)
-      val deduped = scored
-        .withColumn("fp", md5(col("text")))
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("fp")
-      // per-language fold inside the streaming query (complete mode):
-      // the sink holds #languages rows, not every unique document
-      graft.streaming.StreamGate.run(
-        deduped.groupBy(col("lang_pred"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).cast("long").as("sum_tokens")),
-        "complete", graft.streaming.StreamGate.tableBytes(dir, "documents"))
-    }),
-
-    // §2.10 omsendertrack through the state store: running per-sender
-    // first/last-seen + volume counters, final snapshot per sender
-    "stream_sender_track" -> ((s, dir) => {
-      import s.implicits._
-      val synth = synthFrom(graft.streaming.StreamGate.readTable(s, dir, "events"))
-      val in = synth.select(
-        col("hostname").as("sender"),
-        expr("ts_ns div 1000000000").as("tsMillis"), // epoch seconds
-        col("v100").as("bytes"))
-        .as[graft.streaming.Stateful.StInput]
-      val snaps = graft.streaming.Stateful.senderTrack(in)
-      // all fields monotone → final snapshot per sender
-      graft.streaming.StreamGate.run(snaps.toDF(), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .groupBy(col("sender"))
-        .agg(min(col("first_seen")).as("first_seen"),
-          max(col("last_seen")).as("last_seen"),
-          max(col("n_msgs")).as("n_msgs"),
-          max(col("n_bytes")).as("n_bytes"))
-    }),
-
-    // §2.7 perctile_stats through the state store: the ring buffer holds
-    // every observation (windowSize > input), so the final snapshot's
-    // order statistics are batch-exact and order-independent; per-batch
-    // snapshots are monotone in window_count → final = max-struct
-    "stream_perctile" -> ((s, dir) => {
-      import s.implicits._
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-      val in = ev.select(
-        lit("events").as("bucket"),
-        col("event_type").as("key"),
-        floor(col("value") * 100).cast("long").as("value"))
-        .as[graft.streaming.Stateful.PctInput]
-      val snaps = graft.streaming.Stateful.perctileStats(in, windowSize = 1 << 20)
-      graft.streaming.StreamGate.run(snaps.toDF(), "append",
-          graft.streaming.StreamGate.tableBytes(dir, "events"))
-        .groupBy(col("key"))
-        .agg(max(struct(col("window_count"), col("window_min"),
-          col("window_max"), col("window_sum"),
-          col("p50"), col("p95"), col("p99"))).as("f"))
-        .select(col("key"), col("f.window_count").as("window_count"),
-          col("f.window_min").as("window_min"),
-          col("f.window_max").as("window_max"),
-          col("f.window_sum").as("window_sum"),
-          col("f.p50").as("p50"), col("f.p95").as("p95"), col("f.p99").as("p99"))
-    }),
-
-    // §2.9 mmkubernetes — stream-static enrichment join through the gate:
-    // the static pod-metadata cache (the API-server snapshot) broadcast
-    // against a streaming frame; per-namespace routing counts. The
-    // reference caches API lookups per pod (plugins/mmkubernetes); the
-    // engine's equivalent is exactly this broadcast stream-static join.
-    "stream_kube_enrich" -> ((s, dir) => {
-      val pods = Tables.nation(s, dir).select(
-        concat(lit("pod-"), col("n_nationkey")).as("pod"),
-        col("n_name").as("pod_ns"),
-        col("n_regionkey").as("zone"))
-      val ev = graft.streaming.StreamGate.readTable(s, dir, "events")
-        .withColumn("pod", concat(lit("pod-"), col("user_id") % 25))
-      val joined = ev.join(broadcast(pods), Seq("pod"), "left")
-        .select(col("event_id"), col("pod_ns"), col("zone"))
-      // per-namespace fold inside the streaming query: the sink holds
-      // #(pod_ns, zone) rows, never the enriched event stream
-      graft.streaming.StreamGate.run(
-        joined.groupBy(col("pod_ns"), col("zone"))
-          .agg(count(lit(1)).as("n"), min(col("event_id")).as("first_event")),
-        "complete", graft.streaming.StreamGate.tableBytes(dir, "events"))
-    })
-  )
-
-  // ---------------------------------------------------------------- oracles
-
-  // shared between a batch query and its streaming twin — the gate's point
-  // is that both paths hit the SAME oracle
-  private val pipelineOracle: String = synthSql +
-    """ SELECT hostname, count(*) AS n,
-      |  max(length(
-      |    strftime(CAST(ts AS TIMESTAMP), '%b') || ' ' ||
-      |    lpad(CAST(day(ts) AS VARCHAR), 2, ' ') || ' ' ||
-      |    strftime(CAST(ts AS TIMESTAMP), '%H:%M:%S') || ' ' ||
-      |    hostname || ' ' || syslogtag || ': ' ||
-      |    (['emerg','alert','crit','err','warning','notice','info','debug'])[severity + 1]
-      |    || ': ' ||
-      |    'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') || ': v100=' || v100
-      |  )) AS max_len
-      | FROM ev WHERE severity <= 4 GROUP BY 1""".stripMargin
-
-  private val ratelimitOracle: String =
-    """WITH seq AS (
-      |  SELECT user_id, row_number() OVER (
-      |    PARTITION BY user_id, epoch_ns(ts)//1000000000//3600
-      |    ORDER BY event_id) AS rn
-      |  FROM events)
-      |SELECT user_id, count(*) AS n_passed FROM seq WHERE rn <= 3 GROUP BY 1""".stripMargin
-
-  // greedy longest-match replay of the fixture vocabulary: one
-  // recursive-CTE chain per DISTINCT word, corpus joins back through
-  // the word (see functions.Bpe.oracleCtes). Shared by the batch and
-  // streaming faces — the projection is identical on both paths.
-  /** Shared by `bpe_fertility` and its complete-mode streaming face —
-    * the per-word encode replay (Bpe.oracleCtes) rolled up to
-    * per-source fertility; values bit-equal in both modes by
-    * construction (same scan-side kernel, same fold). */
-  private val bpeFertilityOracleSql: String =
-    graft.functions.Bpe.oracleCtes(graft.functions.BpeFixture.sqlValues) +
-      """,
-        |perdoc AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-        |    CAST(sum(s.n_tok) AS BIGINT) AS n_bpe,
-        |    CAST(sum(CASE WHEN s.n_tok = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_single
-        |  FROM words JOIN steps s USING (w) GROUP BY doc_id),
-        |per AS (
-        |  SELECT b.source, count(*) AS n_docs,
-        |    CAST(sum(coalesce(p.n_words, 0)) AS BIGINT) AS n_words,
-        |    CAST(sum(coalesce(p.n_bpe, 0)) AS BIGINT) AS n_bpe,
-        |    CAST(sum(coalesce(p.n_single, 0)) AS BIGINT) AS n_single
-        |  FROM base b LEFT JOIN perdoc p USING (doc_id) GROUP BY 1)
-        |SELECT source, n_docs, n_words, n_bpe, n_single,
-        |  CAST(n_bpe * 1000000 // greatest(n_words, 1) AS BIGINT)
-        |    AS fertility_micro,
-        |  CAST(n_single * 1000000 // greatest(n_words, 1) AS BIGINT)
-        |    AS single_micro
-        |FROM per""".stripMargin
-
-  private val tokenizeBpeOracleSql: String =
-    graft.functions.Bpe.oracleCtes(graft.functions.BpeFixture.sqlValues) +
-      """,
-        |perdoc AS (
-        |  SELECT doc_id, count(*) AS n_ws, sum(s.n_tok) AS n_bpe
-        |  FROM words JOIN steps s USING (w) GROUP BY doc_id)
-        |SELECT b.doc_id, CAST(coalesce(p.n_ws, 0) AS BIGINT) AS n_ws,
-        |  CAST(coalesce(p.n_bpe, 0) AS BIGINT) AS n_bpe,
-        |  array_to_string(s1.toks, '|') AS w1_toks
-        |FROM base b
-        |LEFT JOIN perdoc p USING (doc_id)
-        |LEFT JOIN steps s1 ON s1.w = b.ws[1]""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-
-    "q3_join" ->
-      """SELECT o_orderpriority,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(DISTINCT o_orderkey) AS n_orders
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY 1""".stripMargin,
-
-    // mask per facility for "uucp.err;mail.none;local0.=debug;
-    // local4.!=debug": uucp(8) bits 0-3 (err and more severe), mail(2)
-    // cleared, local0(16) exact debug = 0x80, local4(20) = ALLPRI minus
-    // debug (standalone negated selector pre-fills, issue #1030) = 0x7F,
-    // every other facility untouched = 0
-    "prifilt" -> (synthSql +
-      """ SELECT facility, severity, count(*) AS n FROM ev
-        | WHERE ((CASE
-        |   WHEN facility = 8 THEN 15
-        |   WHEN facility = 16 THEN 128
-        |   WHEN facility = 20 THEN 127
-        |   ELSE 0 END) & (1 << severity)) <> 0
-        | GROUP BY 1, 2""".stripMargin),
-
-    "propfilt" ->
-      """SELECT lang, count(*) AS n FROM documents
-        |WHERE text LIKE '%spark%' AND text NOT LIKE 'the%'
-        |  AND regexp_matches(text, 'join .* merge')
-        |GROUP BY 1""".stripMargin,
-
-    "set_unset_json" ->
-      """SELECT event_id,
-        |  round(value * 2, 2) AS vdouble,
-        |  true AS k_gone
-        |FROM events""".stripMargin,
-
-    "json_spaced" ->
-      """SELECT event_id,
-        |  '{ "k": ' || k || ', "enrich": { "tag": "' || event_type ||
-        |    '", "arr": [ ' || user_id || ', ' || (user_id + 1) || ' ] } }' AS whole,
-        |  '{ "tag": "' || event_type || '", "arr": [ ' || user_id || ', '
-        |    || (user_id + 1) || ' ] }' AS sub,
-        |  event_type AS tag_raw,
-        |  '<null>' AS missing,
-        |  '{}' AS allj_null
-        |FROM (SELECT event_id, event_type, user_id,
-        |  CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)""".stripMargin,
-
-    "foreach_explode" ->
-      """SELECT word, count(*) AS n FROM (
-        |  SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        |) WHERE word <> '' GROUP BY 1""".stripMargin,
-
-    "relp_decode" -> (Queries.synthSql +
-      """ SELECT event_id, facility, severity, hostname,
-        |  syslogtag || ':' AS syslogtag,
-        |  ' msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0')
-        |    || ': v100=' || v100 AS msg
-        | FROM ev""".stripMargin),
-
-    "es_bulk_batches" ->
-      """WITH p AS (
-        |  SELECT event_id, 'idx' || (user_id % 3) AS idx,
-        |    '{"index":{"_index":"idx' || (user_id % 3) || '","_id":"' ||
-        |      lpad(CAST(event_id AS VARCHAR), 8, '0') || '"}}' || chr(10) ||
-        |    '{"n":"' || lpad(CAST(event_id AS VARCHAR), 8, '0') || '"}' AS pair
-        |  FROM events),
-        |r AS (SELECT *,
-        |  row_number() OVER (PARTITION BY idx ORDER BY event_id) - 1 AS rn
-        |  FROM p)
-        |SELECT idx, rn // 5 AS batch_idx,
-        |  string_agg(pair, chr(10) ORDER BY event_id) || chr(10) AS payload,
-        |  count(*) AS n_events,
-        |  CAST(strlen(string_agg(pair, chr(10) ORDER BY event_id)) + 1
-        |    AS BIGINT) AS payload_bytes,
-        |  CAST(0 AS BIGINT) AS n_dropped,
-        |  min(event_id) AS first_ord, max(event_id) AS last_ord
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    "es_bulk" ->
-      """SELECT '{"index":{"_index":"logs-' || event_type || '","_id":'
-        |  || event_id || '}}' || chr(10) ||
-        |  '{"event_id":' || event_id || ',"event_type":"' || event_type
-        |  || '"}' AS bulk
-        |FROM events""".stripMargin,
-
-    "omfwd_frame" ->
-      """SELECT event_id,
-        |  CAST(strlen(m) AS VARCHAR) || ' ' || m AS framed
-        |FROM (SELECT event_id,
-        |  '<13>host µfwd ' || event_type || ' msgnum:' ||
-        |    lpad(CAST(event_id AS VARCHAR), 8, '0') AS m
-        |  FROM events)""".stripMargin,
-
-    "omfwd_pool" ->
-      """SELECT event_id,
-        |  CASE (event_id // 4) % 2 WHEN 0 THEN 'siteA:514'
-        |       ELSE 'siteC:10514' END AS target,
-        |  CAST(strlen(m) AS VARCHAR) || ' ' || m AS framed
-        |FROM (SELECT event_id,
-        |  '<13>h omfwd msgnum:' ||
-        |    lpad(CAST(event_id AS VARCHAR), 8, '0') AS m
-        |  FROM events)""".stripMargin,
-
-    "omfwd_pool_stats" ->
-      """WITH a AS (
-        |  SELECT CASE (event_id // 4) % 2 WHEN 0 THEN 'TCP-siteA-514'
-        |           ELSE 'TCP-siteC-10514' END AS stat_name,
-        |    strlen(CAST(strlen(m) AS VARCHAR) || ' ' || m) AS blen
-        |  FROM (SELECT event_id,
-        |    '<13>h omfwd msgnum:' ||
-        |      lpad(CAST(event_id AS VARCHAR), 8, '0') AS m
-        |    FROM events))
-        |SELECT stat_name, 'omfwd' AS origin,
-        |  count(*) AS messages_sent,
-        |  CAST(SUM(blen) AS BIGINT) AS bytes_sent
-        |FROM a GROUP BY 1""".stripMargin,
-
-    "omdb_insert" -> (Queries.synthSql +
-      """ SELECT event_id,
-        |  'insert into SystemEvents (Message, Facility, FromHost, ' ||
-        |  'Priority, DeviceReportedTime, ReceivedAt, InfoUnitID, ' ||
-        |  'SysLogTag) values (''' ||
-        |  replace(replace(msg, '\', '\\'), '''', '\''') || ''', ' ||
-        |  facility || ', ''' || hostname || ''', ' || severity ||
-        |  ', ''' || strftime(ts, '%Y%m%d%H%M%S') || ''', ''' ||
-        |  strftime(ts, '%Y%m%d%H%M%S') || ''', 1, ''' || syslogtag ||
-        |  ''')' AS mysql_stmt,
-        |  'insert into SystemEvents (Message, Facility, FromHost, ' ||
-        |  'Priority, DeviceReportedTime, ReceivedAt, InfoUnitID, ' ||
-        |  'SysLogTag) values (''' ||
-        |  replace(msg, '''', '''''') || ''', ' ||
-        |  facility || ', ''' || hostname || ''', ' || severity ||
-        |  ', ''' || strftime(ts, '%Y-%m-%d %H:%M:%S') || ''', ''' ||
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S') || ''', 1, ''' || syslogtag ||
-        |  ''')' AS pgsql_stmt
-        | FROM (SELECT *, 'it''s a b\s ' || event_type AS msg FROM ev)""".stripMargin),
-
-    "omhiredis_cmd" -> (Queries.synthSql +
-      """ SELECT event_id,
-        |  'LPUSH syslog_q ' || m AS cmd_queue,
-        |  'RPUSH syslog_q ' || m AS cmd_rpush,
-        |  'PUBLISH ' || hostname || ' ' || m AS cmd_publish,
-        |  'SETEX k' || event_id || ' 300 ' || m AS cmd_setex,
-        |  'XADD st MAXLEN ~ 100000 * msg ' || m AS cmd_xadd
-        | FROM (SELECT *,
-        |   'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') AS m
-        |   FROM ev)""".stripMargin),
-
-    "amqp_publish" -> (Queries.synthSql +
-      """, names AS (
-        |  SELECT *,
-        |    ['kern','user','mail','daemon','auth','syslog','lpr','news',
-        |     'uucp','cron','authpriv','ftp','ntp','audit','alert','clock',
-        |     'local0','local1','local2','local3','local4','local5',
-        |     'local6','local7'][facility + 1] AS fac_t,
-        |    ['emerg','alert','crit','err','warning','notice','info',
-        |     'debug'][severity + 1] AS sev_t,
-        |    'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') AS m
-        |  FROM ev)
-        | SELECT event_id,
-        |  '{"exchange":"syslog","routing_key":"' || fac_t || '.' || sev_t ||
-        |  '","properties":{"content_type":"text/plain","delivery_mode":2,' ||
-        |  '"timestamp":' || epoch_ns(ts) // 1000000000 ||
-        |  ',"app_id":"' || syslogtag ||
-        |  '","headers":{"facility":"' || fac_t ||
-        |  '","severity":"' || sev_t ||
-        |  '","hostname":"' || hostname ||
-        |  '","fromhost":"' || hostname ||
-        |  '"}},"body":"' || m || '"}' AS amqp_publish,
-        |  sev_t AS probe_sev,
-        |  2 AS probe_dmode,
-        |  fac_t || '.' || sev_t AS probe_rk
-        | FROM names""".stripMargin),
-
-    "czmq_pub" -> (Queries.synthSql +
-      """ SELECT event_id, topic, payload,
-        |   2 AS n_frames,
-        |   topic || chr(1) || payload AS frames_wire
-        | FROM (
-        |   SELECT event_id, 'syslog.all' AS topic,
-        |     'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') AS payload
-        |   FROM ev
-        |   UNION ALL
-        |   SELECT event_id, 'syslog.sev' || (event_id % 8),
-        |     'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0')
-        |   FROM ev)""".stripMargin),
-
-    "mmaitag" -> (Queries.synthSql +
-      """ SELECT event_id,
-        |  CASE rn WHEN 1 THEN 'NOISE' WHEN 2 THEN 'CRITICAL'
-        |    WHEN 3 THEN 'IMPORTANT' WHEN 4 THEN 'NOISE'
-        |    WHEN 5 THEN 'REGULAR' WHEN 6 THEN 'CRITICAL'
-        |    ELSE 'REGULAR' END AS aitag
-        | FROM (SELECT event_id,
-        |    row_number() OVER (ORDER BY event_id) AS rn
-        |  FROM ev WHERE event_id % 97 = 0)""".stripMargin),
-
-    "sender_snapshot" -> (synthSql +
-      """, st AS (
-        |  SELECT hostname AS sender, count(*) AS messages,
-        |    min(epoch_ns(ts) // 1000000000) AS firstseen,
-        |    max(epoch_ns(ts) // 1000000000) AS lastseen
-        |  FROM ev GROUP BY 1),
-        |f AS (
-        |  SELECT '[' || chr(10) ||
-        |    string_agg('{"sender":"' || sender || '","messages":' ||
-        |      messages || ',"firstseen":' || firstseen || ',"lastseen":' ||
-        |      lastseen || '}', ',' || chr(10) ORDER BY sender) ||
-        |    chr(10) || ']' || chr(10) AS statefile
-        |  FROM st)
-        |SELECT statefile,
-        |  json_extract_string(statefile, '$[0].sender') AS probe_sender,
-        |  CAST(json_extract(statefile, '$[0].messages') AS BIGINT)
-        |    AS probe_messages
-        |FROM f""".stripMargin),
-
-    "config_translate" ->
-      """SELECT 1 AS case_id, 'yaml' AS fmt,
-        |  E'version: 2\n\nrulesets:\n  - name: "main"\n    filter: "mail.info"\n    actions:\n      - type: "omfile"\n        file: "/tmp/fa.log"\n' AS out
-        |UNION ALL
-        |SELECT 2, 'rainerscript',
-        |  E'main_queue(queue.type="Direct")\n\nruleset(name="main") {\n  action(type="omstdout")\n}\n\n'""".stripMargin,
-
-    "config_yaml" -> (synthSql +
-      """ SELECT
-        |  count(CASE WHEN facility = 2 THEN 1 END) AS n_mail,
-        |  count(CASE WHEN event_id % 7 <> 0 THEN 1 END) AS n_fwd,
-        |  CAST(sum(CASE WHEN event_id % 7 <> 0
-        |    THEN severity * severity END) AS BIGINT) AS sevsq_sum
-        | FROM ev""".stripMargin),
-
-    "ratelimit_policy" -> (synthSql +
-      """, r AS (
-        |  SELECT hostname, event_id, severity,
-        |    epoch_ns(ts)//1000000000//2592000 AS win,
-        |    CASE WHEN severity < 6 THEN 0 ELSE 1 END AS subject
-        |  FROM ev),
-        |c AS (
-        |  SELECT *, sum(subject) OVER (
-        |    PARTITION BY hostname, win ORDER BY event_id) AS seq
-        |  FROM r),
-        |f AS (
-        |  SELECT hostname,
-        |    (subject = 1 AND seq >
-        |      (CASE WHEN hostname = 'host1' THEN 10 ELSE 3 END)) AS limited
-        |  FROM c)
-        |SELECT hostname, count(*) AS n_in,
-        |  count(*) FILTER (WHERE limited) AS n_limited,
-        |  count(*) FILTER (WHERE NOT limited) AS n_pass
-        |FROM f GROUP BY 1""".stripMargin),
-
-    "queue_shed" -> (synthSql +
-      """, w AS (
-        |  SELECT severity,
-        |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS ws FROM ev),
-        |c AS (SELECT *, count(*) OVER (PARTITION BY ws) AS depth FROM w),
-        |f AS (SELECT ws, severity,
-        |  (depth >= 50 AND severity >= 4) AS shed FROM c)
-        |SELECT ws, count(*) AS n_total,
-        |  count(*) FILTER (WHERE shed) AS n_shed,
-        |  count(*) FILTER (WHERE NOT shed) AS n_kept,
-        |  CAST(sum(CASE WHEN NOT shed THEN severity ELSE 0 END) AS BIGINT)
-        |    AS sev_kept
-        |FROM f GROUP BY 1""".stripMargin),
-
-    // same shed policy as queue_shed, restricted to watermark-closed
-    // windows (append mode: a window emits once the watermark passes it)
-    "stream_queue_shed" -> (synthSql +
-      """, w AS (
-        |  SELECT severity,
-        |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS ws FROM ev),
-        |g AS (
-        |  SELECT ws, count(*) AS n_total,
-        |    count(*) FILTER (WHERE severity >= 4) AS n_hi,
-        |    CAST(sum(severity) AS BIGINT) AS sev_all,
-        |    CAST(sum(CASE WHEN severity >= 4 THEN severity ELSE 0 END)
-        |      AS BIGINT) AS sev_hi
-        |  FROM w GROUP BY 1)
-        |SELECT ws, n_total,
-        |  CASE WHEN n_total >= 50 THEN n_hi ELSE 0 END AS n_shed,
-        |  CASE WHEN n_total >= 50 THEN n_total - n_hi ELSE n_total END
-        |    AS n_kept,
-        |  CASE WHEN n_total >= 50 THEN sev_all - sev_hi ELSE sev_all END
-        |    AS sev_kept
-        |FROM g
-        |WHERE ws + INTERVAL 1 DAY <=
-        |  (SELECT max(CAST(ts AS TIMESTAMP)) FROM events)""".stripMargin),
-
-    "imdiag_inject" ->
-      """SELECT event_id,
-        |  '<167>Mar  1 01:00:00 192.0.2.8 tag msgnum:' ||
-        |    lpad(CAST(event_id AS VARCHAR), 8, '0') || ':' AS rawmsg,
-        |  CAST(20 AS INT) AS facility, CAST(7 AS INT) AS severity,
-        |  '192.0.2.8' AS hostname, 'tag' AS syslogtag,
-        |  ' msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') || ':'
-        |    AS msg,
-        |  true AS parsesuccess
-        |FROM events""".stripMargin,
-
-    "impstats_formats" ->
-      """WITH t AS (
-        |  SELECT 'events.' || event_type AS name,
-        |    count(*) AS submitted,
-        |    count(*) FILTER (WHERE event_id % 7 = 0) AS discarded
-        |  FROM events GROUP BY 1),
-        |m AS (
-        |  SELECT *,
-        |    'U__' || replace(replace(name || '_submitted_total',
-        |      '_', '__'), '.', '_2E_') AS m_sub,
-        |    'U__' || replace(replace(name || '_ratelimit.discarded_total',
-        |      '_', '__'), '.', '_2E_') AS m_dis
-        |  FROM t)
-        |SELECT name,
-        |  name || ': origin=imfile submitted=' || submitted ||
-        |    ' ratelimit.discarded=' || discarded || ' ' AS legacy,
-        |  '{ "name": "' || name || '", "origin": "imfile", "submitted": ' ||
-        |    submitted || ', "ratelimit.discarded": ' || discarded || ' }'
-        |    AS json,
-        |  '{ "name": "' || name || '", "origin": "imfile", "submitted": ' ||
-        |    submitted || ', "ratelimit!discarded": ' || discarded || ' }'
-        |    AS json_es,
-        |  '@cee: { "name": "' || name || '", "origin": "imfile", "submitted": '
-        |    || submitted || ', "ratelimit.discarded": ' || discarded || ' }'
-        |    AS cee,
-        |  '# HELP ' || m_sub || ' rsyslog stats: origin="imfile" object="' ||
-        |    name || '", counter="submitted"' || chr(10) ||
-        |    '# TYPE ' || m_sub || ' counter' || chr(10) ||
-        |    m_sub || ' ' || submitted || chr(10) AS prom_submitted,
-        |  '# HELP ' || m_dis || ' rsyslog stats: origin="imfile" object="' ||
-        |    name || '", counter="ratelimit.discarded"' || chr(10) ||
-        |    '# TYPE ' || m_dis || ' counter' || chr(10) ||
-        |    m_dis || ' ' || discarded || chr(10) AS prom_discarded
-        |FROM m""".stripMargin,
-
-    "impstats_zabbix" ->
-      """WITH t AS (
-        |  SELECT 'events.' || event_type AS name, count(*) AS n_t
-        |  FROM events GROUP BY 1),
-        |a AS (SELECT count(*) AS n,
-        |  max(CAST(ts AS TIMESTAMP)) AS mts FROM events),
-        |arr AS (
-        |  SELECT string_agg('{ "name": "' || name ||
-        |    '", "origin": "imfile", "submitted": ' || n_t || ' }',
-        |    ',' ORDER BY name) AS imfile_arr FROM t)
-        |SELECT snapshot,
-        |  json_extract_string(snapshot, '$.stats_imfile[0].name')
-        |    AS probe_first_name,
-        |  CAST(json_extract(snapshot, '$.stats_omkafka_global[0].submitted')
-        |    AS BIGINT) AS probe_global_sub,
-        |  CAST(json_extract(snapshot, '$.stats_omkafka_local[1].processed')
-        |    AS BIGINT) AS probe_remap,
-        |  json_extract_string(snapshot, '$.timedate') AS probe_td
-        |FROM (
-        |  SELECT '{ "timedate": "' || strftime(mts, '%a %b %d %H:%M:%S %Y') ||
-        |    '", "stats_imfile": [' || (SELECT imfile_arr FROM arr) || ']' ||
-        |    ', "stats_omkafka_global": [{ "name": "omkafka", "origin": "omkafka", "submitted": ' || n || ' }]' ||
-        |    ', "stats_omkafka_local": [{ "name": "topic-events", "origin": "omkafka", "submitted": ' || n || ' },{ "name": "action-omkafka", "origin": "core.action", "processed": ' || n || ' }]' ||
-        |    ', "stats_impstats": [{ "name": "resource-usage", "origin": "impstats", "utime": ' || n || ', "openfiles": 32 }]' ||
-        |    '}' AS snapshot
-        |  FROM a)""".stripMargin,
-
-    "awslogs_hlc" ->
-      """WITH src AS (
-        |  SELECT event_id, ts,
-        |    'stream' || (user_id % 3) AS k,
-        |    CASE WHEN event_id % 101 = 0 THEN '(empty)'
-        |         ELSE 'app "x"' || chr(9) || 'line1' || chr(10) || 'msg:' ||
-        |           event_id || ' t=' || event_type
-        |    END AS raw,
-        |    CASE WHEN event_id % 101 = 0 THEN '(empty)'
-        |         ELSE replace(replace(replace(
-        |           'app "x"' || chr(9) || 'line1' || chr(10) || 'msg:' ||
-        |             event_id || ' t=' || event_type,
-        |           '"', '\"'), chr(9), '\t'), chr(10), '\n')
-        |    END AS esc,
-        |    'host' || (user_id % 5) AS h
-        |  FROM events),
-        |e AS (
-        |  SELECT event_id, k, raw, h,
-        |    '{"event":"' || esc || '","time":' ||
-        |    CAST(epoch_ns(ts)//1000000000 AS VARCHAR) || '.' ||
-        |    lpad(CAST((epoch_ns(ts)//1000) % 1000000 AS VARCHAR), 6, '0') ||
-        |    ',"host":"' || h || '","source":"rsyslog"}' AS ev_json
-        |  FROM src),
-        |r AS (SELECT *,
-        |  row_number() OVER (PARTITION BY k ORDER BY event_id) - 1 AS rn
-        |  FROM e)
-        |SELECT k, rn // 100 AS batch_idx,
-        |  string_agg(ev_json, '' ORDER BY event_id) AS payload,
-        |  count(*) AS n_events,
-        |  CAST(strlen(string_agg(ev_json, '' ORDER BY event_id))
-        |    AS BIGINT) AS payload_bytes,
-        |  CAST(0 AS BIGINT) AS n_dropped,
-        |  min(event_id) AS first_ord, max(event_id) AS last_ord,
-        |  arg_min(raw, event_id) AS probe_msg,
-        |  arg_min(h, event_id) AS probe_host
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    "azure_dce" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 97 = 0 THEN NULL
-        |       WHEN event_id % 89 = 0 THEN NULL
-        |       WHEN event_id % 5 = 0
-        |         THEN '{"id":' || event_id || ',"t":"' || event_type || '"}'
-        |       ELSE '{"id":' || event_id || ',"t":"' || event_type ||
-        |            '","sev":' || (event_id % 8) || '}'
-        |  END AS record,
-        |  'https://dce-abc.eastus-1.ingest.monitor.azure.com/dataCollectionRules/dcr-000111/streams/Custom-Syslog_CL?api-version=2023-01-01' AS url,
-        |  CASE WHEN event_id % 97 = 0 OR event_id % 89 = 0 THEN NULL
-        |       ELSE event_type END AS probe_t
-        |FROM events""".stripMargin,
-
-    "azure_dce_pack" ->
-      """WITH recs AS (
-        |  SELECT event_id, CAST(event_id % 50 AS VARCHAR) AS k, event_type,
-        |    CASE WHEN event_id % 97 = 0 OR event_id % 89 = 0 THEN NULL
-        |         ELSE '{"id":' || event_id || ',"t":"' || event_type || '"}'
-        |    END AS rec
-        |  FROM events),
-        |nn AS (SELECT * FROM recs WHERE rec IS NOT NULL)
-        |SELECT k, CAST(0 AS BIGINT) AS batch_idx,
-        |  '[' || string_agg(rec, ',' ORDER BY event_id) || ']' AS payload,
-        |  count(*) AS n_events,
-        |  CAST(strlen('[' || string_agg(rec, ',' ORDER BY event_id) || ']')
-        |    AS BIGINT) AS payload_bytes,
-        |  CAST(0 AS BIGINT) AS n_dropped,
-        |  min(event_id) AS first_ord, max(event_id) AS last_ord,
-        |  min(event_id) AS probe_id0,
-        |  arg_min(event_type, event_id) AS probe_t0
-        |FROM nn GROUP BY 1""".stripMargin,
-
-    "eventhubs_message" -> (synthSql +
-      """, r AS (
-        |  SELECT event_id, CAST(event_id % 32 AS INT) AS worker, ts,
-        |    '<' || (facility * 8 + severity) || '>' ||
-        |    strftime(CAST(ts AS TIMESTAMP), '%b') || ' ' ||
-        |    lpad(CAST(day(ts) AS VARCHAR), 2, ' ') || ' ' ||
-        |    strftime(CAST(ts AS TIMESTAMP), '%H:%M:%S') || ' ' ||
-        |    hostname || ' ' || syslogtag || ': ' ||
-        |    'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') ||
-        |    ': v100=' || v100 AS rawmsg,
-        |    event_id // 32 AS seq
-        |  FROM ev)
-        |SELECT event_id, worker,
-        |  '{"address":"amqps://graft-ns.servicebus.windows.net/hub1","message_id":"'
-        |    || seq ||
-        |    '","content_type":"application/octet-stream","inferred":true,"creation_time":'
-        |    || (epoch_ns(ts)//1000000) ||
-        |    ',"properties":{"Table":"syslog","Format":"raw"},"body":"' ||
-        |    rawmsg || '"}' AS amqp_message,
-        |  CAST(seq AS VARCHAR) AS probe_id,
-        |  'syslog' AS probe_table,
-        |  epoch_ns(ts)//1000000 AS probe_ctime
-        |FROM r""".stripMargin),
-
-    "omhttpfs_req" -> (synthSql +
-      """ SELECT event_id,
-        |  'http://hdfs1:14000/webhdfs/v1/logs/' || hostname || '/' ||
-        |    event_type || '.log?user.name=rsyslog&op=append&data=true'
-        |    AS url_append,
-        |  'http://hdfs1:14000/webhdfs/v1/logs/' || hostname || '/' ||
-        |    event_type || '.log?user.name=rsyslog&op=create&overwrite=false&data=true'
-        |    AS url_create,
-        |  '<' || (facility * 8 + severity) || '>' ||
-        |  strftime(CAST(ts AS TIMESTAMP), '%b') || ' ' ||
-        |  lpad(CAST(day(ts) AS VARCHAR), 2, ' ') || ' ' ||
-        |  strftime(CAST(ts AS TIMESTAMP), '%H:%M:%S') || ' ' ||
-        |  hostname || ' ' || syslogtag || ': ' ||
-        |  'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') ||
-        |  ': v100=' || v100 AS hdfs_body
-        | FROM ev""".stripMargin),
-
-    "omhttp_batch" ->
-      """SELECT event_id // 1000 AS batch_id,
-        |  '{"records":[' ||
-        |  coalesce(string_agg('{"value":' || m || '}', ',' ORDER BY event_id)
-        |    FILTER (WHERE json_valid(m)), '') || ']}' AS batch
-        |FROM (SELECT event_id,
-        |  CASE WHEN event_id % 97 = 0 THEN '{oops'
-        |       ELSE '{"id":' || event_id || ',"t":"' || event_type || '"}'
-        |  END AS m FROM events)
-        |GROUP BY 1""".stripMargin,
-
-    "omhttp_retry" ->
-      """SELECT event_id, rec AS rawmsg, rec AS msg,
-        |  'omhttp-retry' AS syslogtag,
-        |  '{"omhttp":{"response":{"code":503,"body":' ||
-        |  '"{\"error\":\"service unavailable\"}"' ||
-        |  ',"batch_index":' || (event_id % 4) || '}}}' AS vars_msg,
-        |  503 AS probe_code,
-        |  CAST(event_id % 4 AS INT) AS probe_idx
-        |FROM (SELECT event_id,
-        |  '{"id":' || event_id || ',"t":"' || event_type || '"}' AS rec
-        |  FROM events WHERE event_id % 7 = 0)""".stripMargin,
-
-    "omotel_export" ->
-      """WITH src AS (
-        |  SELECT event_id,
-        |    CAST(user_id % 7 AS INT) AS batch_id,
-        |    'host' || (user_id % 5) AS host,
-        |    event_type AS app,
-        |    CAST(event_id % 100 AS VARCHAR) AS procid,
-        |    CASE WHEN event_id % 4 = 0 THEN 'm' || (event_id % 10) END AS msgid,
-        |    CAST(user_id % 24 AS INT) AS facility,
-        |    CAST(event_id % 8 AS INT) AS severity,
-        |    ts, 'msgnum:' || event_id AS body,
-        |    row_number() OVER (PARTITION BY user_id % 7 ORDER BY event_id) AS rn
-        |  FROM events),
-        |recs AS (
-        |  SELECT *, (rn - 1) // 50 AS chunk,
-        |    '{ "timeUnixNano": "' || CAST((epoch_ns(ts) // 1000) * 1000 AS VARCHAR) ||
-        |    '", "severityNumber": ' || ([24,23,22,17,13,11,9,5][severity + 1]) ||
-        |    ', "severityText": "' ||
-        |    (['EMERGENCY','ALERT','CRITICAL','ERROR','WARNING','NOTICE','INFO','DEBUG'][severity + 1]) ||
-        |    '", "body": { "stringValue": "' || body || '" }' ||
-        |    CASE WHEN event_id % 5 = 0
-        |         THEN ', "traceId": "' || md5(CAST(event_id AS VARCHAR)) || '"'
-        |         ELSE '' END ||
-        |    CASE WHEN event_id % 3 = 0
-        |         THEN ', "spanId": "' || substr(md5('s' || event_id), 1, 16) || '"'
-        |         ELSE '' END ||
-        |    ', "attributes": [ ' ||
-        |    '{ "key": "log.syslog.appname", "value": { "stringValue": "' || app || '" } }, ' ||
-        |    '{ "key": "log.syslog.procid", "value": { "stringValue": "' || procid || '" } }, ' ||
-        |    CASE WHEN msgid IS NOT NULL
-        |         THEN '{ "key": "log.syslog.msgid", "value": { "stringValue": "' || msgid || '" } }, '
-        |         ELSE '' END ||
-        |    '{ "key": "log.syslog.facility", "value": { "intValue": ' || facility || ' } }, ' ||
-        |    '{ "key": "log.syslog.hostname", "value": { "stringValue": "' || host || '" } }' ||
-        |    ' ] }' AS rec
-        |  FROM src),
-        |b AS (
-        |  SELECT batch_id, chunk,
-        |    string_agg(rec, ', ' ORDER BY event_id) AS recs,
-        |    min(host) = max(host) AS same_host,
-        |    min(host) AS h0, count(*) AS n_records
-        |  FROM recs GROUP BY 1, 2)
-        |SELECT batch_id, chunk, payload, n_records,
-        |  json_extract_string(payload,
-        |    '$.resourceLogs[0].scopeLogs[0].logRecords[0].body.stringValue') AS probe_body,
-        |  CAST(json_extract(payload,
-        |    '$.resourceLogs[0].scopeLogs[0].logRecords[0].severityNumber') AS BIGINT) AS probe_sev,
-        |  json_extract_string(payload,
-        |    '$.resourceLogs[0].scopeLogs[0].logRecords[0].attributes[0].key') AS probe_attr0_key,
-        |  json_extract_string(payload,
-        |    '$.resourceLogs[0].resource.attributes[0].value.stringValue') AS probe_res_attr0
-        |FROM (
-        |SELECT batch_id, chunk,
-        |  '{ "resourceLogs": [ { "resource": { "attributes": [ ' ||
-        |  '{ "key": "service.name", "value": { "stringValue": "rsyslog" } }, ' ||
-        |  '{ "key": "telemetry.sdk.name", "value": { "stringValue": "rsyslog-omotel" } }, ' ||
-        |  '{ "key": "telemetry.sdk.language", "value": { "stringValue": "C" } }, ' ||
-        |  '{ "key": "telemetry.sdk.version", "value": { "stringValue": "8.2608.0.daily" } }' ||
-        |  CASE WHEN same_host
-        |       THEN ', { "key": "host.name", "value": { "stringValue": "' || h0 || '" } }'
-        |       ELSE '' END ||
-        |  ' ] }, "scopeLogs": [ { "scope": { "name": "rsyslog.omotel", "version": "8.2608.0.daily" }, "logRecords": [ ' ||
-        |  recs || ' ] } ] } ] }' AS payload,
-        |  n_records
-        |FROM b)""".stripMargin,
-
-    "imbeats_decode" ->
-      """SELECT e.event_id,
-        |  s.seq,
-        |  CASE WHEN s.seq = 1
-        |       THEN '{"message":"m' || e.event_id || '","beat":"filebeat","n":' || (e.event_id % 7) || '}'
-        |       ELSE '{"message":"x' || e.event_id || '"}' END AS msg,
-        |  CASE WHEN s.seq = 1 THEN CAST(e.event_id % 7 AS VARCHAR) END AS n,
-        |  CAST(s.seq AS VARCHAR) AS meta_seq,
-        |  'peer' || (e.user_id % 9) AS peer
-        |FROM events e CROSS JOIN (SELECT 1 AS seq UNION ALL SELECT 2) s""".stripMargin,
-
-    "imdocker_decode" ->
-      """SELECT event_id,
-        |  CASE s.k WHEN 1 THEN 1 ELSE 2 END AS stream_type,
-        |  CASE s.k WHEN 1 THEN 'log line ' || event_id
-        |           ELSE 'err ' || event_type END AS msg,
-        |  CASE s.k WHEN 1 THEN 6 ELSE 3 END AS severity,
-        |  'docker:' AS syslogtag,
-        |  'c' || user_id AS cid,
-        |  '/app' || user_id AS cname,
-        |  'x' AS label_app
-        |FROM events CROSS JOIN (SELECT 1 AS k UNION ALL SELECT 2) s""".stripMargin,
-
-    "imbatchreport_decode" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 3 = 0 THEN 'plain ' || event_type || ' done'
-        |       WHEN event_id % 3 = 1 THEN 'Run ' || event_type || ' rc ' ||
-        |         (event_id % 7) || '\n tail'
-        |       ELSE 'File too large : /spool/report_' || event_id || '.rpt'
-        |  END AS msg,
-        |  CASE WHEN event_id % 3 = 0 THEN '-'
-        |       WHEN event_id % 3 = 1 THEN '[report@32473 program="job' ||
-        |         (event_id % 5) || '" ts="' || (1700000000 + event_id % 1000) || '"]'
-        |       ELSE '[report@32473 ts="17"]'
-        |  END AS structured_data,
-        |  CASE WHEN event_id % 3 = 1 THEN 1700000000 + event_id % 1000
-        |       WHEN event_id % 3 = 2 THEN 17 END AS ts_epoch,
-        |  CASE WHEN event_id % 3 = 1 THEN 'job' || (event_id % 5)
-        |       ELSE 'batch' END AS app_name,
-        |  event_id % 3 = 2 AS too_large,
-        |  'batch:' AS syslogtag,
-        |  133 AS pri
-        |FROM events""".stripMargin,
-
-    "imklog_decode" ->
-      """WITH d AS (
-        |  SELECT event_id,
-        |    CASE event_id % 4 WHEN 0 THEN 6 WHEN 1 THEN 30
-        |         WHEN 2 THEN 6 ELSE 35 END AS pri,
-        |    CASE event_id % 4
-        |      WHEN 0 THEN ' usb 1-1: device e' || event_id
-        |      WHEN 1 THEN 'systemd[1]: unit u' || event_id
-        |      WHEN 2 THEN 'no pri line e' || event_id
-        |      ELSE 'mail subsystem e' || event_id END AS msg
-        |  FROM events)
-        |SELECT event_id, 'all' AS mode, pri,
-        |  CAST(pri // 8 AS INT) AS facility, CAST(pri % 8 AS INT) AS severity,
-        |  msg, 'kernel:' AS syslogtag FROM d
-        |UNION ALL
-        |SELECT event_id, 'kern', pri,
-        |  CAST(pri // 8 AS INT), CAST(pri % 8 AS INT),
-        |  msg, 'kernel:' FROM d WHERE pri // 8 = 0""".stripMargin,
-
-    "imkmsg_decode" ->
-      """SELECT event_id,
-        |  CAST(event_id % 24 AS INT) AS pri,
-        |  CAST((event_id % 24) // 8 AS INT) AS facility,
-        |  CAST((event_id % 24) % 8 AS INT) AS severity,
-        |  'ev ' || event_type AS msg,
-        |  'kernel:' AS syslogtag,
-        |  '{"sequnum":' || event_id || ',"msg":"ev ' || event_type || '"' ||
-        |  CASE WHEN event_id % 2 = 0
-        |       THEN ',"DEVICE":"+pci:e' || (event_id % 100) ||
-        |            '","SUBSYSTEM":"pci"' ELSE '' END || '}' AS vars_msg,
-        |  event_id AS probe_seq,
-        |  CASE WHEN event_id % 2 = 0
-        |       THEN '+pci:e' || (event_id % 100) END AS probe_dev
-        |FROM events WHERE event_id % 5 <> 0""".stripMargin,
-
-    "improg_lines" ->
-      """SELECT event_id, 133 AS pri, 16 AS facility, 5 AS severity,
-        |  'prog[7]:' AS app_name, 'prog[7]:' AS syslogtag,
-        |  'prog' AS programname,
-        |  'out ' || event_type || ' e' || event_id AS msg
-        |FROM events WHERE event_id % 7 <> 0""".stripMargin,
-
-    "imhiredis_decode" ->
-      """SELECT event_id, 'queue' AS mode, 199 AS pri, 24 AS facility,
-        |  7 AS severity, 'redis msg ' || event_type AS msg,
-        |  '{}' AS vars_msg, '{}' AS vars_local
-        |FROM events WHERE event_id % 9 <> 0
-        |UNION ALL
-        |SELECT event_id, 'stream', 199, 24, 7, '',
-        |  '{"kind":"' || event_type || '","n":' || event_id || '}',
-        |  '{"redis":{"stream":"logs","index":"' || event_id ||
-        |  '-0","group":"grp","consumer":"c1"}}'
-        |FROM events""".stripMargin,
-
-    "imuxsock_decode" -> (Queries.synthSql +
-      """ SELECT event_id, m.mode, hostname,
-        |  event_type || '[' || event_id || ']:' AS syslogtag,
-        |  ' msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') ||
-        |  ': v100=' || v100 ||
-        |  CASE WHEN m.mode = 'annotate'
-        |       THEN ' @[_PID=' || (event_id % 30000) ||
-        |         ' _UID=1000 _GID=1000 _COMM=' || event_type ||
-        |         ' _EXE=/usr/bin/' || event_type ||
-        |         ' _CMDLINE=' || event_type || ' --flag]'
-        |       ELSE '' END AS msg,
-        |  CASE WHEN m.mode = 'trusted'
-        |       THEN '{"pid":' || (event_id % 30000) ||
-        |         ',"uid":1000,"gid":1000,"appname":"' || event_type ||
-        |         '","exe":"/usr/bin/' || event_type ||
-        |         '","cmd":"' || event_type || ' --flag"}'
-        |       ELSE '{}' END AS vars_msg
-        | FROM ev CROSS JOIN (SELECT unnest(['plain','annotate','trusted'])
-        |   AS mode) m""".stripMargin),
-
-    "imsolaris_decode" ->
-      """SELECT event_id,
-        |  CAST(event_id % 192 AS INT) AS pri,
-        |  CAST((event_id % 192) // 8 AS INT) AS facility,
-        |  CAST((event_id % 192) % 8 AS INT) AS severity,
-        |  event_type || '[' || (event_id % 1000) || ']:' AS syslogtag,
-        |  event_type AS programname,
-        |  ' door msg ' || event_id AS msg,
-        |  1700000000 + event_id % 86400 AS ts_sec
-        |FROM events""".stripMargin,
-
-    "imkubernetes_decode" ->
-      """WITH f AS (
-        |  SELECT event_id, user_id, event_type, event_id % 3 AS m3,
-        |    CASE WHEN event_id % 2 = 0 THEN 'stdout' ELSE 'stderr' END
-        |      AS stream0,
-        |    user_id % 2 = 0 AS pods
-        |  FROM events),
-        |d AS (
-        |  SELECT event_id, m3, pods, user_id,
-        |    CASE WHEN pods THEN '/var/log/pods/ns' || (user_id % 10) ||
-        |        '_pod' || (user_id % 50) || '_uid' || user_id ||
-        |        '/c' || (event_id % 5) || '/' || (event_id % 4) || '.log'
-        |      ELSE '/var/log/containers/pod' || (user_id % 50) ||
-        |        '_ns' || (user_id % 10) || '_c' || (event_id % 5) ||
-        |        '-cid' || event_id || '.log' END AS path,
-        |    CASE m3 WHEN 0 THEN 'ev ' || event_type || ' ' || event_id
-        |            WHEN 1 THEN 'dock ' || event_type
-        |            ELSE 'plain ' || event_type || ' ' || event_id
-        |    END AS msg,
-        |    CASE WHEN m3 = 2 THEN 'stdout' ELSE stream0 END AS stream,
-        |    CASE m3 WHEN 0 THEN 'cri' WHEN 1 THEN 'docker_json'
-        |            ELSE 'raw' END AS fmt
-        |  FROM f)
-        |SELECT event_id, msg,
-        |  CASE WHEN stream = 'stderr' THEN 3 ELSE 6 END AS severity,
-        |  'kubernetes:' AS syslogtag,
-        |  '{"kubernetes":{"namespace_name":"ns' || (user_id % 10) ||
-        |  '","pod_name":"pod' || (user_id % 50) || '",' ||
-        |  CASE WHEN pods THEN '"pod_uid":"uid' || user_id || '",'
-        |       ELSE '' END ||
-        |  '"container_name":"c' || (event_id % 5) || '",' ||
-        |  CASE WHEN pods THEN '"restart_count":' || (event_id % 4) || ','
-        |       ELSE '' END ||
-        |  '"log_file":"' || path || '","stream":"' || stream ||
-        |  '","log_format":"' || fmt || '"' ||
-        |  CASE WHEN m3 = 2 THEN ',"parse_error":true' ELSE '' END ||
-        |  '},"docker":' ||
-        |  CASE WHEN pods THEN '{}'
-        |       ELSE '{"container_id":"cid' || event_id || '"}' END ||
-        |  '}' AS vars_msg,
-        |  'ns' || (user_id % 10) AS probe_ns,
-        |  CASE WHEN NOT pods THEN 'cid' || event_id END AS probe_cid,
-        |  CASE WHEN pods THEN event_id % 4 END AS probe_restart
-        |FROM d""".stripMargin,
-
-    // every app-layer field is a closed-form function of event_id; rows
-    // of other kinds carry NULLs
-    "impcap_applayer" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 4 = 0
-        |    THEN CAST(event_id % 65536 AS BIGINT) END AS dns_txid,
-        |  CASE WHEN event_id % 4 = 0 THEN 'NoError' END AS dns_err,
-        |  CASE WHEN event_id % 4 = 0 THEN 'www.example.com' END AS dns_qname,
-        |  CASE WHEN event_id % 8 = 0 THEN 'A'
-        |       WHEN event_id % 4 = 0 THEN 'AAAA' END AS dns_type,
-        |  CASE WHEN event_id % 4 = 1 THEN 'GET' END AS http_method,
-        |  CASE WHEN event_id % 4 = 1
-        |    THEN '/p' || (event_id % 100) END AS http_uri,
-        |  CASE WHEN event_id % 4 = 1
-        |    THEN 'h' || (event_id % 10) || '.example' END AS http_host,
-        |  CASE WHEN event_id % 4 = 1
-        |    THEN 'v' || (event_id % 7) END AS http_xkey,
-        |  CASE WHEN event_id % 8 = 2 THEN 'USER' END AS ftp_req,
-        |  CASE WHEN event_id % 8 = 6
-        |    THEN CAST(230 AS BIGINT) END AS ftp_resp,
-        |  CASE WHEN event_id % 4 = 3 THEN CAST(2 AS BIGINT) END AS smb_ver,
-        |  CASE WHEN event_id % 4 = 3
-        |    THEN CAST(event_id % 256 AS BIGINT) END AS smb_nt,
-        |  CASE WHEN event_id % 4 = 3
-        |    THEN CAST(event_id % 19 AS BIGINT) END AS smb_op,
-        |  CASE WHEN event_id % 4 = 3 THEN 'R' END AS smb_flags,
-        |  CASE WHEN event_id % 4 = 3
-        |    THEN CAST(event_id % 256 AS BIGINT) END AS smb_seq,
-        |  CASE WHEN event_id % 4 = 3
-        |    THEN CAST(event_id % 50 AS BIGINT) END AS smb_tree,
-        |  CASE WHEN event_id % 4 = 3
-        |    THEN CAST(event_id % 100 AS BIGINT) END AS smb_user
-        |FROM events""".stripMargin,
-
-    "impcap_decode" ->
-      """WITH f AS (
-        |  SELECT event_id, user_id, event_id % 3 AS m3,
-        |    'DEAD' || upper(lpad(to_hex(event_id % 65536), 4, '0')) AS phex
-        |  FROM events),
-        |d AS (
-        |  SELECT event_id,
-        |    CASE m3 WHEN 0 THEN
-        |      '"net_src_port":' || (1024 + event_id % 50000) ||
-        |      ',"net_dst_port":443,"TCP_seq_number":' || (event_id % 100000) ||
-        |      ',"TCP_ack_number":0,"net_flags":"' ||
-        |      CASE WHEN event_id % 2 = 0 THEN 'PA' ELSE 'S' END || '"'
-        |    WHEN 1 THEN
-        |      '"net_src_port":53,"net_dst_port":' || (1024 + event_id % 60000) ||
-        |      ',"UDP_Length":16,"UDP_Checksum":48879'
-        |    ELSE
-        |      '"net_icmp_type":8,"net_icmp_code":0,"icmp_checksum":4660'
-        |    END AS l4,
-        |    CASE m3 WHEN 0 THEN 58 ELSE 46 END AS tot,
-        |    CASE m3 WHEN 0 THEN 6 WHEN 1 THEN 17 ELSE 1 END AS proto,
-        |    '10.0.' || ((event_id // 256) % 256) || '.' || (event_id % 256)
-        |      AS srcip,
-        |    'aa:bb:cc:dd:ee:' || lower(to_hex(user_id % 256)) AS srcmac,
-        |    phex, m3
-        |  FROM f)
-        |SELECT event_id,
-        |  '{"data":{"length":8,"content":"' || phex || '"},"impcap":{"ID":' ||
-        |  event_id ||
-        |  ',"timestamp":"2024-06-01T10:00:00.000000+00:00","net_bytes_total":' ||
-        |  tot || ',"ETH_src":"' || srcmac ||
-        |  '","ETH_dst":"0:1a:2b:3c:4d:5e","ETH_type":2048,"ETH_typestr":"IP"' ||
-        |  ',"net_dst_ip":"192.168.1.1","net_src_ip":"' || srcip ||
-        |  '","IP_ihl":5,"net_ttl":64,"IP_proto":' || proto || ',' || l4 ||
-        |  ',"net_bytes_data":4}}' AS vars_msg,
-        |  'pcap:' AS syslogtag,
-        |  srcip AS probe_src_ip,
-        |  CASE WHEN m3 = 0 THEN
-        |    CASE WHEN event_id % 2 = 0 THEN 'PA' ELSE 'S' END END
-        |    AS probe_flags,
-        |  phex AS probe_data,
-        |  tot AS probe_total
-        |FROM d""".stripMargin,
-
-    "imtuxedoulog_decode" ->
-      """WITH f AS (
-        |  SELECT event_id, user_id, event_type,
-        |    lpad(CAST(event_id % 24 AS VARCHAR), 2, '0') AS hh,
-        |    lpad(CAST(event_id % 60 AS VARCHAR), 2, '0') AS mi,
-        |    lpad(CAST(event_id % 43 % 60 AS VARCHAR), 2, '0') AS ss,
-        |    CASE WHEN event_id % 2 = 0 THEN '700' ELSE '705' END AS fr
-        |  FROM events WHERE event_id % 5 <> 0)
-        |SELECT event_id,
-        |  'host' || (user_id % 50) AS hostname,
-        |  event_type || '.' || (event_id % 100000) || '.1' AS procid,
-        |  CASE WHEN event_id % 5 = 1 THEN '[ECID="EC' || event_id || '"]'
-        |       WHEN event_id % 5 = 2 THEN '[ECID="G' || event_id || '"]'
-        |  END AS structured_data,
-        |  CASE WHEN event_id % 5 = 1 THEN 'traced ' || event_id
-        |       WHEN event_id % 5 = 2 THEN 'gtraced ' || event_id
-        |       ELSE 'TSAM_CAT:305: plain ' || event_id END AS msg,
-        |  199 AS pri,
-        |  epoch_us(CAST('2024-03-15 ' || hh || ':' || mi || ':' || ss ||
-        |    '.' || fr AS TIMESTAMP)) AS ts_us
-        |FROM f""".stripMargin,
-
-    "imhttp_decode" -> (Queries.synthSql +
-      """ SELECT event_id, hostname,
-        |  event_type || '[' || event_id || ']:' AS syslogtag,
-        |  ' msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') ||
-        |  ': v100=' || v100 AS msg,
-        |  '{"metadata":{"httpheaders":{"user-agent":"curl/8"},' ||
-        |  '"queryparams":{"src":"' || event_type || '"}}}' AS vars_msg,
-        |  event_type AS probe_src
-        | FROM ev""".stripMargin),
-
-    "imhttp_body" -> (Queries.synthSql +
-      """, m AS (
-        |  SELECT event_id, 'm' || event_id || ' alpha' AS m1,
-        |         'x' || v100 AS m2
-        |  FROM ev),
-        |u AS (SELECT * FROM (VALUES ('lf'), ('octet'), ('gzip')) AS t(mode))
-        |SELECT event_id, mode, 0 AS idx, m1 AS msg FROM m, u
-        |UNION ALL SELECT event_id, mode, 1, m2 FROM m, u
-        |UNION ALL SELECT event_id, 'bad_gzip', -1, NULL
-        |  FROM m WHERE event_id % 100 = 0""".stripMargin),
-
-    "omrelp_frame" -> (Queries.synthSql +
-      """ SELECT event_id,
-        |  (event_id % 1000 + 1) || ' syslog ' ||
-        |  length('msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0')) ||
-        |  ' msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') AS relp_frame
-        | FROM ev""".stripMargin),
-
-    "mm_actions" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 3 = 0 THEN 'Vnd' END AS leef_vendor,
-        |  CASE WHEN event_id % 3 = 0 THEN '10.0.0.' || (user_id % 250) END AS leef_src,
-        |  CASE WHEN event_id % 3 = 1 THEN '1700000000.123:' || event_id END AS auditid,
-        |  CASE WHEN event_id % 3 = 1 THEN CAST(user_id % 1000 AS VARCHAR) END AS audit_uid,
-        |  CASE WHEN event_id % 3 = 2 THEN 'GET' END AS verb,
-        |  CASE WHEN event_id % 3 = 2 THEN '200' END AS code,
-        |  event_id % 3 = 1 AS parsesuccess,
-        |  event_id % 3 = 2 AS hmac_added
-        |FROM events""".stripMargin,
-
-    "mmdarwin_call" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 13 = 0 THEN NULL
-        |       ELSE '[["10.0.0.' || (event_id % 250) || '","smtp","' ||
-        |            (event_id % 65536) || '"]]' END AS darwin_body,
-        |  CASE WHEN event_id % 13 = 0 THEN NULL
-        |       ELSE CAST(event_id % 101 AS VARCHAR) END AS certitude
-        |FROM events""".stripMargin,
-
-    "omsnmp_trap" ->
-      """SELECT event_id,
-        |  '{"version":1,"enterprise":"1.3.6.1.4.1.3.1.1","trap_type":6,' ||
-        |  '"specific_type":0,"uptime":0,"agent_addr":[' ||
-        |  CASE WHEN event_id % 11 = 0 THEN '0,0,0,0'
-        |       ELSE (event_id % 256) || ',' || (user_id % 256) || ',0,10' END ||
-        |  '],"varbinds":[{"oid":"1.3.6.1.4.1.19406.1.1.2.1","type":"s",' ||
-        |  '"value":"trap ' || event_type || ' #' || event_id || '"}]}' AS trap_v1,
-        |  '{"version":2,"varbinds":[' ||
-        |  '{"oid":"1.3.6.1.2.1.1.3.0","type":"t","value":"' || (event_id % 100000) || '"},' ||
-        |  '{"oid":"1.3.6.1.6.3.1.1.4.1.0","type":"o","value":"1.3.6.1.4.1.19406.1.2.1"},' ||
-        |  '{"oid":"1.3.6.1.4.1.19406.1.1.2.1","type":"s","value":"trap ' ||
-        |  event_type || ' #' || event_id || '"}]}' AS trap_v2c
-        |FROM events""".stripMargin,
-
-    "ommongodb_doc" ->
-      """SELECT event_id,
-        |  '{"sys":"host' || (user_id % 50) ||
-        |  '","time":' || (epoch_ns(ts) // 1000000) ||
-        |  ',"time_rcvd":' || (epoch_ns(ts) // 1000000) ||
-        |  ',"msg":"ev ' || event_type ||
-        |  '","syslog_fac":' || (user_id % 24) ||
-        |  ',"syslog_sever":' || (event_id % 8) ||
-        |  ',"syslog_tag":"' || event_type || '[' || (event_id % 1000) ||
-        |  ']","procid":"' || event_type ||
-        |  '","pid":"' || (event_id % 1000) ||
-        |  '","level":"' ||
-        |  (['FATAL','ERROR','ERROR','ERROR','WARN','INFO','INFO','DEBUG'][CAST(event_id % 8 AS INT) + 1]) ||
-        |  '"}' AS mongo_doc,
-        |  'host' || (user_id % 50) AS probe_sys,
-        |  (['FATAL','ERROR','ERROR','ERROR','WARN','INFO','INFO','DEBUG'][CAST(event_id % 8 AS INT) + 1]) AS probe_level,
-        |  epoch_ns(ts) // 1000000 AS probe_time
-        |FROM events""".stripMargin,
-
-    "ommail_message" ->
-      """SELECT event_id,
-        |  'Date: Sat,  1 Jun 2024 12:00:00 +0000' || chr(13) || chr(10) ||
-        |  'From: <rsyslog@example.net>' || chr(13) || chr(10) ||
-        |  'To: <ops@example.net>, <oncall@example.net>' || chr(13) || chr(10) ||
-        |  'Subject: alert ' || event_type || ' line1 line2' || chr(13) || chr(10) ||
-        |  'X-Mailer: rsyslog-ommail' || chr(13) || chr(10) || chr(13) || chr(10) ||
-        |  '..lead ' || event_type || chr(13) || chr(10) ||
-        |  '..dot ' || event_id || chr(10) ||
-        |  'mid .x' || chr(13) || chr(10) ||
-        |  'tail' AS mail_message
-        |FROM events""".stripMargin,
-
-    "omjournal_frame" -> (Queries.synthSql +
-      """ SELECT event_id,
-        |  'MESSAGE=msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') ||
-        |  chr(10) || 'PRIORITY=' || (facility * 8 + severity) ||
-        |  chr(10) || 'SYSLOG_FACILITY=' || facility ||
-        |  chr(10) || 'SYSLOG_IDENTIFIER=' || syslogtag AS journal_entry
-        | FROM ev""".stripMargin),
-
-    "imjournal_decode" ->
-      """SELECT event_id,
-        |  CAST(CASE WHEN user_id % 25 <= 23 THEN user_id % 25 ELSE 1 END
-        |    AS INT) AS facility,
-        |  CAST(CASE WHEN event_id % 9 <= 7 THEN event_id % 9 ELSE 5 END
-        |    AS INT) AS severity,
-        |  event_type || '[' || user_id || ']:' AS syslogtag,
-        |  'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') AS msg,
-        |  event_id AS ts_secs,
-        |  'host' || user_id AS jhost,
-        |  'journal' AS jtrans
-        |FROM events""".stripMargin,
-
-    "mmjsonparse_findjson" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 10 = 0 THEN 'FAIL' ELSE 'OK' END
-        |    AS parsesuccess,
-        |  CASE WHEN event_id % 10 = 0 THEN CAST(NULL AS BIGINT)
-        |       ELSE event_id END AS jid
-        |FROM events""".stripMargin,
-
-    "timezone_localtz" ->
-      """SELECT event_id,
-        |  epoch_ns(ts) // 1000000000 - 3600 AS cet,
-        |  epoch_ns(ts) // 1000000000 + 18000 AS est
-        |FROM events""".stripMargin,
-
-    "foreach_action" -> (Queries.synthSql +
-      """ SELECT event_id, hostname || ':' || w AS line
-        | FROM (SELECT event_id, hostname,
-        |         unnest(string_split(event_type, 'u')) AS w
-        |       FROM ev)
-        | WHERE w <> ''""".stripMargin),
-
-    "lookup_string" ->
-      """SELECT CASE event_type
-        |    WHEN 'error' THEN 'E' WHEN 'signup' THEN 'S'
-        |    WHEN 'purchase' THEN 'P' WHEN 'view' THEN 'V'
-        |    ELSE 'UNK' END AS code,
-        |  count(*) AS n, round(sum(value), 2) AS sum_v
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "lookup_sparse" ->
-      """SELECT CASE
-        |    WHEN floor(value) >= 500 THEN 'xhigh'
-        |    WHEN floor(value) >= 150 THEN 'high'
-        |    WHEN floor(value) >= 50 THEN 'mid'
-        |    WHEN floor(value) >= 0 THEN 'low'
-        |    ELSE 'neg' END AS band,
-        |  count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "lookup_regex" ->
-      """SELECT CASE
-        |    WHEN regexp_matches(event_type, '^p') THEN 'p-ish'
-        |    WHEN regexp_matches(event_type, '^(e|s)') THEN 'es-ish'
-        |    WHEN regexp_matches(event_type, 'w$') THEN 'w-end'
-        |    ELSE 'other' END AS cls,
-        |  count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "dynstats" -> DynStats.oracleSql(maxCardinality = 3),
-
-    "rainerscript_dynstats" -> (synthSql +
-      """, obs AS (
-        |  SELECT event_id,
-        |    CASE WHEN severity <= 4 THEN event_type ELSE 'quiet' END AS metric_key
-        |  FROM ev WHERE severity <> 7),
-        |perkey AS (
-        |  SELECT metric_key, count(*) AS cnt, min(event_id) AS first_seen
-        |  FROM obs GROUP BY 1),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (ORDER BY first_seen) AS rk FROM perkey)
-        |SELECT CASE WHEN rk <= 3 THEN metric_key ELSE '_overflow' END AS metric,
-        |  CAST(sum(cnt) AS BIGINT) AS n
-        |FROM ranked GROUP BY 1""".stripMargin),
-
-    "rainerscript_perctile" -> (synthSql +
-      """, obs AS (
-        |  SELECT event_type AS pkey,
-        |    CAST(severity * severity + facility AS DOUBLE) AS v
-        |  FROM ev)
-        |SELECT pkey, count(*) AS window_count,
-        |  round(min(v), 4) AS window_min, round(max(v), 4) AS window_max,
-        |  round(quantile_cont(v, 0.5), 4) AS p50,
-        |  round(quantile_cont(v, 0.95), 4) AS p95,
-        |  round(quantile_cont(v, 0.99), 4) AS p99
-        |FROM obs GROUP BY 1""".stripMargin),
-
-    "perctile" ->
-      """SELECT event_type,
-        |  round(quantile_cont(value, 0.5), 4) AS p50,
-        |  round(quantile_cont(value, 0.95), 4) AS p95,
-        |  round(min(value), 2) AS window_min,
-        |  round(max(value), 2) AS window_max,
-        |  count(*) AS window_count
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "template_render" -> (synthSql +
-      """ SELECT event_id,
-        |  strftime(CAST(ts AS TIMESTAMP), '%b') || ' ' ||
-        |  lpad(CAST(day(ts) AS VARCHAR), 2, ' ') || ' ' ||
-        |  strftime(CAST(ts AS TIMESTAMP), '%H:%M:%S') || ' ' ||
-        |  hostname || ' ' || event_type || '[' || event_id || ']: ' ||
-        |  'v100=' || v100 AS line
-        | FROM ev""".stripMargin),
-
-    "template_nowfamily" -> (synthSql +
-      """ SELECT event_id,
-        |  strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%dT%H:%M') ||
-        |  ' h' || lpad(CAST(minute(ts) // 30 AS VARCHAR), 2, '0') ||
-        |  ' q' || lpad(CAST(minute(ts) // 15 AS VARCHAR), 2, '0') ||
-        |  ' w' || CAST(dayofweek(ts) AS VARCHAR) ||
-        |  ' u' || CAST(floor(epoch(ts)) AS BIGINT) AS stamp
-        | FROM ev""".stripMargin),
-
-    "parse_rfc3164" -> (synthSql +
-      """ SELECT event_id, facility, severity, hostname,
-        |   event_type AS programname,
-        |   CAST(event_id AS VARCHAR) AS procid,
-        |   ' msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') || ': v100=' || v100 AS msg,
-        |   true AS parsesuccess
-        | FROM ev""".stripMargin),
-
-    "parse_rfc5424" -> (synthSql +
-      """ SELECT event_id,
-        |  hostname,
-        |  event_type AS app_name,
-        |  CAST(event_id AS VARCHAR) AS procid,
-        |  'ID' || (event_id % 10) AS msgid,
-        |  CAST(v100 AS VARCHAR) AS sd_v,
-        |  'payload ' || event_id AS msg
-        | FROM ev""".stripMargin),
-
-    "func_strings" ->
-      """SELECT doc_id,
-        |  length(text) AS len,
-        |  upper(substring(text, 1, 10)) AS head10,
-        |  coalesce(string_split(text, ' ')[3], '***FIELD NOT FOUND***') AS f3,
-        |  '''' || string_split(text, ' ')[1] || '''' AS wrapped,
-        |  replace(substring(text, 1, 20), ' ', '_') AS und
-        |FROM documents""".stripMargin,
-
-    "func_net" ->
-      """WITH e AS (
-        |  SELECT event_id, (user_id * 7777777 + event_id) % 4294967296 AS ipn
-        |  FROM events)
-        |SELECT event_id,
-        |  ((ipn // 16777216) % 256) || '.' || ((ipn // 65536) % 256) || '.' ||
-        |    ((ipn // 256) % 256) || '.' || (ipn % 256) AS ip,
-        |  true AS roundtrip,
-        |  lower(format('{:x}', event_id)) AS hexid,
-        |  (ipn // 16777216) % 256 = 10 AS in10,
-        |  ((ipn // 16777216) % 256) || '.' || ((ipn // 65536) % 256) || '.' ||
-        |    ((ipn // 256) % 256) || '.0' AS anon
-        |FROM e""".stripMargin,
-
-    "func_time" ->
-      """SELECT event_id,
-        |  strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%dT%H:%M:%S') || '+00:00' AS rfc3339,
-        |  strftime(CAST(ts AS TIMESTAMP), '%b') || ' ' ||
-        |    lpad(CAST(day(ts) AS VARCHAR), 2, ' ') || ' ' ||
-        |    strftime(CAST(ts AS TIMESTAMP), '%H:%M:%S') AS rfc3164,
-        |  true AS roundtrip
-        |FROM events""".stripMargin,
-
-    "mmjsonparse" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-        |  true AS valid
-        |FROM events""".stripMargin,
-
-    "parse_json_script" ->
-      """WITH src AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_id % 5 = 0 THEN props || ' trailing'
-        |         WHEN event_id % 5 = 1 THEN '22 08 23 this is a test message'
-        |         ELSE props END AS msg
-        |  FROM events)
-        |SELECT event_id,
-        |  CASE WHEN json_valid(msg) THEN 0 ELSE 1 END AS rc,
-        |  CASE WHEN json_valid(msg)
-        |       THEN CAST(json_extract_string(msg, '$.k') AS BIGINT) END AS k
-        |FROM src""".stripMargin,
-
-    "mmfields" -> (synthSql +
-      """ SELECT event_id,
-        |  event_type AS f1,
-        |  CAST(user_id AS VARCHAR) AS f2,
-        |  CAST(v100 AS VARCHAR) AS f3,
-        |  hostname AS f4,
-        |  4 AS nf
-        | FROM ev""".stripMargin),
-
-    // selector semantics: auth=4, authpriv=10, cron=9, kern=0, mail=2;
-    // '& stop' only affects statements after the mail fwd (none), so it
-    // changes no counts — it's there to prove the continuation parses
-    "parser_chain_cisco" ->
-      """SELECT event_id,
-        |  CASE
-        |    WHEN event_id % 4 = 0 THEN
-        |      'src' || (user_id % 10) || '|%SYS-5-CONFIG_I:|189| c ' || event_id
-        |    WHEN event_id % 4 = 1 THEN
-        |      'src' || (user_id % 10) || '||13|last message repeated ' ||
-        |      (event_id % 9) || ' times'
-        |    WHEN event_id % 4 = 2 THEN
-        |      'ax' || (user_id % 10) || '|app' || (event_id % 7) ||
-        |      ':|13| t ' || event_id
-        |    ELSE
-        |      'h' || (user_id % 10) || '|app' || (event_id % 7) ||
-        |      ':|13| t ' || event_id
-        |  END AS line
-        |FROM events""".stripMargin,
-
-    "parser_chain" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 3 <> 0 THEN
-        |    'host' || (user_id % 50) || '|10.0.' || (user_id % 256) || '.' ||
-        |    (event_id % 256) || '|app' || (event_id % 7) || '|' ||
-        |    (event_id % 192) || '|' || ((event_id % 192) % 8) || '|' ||
-        |    (event_id % 9999)
-        |  ELSE
-        |    'src' || (user_id % 10) || '|src' || (user_id % 10) ||
-        |    '||13|5|freeform line ' || event_id
-        |  END AS line,
-        |  event_id % 3 <> 0 AS parsesuccess
-        |FROM events""".stripMargin,
-
-    "json_var_case" -> (synthSql +
-      """ SELECT event_id,
-        |  CAST(severity * 10 + 1 AS BIGINT) AS v_spell,
-        |  CAST(severity * 10 + 1 AS BIGINT) AS read_ci,
-        |  'L' || (severity * 10 + 1) AS l_ci,
-        |  'false' AS exists_gone,
-        |  'true' AS tmp_obj
-        | FROM ev""".stripMargin),
-
-    "config_e2e" -> (synthSql +
-      """ SELECT
-        |  count(CASE WHEN facility IN (4,10) THEN 1 END) AS n_auth,
-        |  count(CASE WHEN facility NOT IN (4,10) THEN 1 END) AS n_syslog,
-        |  count(CASE WHEN facility = 9 THEN 1 END) AS n_cron,
-        |  count(CASE WHEN facility = 0 THEN 1 END) AS n_kern,
-        |  count(CASE WHEN facility = 2 AND severity <= 3 THEN 1 END) AS n_mailerr,
-        |  count(CASE WHEN severity = 0 THEN 1 END) AS n_emerg,
-        |  count(CASE WHEN facility = 2 THEN 1 END) AS n_mailfwd
-        | FROM ev""".stripMargin),
-
-    "rainerscript_e2e" -> (synthSql +
-      """ SELECT event_id,
-        |  CASE WHEN severity <= 3
-        |         AND ('msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0')
-        |              || ': v100=' || v100) LIKE '%v100%'
-        |       THEN 'important' ELSE 'routine' END AS flag,
-        |  CAST(severity * severity AS BIGINT) AS sevsq,
-        |  hostname || ' ' || 'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0')
-        |    || ': v100=' || v100 AS line
-        | FROM ev WHERE severity <> 7""".stripMargin),
-
-    "exec_template" -> (synthSql +
-      """ SELECT event_id,
-        |  strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%dT%H:%M:%S') || '+00:00 ' ||
-        |  hostname || ' ' || event_type || ': v100=' || v100 || chr(10) AS line
-        | FROM ev""".stripMargin),
-
-    "func_misc" ->
-      """SELECT event_id,
-        |  event_type AS b64rt,
-        |  '''' || event_type || '''' AS wrapped,
-        |  user_id AS unflat,
-        |  'CEF:0|graft|engine|1.0|' || event_id || '|' || event_type || '|'
-        |    || (user_id % 10) || '|uid=' || user_id AS cef,
-        |  'https' AS scheme,
-        |  'h' || user_id || '.example.com' AS host,
-        |  'com' AS tld,
-        |  '/p/' || event_id AS path,
-        |  'q=' || user_id AS q
-        |FROM events""".stripMargin,
-
-    "pipeline_e2e" -> pipelineOracle,
-
-    // mirrors udpspoofPackets: maxPkt=(1500-20)&~7=1480, fragment-0
-    // payload 1472 (UDP header), continuation offsets (msgOffs+8)
-    "omudpspoof_frames" -> (synthSql + """
-      |, m AS (
-      |  SELECT event_id,
-      |    ('<' || (facility*8 + severity) || '>' ||
-      |      strftime(CAST(ts AS TIMESTAMP), '%b') || ' ' ||
-      |      lpad(CAST(day(ts) AS VARCHAR), 2, ' ') || ' ' ||
-      |      strftime(CAST(ts AS TIMESTAMP), '%H:%M:%S') || ' ' ||
-      |      hostname || ' ' || syslogtag || ': msgnum:' ||
-      |      lpad(CAST(event_id AS VARCHAR), 8, '0') || ': v100=' || v100)
-      |    || repeat('x', CASE WHEN severity = 7 THEN 3000
-      |                       WHEN severity = 5 THEN 1600 ELSE 0 END) AS wire,
-      |    ((user_id % 4294967296) // 16777216) % 256 || '.' ||
-      |      ((user_id % 4294967296) // 65536) % 256 || '.' ||
-      |      ((user_id % 4294967296) // 256) % 256 || '.' ||
-      |      (user_id % 4294967296) % 256 AS src_ip,
-      |    CAST(32000 + event_id % 10001 AS INT) AS src_port
-      |  FROM ev),
-      |f AS (
-      |  SELECT event_id, wire, length(wire) AS len, src_ip, src_port,
-      |    unnest(range(CASE WHEN length(wire) <= 1472 THEN 1
-      |                      ELSE 2 + (length(wire) - 1473) // 1480 END)) AS frag_idx
-      |  FROM m),
-      |g AS (
-      |  SELECT event_id, wire, len, src_ip, src_port, frag_idx,
-      |    CASE WHEN frag_idx = 0 THEN 0
-      |         ELSE 1472 + (frag_idx-1)*1480 END AS mstart,
-      |    CASE WHEN frag_idx = 0 THEN least(len, 1472)
-      |         ELSE least(len - (1472 + (frag_idx-1)*1480), 1480) END AS payload_len
-      |  FROM f)
-      |SELECT event_id, frag_idx, src_ip, src_port, CAST(514 AS INT) AS dst_port,
-      |  CASE WHEN frag_idx = 0 THEN len > 1472
-      |       ELSE len - mstart > 1480 END AS mf,
-      |  CASE WHEN frag_idx = 0 THEN 0 ELSE mstart + 8 END AS frag_offset,
-      |  payload_len,
-      |  CASE WHEN frag_idx = 0 THEN payload_len + 28
-      |       ELSE payload_len + 20 END AS ip_len,
-      |  CASE WHEN frag_idx = 0 THEN len + 8 END AS udp_len,
-      |  substr(wire, CAST(mstart + 1 AS INT),
-      |    CAST(least(16, payload_len) AS INT)) AS frag_head,
-      |  sum(payload_len) OVER (PARTITION BY event_id) = len
-      |    AND mstart = coalesce(sum(payload_len) OVER (
-      |      PARTITION BY event_id ORDER BY frag_idx
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |    AS probe_reassembled
-      |FROM g""").stripMargin,
-
-    "fmhttp_enrich" ->
-      """WITH resp(u, body) AS (VALUES
-        |  ('http://svc.example/class?t=error',
-        |   '{"sev":"high","team":"oncall"}'),
-        |  ('http://svc.example/class?t=purchase',
-        |   '{"sev":"low","team":"billing"}'),
-        |  ('http://svc.example/class?t=signup',
-        |   '{"sev":"low","team":"growth"}')),
-        |j AS (
-        |  SELECT e.event_type,
-        |    CASE WHEN r.body IS NULL THEN 'unresolved'
-        |         ELSE json_extract_string(r.body, '$.team') END AS team
-        |  FROM events e LEFT JOIN resp r
-        |    ON 'http://svc.example/class?t=' || e.event_type = r.u)
-        |SELECT team, count(*) AS n, count(DISTINCT event_type) AS n_types
-        |FROM j GROUP BY 1""".stripMargin,
-
-    "mmcount" ->
-      """WITH seq AS (
-        |  SELECT event_id, event_type, row_number() OVER (
-        |    PARTITION BY event_type ORDER BY event_id) AS msgcnt
-        |  FROM events)
-        |SELECT event_id, event_type, msgcnt FROM seq WHERE msgcnt % 100 = 0""".stripMargin,
-
-    "mmsequence" ->
-      """WITH seq AS (
-        |  SELECT user_id, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY event_id) AS s
-        |  FROM events)
-        |SELECT user_id, max(s) AS max_seq, count(*) AS n FROM seq GROUP BY 1""".stripMargin,
-
-    "mmanon_v6" ->
-      """SELECT event_id,
-        |  'conn from 2001:db8:0:0:0:0:0:0 port ' || (event_id % 9999) AS msg,
-        |  true AS rc_consistent,
-        |  true AS rc_prefix_kept
-        |FROM events""".stripMargin,
-
-    "mmanon_msg" ->
-      """WITH e AS (
-        |  SELECT event_id, (user_id * 7777777 + event_id) % 4294967296 AS ipn
-        |  FROM events)
-        |SELECT event_id,
-        |  'login from ' || CAST(ipn // 16777216 AS VARCHAR) || '.' ||
-        |  CAST((ipn // 65536) % 256 AS VARCHAR) || '.0.0 port ' ||
-        |  CAST(event_id % 65536 AS VARCHAR) AS msg
-        |FROM e""".stripMargin,
-
-    "mmanon" ->
-      """WITH e AS (
-        |  SELECT event_id, (user_id * 7777777 + event_id) % 4294967296 AS ipn
-        |  FROM events)
-        |SELECT event_id,
-        |  ((ipn // 16777216) % 256) || '.' || ((ipn // 65536) % 256) || '.' ||
-        |    ((ipn // 256) % 256) || '.0' AS anon8,
-        |  ((ipn // 16777216) % 256) || '.' || ((ipn // 65536) % 256) || '.0.0'
-        |    AS anon16,
-        |  true AS still_in_24
-        |FROM e""".stripMargin,
-
-    // ------------------------- stateful / gate oracles -----------------------
-
-    "ratelimit" -> ratelimitOracle,
-
-    "ratelimit_summary" ->
-      """SELECT user_id AS key, epoch_ns(ts)//1000000000//3600 AS rl_win,
-        |  count(*) AS n_total,
-        |  least(count(*), 3) AS n_passed,
-        |  count(*) - least(count(*), 3) AS n_dropped
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "exec_gates" ->
-      """WITH seq AS (
-        |  SELECT user_id, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY event_id) AS rn FROM events),
-        |nth AS (SELECT user_id, count(*) AS n_nth FROM seq
-        |        WHERE rn % 5 = 0 GROUP BY 1),
-        |onceseq AS (
-        |  SELECT user_id, row_number() OVER (
-        |    PARTITION BY user_id, epoch_ns(ts)//1000000000//86400
-        |    ORDER BY event_id) AS rn2 FROM events),
-        |once AS (SELECT user_id, count(*) AS n_once FROM onceseq
-        |         WHERE rn2 = 1 GROUP BY 1)
-        |SELECT coalesce(n.user_id, o.user_id) AS user_id,
-        |  coalesce(n_nth, 0) AS n_nth, coalesce(n_once, 0) AS n_once
-        |FROM nth n FULL OUTER JOIN once o ON n.user_id = o.user_id""".stripMargin,
-
-    "repeat_reduce" ->
-      """WITH base AS (
-        |  SELECT user_id AS key, event_type AS msg, event_id,
-        |    CASE WHEN lag(event_type) OVER
-        |           (PARTITION BY user_id ORDER BY event_id) IS NULL
-        |         OR lag(event_type) OVER
-        |           (PARTITION BY user_id ORDER BY event_id) <> event_type
-        |         THEN 1 ELSE 0 END AS chg
-        |  FROM events),
-        |runs AS (SELECT *, sum(chg) OVER (
-        |    PARTITION BY key ORDER BY event_id ROWS UNBOUNDED PRECEDING)
-        |  AS run_id FROM base)
-        |SELECT key, msg, min(event_id) AS first_seen,
-        |  count(*) AS n_repeats
-        |FROM runs GROUP BY key, run_id, msg""".stripMargin,
-
-    "stop_discard" -> (synthSql +
-      """ SELECT event_type, count(*) AS n FROM ev
-        | WHERE NOT (severity >= 5) GROUP BY 1""".stripMargin),
-
-    "template_stages" -> (synthSql +
-      """ SELECT event_id,
-        |  replace(hostname || '/' || event_type, '/', '_') AS secp,
-        |  substr(hostname, 2, greatest(length(hostname) - 3, 0)) AS negto,
-        |  rpad(substr(hostname, 1, 12), 12, ' ') || '|' AS fixedw,
-        |  substr(hostname, greatest(length(hostname) - 4, 0) + 1,
-        |    greatest(length(hostname) - 1, 0) - greatest(length(hostname) - 4, 0) + 1) AS relend,
-        |  '"event_type":"' || event_type || '"' AS jsonff
-        | FROM ev""".stripMargin),
-
-    "prop_replacer" -> (synthSql +
-      """ SELECT event_id,
-        |  (['emerg','alert','crit','err','warning','notice','info','debug'])[severity + 1]
-        |    AS sev_name,
-        |  upper(event_type) AS tag_upper,
-        |  regexp_replace('  x  ' || event_type || '  ', '\s+', ' ', 'g')
-        |    AS compressed,
-        |  substring(hostname, 1, 4) AS host4
-        | FROM ev""".stripMargin),
-
-    "msg_cleanup" ->
-      """WITH d AS (
-        |  SELECT doc_id, ' ' || text || chr(10) AS dirty FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(regexp_replace(dirty, '^ ', ''), chr(10) || '$', '')
-        |    AS clean,
-        |  length(dirty) - length(
-        |    regexp_replace(regexp_replace(dirty, '^ ', ''), chr(10) || '$', ''))
-        |    AS removed
-        |FROM d""".stripMargin,
-
-    "lookup_array" ->
-      """SELECT CASE WHEN user_id % 30 + 100 <= 119
-        |    THEN 'svc' || (user_id % 30) ELSE 'nosvc' END AS svc,
-        |  count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "rs_coercion" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, event_type,
-        |    json_extract_string(props, '$.k') AS numstr
-        |  FROM events)
-        |SELECT event_id,
-        |  CASE WHEN TRY_CAST(numstr AS BIGINT) IS NOT NULL
-        |       THEN TRY_CAST(numstr AS BIGINT) = user_id
-        |       ELSE numstr = CAST(user_id AS VARCHAR) END AS eq_numstr_num,
-        |  CASE WHEN TRY_CAST(numstr AS BIGINT) IS NOT NULL
-        |       THEN TRY_CAST(numstr AS BIGINT) <= 50
-        |       ELSE numstr <= '50' END AS le_numstr_numstr,
-        |  event_type < 'purchase' AS lt_str_str,
-        |  event_type = numstr AS eq_str_numstr,
-        |  CASE WHEN TRY_CAST(numstr AS BIGINT) IS NOT NULL
-        |       THEN TRY_CAST(numstr AS BIGINT) > 9
-        |       ELSE numstr > '9' END AS gt_numeric_not_lexico
-        |FROM e""".stripMargin,
-
-    "foreach_object" ->
-      """SELECT event_id, k, json_extract_string(props, '$.' || k) AS v
-        |FROM (SELECT event_id, props, unnest(json_keys(props)) AS k
-        |      FROM events)""".stripMargin,
-
-    "template_json" ->
-      """SELECT event_id,
-        |  '{"event_id":' || event_id || ',"event_type":"' || event_type || '"}'
-        |    AS j
-        |FROM events""".stripMargin,
-
-    "window_agg" ->
-      """SELECT CAST(epoch_ns(date_trunc('day', ts)) // 1000000000 AS BIGINT)
-        |    AS day_start,
-        |  event_type, count(*) AS n, round(sum(value), 2) AS sum_v
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "mmnormalize" ->
-      """WITH m AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_type = 'error'
-        |      THEN 'error code=' || (event_id % 500) || ' at host' || user_id || ' fatal'
-        |      ELSE 'user u' || user_id || ' did ' || event_type || ' n=' || event_id
-        |    END AS msg,
-        |    event_type
-        |  FROM events)
-        |SELECT event_id,
-        |  CASE WHEN event_type = 'error'
-        |    THEN CAST(regexp_extract(msg, '^error code=(\d+) at (\S+) fatal$', 1) AS BIGINT) END AS code,
-        |  CASE WHEN event_type = 'error'
-        |    THEN regexp_extract(msg, '^error code=(\d+) at (\S+) fatal$', 2) END AS host,
-        |  CASE WHEN event_type <> 'error'
-        |    THEN regexp_extract(msg, '^user (\S+) did (\S+) n=(\d+)$', 1) END AS u,
-        |  CASE WHEN event_type <> 'error'
-        |    THEN regexp_extract(msg, '^user (\S+) did (\S+) n=(\d+)$', 2) END AS act,
-        |  CASE WHEN event_type <> 'error'
-        |    THEN CAST(regexp_extract(msg, '^user (\S+) did (\S+) n=(\d+)$', 3) AS BIGINT) END AS n
-        |FROM m""".stripMargin,
-
-    "mmnormalize_annotate" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 2 = 0 THEN 134 END AS n1,
-        |  CASE WHEN event_id % 2 = 0 THEN 'host' || user_id END AS n2,
-        |  CASE WHEN event_id % 2 = 0 THEN 'WinTag'
-        |       ELSE 'vpx.daemon' END AS tag,
-        |  CASE WHEN event_id % 2 = 0 THEN 'svc' || (user_id % 4)
-        |       ELSE 'SER2' END AS svc,
-        |  CASE WHEN event_id % 2 = 0 THEN 'ret' || (event_id % 3)
-        |       ELSE 'Y01' END AS ret,
-        |  CASE WHEN event_id % 2 = 0 THEN 'os' || (event_id % 5)
-        |       ELSE 'ESX' END AS os,
-        |  CASE WHEN event_id % 2 = 0 THEN NULL ELSE 'esx' END AS file,
-        |  CASE WHEN event_id % 2 = 0
-        |       THEN 'event ' || event_type || ' happened'
-        |       ELSE 'event ' || event_type || ' at ' || event_id END AS vmsg,
-        |  CASE WHEN event_id % 2 = 0 THEN 'EvntSLog: ' END AS prefix
-        |FROM events""".stripMargin,
-
-    "sender_track" -> (synthSql +
-      """ SELECT hostname AS sender,
-        |  min(epoch_ns(ts) // 1000000000) AS first_seen,
-        |  max(epoch_ns(ts) // 1000000000) AS last_seen,
-        |  count(*) AS n_msgs,
-        |  round(sum(value), 2) AS sum_v
-        | FROM ev GROUP BY 1""".stripMargin),
-
-    // ------------------------- training-data pipeline oracles ---------------
-
-    "dedup_exact" ->
-      """SELECT md5(trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp,
-        |  min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "dedup_ngram" ->
-      """WITH grp AS ( -- engine's preDedup: one rep per identical lowered text
-        |  SELECT doc_id, lang, text,
-        |    min(doc_id) OVER (PARTITION BY lang, lower(text)) AS rep
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split_regex(lower(text), '[\s\x0B]+'), x -> x <> '') AS t
-        |  FROM grp WHERE doc_id = rep),
-        |sh AS (
-        |  SELECT doc_id, lang, unnest(list_distinct(list_transform(
-        |    range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS s
-        |  FROM toks WHERE len(t) >= 3),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |kept AS ( -- the engine's maxBucket hot-shingle guard, mirrored
-        |  SELECT lang, s FROM sh GROUP BY 1, 2
-        |  HAVING count(*) BETWEEN 2 AND 1024),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.s = b.s AND a.doc_id < b.doc_id
-        |  JOIN kept k ON k.lang = a.lang AND k.s = a.s
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        |  round(CAST(i AS DOUBLE) / (sa.sz + sb.sz - i), 4) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5""".stripMargin,
-
-    "dedup_clusters" ->
-      """WITH RECURSIVE grp AS ( -- engine's preDedup + member map
-        |  SELECT doc_id, lang, text,
-        |    min(doc_id) OVER (PARTITION BY lang, lower(text)) AS rep,
-        |    count(*) OVER (PARTITION BY lang, lower(text)) AS grp_n
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split_regex(lower(text), '[\s\x0B]+'), x -> x <> '') AS t
-        |  FROM grp WHERE doc_id = rep),
-        |sh AS (
-        |  SELECT doc_id, lang, unnest(list_distinct(list_transform(
-        |    range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS s
-        |  FROM toks WHERE len(t) >= 3),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |kept AS ( -- the engine's maxBucket hot-shingle guard, mirrored
-        |  SELECT lang, s FROM sh GROUP BY 1, 2
-        |  HAVING count(*) BETWEEN 2 AND 1024),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.s = b.s AND a.doc_id < b.doc_id
-        |  JOIN kept k ON k.lang = a.lang AND k.s = a.s
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = id_a
-        |  JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-        |edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs),
-        |reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        |labels AS (
-        |  SELECT a AS doc, least(a, min(b)) AS cluster
-        |  FROM reach GROUP BY a)
-        |SELECT g.doc_id AS doc,
-        |  coalesce(l.cluster, CASE WHEN g.grp_n >= 2 THEN g.rep END) AS cluster
-        |FROM grp g LEFT JOIN labels l ON l.doc = g.rep
-        |WHERE coalesce(l.cluster, CASE WHEN g.grp_n >= 2 THEN g.rep END)
-        |  IS NOT NULL""".stripMargin,
-
-    // multi-probe LSH fully oracled: the deterministic plane matrix embeds
-    // as SQL literals (see Similarity.lshOracleSql)
-    "ann_lsh" -> Similarity.lshOracleSql(nPlanes = 8, dim = 64, k = 5),
-
-    "ann_pq" -> Similarity.pqOracleSql(k = 5, m = 8, ksub = 16, dim = 64),
-
-    "ann_ivfpq" -> Similarity.ivfPqOracleSql(k = 5, nlist = 16, nprobe = 4,
-      m = 8, ksub = 16, dim = 64, maxPerCell = 8),
-
-    "ann_sq8" -> Similarity.sq8OracleSql(k = 5, dim = 64, nlevels = 256),
-
-    "ann_hamming" -> Similarity.hammingOracleSql(k = 5, dim = 64),
-    "ann_hamming_rerank" ->
-      Similarity.hammingRerankOracleSql(k = 5, nCand = 20, dim = 64),
-
-    "ann_recall_audit" -> Similarity.recallAuditOracleSql(k = 10),
-
-    "hybrid_retrieve" -> TextAnalysis.hybridRetrieveOracleSql(k = 5, nLeg = 10),
-    "hybrid_retrieve_pq" ->
-      TextAnalysis.hybridRetrievePqOracleSql(k = 5, nLeg = 10),
-
-    "bm25_topk" -> TextAnalysis.bm25OracleSql(),
-
-    "rag_retrieve" -> TextAnalysis.ragRetrieveOracleSql(),
-
-    "mmr_rerank" -> TextAnalysis.mmrOracleSql(k = 5, nCand = 12),
-
-    // minhash/simhash fully oracled: FNV-1a + splitmix replicated in
-    // HUGEINT mod-2^64 SQL (see Dedup.minhashOracleSql/simhashOracleSql)
-    "dedup_minhash" -> Dedup.minhashOracleSql(n = 3, bands = 16, rows = 4,
-      minEstJaccard = 0.5),
-    "dedup_verified" -> Dedup.nearDupVerifiedOracleSql(n = 3, bands = 16,
-      rows = 4, minJaccard = 0.5),
-    "split_leakage_safe" -> Dedup.leakageSafeSplitOracleSql(trainFrac = 0.9),
-
-    "dedup_clusters_verified" -> Dedup.verifiedClustersOracleSql(n = 3,
-      bands = 16, rows = 4, minJaccard = 0.5),
-    "seq_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id % 64 AS shard,
-        |    len(list_filter(string_split_regex(lower(text), '[\s\x0B]+'), x -> x <> ''))
-        |      AS n_tok
-        |  FROM documents)
-        |SELECT doc_id, shard, n_tok,
-        |  CAST(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok
-        |    AS BIGINT) AS start_off,
-        |  CAST(floor((sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok)
-        |    / 2048) AS BIGINT) AS chunk
-        |FROM t""".stripMargin,
-
-    "dedup_substring" ->
-      """WITH w AS (
-        |  SELECT doc_id AS doc, substr(text, CAST(gs.i AS INT), 120) AS w
-        |  FROM documents, LATERAL (SELECT unnest(generate_series(1,
-        |    greatest(length(text) - 119, 0))) AS i) gs
-        |)
-        |SELECT w, count(*) AS n, count(DISTINCT doc) AS ndocs,
-        |  min(doc) AS first_doc
-        |FROM w WHERE substr(md5(w), 32, 1) = '0'
-        |GROUP BY w HAVING count(DISTINCT doc) >= 2
-        |ORDER BY n DESC, w LIMIT 100""".stripMargin,
-
-    "dedup_simhash" -> Dedup.simhashOracleSql(maxHamming = 3),
-
-    "ann_cosine" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
-        |           FROM embeddings WHERE vec_id < 8),
-        |sims AS (
-        |  SELECT q.q_id, c.vec_id AS neighbor,
-        |    round(list_cosine_similarity(q.q_emb, c.embedding), 4) AS sim
-        |  FROM embeddings c CROSS JOIN q WHERE c.vec_id <> q.q_id),
-        |ranked AS (
-        |  SELECT *, row_number() OVER
-        |    (PARTITION BY q_id ORDER BY sim DESC, neighbor) AS rk
-        |  FROM sims)
-        |SELECT q_id, rk, neighbor, sim FROM ranked WHERE rk <= 5""".stripMargin,
-
-    // banded-LSH pipeline fully oracled: deterministic planes embed as
-    // literals, maxBucket guard mirrored (see Similarity.embNearDupOracleSql)
-    "emb_neardup" -> Similarity.embNearDupOracleSql(threshold = 0.3),
-
-    "dedup_semantic" -> Similarity.semDedupOracleSql(tau = 0.3),
-
-    "quality_gopher" -> TextAnalysis.gopherOracleSql,
-
-    "lm_score" -> LanguageModel.bigramOracleSql,
-
-    "tfidf_topk" -> TextAnalysis.tfidfOracleSql(),
-
-    // the deflate BYTES are impl-defined, so the oracle pins the
-    // closed-form compress decision; roundtrip/gain are engine-verified
-    // booleans (same contract as imhttp_body's gzip rows)
-    // file shape + member counts closed-form (robust = one member per
-    // flushed block, plain = one member total); decode equality and the
-    // CRC-checked member walk are engine-verified
-    "omfile_zstd" ->
-      """SELECT event_id % 8 AS file,
-        |  count(*) AS n_lines,
-        |  count(DISTINCT (event_id // 8) % 4) AS n_parts,
-        |  CAST(count(DISTINCT (event_id // 8) % 4) AS INT) AS robust_members,
-        |  true AS robust_rt,
-        |  CAST(1 AS INT) AS plain_members,
-        |  true AS plain_rt
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "omfile_zip" ->
-      """SELECT event_id % 8 AS file,
-        |  count(*) AS n_lines,
-        |  count(DISTINCT (event_id // 8) % 4) AS n_parts,
-        |  CAST(count(DISTINCT (event_id // 8) % 4) AS INT) AS robust_members,
-        |  true AS robust_rt,
-        |  CAST(1 AS INT) AS plain_members,
-        |  true AS plain_rt
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // session shape closed-form; round-trip and the deflate-side sniff
-    // are engine-verified. plain_detected is COMPUTED from the first
-    // frame's rendered octet-count header (not pinned false): a digit
-    // CAN pass both RFC1950 checks — '8'(0x38) has low nibble 8 and
-    // 0x3830 = 14384 = 31*464 — so a session whose first frame length
-    // starts "80" would legitimately sniff as zlib. The oracle mirrors
-    // HttpKernels.zlibCandidate over the first two header bytes.
-    "omfwd_zipstream" ->
-      """WITH s AS (
-        |  SELECT event_id // 64 AS session, count(*) AS n_msgs,
-        |    CAST(29 + strlen(arg_min(event_type, event_id)) AS VARCHAR)
-        |      || ' ' AS hdr
-        |  FROM events GROUP BY 1)
-        |SELECT session, n_msgs,
-        |  true AS roundtrip_ok,
-        |  true AS zlib_detected,
-        |  (ord(substr(hdr, 1, 1)) % 16 = 8
-        |   AND (ord(substr(hdr, 1, 1)) * 256 + ord(substr(hdr, 2, 1))) % 31
-        |     = 0) AS plain_detected
-        |FROM s""".stripMargin,
-
-    "omfwd_compress" ->
-      """SELECT event_id,
-        |  strlen('<13>h fwd msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0'))
-        |    + CASE WHEN event_id % 3 = 0 THEN 0 ELSE 514 END AS orig_len,
-        |  event_id % 3 <> 0 AS compressed,
-        |  event_id % 3 <> 0 AS gain,
-        |  true AS roundtrip_ok
-        |FROM events""".stripMargin,
-
-    "langid" ->
-      ("SELECT doc_id, lang, predicted FROM " +
-        graft.operators.TextAnalysis.langIdSql("text")),
-
-    "text_quality" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    len(list_filter(string_split_regex(lower(text), '[\s\x0B]+'), x -> x <> '')) AS n_tokens,
-        |    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS n_subwords,
-        |    length(text) AS n_chars,
-        |    len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha,
-        |    len(regexp_extract_all(text, '[0-9]')) AS n_digit
-        |  FROM documents)
-        |SELECT doc_id, n_tokens, n_subwords,
-        |  -- all constants forced to DOUBLE: DuckDB decimal literals would
-        |  -- do exact-decimal arithmetic and diverge from Spark by 1 ulp
-        |  floor((
-        |    (CASE WHEN n_tokens >= 50 AND n_tokens <= 100000 THEN 1.0::DOUBLE
-        |          WHEN n_tokens >= 10 THEN 0.5::DOUBLE ELSE 0.0::DOUBLE END) * 0.4::DOUBLE +
-        |    (CASE WHEN n_tokens > 0
-        |          AND CAST(n_chars AS DOUBLE)/n_tokens >= 3
-        |          AND CAST(n_chars AS DOUBLE)/n_tokens <= 12
-        |          THEN 1.0::DOUBLE ELSE 0.3::DOUBLE END) * 0.2::DOUBLE +
-        |    (CASE WHEN n_chars > 0 THEN CAST(n_alpha AS DOUBLE)/n_chars ELSE 0.0::DOUBLE END) * 0.3::DOUBLE +
-        |    (1.0::DOUBLE - CASE WHEN n_chars > 0 THEN CAST(n_digit AS DOUBLE)/n_chars ELSE 0.0::DOUBLE END) * 0.1::DOUBLE
-        |  ) * 1e6) / 1e6 AS quality
-        |FROM base""".stripMargin,
-
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp
-        |FROM documents""".stripMargin,
-
-    "multimodal_features" ->
-      """SELECT doc_id AS media_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |                  ELSE 'video' END AS kind,
-        |  octet_length(encode(text)) AS n_bytes,
-        |  sha256(text) AS content_sha,
-        |  CASE doc_id % 3
-        |    WHEN 2 THEN octet_length(encode(text)) // 1024 + 1
-        |    WHEN 1 THEN octet_length(encode(text)) // 4096 + 1
-        |    ELSE 1 END AS frames_sampled
-        |FROM documents""".stripMargin,
-
-    // real-codec round-trips: the engine encodes AND decodes with the
-    // actual JDK codecs; the oracle knows what the decode must yield
-    // because the fixture's pixel/sample content is closed-form in id
-    "multimodal_image_decode" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(8 + (doc_id % 8) * 2 AS INT) AS width,
-        |  CAST(8 + (doc_id % 5) * 2 AS INT) AS height,
-        |  ((doc_id % 256) + (doc_id * 3 % 256)) / 2.0 AS mean_r,
-        |  ((doc_id * 7 % 256) + (doc_id * 11 % 256)) / 2.0 AS mean_g,
-        |  ((doc_id * 13 % 256) + (doc_id * 17 % 256)) / 2.0 AS mean_b
-        |FROM documents""".stripMargin,
-
-    "multimodal_audio_decode" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(8000 AS INT) AS sample_rate,
-        |  CAST(16 AS INT) AS bits,
-        |  CAST(1 AS INT) AS channels,
-        |  800 + doc_id % 800 AS n_frames,
-        |  (800 + doc_id % 800) / 8.0 AS dur_ms,
-        |  CAST((doc_id % 100) * 64 AS INT) AS first_sample
-        |FROM documents""".stripMargin,
-
-    "multimodal_frames" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(f.i AS INT) AS frame_no,
-        |  CAST(f.blk AS INT) AS block_offset_kib
-        |FROM documents,
-        |LATERAL (
-        |  SELECT row_number() OVER (ORDER BY blk) - 1 AS i, blk
-        |  FROM (SELECT unnest(list_filter(
-        |    range(octet_length(encode(text)) // 1024 + 1),
-        |    x -> x % 3 = 0)) AS blk)
-        |) f
-        |WHERE doc_id % 3 = 2""".stripMargin,
-
-    // every header field, frame count, and decoded dimension of the
-    // MJPEG-AVI fixture is a closed-form function of doc_id; JPEG pixel
-    // VALUES are lossy and stay out of the contract
-    "multimodal_video_decode" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(16 + (doc_id % 4) * 8 AS INT) AS width,
-        |  CAST(8 + (doc_id % 3) * 8 AS INT) AS height,
-        |  CAST(2 + doc_id % 4 AS INT) AS n_frames,
-        |  CAST(40000 + (doc_id % 5) * 20000 AS BIGINT) AS us_per_frame,
-        |  CAST((2 + doc_id % 4) * (40000 + (doc_id % 5) * 20000) // 1000
-        |    AS BIGINT) AS dur_ms,
-        |  CAST(2 + doc_id % 4 AS INT) AS frames_decoded,
-        |  CAST(16 + (doc_id % 4) * 8 AS INT) AS first_w,
-        |  CAST(8 + (doc_id % 3) * 8 AS INT) AS first_h
-        |FROM documents""".stripMargin,
-
-    "multimodal_video_frames" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(f AS INT) AS frame_no,
-        |  CAST(16 + (doc_id % 4) * 8 AS INT) AS frame_w,
-        |  CAST(8 + (doc_id % 3) * 8 AS INT) AS frame_h
-        |FROM documents,
-        |LATERAL (SELECT unnest(range(0, 2 + doc_id % 4, 2)) AS f) t""".stripMargin,
-
-    // ------------------------- device parser / mm-module oracles ------------
-
-    "parse_cisco" -> (synthSql +
-      """ SELECT event_id,
-        |  CASE event_id % 3 WHEN 0 THEN 'ios' WHEN 1 THEN 'aix'
-        |    ELSE 'names' END AS parser,
-        |  CASE WHEN event_id % 3 = 0 THEN NULL
-        |    ELSE 'host' || user_id END AS hostname,
-        |  CASE event_id % 3 WHEN 0 THEN severity WHEN 2 THEN 6 END AS sev,
-        |  CASE event_id % 3
-        |    WHEN 0 THEN 'configured by u' || user_id
-        |    WHEN 1 THEN 'app n=' || event_id
-        |    ELSE 'built conn n=' || event_id END AS text
-        | FROM ev""".stripMargin),
-
-    "parse_leef" ->
-      """SELECT event_id,
-        |  'Vendor' || (user_id % 5) AS vendor,
-        |  CAST(event_id % 100 AS VARCHAR) AS leef_event,
-        |  '10.0.0.' || (user_id % 256) AS src,
-        |  '192.168.1.' || (event_id % 256) AS dst,
-        |  CAST(event_id % 8 AS INT) AS sev,
-        |  event_type AS act
-        |FROM events""".stripMargin,
-
-    "parse_snare" ->
-      """SELECT event_id,
-        |  CAST(event_id % 5 AS INT) AS criticality,
-        |  4624 + user_id % 4 AS win_event_id,
-        |  'u' || user_id AS usr,
-        |  'host' || user_id AS host,
-        |  'An account was logged on n=' || event_id AS message
-        |FROM events""".stripMargin,
-
-    "parse_audit" ->
-      """SELECT event_id,
-        |  CASE WHEN event_id % 2 = 0 THEN 'SYSCALL' ELSE 'EXECVE' END
-        |    AS audit_type,
-        |  epoch_ns(ts) // 1000000000 AS epoch,
-        |  event_id AS serial,
-        |  event_id % 300 AS syscall,
-        |  CASE WHEN user_id % 2 = 0 THEN 'yes' ELSE 'no' END AS success,
-        |  user_id AS pid
-        |FROM events""".stripMargin,
-
-    "utf8fix" ->
-      """SELECT doc_id,
-        |  text || 'é  ' AS fixed,
-        |  text || ' end' AS fixed2
-        |FROM documents""".stripMargin,
-
-    "hmac_sign" -> {
-      val kp = "graftkey".getBytes("UTF-8").padTo(64, 0.toByte)
-      val ipad = new String(kp.map(b => (b ^ 0x36).toByte), "ISO-8859-1")
-      val opad = new String(kp.map(b => (b ^ 0x5c).toByte), "ISO-8859-1")
-      def sq(s: String) = s.replace("'", "''")
-      s"""WITH e AS (
-         |  SELECT event_id,
-         |    '<165>1 - host' || user_id || ' app - - - payload ' || event_id
-         |      AS m
-         |  FROM events)
-         |SELECT event_id,
-         |  sha256('${sq(opad)}' || sha256('${sq(ipad)}' || m)) AS sig,
-         |  m || ' [hmac@32473 h="' ||
-         |    sha256('${sq(opad)}' || sha256('${sq(ipad)}' || m)) || '"]'
-         |    AS signed
-         |FROM e""".stripMargin
-    },
-
-    "lastmsg" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id,
-        |    CASE WHEN event_id % 4 = 3 THEN 'last message repeated 2 times'
-        |      ELSE 'real ' || event_type || ' n=' || event_id END AS m
-        |  FROM events)
-        |SELECT event_id, user_id, m AS msg,
-        |  coalesce(
-        |    last_value(CASE WHEN NOT starts_with(m, 'last message repeated ')
-        |        THEN m END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |    m) AS effective
-        |FROM e""".stripMargin,
-
-    "geo_enrich" ->
-      """WITH e AS (
-        |  SELECT ((user_id % 65536) * 7777777
-        |          + (event_id % 65536) * 2654435761) % 4294967296 AS ipn
-        |  FROM events)
-        |SELECT CASE
-        |    WHEN ipn <= 536870911 THEN 'apnic'
-        |    WHEN ipn <= 1610612735 THEN 'ripe'
-        |    WHEN ipn <= 2684354559 THEN 'arin'
-        |    WHEN ipn <= 3221225471 THEN 'lacnic'
-        |    WHEN ipn >= 3489660928 THEN 'afrinic'
-        |    ELSE 'unknown' END AS geo,
-        |  count(*) AS n, min(ipn) AS min_ipn
-        |FROM e GROUP BY 1""".stripMargin,
-
-    "skew_join" ->
-      """WITH dim AS (
-        |  SELECT 'host' || i AS hostkey, 'site' || (i % 5) AS site
-        |  FROM range(100) t(i)),
-        |e AS (
-        |  SELECT *, CASE WHEN user_id % 10 < 7 THEN 'host0'
-        |                 ELSE 'host' || (user_id % 100) END AS hostkey
-        |  FROM events)
-        |SELECT site, count(*) AS n, count(DISTINCT user_id) AS nu
-        |FROM e JOIN dim USING (hostkey) GROUP BY 1""".stripMargin,
-
-    "grok" ->
-      """SELECT event_id,
-        |  strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS gts,
-        |  'INFO' AS lvl,
-        |  'u' || user_id AS usr,
-        |  event_type AS act,
-        |  '10.' || (user_id % 256) || '.1.' || (event_id % 256) AS ip
-        |FROM events""".stripMargin,
-
-    "tag_rewrite" -> (synthSql +
-      """ SELECT event_id,
-        |  CASE WHEN event_id % 3 = 0 THEN 'graft-relay:'
-        |    WHEN event_id % 3 = 1 THEN 'snmptrapd:'
-        |    ELSE event_type || ':' END AS newtag,
-        |  'graftnode' AS newhost,
-        |  CAST(CASE WHEN event_id % 3 = 1 THEN user_id % 8
-        |    ELSE severity END AS INT) AS newsev
-        | FROM ev""".stripMargin),
-
-    "parse_db2_pan" ->
-      """SELECT event_id,
-        |  (['Info','Warning','Error','Severe'])[CAST(event_id % 4 AS INT) + 1]
-        |    AS db2_level,
-        |  user_id AS db2_pid,
-        |  event_id % 100 AS db2_tid,
-        |  'db2sysc (' || event_type || ')' AS db2_proc,
-        |  '00' || user_id AS pan_serial,
-        |  CASE WHEN user_id % 2 = 0 THEN 'TRAFFIC' ELSE 'THREAT' END
-        |    AS pan_type,
-        |  CASE WHEN event_id % 2 = 0 THEN 'start' ELSE 'end' END
-        |    AS pan_subtype
-        |FROM events""".stripMargin,
-
-    "ann_ivf" ->
-      """WITH cb AS (
-        |  SELECT list(embedding ORDER BY vec_id) AS ce
-        |  FROM embeddings WHERE vec_id < 16),
-        |simd AS (
-        |  SELECT e.vec_id, e.embedding,
-        |    list_transform(cb.ce, x -> list_cosine_similarity(e.embedding, x))
-        |      AS sims
-        |  FROM embeddings e, cb),
-        |assigned AS (
-        |  SELECT vec_id, embedding,
-        |    list_position(sims, list_max(sims)) - 1 AS cl
-        |  FROM simd),
-        |qp AS (
-        |  SELECT vec_id AS q_id, embedding AS q_emb,
-        |    unnest(list_transform(list_sort(list_transform(range(16),
-        |        i -> {'ns': -sims[i + 1], 'i': i})),
-        |      x -> x.i)[1:4]) AS probe
-        |  FROM simd WHERE vec_id < 8),
-        |cands AS (
-        |  SELECT qp.q_id, a.vec_id AS neighbor,
-        |    round(list_cosine_similarity(qp.q_emb, a.embedding), 4) AS sim
-        |  FROM assigned a JOIN qp ON a.cl = qp.probe AND a.vec_id <> qp.q_id),
-        |ranked AS (
-        |  SELECT *, row_number() OVER
-        |    (PARTITION BY q_id ORDER BY sim DESC, neighbor) AS rk
-        |  FROM cands)
-        |SELECT q_id, rk, neighbor, sim FROM ranked WHERE rk <= 5""".stripMargin,
-
-    // routes: error→alerts (+nested call audit), purchase→billing,
-    // click/view/signup→no matching ruleset→default; cls = IN-array test
-    "ruleset_call" ->
-      """SELECT event_id,
-        |  CASE event_type WHEN 'error' THEN 'alerts'
-        |    WHEN 'purchase' THEN 'billing' ELSE 'default' END AS route,
-        |  CASE WHEN event_type = 'error' THEN 'yes' END AS seen,
-        |  CASE WHEN event_type IN ('view', 'signup') THEN 'funnel'
-        |    ELSE 'other' END AS cls
-        |FROM events""".stripMargin,
-
-    // trace: c=0; bump sets c=1; guard c < target recurses until c =
-    // target — so final c = greatest(severity, 1)
-    "ruleset_recursion" -> (synthSql +
-      """ SELECT greatest(severity, 1) AS c, count(*) AS n
-        | FROM ev GROUP BY 1""".stripMargin),
-
-    "imfile_read" -> (synthSql +
-      """ SELECT event_id, 'imfile' AS inputname, facility, severity,
-        |   hostname, syslogtag || ':' AS syslogtag,
-        |   ' msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0')
-        |     || ': v100=' || v100 AS msg,
-        |   true AS parsesuccess
-        | FROM ev""".stripMargin),
-
-    "omfile_dynafile" -> (synthSql +
-      """ SELECT CAST(severity AS INT) AS severity, count(*) AS n,
-        |   CAST(sum(v100) AS BIGINT) AS sum_v100,
-        |   min(event_id) AS min_id, max(event_id) AS max_id
-        | FROM ev GROUP BY 1""".stripMargin),
-
-    "dead_letter" -> (synthSql +
-      """ SELECT event_id,
-        |   CASE WHEN severity < 4 THEN 'primary' ELSE 'dead_letter' END
-        |     AS handled_by
-        | FROM ev""".stripMargin),
-
-    // the text_quality oracle's arithmetic (constants forced DOUBLE, floor
-    // quantization) + langid oracle + dedup_exact fingerprint, composed
-    "llm_prep" ->
-      (s"""WITH li AS (SELECT doc_id, text, predicted FROM ${TextAnalysis.langIdSql("text")}),
-        |sc AS (
-        |  SELECT doc_id, predicted,
-        |    len(list_filter(string_split_regex(lower(text), '[\\s\\x0B]+'), x -> x <> '')) AS n_tokens,
-        |    length(text) AS n_chars,
-        |    len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha,
-        |    len(regexp_extract_all(text, '[0-9]')) AS n_digit,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9\\s\\x0B]', '', 'g'), '[\\s\\x0B]+', ' ', 'g'))) AS fp
-        |  FROM li),
-        |q AS (
-        |  SELECT *, floor((
-        |    (CASE WHEN n_tokens >= 50 AND n_tokens <= 100000 THEN 1.0::DOUBLE
-        |          WHEN n_tokens >= 10 THEN 0.5::DOUBLE ELSE 0.0::DOUBLE END) * 0.4::DOUBLE +
-        |    (CASE WHEN n_tokens > 0
-        |          AND CAST(n_chars AS DOUBLE)/n_tokens >= 3
-        |          AND CAST(n_chars AS DOUBLE)/n_tokens <= 12
-        |          THEN 1.0::DOUBLE ELSE 0.3::DOUBLE END) * 0.2::DOUBLE +
-        |    (CASE WHEN n_chars > 0 THEN CAST(n_alpha AS DOUBLE)/n_chars ELSE 0.0::DOUBLE END) * 0.3::DOUBLE +
-        |    (1.0::DOUBLE - CASE WHEN n_chars > 0 THEN CAST(n_digit AS DOUBLE)/n_chars ELSE 0.0::DOUBLE END) * 0.1::DOUBLE
-        |  ) * 1e6) / 1e6 AS quality FROM sc),
-        |kept AS (
-        |  SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        |  FROM q WHERE quality >= 0.5)
-        |SELECT predicted AS lang_pred, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-        |  min(quality) AS min_q, max(quality) AS max_q
-        |FROM kept WHERE rn = 1 GROUP BY 1""".stripMargin),
-
-    "decontaminate" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[\s\x0B]+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(list_transform(
-        |    range(1, greatest(len(toks) - 3, 1)),
-        |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-        |         || toks[i+3] || ' ' || toks[i+4])) AS g
-        |  FROM t),
-        |ev AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
-        |co AS (SELECT doc_id, g FROM g WHERE doc_id % 97 <> 0)
-        |SELECT doc_id, count(DISTINCT g) AS n_shared
-        |FROM co JOIN ev USING (g) GROUP BY 1""".stripMargin,
-
-    "decontaminate_fuzzy" ->
-      graft.operators.Dedup.decontaminateFuzzyOracleSql(),
-
-    "dedup_url" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    'https://WWW.' || upper(source) || '.Example.COM:443/' || lang
-        |      || '/item/' || (doc_id % 40) || '/?utm_source=feed&ref='
-        |      || doc_id || '#sec' AS url
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id,
-        |    lower(regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1)) AS hostfull,
-        |    regexp_replace(regexp_extract(url, '^[a-z]+://[^/]+(/[^?#]*)', 1),
-        |      '/$', '') AS path
-        |  FROM u)
-        |SELECT regexp_replace(hostfull, '^www\.', '') AS host, path,
-        |  regexp_extract(hostfull, '([^.]+\.[^.]+)$', 1) AS domain,
-        |  count(*) AS n_dups, min(doc_id) AS keep_id
-        |FROM p GROUP BY 1, 2, 3""".stripMargin,
-
-    "quality_calibration" -> TextAnalysis.gopherCalibrationOracleSql,
-
-    "dedup_lines" ->
-      """WITH staged AS (
-        |  SELECT doc_id,
-        |    'cookie notice please accept' || chr(10) || text || chr(10)
-        |      || 'copyright footer ' || (doc_id % 3) || chr(10)
-        |      || 'id line ' || doc_id AS txt
-        |  FROM documents),
-        |l AS (
-        |  SELECT doc_id,
-        |    unnest(range(len(string_split(txt, chr(10))))) AS pos,
-        |    unnest(string_split(txt, chr(10))) AS line
-        |  FROM staged),
-        |hot AS ( -- keyed on md5(line), mirroring the engine's 32-byte key
-        |  SELECT md5(line) AS lh FROM l GROUP BY 1 HAVING count(*) >= 3),
-        |kept AS (SELECT l.* FROM l ANTI JOIN hot ON md5(l.line) = hot.lh)
-        |SELECT doc_id, count(*) AS n_kept,
-        |  string_agg(line, chr(10) ORDER BY pos) AS clean_text
-        |FROM kept GROUP BY 1""".stripMargin,
-
-    "sql_surface" ->
-      (s"""SELECT doc_id, predicted, n_tokens, n_subwords, fp, redacted,
-        |  upper_half
-        |FROM (
-        |  SELECT doc_id, predicted,
-        |    len(list_filter(string_split_regex(lower(text), '[\\s\\x0B]+'),
-        |      x -> x <> '')) AS n_tokens,
-        |    len(regexp_extract_all(text,
-        |      '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s\\x0B]')) AS n_subwords,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9\\s\\x0B]', '', 'g'), '[\\s\\x0B]+', ' ', 'g'))) AS fp,
-        |    regexp_replace(regexp_replace(regexp_replace(
-        |      'contact user' || doc_id || '@example.com at 10.0.'
-        |        || (doc_id % 256) || '.7 acct 123456789',
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '<IP>', 'g'),
-        |      '\\b\\d{7,}\\b', '<NUM>', 'g') AS redacted,
-        |    (doc_id % 256) >= 128 AS upper_half
-        |  FROM ${TextAnalysis.langIdSql("text")}
-        |) WHERE n_tokens > 0""".stripMargin),
-
-    "stream_sql_surface" ->
-      (s"""SELECT predicted, count(*) AS n_docs,
-        |  CAST(sum(len(list_filter(string_split_regex(lower(text), '[\\s\\x0B]+'),
-        |    x -> x <> ''))) AS BIGINT) AS sum_tokens
-        |FROM ${TextAnalysis.langIdSql("text")}
-        |WHERE len(list_filter(string_split_regex(lower(text), '[\\s\\x0B]+'),
-        |  x -> x <> '')) > 0
-        |GROUP BY 1""".stripMargin),
-
-    "quality_classifier" ->
-      graft.operators.QualityClassifier.distillQualityOracleSql(),
-
-    "dedup_substring_removal" ->
-      Dedup.removeDupSpansOracleSql(),
-
-    // quantile_cont uses the same 1+(n-1)p interpolated-rank definition
-    // as Spark's exact percentile; ×10 integers are exact for p in
-    // tenths, and avg moves to integer cents
-    "corpus_stats" ->
-      """WITH t AS (
-        |  SELECT source, lang,
-        |    len(list_filter(string_split_regex(lower(text), '[\s\x0B]+'),
-        |      x -> x <> '')) AS n_tok,
-        |    length(text) AS n_chars
-        |  FROM documents)
-        |SELECT source, lang, count(*) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS sum_tokens,
-        |  CAST(round(avg(n_chars) * 100) AS BIGINT) AS mean_chars_x100,
-        |  CAST(round(quantile_cont(n_tok, 0.5) * 10) AS BIGINT)
-        |    AS p50_tokens_x10,
-        |  CAST(round(quantile_cont(n_tok, 0.9) * 10) AS BIGINT)
-        |    AS p90_tokens_x10,
-        |  CAST(max(n_tok) AS BIGINT) AS max_tokens
-        |FROM t GROUP BY 1, 2""".stripMargin,
-
-    "token_budget" ->
-      """WITH per AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    CAST(sum(len(list_filter(string_split_regex(lower(text), '[\s\x0B]+'),
-        |      x -> x <> ''))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1)
-        |SELECT source, n_docs, n_tokens,
-        |  CAST(sum(n_tokens) OVER (ORDER BY source
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum_tokens,
-        |  CAST(n_tokens * 1000000 // sum(n_tokens) OVER () AS BIGINT)
-        |    AS micro_share
-        |FROM per""".stripMargin,
-
-    // greedy longest-match replay of the fixture vocabulary: one
-    // recursive-CTE chain per DISTINCT word, corpus joins back through
-    // the word (see functions.Bpe.oracleCtes)
-    "tokenize_bpe" -> tokenizeBpeOracleSql,
-
-    // identical projection on the streaming path — same replay
-    "stream_tokenize_bpe" -> tokenizeBpeOracleSql,
-
-    "sample_dsir" -> Sampling.dsirOracleSql("lang = 'en'", targetFrac = 0.25),
-
-    "bpe_fertility" -> bpeFertilityOracleSql,
-
-    // complete-mode fold over the full table = the batch contract;
-    // per-word trie counts are scan-side either way — same oracle
-    "stream_bpe_fertility" -> bpeFertilityOracleSql,
-
-    "dedup_report" -> Dedup.dedupReportOracleSql,
-
-    "sample_temperature" ->
-      """WITH per AS (
-        |  SELECT source,
-        |    CAST(sum(len(list_filter(string_split_regex(lower(text), '[\s\x0B]+'),
-        |      x -> x <> ''))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1),
-        |x AS (
-        |  SELECT source, n_tokens,
-        |    CAST(n_tokens * 1000000 // sum(n_tokens) OVER () AS BIGINT)
-        |      AS micro_share,
-        |    CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1e6) AS BIGINT) AS xq
-        |  FROM per),
-        |t AS (
-        |  SELECT source, n_tokens, micro_share,
-        |    CAST(xq * 1000000 // sum(xq) OVER () AS BIGINT) AS micro_share_t
-        |  FROM x)
-        |SELECT source, n_tokens, micro_share, micro_share_t,
-        |  CAST(micro_share_t * 1000 // greatest(micro_share, 1) AS BIGINT)
-        |    AS boost_x1000
-        |FROM t""".stripMargin,
-
-    "corpus_stats_bpe" ->
-      (graft.functions.Bpe.oracleCtes(graft.functions.BpeFixture.sqlValues) +
-        """,
-          |perdoc AS (
-          |  SELECT doc_id, CAST(sum(s.n_tok) AS BIGINT) AS n_tok
-          |  FROM words JOIN steps s USING (w) GROUP BY doc_id),
-          |t AS (
-          |  SELECT d.source, d.lang, coalesce(p.n_tok, 0) AS n_tok,
-          |    length(d.text) AS n_chars
-          |  FROM documents d LEFT JOIN perdoc p USING (doc_id))
-          |SELECT source, lang, count(*) AS n_docs,
-          |  CAST(sum(n_tok) AS BIGINT) AS sum_tokens,
-          |  CAST(round(avg(n_chars) * 100) AS BIGINT) AS mean_chars_x100,
-          |  CAST(round(quantile_cont(n_tok, 0.5) * 10) AS BIGINT)
-          |    AS p50_tokens_x10,
-          |  CAST(round(quantile_cont(n_tok, 0.9) * 10) AS BIGINT)
-          |    AS p90_tokens_x10,
-          |  CAST(max(n_tok) AS BIGINT) AS max_tokens
-          |FROM t GROUP BY 1, 2""".stripMargin),
-
-    "seq_pack_bpe" ->
-      (graft.functions.Bpe.oracleCtes(graft.functions.BpeFixture.sqlValues) +
-        """,
-          |perdoc AS (
-          |  SELECT doc_id, CAST(sum(s.n_tok) AS BIGINT) AS n_tok
-          |  FROM words JOIN steps s USING (w) GROUP BY doc_id),
-          |t AS (
-          |  SELECT b.doc_id, b.doc_id % 64 AS shard,
-          |    CAST(coalesce(p.n_tok, 0) AS BIGINT) AS n_tok
-          |  FROM base b LEFT JOIN perdoc p USING (doc_id))
-          |SELECT doc_id, shard, n_tok,
-          |  CAST(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok
-          |    AS BIGINT) AS start_off,
-          |  CAST(floor((sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok)
-          |    / 2048) AS BIGINT) AS chunk
-          |FROM t""".stripMargin),
-
-    "token_budget_bpe" ->
-      (graft.functions.Bpe.oracleCtes(graft.functions.BpeFixture.sqlValues) +
-        """,
-          |perdoc AS (
-          |  SELECT doc_id, sum(s.n_tok) AS n_tok
-          |  FROM words JOIN steps s USING (w) GROUP BY doc_id),
-          |per AS (
-          |  SELECT b.source, count(*) AS n_docs,
-          |    CAST(sum(coalesce(p.n_tok, 0)) AS BIGINT) AS n_tokens
-          |  FROM base b LEFT JOIN perdoc p USING (doc_id) GROUP BY 1)
-          |SELECT source, n_docs, n_tokens,
-          |  CAST(sum(n_tokens) OVER (ORDER BY source
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-          |    AS cum_tokens,
-          |  CAST(n_tokens * 1000000 // sum(n_tokens) OVER () AS BIGINT)
-          |    AS micro_share
-          |FROM per""".stripMargin),
-
-    "contamination_report" -> Dedup.contaminationReportOracleSql(),
-
-    "cluster_topics" -> Similarity.clusterTopicsOracleSql(),
-
-    "ngram_hot" -> TextAnalysis.hotNgramsOracleSql(),
-
-    "dedup_snapshot" -> Dedup.snapshotDedupRecrawlOracleSql,
-
-    "dedup_snapshot_fuzzy" -> Dedup.snapshotNearDupOracleSql(),
-
-    // identical contract to the batch operator: the bloom + the
-    // stream-static anti-join are invisible to semantics
-    "stream_dedup_snapshot" -> Dedup.snapshotDedupOracleSql,
-
-    "stream_dedup_snapshot_fuzzy" -> Dedup.snapshotNearDupStreamOracleSql(),
-
-    // complete-mode folds over the full table = the batch contracts
-    "stream_cluster_topics" -> Similarity.clusterTopicsOracleSql(),
-
-    // bit-equal to the batch report by construction (same tokenization,
-    // gram join, double micro-Jaccard arithmetic) — same oracle
-    "stream_contamination_report" -> Dedup.contaminationReportOracleSql(),
-
-    "stream_corpus_stats" ->
-      """WITH t AS (
-        |  SELECT source, lang,
-        |    len(list_filter(string_split_regex(lower(text), '[\s\x0B]+'),
-        |      x -> x <> '')) AS n_tok,
-        |    length(text) AS n_chars
-        |  FROM documents)
-        |SELECT source, lang, count(*) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS sum_tokens,
-        |  CAST(round(avg(n_chars) * 100) AS BIGINT) AS mean_chars_x100,
-        |  CAST(round(quantile_cont(n_tok, 0.5) * 10) AS BIGINT)
-        |    AS p50_tokens_x10,
-        |  CAST(round(quantile_cont(n_tok, 0.9) * 10) AS BIGINT)
-        |    AS p90_tokens_x10,
-        |  CAST(max(n_tok) AS BIGINT) AS max_tokens
-        |FROM t GROUP BY 1, 2""".stripMargin,
-
-    "decontaminate_semantic" ->
-      Similarity.decontaminateSemanticOracleSql(evalMod = 50, tau = 0.3),
-
-    "sample_perplexity" ->
-      (s"""WITH lm AS (
-        |  SELECT * FROM (${LanguageModel.bigramOracleSql}) ),
-        |scored AS (
-        |  SELECT d.doc_id, d.lang, lm.n_bigrams, lm.avg_lp
-        |  FROM documents d JOIN lm ON d.doc_id = lm.doc_id),
-        |ranked AS (
-        |  SELECT doc_id, lang,
-        |    NTILE(3) OVER (PARTITION BY lang
-        |                   ORDER BY avg_lp DESC, doc_id ASC) AS ppl_bucket
-        |  FROM scored WHERE n_bigrams > 0),
-        |uni AS (
-        |  SELECT * FROM ranked
-        |  UNION ALL
-        |  SELECT doc_id, lang, 3 AS ppl_bucket
-        |  FROM scored WHERE n_bigrams = 0)
-        |SELECT doc_id, lang, ppl_bucket FROM uni
-        |WHERE ${Sampling.hashFractionSql("doc_id", "graft-ppl")} <
-        |  CASE ppl_bucket WHEN 1 THEN 1.0 WHEN 2 THEN 0.5 ELSE 0.1 END"""
-        .stripMargin),
-
-    "dedup_keep_best" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp,
-        |    CAST(n_chars AS DOUBLE) AS score
-        |  FROM documents),
-        |r AS (
-        |  SELECT fp, doc_id, score,
-        |    row_number() OVER (PARTITION BY fp
-        |      ORDER BY score DESC, doc_id ASC) AS rn,
-        |    count(*) OVER (PARTITION BY fp) AS n_dups
-        |  FROM s)
-        |SELECT fp, doc_id AS keep_id, score AS best_score, n_dups
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    "emb_stats" ->
-      """WITH n AS (
-        |  SELECT label,
-        |    sqrt(list_sum(list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm
-        |  FROM embeddings)
-        |SELECT label, count(*) AS n,
-        |  round(avg(norm), 4) AS avg_norm,
-        |  round(min(norm), 4) AS min_norm,
-        |  round(max(norm), 4) AS max_norm
-        |FROM n GROUP BY 1""".stripMargin,
-
-    "omfile_text" -> (synthSql +
-      """ SELECT '<' || (facility * 8 + severity) || '>' ||
-        |  strftime(CAST(ts AS TIMESTAMP), '%b') || ' ' ||
-        |  lpad(CAST(day(ts) AS VARCHAR), 2, ' ') || ' ' ||
-        |  strftime(CAST(ts AS TIMESTAMP), '%H:%M:%S') || ' ' ||
-        |  hostname || ' ' || syslogtag || ': ' ||
-        |  'msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') ||
-        |  ': v100=' || v100 AS line
-        | FROM ev""".stripMargin),
-
-    "text_redact" ->
-      """SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        'user' || doc_id || '@example.com ip=10.0.' || (doc_id % 256)
-        |          || '.7 acct=123456789 ' || text,
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |    '\b\d{7,}\b', '<NUM>', 'g') AS redacted
-        |FROM documents""".stripMargin,
-
-    // exact-bytes dedup → all group members identical → DISTINCT over
-    // (text, derived stats) is the winner set; same quality/langid SQL
-    // as llm_prep
-    "stream_llm_prep" ->
-      (s"""WITH li AS (SELECT doc_id, text, predicted FROM ${TextAnalysis.langIdSql("text")}),
-        |sc AS (
-        |  SELECT doc_id, text, predicted,
-        |    len(list_filter(string_split_regex(lower(text), '[\\s\\x0B]+'), x -> x <> '')) AS n_tokens,
-        |    length(text) AS n_chars,
-        |    len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha,
-        |    len(regexp_extract_all(text, '[0-9]')) AS n_digit
-        |  FROM li),
-        |q AS (
-        |  SELECT *, floor((
-        |    (CASE WHEN n_tokens >= 50 AND n_tokens <= 100000 THEN 1.0::DOUBLE
-        |          WHEN n_tokens >= 10 THEN 0.5::DOUBLE ELSE 0.0::DOUBLE END) * 0.4::DOUBLE +
-        |    (CASE WHEN n_tokens > 0
-        |          AND CAST(n_chars AS DOUBLE)/n_tokens >= 3
-        |          AND CAST(n_chars AS DOUBLE)/n_tokens <= 12
-        |          THEN 1.0::DOUBLE ELSE 0.3::DOUBLE END) * 0.2::DOUBLE +
-        |    (CASE WHEN n_chars > 0 THEN CAST(n_alpha AS DOUBLE)/n_chars ELSE 0.0::DOUBLE END) * 0.3::DOUBLE +
-        |    (1.0::DOUBLE - CASE WHEN n_chars > 0 THEN CAST(n_digit AS DOUBLE)/n_chars ELSE 0.0::DOUBLE END) * 0.1::DOUBLE
-        |  ) * 1e6) / 1e6 AS quality FROM sc),
-        |winners AS (
-        |  SELECT DISTINCT text, predicted, n_tokens
-        |  FROM q WHERE quality >= 0.5)
-        |SELECT predicted AS lang_pred, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-        |FROM winners GROUP BY 1""".stripMargin),
-
-    "sample_stratified" ->
-      s"""SELECT doc_id, lang,
-        |  len(list_filter(string_split_regex(lower(text), '[\\s\\x0B]+'), x -> x <> '')) AS n_tokens
-        |FROM documents
-        |WHERE ${Sampling.hashBucketSql("lang || ':' || doc_id",
-             numerator = 64, digits = 2, salt = "graft")}""".stripMargin,
-
-    "sample_domain_mix" ->
-      s"""SELECT doc_id, source, n_chars FROM documents
-        |WHERE ${Sampling.hashFractionSql("doc_id", salt = "graft-mix")} <
-        |  CASE source WHEN 'src0' THEN 0.25 WHEN 'src1' THEN 0.0
-        |              WHEN 'src2' THEN 1.0 ELSE 0.6 END""".stripMargin,
-
-    "chunk_tokens" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[\s\x0B]+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-        |e AS (SELECT doc_id, toks, n,
-        |  unnest(range(0, greatest(1, (n - 16 + 47) // 48))) AS chunk_idx
-        |  FROM n)
-        |SELECT doc_id, chunk_idx,
-        |  array_to_string(list_slice(toks, chunk_idx*48 + 1, chunk_idx*48 + 64), ' ') AS chunk_text,
-        |  CAST(least(64, n - chunk_idx*48) AS INT) AS n_tokens
-        |FROM e""".stripMargin,
-
-    // the recursive-CTE greedy encode (steps: per distinct word) composes
-    // with the window oracle: per-doc ordered token stream = the per-word
-    // token lists flattened in word order, then identical slice windows
-    "chunk_tokens_bpe" ->
-      (graft.functions.Bpe.oracleCtes(graft.functions.BpeFixture.sqlValues) +
-        """,
-          |wo AS (SELECT doc_id, unnest(ws) AS w,
-          |         generate_subscripts(ws, 1) AS wi FROM base),
-          |docs AS (
-          |  SELECT doc_id,
-          |    flatten(list(s.toks ORDER BY wi)) AS toks
-          |  FROM wo JOIN steps s USING (w) GROUP BY doc_id),
-          |n AS (SELECT doc_id, toks, len(toks) AS n FROM docs
-          |      WHERE len(toks) > 0),
-          |e AS (SELECT doc_id, toks, n,
-          |  unnest(range(0, greatest(1, (n - 16 + 47) // 48))) AS chunk_idx
-          |  FROM n)
-          |SELECT doc_id, chunk_idx,
-          |  array_to_string(list_slice(toks, chunk_idx*48 + 1, chunk_idx*48 + 64), ' ') AS chunk_text,
-          |  CAST(least(64, n - chunk_idx*48) AS INT) AS n_tokens
-          |FROM e""".stripMargin),
-
-    // md5-derived shard and order key replayed exactly; row_number ties
-    // broken by doc_id on both sides
-    "sample_shuffle" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang,
-        |    CAST(('0x' || substr(md5('e0-shard:' || doc_id), 1, 2))::BIGINT
-        |      % 16 AS INT) AS shard,
-        |    md5('e0-order:' || doc_id) AS ord
-        |  FROM documents)
-        |SELECT doc_id, lang, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY ord, doc_id)
-        |    AS BIGINT) AS pos
-        |FROM s""".stripMargin,
-
-    "sample_upsample" ->
-      s"""WITH w AS (
-        |  SELECT doc_id, lang,
-        |    CASE lang WHEN 'de' THEN 2.5 WHEN 'zh' THEN 3.0
-        |              WHEN 'en' THEN 0.8 ELSE 1.0 END AS wt
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, lang,
-        |    CAST(floor(wt) AS BIGINT) + CASE WHEN
-        |      ${Sampling.hashFractionSql("doc_id", salt = "graft-epoch")}
-        |        < wt - floor(wt) THEN 1 ELSE 0 END AS n
-        |  FROM w)
-        |SELECT doc_id, lang, unnest(range(0, n)) AS copy
-        |FROM c WHERE n > 0""".stripMargin,
-
-    // gaps-and-islands on MICROSECOND-truncated event time — exactly the
-    // precision Spark's session_window sees after the ns→µs normalization,
-    // so a gap straddling the 30-min boundary within 1 µs cannot diverge
-    "session_window" ->
-      """WITH o AS (
-        |  SELECT user_id, value, epoch_ns(ts) // 1000 AS us FROM events),
-        |b AS (
-        |  SELECT *, CASE WHEN lag(us) OVER w IS NULL
-        |                 OR us - lag(us) OVER w >= 1800000000
-        |            THEN 1 ELSE 0 END AS brk
-        |  FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us)),
-        |sgrp AS (
-        |  SELECT *, sum(brk) OVER (
-        |    PARTITION BY user_id ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM b)
-        |SELECT user_id, min(us) // 1000000 AS session_start,
-        |  count(*) AS n, round(sum(value), 2) AS sum_v
-        |FROM sgrp GROUP BY user_id, sid""".stripMargin,
-
-    // each event belongs to exactly 4 sliding windows: starts at the
-    // 15-min floor minus k*15min, k=0..3; append emission = window end
-    // (start + 1 h) <= global max ts
-    "stream_sliding" ->
-      """WITH o AS (
-        |  SELECT event_type, value, epoch_ns(ts) // 1000 AS us FROM events),
-        |w AS (
-        |  SELECT event_type, value,
-        |    ((us // 900000000) - k) * 900000000 AS win_us
-        |  FROM o, unnest(range(4)) AS t(k))
-        |SELECT win_us // 1000000 AS win_start, event_type,
-        |  count(*) AS n, round(sum(value), 2) AS sum_v
-        |FROM w GROUP BY win_us, event_type
-        |HAVING win_us + 3600000000 <= (SELECT max(epoch_ns(ts) // 1000) FROM events)""".stripMargin,
-
-    // batch session logic + the append-mode emission rule: a session
-    // reports iff its end (last event + 30 min) is <= the final
-    // watermark (global max ts, zero delay)
-    "stream_session" ->
-      """WITH o AS (
-        |  SELECT user_id, value, epoch_ns(ts) // 1000 AS us FROM events),
-        |b AS (
-        |  SELECT *, CASE WHEN lag(us) OVER w IS NULL
-        |                 OR us - lag(us) OVER w >= 1800000000
-        |            THEN 1 ELSE 0 END AS brk
-        |  FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us)),
-        |sgrp AS (
-        |  SELECT *, sum(brk) OVER (
-        |    PARTITION BY user_id ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM b)
-        |SELECT user_id, min(us) // 1000000 AS session_start,
-        |  count(*) AS n, round(sum(value), 2) AS sum_v
-        |FROM sgrp GROUP BY user_id, sid
-        |HAVING max(us) + 1800000000 <= (SELECT max(epoch_ns(ts) // 1000) FROM events)""".stripMargin,
-
-    // ------------------------- streaming-gate oracles -----------------------
-    // the batch twin's oracle, verbatim — one truth for both execution paths
-    "stream_e2e" -> pipelineOracle,
-    "stream_ratelimit" -> ratelimitOracle,
-    "stream_dynstats" -> DynStats.oracleSql(maxCardinality = 3),
-
-    // window end <= max(ts) mirrors the watermark: the trailing window is
-    // still pending when the bounded stream drains (ns→µs cast truncation
-    // matches Tables.events' timestamp_micros normalization)
-    "impstats_stream" ->
-      """WITH ev AS (
-        |  SELECT date_trunc('hour', ts::TIMESTAMP) AS ws, event_type,
-        |         count(*) AS submitted
-        |  FROM events GROUP BY 1, 2),
-        |emit AS (
-        |  SELECT ws + INTERVAL 1 HOUR AS reported_at,
-        |         'events.' || event_type AS name, submitted
-        |  FROM ev
-        |  WHERE ws + INTERVAL 1 HOUR <= (SELECT max(ts::TIMESTAMP) FROM events))
-        |SELECT reported_at, name, fmt, msg, 46 AS pri,
-        |       'rsyslogd-pstats:' AS tag
-        |FROM (
-        |  SELECT reported_at, name, 'legacy' AS fmt,
-        |         name || ': origin=imfile submitted=' || submitted || ' ' AS msg
-        |  FROM emit
-        |  UNION ALL
-        |  SELECT reported_at, name, 'cee',
-        |         '@cee: { "name": "' || name || '", "origin": "imfile", "submitted": '
-        |           || submitted || ' }'
-        |  FROM emit)""".stripMargin,
-
-    // RrOutput semantics: every run start passes; a broken run's repeat-mark
-    // carries the breaking row's seq (the next run's first event); a trailing
-    // run's timer-flush mark carries the run's own last seq
-    "stream_repeat" ->
-      """WITH base AS (
-        |  SELECT user_id, event_id, event_type,
-        |    CASE WHEN lag(event_type) OVER
-        |           (PARTITION BY user_id ORDER BY event_id) IS NULL
-        |         OR lag(event_type) OVER
-        |           (PARTITION BY user_id ORDER BY event_id) <> event_type
-        |         THEN 1 ELSE 0 END AS chg
-        |  FROM events),
-        |runs0 AS (
-        |  SELECT *, sum(chg) OVER (
-        |    PARTITION BY user_id ORDER BY event_id ROWS UNBOUNDED PRECEDING)
-        |    AS run_id
-        |  FROM base),
-        |runs AS (
-        |  SELECT user_id, run_id, event_type AS msg,
-        |    min(event_id) AS start_seq, max(event_id) AS end_seq,
-        |    count(*) AS len
-        |  FROM runs0 GROUP BY 1, 2, 3),
-        |marked AS (
-        |  SELECT *, lead(start_seq) OVER (
-        |    PARTITION BY user_id ORDER BY start_seq) AS next_start
-        |  FROM runs)
-        |SELECT user_id, start_seq AS seq, msg, false AS synthetic FROM runs
-        |UNION ALL
-        |SELECT user_id, coalesce(next_start, end_seq) AS seq,
-        |  'last message repeated ' || (len - 1) || ' times' AS msg,
-        |  true AS synthetic
-        |FROM marked WHERE len > 1""".stripMargin,
-
-    // CRI island reconstruction: rid groups each P-run with its closing
-    // F (cumsum of finals minus own final); only closed groups emit, the
-    // combined record takes the FIRST fragment's stream/time and the
-    // closing row's seq
-    "stream_kube_cri" ->
-      """WITH o AS (
-        |  SELECT '/var/log/pods/ns1_pod' || (user_id % 8) ||
-        |    '_u/app/0.log' AS path,
-        |    event_id AS seq, event_id % 5 AS m5, event_id, event_type
-        |  FROM events),
-        |cri AS (
-        |  SELECT path, seq,
-        |    CASE WHEN m5 = 4 THEN 0 ELSE 1 END AS is_final,
-        |    CASE WHEN m5 = 4 THEN 'p' || event_id || ' '
-        |         WHEN m5 = 0 THEN 'f' || event_id
-        |         ELSE 'g' || event_id END AS body,
-        |    CASE WHEN m5 = 0 THEN 'stderr' ELSE 'stdout' END AS stream,
-        |    CASE WHEN m5 = 4 THEN epoch_ms(TIMESTAMP '2024-03-01 10:00:00')
-        |         WHEN m5 = 0 THEN epoch_ms(TIMESTAMP '2024-03-01 10:00:01')
-        |         ELSE epoch_ms(TIMESTAMP '2024-03-01 10:00:02.25')
-        |    END AS tsms
-        |  FROM o WHERE m5 IN (0, 3, 4)),
-        |grp AS (
-        |  SELECT *, sum(is_final) OVER (
-        |    PARTITION BY path ORDER BY seq ROWS UNBOUNDED PRECEDING)
-        |    - is_final AS rid
-        |  FROM cri),
-        |agg AS (
-        |  SELECT path, rid, max(seq) AS seq,
-        |    string_agg(body, '' ORDER BY seq) AS msg,
-        |    arg_min(stream, seq) AS stream,
-        |    arg_min(tsms, seq) AS ts_ms,
-        |    max(is_final) AS closed
-        |  FROM grp GROUP BY 1, 2)
-        |SELECT path, seq, msg, stream, 'cri' AS fmt,
-        |  false AS parse_error, ts_ms
-        |FROM agg WHERE closed = 1
-        |UNION ALL
-        |SELECT path, seq, 'd' || event_id,
-        |  CASE WHEN event_id % 2 = 1 THEN 'stderr' ELSE 'stdout' END,
-        |  'docker_json', false,
-        |  epoch_ms(TIMESTAMP '2024-03-01 10:00:03')
-        |FROM o WHERE m5 = 1
-        |UNION ALL
-        |SELECT path, seq, 'r' || event_id || ' ' || event_type,
-        |  'stdout', 'raw', true, event_id + 86400000
-        |FROM o WHERE m5 = 2""".stripMargin,
-
-    // islands over the per-key line stream: a record = a START line plus
-    // everything until the next START; island 0 = pre-start accumulation;
-    // '\n' in a plain DuckDB string literal is the same two characters as
-    // the engine's escapeLF default (strmReadMultiLine escape)
-    "stream_multiline" ->
-      """WITH o AS (
-        |  SELECT user_id % 8 AS k, event_id,
-        |    CASE WHEN event_id % 4 = 0
-        |         THEN 'START ' || event_type || ' ' || event_id
-        |         ELSE ' cont ' || event_id END AS line,
-        |    CASE WHEN event_id % 4 = 0 THEN 1 ELSE 0 END AS is_start
-        |  FROM events),
-        |ord AS (
-        |  SELECT *, sum(is_start) OVER (
-        |    PARTITION BY k ORDER BY event_id ROWS UNBOUNDED PRECEDING)
-        |    AS island
-        |  FROM o)
-        |SELECT 'file' || k AS key,
-        |  min(event_id) AS start_seq,
-        |  string_agg(line, '\n' ORDER BY event_id) AS record
-        |FROM ord GROUP BY k, island""".stripMargin,
-
-    // readMode 2 islands: a new record starts at any non-blank line that
-    // is either unindented or follows a blank (post-flush indented lines
-    // open their own record); blanks are terminators and are eaten
-    "stream_readmode" ->
-      """WITH o AS (
-        |  SELECT 'file' || (user_id % 8) AS k, event_id,
-        |    CASE WHEN event_id % 5 = 4 THEN ''
-        |         WHEN event_id % 5 = 0 THEN 'REC ' || event_type || ' ' || event_id
-        |         ELSE '  cont ' || event_id END AS line
-        |  FROM events),
-        |m AS (
-        |  SELECT *,
-        |    CASE WHEN line = '' THEN NULL
-        |         WHEN (line[1] <> ' ' AND line[1] <> chr(9))
-        |           OR coalesce(lag(line) OVER (
-        |                PARTITION BY k ORDER BY event_id), '') = ''
-        |         THEN 1 ELSE 0 END AS new_rec
-        |  FROM o),
-        |isl AS (
-        |  SELECT *, sum(new_rec) OVER (
-        |    PARTITION BY k ORDER BY event_id ROWS UNBOUNDED PRECEDING)
-        |    AS island
-        |  FROM m WHERE line <> '')
-        |SELECT k AS key, min(event_id) AS start_seq,
-        |  string_agg(line, '#012' ORDER BY event_id) AS record
-        |FROM isl GROUP BY k, island""".stripMargin,
-
-    // exactly one emission per distinct fingerprint (state holds the
-    // horizon in one AvailableNow batch)
-    "stream_dedup" ->
-      """SELECT DISTINCT
-        |  md5(trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp,
-        |  CAST(1 AS BIGINT) AS n
-        |FROM documents""".stripMargin,
-
-    "stream_sender_track" -> (synthSql +
-      """ SELECT hostname AS sender,
-        |  min(epoch_ns(ts) // 1000000000) AS first_seen,
-        |  max(epoch_ns(ts) // 1000000000) AS last_seen,
-        |  count(*) AS n_msgs,
-        |  CAST(sum(v100) AS BIGINT) AS n_bytes
-        | FROM ev GROUP BY 1""".stripMargin),
-
-    // zip-shift n-grams mirrored as 1-based list_transform over range();
-    // range(1, n) excludes n, greatest(…, 1) voids the 0/1-token edge
-    "text_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[\s\x0B]+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, greatest(len(toks), 1)),
-        |      i -> toks[i] || ' ' || toks[i+1]) AS bi,
-        |    list_transform(range(1, greatest(len(toks) - 1, 1)),
-        |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS tri
-        |  FROM t)
-        |SELECT doc_id,
-        |  len(bi) AS n_bigrams,
-        |  CASE WHEN len(bi) > 0 THEN
-        |    floor((1.0::DOUBLE - CAST(len(list_distinct(bi)) AS DOUBLE)/len(bi)) * 1e6)/1e6
-        |  ELSE 0.0::DOUBLE END AS dup_bigram_frac,
-        |  CASE WHEN len(tri) > 0 THEN
-        |    floor((1.0::DOUBLE - CAST(len(list_distinct(tri)) AS DOUBLE)/len(tri)) * 1e6)/1e6
-        |  ELSE 0.0::DOUBLE END AS dup_trigram_frac
-        |FROM g""".stripMargin,
-
-    "dedup_canonical" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    len(list_filter(string_split_regex(lower(text), '[\s\x0B]+'), x -> x <> '')) AS n_tokens,
-        |    length(text) AS n_chars,
-        |    len(regexp_extract_all(text, '[A-Za-z]')) AS n_alpha,
-        |    len(regexp_extract_all(text, '[0-9]')) AS n_digit
-        |  FROM documents),
-        |scored AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp,
-        |    floor((
-        |      (CASE WHEN n_tokens >= 50 AND n_tokens <= 100000 THEN 1.0::DOUBLE
-        |            WHEN n_tokens >= 10 THEN 0.5::DOUBLE ELSE 0.0::DOUBLE END) * 0.4::DOUBLE +
-        |      (CASE WHEN n_tokens > 0
-        |            AND CAST(n_chars AS DOUBLE)/n_tokens >= 3
-        |            AND CAST(n_chars AS DOUBLE)/n_tokens <= 12
-        |            THEN 1.0::DOUBLE ELSE 0.3::DOUBLE END) * 0.2::DOUBLE +
-        |      (CASE WHEN n_chars > 0 THEN CAST(n_alpha AS DOUBLE)/n_chars ELSE 0.0::DOUBLE END) * 0.3::DOUBLE +
-        |      (1.0::DOUBLE - CASE WHEN n_chars > 0 THEN CAST(n_digit AS DOUBLE)/n_chars ELSE 0.0::DOUBLE END) * 0.1::DOUBLE
-        |    ) * 1e6) / 1e6 AS quality
-        |  FROM base),
-        |ranked AS (
-        |  SELECT doc_id, fp, quality,
-        |    row_number() OVER (PARTITION BY fp ORDER BY quality DESC, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY fp) AS group_size
-        |  FROM scored)
-        |SELECT doc_id, fp, quality, group_size FROM ranked WHERE rn = 1""".stripMargin,
-
-    "lookup_reload" ->
-      """WITH e1 AS (
-        |  SELECT CASE event_type WHEN 'error' THEN 'sev-high'
-        |                         WHEN 'purchase' THEN 'rev'
-        |                         ELSE 'UNK' END AS cls
-        |  FROM events WHERE event_id % 2 = 0),
-        |e2 AS (
-        |  SELECT CASE event_type WHEN 'error' THEN 'sev-crit'
-        |                         WHEN 'signup' THEN 'acq'
-        |                         ELSE 'UNK' END AS cls
-        |  FROM events WHERE event_id % 2 = 1)
-        |SELECT CAST(1 AS BIGINT) AS epoch, cls, count(*) AS n FROM e1 GROUP BY 1, 2
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS epoch, cls, count(*) AS n FROM e2 GROUP BY 1, 2""".stripMargin,
-
-    // identical contract to lookup_reload — the stream face reloads the
-    // SAME table file between the two micro-batches
-    "stream_lookup_reload" ->
-      """WITH e1 AS (
-        |  SELECT CASE event_type WHEN 'error' THEN 'sev-high'
-        |                         WHEN 'purchase' THEN 'rev'
-        |                         ELSE 'UNK' END AS cls
-        |  FROM events WHERE event_id % 2 = 0),
-        |e2 AS (
-        |  SELECT CASE event_type WHEN 'error' THEN 'sev-crit'
-        |                         WHEN 'signup' THEN 'acq'
-        |                         ELSE 'UNK' END AS cls
-        |  FROM events WHERE event_id % 2 = 1)
-        |SELECT CAST(1 AS BIGINT) AS epoch, cls, count(*) AS n FROM e1 GROUP BY 1, 2
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT) AS epoch, cls, count(*) AS n FROM e2 GROUP BY 1, 2""".stripMargin,
-
-    "kafka_decode" -> (synthSql +
-      """ SELECT event_id,
-        |  'syslog.' || event_type AS topic,
-        |  CAST(user_id % 4 AS INT) AS kafka_partition,
-        |  'imkafka' AS inputname,
-        |  facility, severity, hostname,
-        |  event_type AS programname,
-        |  ' msgnum:' || lpad(CAST(event_id AS VARCHAR), 8, '0') || ': v100=' || v100 AS msg
-        | FROM ev""".stripMargin),
-
-    // ring window ≥ input size → order statistics over ALL observations;
-    // pct index convention mirrors Stateful.perctileStats exactly:
-    // sorted[min(n-1, floor(p*n))], 1-based in DuckDB
-    "stream_perctile" ->
-      """WITH obs AS (
-        |  SELECT event_type AS key,
-        |    CAST(floor(value * 100) AS BIGINT) AS v
-        |  FROM events),
-        |agg AS (
-        |  SELECT key, list_sort(list(v)) AS lst, count(*) AS cnt,
-        |    min(v) AS mn, max(v) AS mx, sum(v) AS sm
-        |  FROM obs GROUP BY 1)
-        |SELECT key, cnt AS window_count, mn AS window_min, mx AS window_max,
-        |  CAST(sm AS BIGINT) AS window_sum,
-        |  lst[CAST(least(cnt - 1, floor(0.50 * cnt)) AS BIGINT) + 1] AS p50,
-        |  lst[CAST(least(cnt - 1, floor(0.95 * cnt)) AS BIGINT) + 1] AS p95,
-        |  lst[CAST(least(cnt - 1, floor(0.99 * cnt)) AS BIGINT) + 1] AS p99
-        |FROM agg""".stripMargin,
-
-    "mmexternal_pipe" -> (synthSql +
-      """ SELECT event_id,
-        |  'SEQ:' || lpad(CAST(event_id AS VARCHAR), 8, '0') || ': v100=' || v100 AS msg
-        | FROM ev WHERE event_id % 8 = 0""".stripMargin),
-
-    "immark" ->
-      """WITH ev AS (
-        |  SELECT 'host' || user_id AS host, CAST(ts AS TIMESTAMP) AS t
-        |  FROM events),
-        |span AS (
-        |  SELECT date_trunc('hour', min(t)) + INTERVAL 1 HOUR AS t0,
-        |         date_trunc('hour', max(t)) + INTERVAL 1 HOUR AS t1
-        |  FROM ev),
-        |marks AS (
-        |  SELECT unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS mark_ts
-        |  FROM span),
-        |hosts AS (SELECT DISTINCT host FROM ev),
-        |activity AS (
-        |  SELECT DISTINCT host,
-        |    date_trunc('hour', t) + INTERVAL 1 HOUR AS mark_ts
-        |  FROM ev)
-        |SELECT h.host,
-        |  epoch_ns(m.mark_ts) // 1000000000 AS mark_sec,
-        |  '-- MARK --' AS msg
-        |FROM hosts h CROSS JOIN marks m
-        |LEFT JOIN activity a ON a.host = h.host AND a.mark_ts = m.mark_ts
-        |WHERE a.host IS NULL""".stripMargin,
-
-    "stream_kube_enrich" ->
-      """WITH ev AS (
-        |  SELECT event_id, 'pod-' || (user_id % 25) AS pod FROM events),
-        |pods AS (
-        |  SELECT 'pod-' || n_nationkey AS pod, n_name AS pod_ns,
-        |    n_regionkey AS zone
-        |  FROM nation)
-        |SELECT pod_ns, zone, count(*) AS n, min(event_id) AS first_event
-        |FROM ev LEFT JOIN pods USING (pod)
-        |GROUP BY 1, 2""".stripMargin
-  )
 }

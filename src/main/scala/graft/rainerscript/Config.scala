@@ -217,8 +217,6 @@ case class RsyslogConfig(
       .orElse(jsonfTemplates.get(name).map(fs =>
         TemplateCompiler.compileJsonf(fs, props, tree = jsonfTree(name))))
       .getOrElse(throw new IllegalArgumentException(s"unknown template $name"))
-
-  private def run0(): Unit = ()
 }
 
 object RsyslogConfig {
