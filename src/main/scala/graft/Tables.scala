@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Readers for the driver-generated parquet tables (TESTDATA.md).
@@ -54,26 +55,29 @@ object Tables {
     })
   }
 
-  private def rebalance(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val p = new java.io.File(path)
-    val bytes: Long =
-      if (p.isFile) p.length()
-      else if (p.isDirectory)
-        p.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map(_.length()).sum
-      else Long.MaxValue
+  private[graft] def rebalance(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
     // the scan's real parallelism is bounded BOTH by row groups (parquet
-    // only splits at group boundaries) and by the byte-range split size
-    // (Spark emits ceil(bytes/maxPartitionBytes) ranges) — gating on row
-    // groups alone put a 104-group 9 MiB file on 3 cores at 4 MiB splits
-    val maxSplit = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
-    val effectiveSplits = math.min(
-      rowGroupCount(spark, path).toLong,
-      (bytes + maxSplit - 1) / maxSplit)
+    // only splits at group boundaries) and by the byte ranges Spark cuts
+    // — gating on row groups alone put a 104-group 9 MiB file on 3 cores
+    val (bytes, ranges) = scanRanges(spark, df)
+    val effectiveSplits = math.min(rowGroupCount(spark, path).toLong, ranges)
     if (bytes < (1L << 30) && effectiveSplits < math.max(4, par / 2))
       df.repartition(par)
     else df
+  }
+
+  /** The bytes of the files `df` scans, and the byte ranges Spark cuts
+    * them into: bytes over the split size of Spark's own rule
+    * (`FilePartition.maxSplitBytes`), which weighs each file's open cost
+    * against the task threads, so a 9 MiB file is 4 ranges of 2.5 MiB,
+    * not 3 of `maxPartitionBytes`. */
+  private[graft] def scanRanges(spark: SparkSession, df: DataFrame): (Long, Long) = {
+    val dirs = df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .flatMap { case fs: HadoopFsRelation => fs.location.listFiles(Nil, Nil); case _ => Nil }
+    val bytes = dirs.flatMap(_.files).map(_.getLen).sum
+    val split = FilePartition.maxSplitBytes(spark, dirs)
+    (bytes, (bytes + split - 1) / split)
   }
 
   /** events with ts normalized: ts_ns LONG, ts TIMESTAMP (µs, UTC).
@@ -129,8 +133,22 @@ object Tables {
   * partition count from its checkpoint's offset log on restart, so this
   * setting binds only queries that start from an empty checkpoint.
   * AQE stays on so batch plans coalesce and split skew at run time.
-  * Splits are 4 MiB: the engine's inputs are a handful of small files,
-  * and the 128 MiB default would serialize every scan onto one core. */
+  *
+  * Splits are at most 4 MiB: the engine's inputs are a handful of small
+  * files, and the 128 MiB default would serialize every scan onto one
+  * core. A file costs 1 MiB to open, not Spark's 4 MiB, so Spark's
+  * split rule, min(4 MiB, max(1 MiB, (bytes + files × 1 MiB) / cores)),
+  * gives each task thread a split of a small spool: a 4.4 MB file reads
+  * as four splits instead of two. A file under 1 MiB stays one split,
+  * and small streamed files still pack several to a split. A smaller
+  * open cost would cut even a 1 MB file into one split per core and pay
+  * more in task set-up than it gains.
+  *
+  * The UI is off and nothing reads Spark's status store, yet it keeps
+  * up to 1,000 finished jobs and stages and 1,000 SQL executions. A
+  * closed loop of fast passes fills that history inside one benchmark
+  * window, and the heap then grows with the pass rate, so the history
+  * is bounded at 100 of each. */
 object GraftSession {
   def apply(master: String = "local[*]", appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -140,6 +158,10 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.openCostInBytes", "1m")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.sql.ui.retainedExecutions", "100")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions",

@@ -85,10 +85,11 @@ object InputBinding {
     // addMetadata="on": $!metadata!filename + !line_number
     // (plugins/imfile/imfile.c addMetadata/msgAddMetadata,
     // tests/imfile-metadata-line-number.sh). Line numbers come from a
-    // per-file window over the read order — exact for files read as one
-    // split (the verification shape); a splittable multi-GB file needs
-    // a line-indexed source for exact numbering, same contract as the
-    // stream gate's ordering note.
+    // per-file window over the read order, which is the file's order:
+    // a file read as several splits keeps its chunks in order, since
+    // Spark sorts splits by size stably and only a file's last chunk is
+    // shorter, and monotonically_increasing_id ranks by split, then by
+    // row.
     val addMeta = p.get("addmetadata").contains("on")
     val numbered = if (addMeta)
       lines1.withColumn("__file", input_file_name())

@@ -2,11 +2,13 @@ package graft.sources
 
 import java.io.BufferedOutputStream
 import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption}
-import java.util.{Comparator, UUID}
+import java.util.{Collections, Comparator, UUID, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,7 +21,7 @@ private[sources] object OmfileText {
 
   def write(df: DataFrame, lineCol: String, outPath: String): Unit = {
     val target = localPath(outPath).toAbsolutePath
-    val lines = df.select(col(lineCol))
+    val lines = linesOf(df, lineCol)
     require(lines.schema.head.dataType == StringType,
       s"omfileText: column $lineCol is ${lines.schema.head.dataType.simpleString}, not string")
     val parent = Files.createDirectories(target.getParent)
@@ -48,6 +50,31 @@ private[sources] object OmfileText {
       throw t
     }
   }
+
+  /** Each frame's pruned line projection, held while the frame lives:
+    * a later write of the same frame runs the same `QueryExecution`, so
+    * it is analyzed, optimized and planned once, as when one Dataset
+    * runs two actions. Keys are frames by identity (Dataset keeps
+    * Object's equals) and are held weakly; no value refers to its frame. */
+  private val planned =
+    Collections.synchronizedMap(new WeakHashMap[DataFrame, ConcurrentHashMap[String, DataFrame]])
+
+  private def linesOf(df: DataFrame, lineCol: String): DataFrame = {
+    val byCol = planned.computeIfAbsent(df, _ => new ConcurrentHashMap[String, DataFrame])
+    Option(byCol.get(lineCol)).getOrElse {
+      val lines = df.select(col(lineCol))
+      if (reusable(lines)) byCol.putIfAbsent(lineCol, lines)
+      lines
+    }
+  }
+
+  /** A plan that reads the clock (`ComputeCurrentTime` fixes the time
+    * once per optimization) or holds a nondeterministic expression is
+    * planned per write, so each write sees its own reception time. */
+  private def reusable(lines: DataFrame): Boolean =
+    lines.queryExecution.analyzed.collectWithSubqueries {
+      case p if p.containsPattern(CURRENT_LIKE) || !p.expressions.forall(_.deterministic) => p
+    }.isEmpty
 
   /** A plain or `file:` path; any other scheme is refused before a job runs. */
   private def localPath(outPath: String): Path = {

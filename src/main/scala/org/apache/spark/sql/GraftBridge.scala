@@ -27,9 +27,11 @@ object GraftBridge {
       .registerFunction(id, info, builder)
 
   /** Run `body` over `df`'s physical rows as one SQL execution, so that
-    * listeners and the SQL UI see it as Dataset actions are seen. */
+    * listeners and the SQL UI see it as Dataset actions are seen; a
+    * repeated run starts its SQL metrics from zero, as an action does. */
   def withExecution[T](df: DataFrame, name: String)(body: RDD[InternalRow] => T): T = {
     val qe = df.queryExecution
+    qe.executedPlan.resetMetrics()
     SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd))
   }
 

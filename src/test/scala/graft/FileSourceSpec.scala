@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sources.Sources
 
 /** imfile-lite / omfile round trip through real files — the file-source
@@ -32,6 +34,30 @@ class FileSourceSpec extends SparkSpec {
         .select(get_json_object(col("vars_msg"), "$.metadata.filename"))
         .collect().head.getString(0)
       assert(fn != null && fn.endsWith("in.log"))
+    } finally {
+      Files.deleteIfExists(f); Files.deleteIfExists(dir)
+    }
+  }
+
+  test("imfile addMetadata: line_number stays the file's line number across splits") {
+    // a 5 MiB file reads as four splits at local[4]; the window numbers
+    // lines in read order, so the splits must keep the file's order
+    val dir = graft.Tmp.dir("graft_imfile_meta_split")
+    val f = dir.resolve("in.log")
+    val empty = 30001
+    val fileLines = (1 to 60000).map(i => if (i == empty) "" else f"msgnum:$i%08d:" + "x" * 70)
+    Files.writeString(f, fileLines.mkString("", "\n", "\n"))
+    try {
+      assert(spark.read.text(f.toString).rdd.getNumPartitions == 4)
+      val cfg = graft.rainerscript.RsyslogConfig.parse(
+        s"""module(load="imfile")
+           |input(type="imfile" tag="file:" file="${f.toString}" addMetadata="on")
+           |template(name="outfmt" type="string" string="%msg:F,58:2% %$$!metadata!line_number%")
+           |action(type="omfile" template="outfmt")
+           |""".stripMargin)
+      val out = cfg.activate(spark)("").actionFrame(0)
+        .select("__rendered").as[String].collect().sorted.toSeq
+      assert(out == (1 to 60000).filter(_ != empty).map(i => f"$i%08d $i"))
     } finally {
       Files.deleteIfExists(f); Files.deleteIfExists(dir)
     }
@@ -160,6 +186,66 @@ class FileSourceSpec extends SparkSpec {
     assert(jobs.size == 1 && executions.size == 1)
     assert(bytes.get == partFiles(out).map(Files.size(_)).sum)
     assert(records.get == rows.size)
+  }
+
+  /** The QueryExecutions of the first `n` `omfileText` writes `body`
+    * runs; the listener bus delivers them on its own thread. */
+  private def writePlans(n: Int)(body: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        if (name == "omfileText") seen.add(qe)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      (1 to n).map { _ =>
+        val qe = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(qe != null, "write not seen")
+        qe
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("omfileText: two writes of one frame plan it once") {
+    val frame = lines(Seq("a", "b", "c"), 2)
+    val out = graft.Tmp.dir("graft_omfile_plan_once")
+    val Seq(first, second) = writePlans(2) {
+      Sources.omfileText(frame, "l", out.resolve("x").toString)
+      Sources.omfileText(frame, "l", out.resolve("y").toString)
+    }
+    assert(first eq second, "each write planned the frame anew")
+    assert(first.executedPlan eq second.executedPlan)
+    assert(written(out.resolve("x")) == "a\nb\nc\n" && written(out.resolve("y")) == "a\nb\nc\n")
+  }
+
+  test("omfileText: a frame that reads the clock is planned per write") {
+    val frame = spark.range(1).select(current_timestamp().cast("string").as("l"))
+    val out = graft.Tmp.dir("graft_omfile_clock")
+    val Seq(first, second) = writePlans(2) {
+      Sources.omfileText(frame, "l", out.resolve("x").toString)
+      Thread.sleep(20)
+      Sources.omfileText(frame, "l", out.resolve("y").toString)
+    }
+    assert(first ne second)
+    assert(written(out.resolve("x")) != written(out.resolve("y")),
+      "the second write repeated the first write's time")
+  }
+
+  /** Writes a fresh frame twice and returns a weak reference to it. */
+  private def writtenTwice(out: java.nio.file.Path): java.lang.ref.WeakReference[AnyRef] = {
+    val frame = lines(Seq("a"), 1)
+    Sources.omfileText(frame, "l", out.toString)
+    Sources.omfileText(frame, "l", out.toString)
+    new java.lang.ref.WeakReference(frame)
+  }
+
+  test("omfileText: a written frame that is no longer referenced is collected") {
+    val ref = writtenTwice(graft.Tmp.dir("graft_omfile_gc").resolve("o"))
+    var tries = 0
+    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(20); tries += 1 }
+    assert(ref.get == null, "the plan memo keeps the frame alive")
   }
 
   test("imfile skips exactly-empty lines (imfile.c enqLine)") {

@@ -30,9 +30,54 @@ class PlanAuditSpec extends SparkSpec {
       "one shuffle partition per task thread")
     assert(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       conf("spark.sql.files.maxPartitionBytes")) == (4L << 20))
+    assert(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      conf("spark.sql.files.openCostInBytes")) == (1L << 20), "a split per task thread")
+    Seq("spark.ui.retainedJobs", "spark.ui.retainedStages", "spark.sql.ui.retainedExecutions")
+      .foreach(k => assert(conf(k) == "100", s"$k: a bounded job history"))
     assert(conf("spark.sql.adaptive.enabled") == "true")
     assert(conf("spark.sql.session.timeZone") == "UTC")
     assert(conf("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("scan splits: one per task thread for a small spool, one for a small file") {
+    import java.nio.file.{Files, Path}
+    val base = graft.Tmp.dir("graft_split_rule")
+    def splits(p: Path): Int = spark.read.text(p.toString).rdd.getNumPartitions
+    def spool(p: Path, bytes: Int): Path = {
+      val line = "<13>Mar  1 01:02:03 host app[7]: " + "x" * 66 + "\n" // 100 bytes
+      Files.writeString(p, line * (bytes / line.length))
+    }
+    val big = spool(base.resolve("spool.log"), 5 << 20)
+    assert(splits(big) == 4, "a 5 MiB spool reads as one split per task thread")
+    assert(splits(spool(base.resolve("one.log"), 1000000)) == 1, "a 1 MB file stays one split")
+    val small = Files.createDirectory(base.resolve("small"))
+    (0 until 20).foreach(i => spool(small.resolve(s"f$i.log"), 5000))
+    assert(splits(small) <= 5, "20 small files pack several to a split")
+    // the four splits are written back as the spool's lines, in order
+    val out = base.resolve("out")
+    graft.sources.Sources.omfileText(spark.read.text(big.toString), "value", out.toString)
+    val parts = out.toFile.list().sorted
+    assert(parts.toSeq == (0 until 4).map(i => f"part-$i%05d"))
+    assert(java.util.Arrays.equals(
+      parts.map(f => Files.readAllBytes(out.resolve(f))).flatten, Files.readAllBytes(big)))
+  }
+
+  test("Tables.rebalance counts the scan's ranges as Spark cuts them") {
+    // a 9 MiB parquet file in many row groups: Spark cuts it into 4
+    // ranges of 2.5 MiB, so the scan spreads on its own and no
+    // repartition is added; 9 MiB / maxPartitionBytes would say 3
+    val path = graft.Tmp.dir("graft_rebalance_ranges").resolve("t.parquet").toString
+    val hc = spark.sparkContext.hadoopConfiguration
+    val block = hc.get("parquet.block.size")
+    hc.setInt("parquet.block.size", 256 << 10)
+    try spark.range(0, 150000, 1, 1).select(sha2(col("id").cast("string"), 256).as("h"))
+      .write.parquet(path)
+    finally if (block == null) hc.unset("parquet.block.size") else hc.set("parquet.block.size", block)
+    val df = spark.read.parquet(path)
+    val (bytes, ranges) = Tables.scanRanges(spark, df)
+    assert(bytes > (8L << 20) && bytes < (10L << 20), s"$bytes bytes")
+    assert(ranges == df.rdd.getNumPartitions && ranges == 4)
+    assert(Tables.rebalance(spark, df, path) eq df)
   }
 
   test("q1_agg: column pruning reaches the lineitem scan; agg is two-phase") {
